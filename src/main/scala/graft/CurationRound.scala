@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -387,15 +387,21 @@ object CurationRound {
   private def subPath(statePath: String, name: String): String =
     statePath.stripSuffix("/") + "/" + name
 
-  /** Label every job a fold phase fires (guide §1.5) — phase-level
-    * attribution in the UI / JobProfile; thread-local, and the PREVIOUS
-    * description (a calling harness may have set one) is captured and
-    * restored afterwards rather than clobbered to null. */
-  private def phase[T](spark: SparkSession, name: String)(body: => T): T = {
+  /** Label every job a fold phase fires (guide §1.5) with its phase
+    * name, and tag it with the fold's `tag` so a failed fold can cancel
+    * whatever is still running. Both are thread-local: every pool task
+    * labels and tags itself. The PREVIOUS description (a calling harness
+    * may have set one) is captured and restored afterwards rather than
+    * clobbered to null. */
+  private def phase[T](spark: SparkSession, tag: String, name: String)(body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(name)
-    try body finally sc.setJobDescription(prev)
+    sc.addJobTag(tag)
+    try body finally {
+      sc.removeJobTag(tag)
+      sc.setJobDescription(prev)
+    }
   }
 
   private def dirNonEmpty(spark: SparkSession, p: String): Boolean = {
@@ -404,17 +410,23 @@ object CurationRound {
     fs.exists(hp) && fs.listStatus(hp).exists(_.getPath.getName.endsWith(".parquet"))
   }
 
+  /** A state directory read with the schema the fold wrote it under:
+    * no schema-inference job (one footer-reading job per read
+    * otherwise), and absent state is an empty LOCAL relation, which the
+    * optimizer prunes out of every join and union it feeds. */
   private def readState(spark: SparkSession, statePath: String, name: String,
                         schema: StructType): DataFrame = {
     val p = subPath(statePath, name)
-    if (dirNonEmpty(spark, p)) spark.read.parquet(p)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    if (dirNonEmpty(spark, p)) spark.read.schema(schema).parquet(p)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 
   private def fpsSchema = StructType(Seq(
     StructField("fp", StringType), StructField("__batch_id", LongType)))
-  private def survivorsSchema(cfg: Config, strataType: DataType) = StructType(Seq(
-    StructField(cfg.idCol, LongType), StructField(cfg.strataCol, strataType),
+  // The stratum is stored as a string: the mixture's targets are keyed
+  // by string, and a fixed type lets every reader declare the schema.
+  private def survivorsSchema(cfg: Config) = StructType(Seq(
+    StructField(cfg.idCol, LongType), StructField(cfg.strataCol, StringType),
     StructField(cfg.textCol, StringType),
     StructField("__n_tokens", LongType), StructField("__n_sh", LongType),
     StructField("__batch_id", LongType)))
@@ -425,62 +437,57 @@ object CurationRound {
     StructField("stage_ord", IntegerType), StructField("stage", StringType),
     StructField("n_docs", LongType), StructField("n_tokens", LongType),
     StructField("__batch_id", LongType)))
+  /** shdf deltas plus the columns of a compaction summary, which
+    * additionally carries `__compacted_through` (NULL on deltas). */
   private def shdfSchema = StructType(Seq(StructField("sh", LongType),
-    StructField("n", LongType), StructField("__batch_id", LongType)))
+    StructField("n", LongType), StructField("__batch_id", LongType),
+    StructField("__compacted_through", LongType)))
 
   /** The shdf census scoped for folding `batchId`: compaction-aware
-    * (the EventStream.readCensusState rule — keep the LATEST summary
-    * plus deltas stamped after it), then `__batch_id < batchId` for
-    * replay correctness. mergeSchema reconciles deltas appended after
-    * a compaction, which lack the stamp column. Folding at or below
-    * the compaction frontier W is REFUSED: the W summary folds every
-    * batch ≤ W irreversibly, so a replay of such a batch could not
-    * exclude its own prior df contribution — the compact-before-fold
-    * schedule (only compact checkpoint-committed batches) makes the
-    * refusal unreachable in the maintained loop. */
+    * (the EventStream.readCensusState rule — keep the summary at the
+    * frontier `w` plus deltas stamped after it), then
+    * `__batch_id < batchId` for replay correctness. `w` is the
+    * directory's highest `__compacted_through` ([[foldFrontier]]);
+    * foldBatch refuses a batch at or below it before calling here. */
   private def scopedShdf(spark: SparkSession, statePath: String,
-                         batchId: Long): DataFrame = {
-    val p = subPath(statePath, "shdf")
-    if (!dirNonEmpty(spark, p))
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], shdfSchema)
-    val raw = spark.read.option("mergeSchema", "true").parquet(p)
-    val scoped =
-      if (!raw.columns.contains("__compacted_through")) raw
-      else {
-        val wRow = raw.agg(max(col("__compacted_through"))).head()
-        if (wRow.isNullAt(0)) raw.drop("__compacted_through")
-        else {
-          val w = wRow.getLong(0)
-          require(batchId > w,
-            s"cannot fold batch $batchId: shdf is compacted through $w " +
-              "(a summary folds batches <= W irreversibly; compact only " +
-              "checkpoint-committed batches so replays stay above W)")
-          raw.filter(col("__compacted_through") === w ||
-              (col("__compacted_through").isNull && col("__batch_id") > w))
-            .drop("__compacted_through")
-        }
-      }
-    scoped.filter(col("__batch_id") < batchId)
+                         batchId: Long, w: Option[Long]): DataFrame = {
+    val raw = readState(spark, statePath, "shdf", shdfSchema)
+    val ct = col("__compacted_through")
+    w.fold(raw)(w => raw.filter(ct === w || (ct.isNull && col("__batch_id") > w)))
+      .drop("__compacted_through")
+      .filter(col("__batch_id") < batchId)
   }
 
   /** Highest batch id recorded anywhere under `statePath` (partial
-    * folds count — the funnel commits LAST), or None on fresh state.
-    * One job: the five per-directory max aggregates used to run as five
-    * separate driver round-trips (guide §1.2 — per-fold fixed cost);
-    * unioning the stamp columns computes the same max in one action. */
-  def lastFoldedBatch(spark: SparkSession, statePath: String): Option[Long] = {
+    * folds count — the funnel commits LAST) and the shdf compaction
+    * frontier (highest `__compacted_through`), each None when absent.
+    * One job: the per-directory stamp columns union into one aggregate,
+    * read with declared schemas (no inference job per directory). */
+  private def foldFrontier(spark: SparkSession,
+                           statePath: String): (Option[Long], Option[Long]) = {
+    val stamp = StructType(Seq(StructField("__batch_id", LongType)))
     val dirs = Seq("fps", "survivors", "postings", "shdf", "funnel")
-      .map(subPath(statePath, _)).filter(dirNonEmpty(spark, _))
-    if (dirs.isEmpty) None
+      .filter(n => dirNonEmpty(spark, subPath(statePath, n)))
+    if (dirs.isEmpty) (None, None)
     else {
       val r = dirs
-        .map(p => spark.read.parquet(p)
-          .select(col("__batch_id").cast("long").as("__batch_id")))
+        .map {
+          case "shdf" => readState(spark, statePath, "shdf", shdfSchema)
+            .select(col("__batch_id"), col("__compacted_through"))
+          case n => readState(spark, statePath, n, stamp)
+            .select(col("__batch_id"), lit(null).cast(LongType).as("__compacted_through"))
+        }
         .reduce(_ unionByName _)
-        .agg(max(col("__batch_id"))).head()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
+        .agg(max(col("__batch_id")), max(col("__compacted_through"))).head()
+      def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+      (opt(0), opt(1))
     }
   }
+
+  /** Highest batch id recorded anywhere under `statePath` (partial
+    * folds count — the funnel commits LAST), or None on fresh state. */
+  def lastFoldedBatch(spark: SparkSession, statePath: String): Option[Long] =
+    foldFrontier(spark, statePath)._1
 
   /** Fold one ingest batch (rows: idCol, strataCol, textCol) through
     * the chain against `statePath`; appends the batch's state deltas
@@ -488,22 +495,65 @@ object CurationRound {
     * round-cut decision — see [[cutRound]]). */
   def foldBatch(spark: SparkSession, statePath: String, batch: DataFrame,
                 bench: DataFrame, cfg: Config, batchId: Long): DataFrame = {
-    // One small pool drives every INDEPENDENT action of this fold as a
-    // concurrent job (guide §2.6): the append-only guard and the gate
-    // census launch here at fold start — the guard's answer is only
-    // NEEDED before the first state mutation (nothing is written until
-    // the delta writes below) and the census row only at funnel
-    // assembly, but both used to serialize ~1 s of scan/listing jobs
-    // ahead of the chain. The same pool later runs the four delta
-    // writes + the stats aggregate concurrently.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    def submit[T](body: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] { def call(): T = body })
+    // One small pool runs every INDEPENDENT part of this fold as a
+    // concurrent job (guide §2.6: actions are only sequential because
+    // the driver calls them sequentially; each job's tail back-fills
+    // the cores the others leave idle). What overlaps, and why it is
+    // safe:
+    //  - the append-only guard and the gate census start at fold start:
+    //    the guard's answer is only needed before the first state write
+    //    (and for the shdf frontier, after batch-df), the census row
+    //    only at funnel assembly;
+    //  - the bench probe starts as soon as s3 exists, and the
+    //    history-edge branch (histDrops) runs beside the canonical-keep
+    //    loop, which stays on this thread. The three only READ (s3, the
+    //    batch's bucket build, state scoped < batchId) and share no
+    //    intermediate but checkpointed ones. The probe runs over s3,
+    //    not s4: a doc's contamination depends only on that doc and the
+    //    bench, so contam(s3) ∩ s4 = contam(s4), and s4 − contam(s3) is
+    //    exactly the chain's stage 5;
+    //  - s4 = s3 − histDrops − nonCanon and retained = s4 − contam are
+    //    taken once their inputs are ready;
+    //  - each state delta starts as soon as its input exists (see
+    //    "State deltas" below).
+    // Every job carries the fold's tag. If any part fails, the tagged
+    // jobs are cancelled, queued parts never start, and the fold throws
+    // only once no thread or job of it is left running.
+    val sc = spark.sparkContext
+    val tag = s"graft-fold-${java.util.UUID.randomUUID()}"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
+    def labeled[T](name: String)(body: => T): T = phase(spark, tag, name)(body)
+    @volatile var aborted = false
+    def submit[T](name: String)(body: => T): java.util.concurrent.Future[T] =
+      pool.submit(new java.util.concurrent.Callable[T] {
+        def call(): T =
+          if (aborted) throw new java.util.concurrent.CancellationException(name)
+          else labeled(name)(body) })
+    // Stage checkpoints, released when the fold ends, either way.
+    val pinned = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(); pinned.add(c); c }
     try {
-    val guardF = submit(phase(spark, "fold:guard") {
-      lastFoldedBatch(spark, statePath) })
+    val guardF = submit("fold:guard") { foldFrontier(spark, statePath) }
+    // The refusal point: every state write (and the shdf read) passes
+    // here first, so a refused batch leaves state untouched. Returns
+    // the shdf compaction frontier.
+    def admitted(): Option[Long] = {
+      val (last, w) = guardF.get()
+      w.foreach(w => require(batchId > w,
+        s"cannot fold batch $batchId: shdf is compacted through $w " +
+          "(a summary folds batches <= W irreversibly; compact only " +
+          "checkpoint-committed batches so replays stay above W)"))
+      last.foreach(last => require(batchId >= last,
+        s"batch ids are append-only: $batchId < recorded $last (the " +
+          "MetricsStore rule — re-folding history would forge the funnel)"))
+      w
+    }
+    def append(name: String)(delta: => DataFrame) =
+      submit(s"fold:write-$name") {
+        admitted()
+        delta.write.mode("append").parquet(subPath(statePath, name)) }
     val id = col(cfg.idCol)
-    val strataType = batch.schema(cfg.strataCol).dataType
     def scoped(name: String, schema: StructType): DataFrame =
       readState(spark, statePath, name, schema)
         .filter(col("__batch_id") < batchId)
@@ -514,13 +564,13 @@ object CurationRound {
       col(cfg.strataCol), col(cfg.textCol), nTok.as("__n_tokens"))
     val c4p = TextAnalysis.c4Signals(col(cfg.textCol), cfg.c4MinSentences).pass
     val gop = TextAnalysis.gopherSignals(col(cfg.textCol), cfg.gopherStops).pass
-    val gF = submit(phase(spark, "fold:gate-census") { base.agg(
+    val gF = submit("fold:gate-census") { base.agg(
       count(lit(1)).as("d0"),
       coalesce(sum(col("__n_tokens")), lit(0L)).as("t0"),
       count(when(c4p, 1)).as("d1"),
       coalesce(sum(when(c4p, col("__n_tokens"))), lit(0L)).as("t1"),
       count(when(c4p && gop, 1)).as("d2"),
-      coalesce(sum(when(c4p && gop, col("__n_tokens"))), lit(0L)).as("t2")).head() })
+      coalesce(sum(when(c4p && gop, col("__n_tokens"))), lit(0L)).as("t2")).head() }
     // Gate + fingerprint ride ONE scan (guide §2.3: project/compute
     // before materializing): the fp column lands inside the gated
     // checkpoint instead of a second corpus pass with its own
@@ -530,24 +580,32 @@ object CurationRound {
     // its whole input tree — measured here at sf0.1, swapping these
     // for lazy persists quadrupled the fold (105 s vs 24 s) on pure
     // driver-side re-planning of the untruncated trees.
-    val gated = phase(spark, "fold:gated") { base.filter(c4p && gop)
-      .withColumn("__fp", TextAnalysis.docFingerprint(col(cfg.textCol)))
-      .localCheckpoint() }
+    val gated = labeled("fold:gated") { pin(base.filter(c4p && gop)
+      .withColumn("__fp", TextAnalysis.docFingerprint(col(cfg.textCol)))) }
 
     // Stage 3 — exact vs history: in-batch min-id per fingerprint, then
     // the incrementalNew anti-join against every fingerprint GATED
     // before (a fp that lost later stages still blocks re-ingest — the
     // full chain's min-id winner is decided at the exact stage).
-    val seenFps = scoped("fps", fpsSchema).select(col("fp")).distinct()
     val fps = gated.select(id, col("__fp").as("fp"))
-    val exactIds = fps.filter(col("fp").isNotNull)
-      .groupBy(col("fp")).agg(min(id).as(cfg.idCol))
-      .join(seenFps, Seq("fp"), "left_anti")
-      .select(id)
-      .unionByName(fps.filter(col("fp").isNull).select(id))
-    val s3 = phase(spark, "fold:s3-exact") {
-      gated.drop("__fp").join(exactIds, Seq(cfg.idCol), "left_semi")
-        .localCheckpoint() }
+    val fpsW = append("fps") {
+      fps.filter(col("fp").isNotNull).select(col("fp")).distinct()
+        .withColumn("__batch_id", lit(batchId)) }
+    val s3 = labeled("fold:s3-exact") {
+      val seenFps = scoped("fps", fpsSchema).select(col("fp")).distinct()
+      val exactIds = fps.filter(col("fp").isNotNull)
+        .groupBy(col("fp")).agg(min(id).as(cfg.idCol))
+        .join(seenFps, Seq("fp"), "left_anti")
+        .select(id)
+        .unionByName(fps.filter(col("fp").isNull).select(id))
+      pin(gated.drop("__fp").join(exactIds, Seq(cfg.idCol), "left_semi")) }
+
+    // Stage 5's probe (stateless vs the fixed bench suite), over s3 —
+    // see the pool comment above for why s3 stands in for s4.
+    val contamF = submit("fold:s5-decontam") {
+      pin(Dedup.contaminationPairs(s3, bench, cfg.idCol, cfg.textCol,
+          cfg.contamN, cfg.contamMinOverlap, cfg.contamBenchDfCap)
+        .select(col("doc_id").as(cfg.idCol)).distinct()) }
 
     // Stage 4 — near-dup vs the maintained posting index. Batch docs
     // shingle ONCE; the pool df valve (history shdf fold + batch df ≤
@@ -555,45 +613,53 @@ object CurationRound {
     // exact-survivor shingles, the cap's domain in ngramJaccardPairs(s3)
     // — and n_sh stays the doc's FULL distinct-shingle count (the
     // jaccard denominator is valve-independent).
-    val batchSh = phase(spark, "fold:shingle") { s3.select(id,
+    val batchSh = labeled("fold:shingle") { pin(s3.select(id,
         Dedup.shingles(col(cfg.textCol), cfg.jaccardN).as("arr"))
       .select(id, size(col("arr")).cast("long").as("__n_sh"),
         explode(col("arr")).as("raw"))
-      .select(id, col("__n_sh"), xxhash64(col("raw")).as("sh"))
-      .localCheckpoint() }
+      .select(id, col("__n_sh"), xxhash64(col("raw")).as("sh"))) }
     val batchSizes = batchSh.select(id, col("__n_sh")).distinct()
     // The batch's shingle-df census, computed ONCE (checkpointed): it
     // probes the history semi-join, feeds the valve, and is the shdf
     // state delta — three consumers, one aggregation.
-    val batchDf = phase(spark, "fold:batch-df") {
-      batchSh.groupBy(col("sh")).agg(count(lit(1)).as("bn"))
-        .localCheckpoint() }
-    // Semi-join the history census down to the BATCH's shingles before
-    // the replay-dedup + fold: the valve only needs df for shingles the
-    // batch actually carries, so the two aggregation exchanges run over
-    // O(batch ∩ history) rows instead of every shingle ever ingested —
-    // the difference between per-fold cost tracking the batch and
-    // tracking the corpus (at 100 TB, with shdf bucketed by `sh`, the
-    // semi join is the only history-wide scan and it prunes at the
-    // scan).
-    val histDfScoped = scopedShdf(spark, statePath, batchId)
-      .join(batchDf.select(col("sh")), Seq("sh"), "left_semi")
-      .dropDuplicates("__batch_id", "sh")
-      .groupBy(col("sh")).agg(sum(col("n")).as("n"))
-    val keepSh = batchDf.join(histDfScoped, Seq("sh"), "left_outer")
-      .filter(col("bn") + coalesce(col("n"), lit(0L)) <= cfg.jaccardDfCap)
-      .select(col("sh"))
-    val bPost = batchSh.join(keepSh, Seq("sh"), "left_semi")
-    // Parquet-backed state with ONE consumer (the histDrops size join):
-    // no reason to materialize a copy.
-    val survivors = scoped("survivors", survivorsSchema(cfg, strataType))
-      .dropDuplicates(cfg.idCol)
-    val hPost = scoped("postings", postingsSchema(cfg))
-      .select(id.as("__hid"), col("sh")).distinct()
-      .join(keepSh, Seq("sh"), "left_semi")
+    val batchDf = labeled("fold:batch-df") {
+      pin(batchSh.groupBy(col("sh")).agg(count(lit(1)).as("bn"))) }
+    // shdf counts ALL stage-3 survivors' shingles (not just retained
+    // docs'): the full chain's df cap is computed over s3 in
+    // ngramJaccardPairs, so a doc that later drops at near-dup/
+    // decontamination still contributes df there — and must here too,
+    // or the valve diverges from run() when the cap binds.
+    val shdfW = append("shdf") {
+      batchDf.select(col("sh"), col("bn").as("n"))
+        .withColumn("__batch_id", lit(batchId)) }
+    import graft.functions.CappedCollectList.cappedCollectList
+    // The batch's valve-kept shingle buckets, checkpointed ONCE: both
+    // near-dup branches (history edges and the canonical loop) read
+    // them. The history census is semi-joined down to the BATCH's
+    // shingles before the replay-dedup + fold: the valve only needs df
+    // for shingles the batch actually carries, so the two aggregation
+    // exchanges run over O(batch ∩ history) rows instead of every
+    // shingle ever ingested — the difference between per-fold cost
+    // tracking the batch and tracking the corpus (at 100 TB, with shdf
+    // bucketed by `sh`, the semi join is the only history-wide scan and
+    // it prunes at the scan). The pool valve bounds every kept
+    // shingle's batch+history df ≤ dfCap, so cappedCollectList never
+    // truncates — it is buffer-bounding hygiene, exactly like
+    // shinglePairCounts' bucket build.
+    val bBuckets = labeled("fold:batch-df") {
+      val histDfScoped = scopedShdf(spark, statePath, batchId, admitted())
+        .join(batchDf.select(col("sh")), Seq("sh"), "left_semi")
+        .dropDuplicates("__batch_id", "sh")
+        .groupBy(col("sh")).agg(sum(col("n")).as("n"))
+      val keepSh = batchDf.join(histDfScoped, Seq("sh"), "left_outer")
+        .filter(col("bn") + coalesce(col("n"), lit(0L)) <= cfg.jaccardDfCap)
+        .select(col("sh"))
+      pin(batchSh.join(keepSh, Seq("sh"), "left_semi")
+        .groupBy(col("sh"))
+        .agg(cappedCollectList(struct(id, col("__n_sh")), cfg.jaccardDfCap)
+          .as("bdocs"))) }
     def jac(shared: Column, n1: Column, n2: Column): Column =
       shared.cast("double") / (n1 + n2 - shared).cast("double")
-    import graft.functions.CappedCollectList.cappedCollectList
     // Pair fan-out through BUCKET ARRAYS + double explode, the
     // shinglePairCounts shape (guide §2.4 — no join on the fan-out
     // path): a common shingle under the valve (e.g. a boilerplate line
@@ -604,131 +670,105 @@ object CurationRound {
     // tuples never touch join machinery. Hot buckets additionally
     // CHUNK-SPLIT (Dedup.bucketSelfPairCounts — guide §2.5) so one
     // boilerplate shingle's quadratic pair space parallelizes instead
-    // of serializing in its bucket's task. The pool valve (keepSh)
-    // already bounds every kept shingle's batch+history df ≤ dfCap,
-    // so cappedCollectList never truncates — it is buffer-bounding
-    // hygiene, exactly like shinglePairCounts' bucket build.
+    // of serializing in its bucket's task.
     val chunk = 256
-    val bBuckets = bPost
-      .groupBy(col("sh"))
-      .agg(cappedCollectList(struct(id, col("__n_sh")), cfg.jaccardDfCap)
-        .as("bdocs"))
-    // history edges: any retained doc within minJaccard vetoes (the
-    // shipped copy stays; the newcomer drops). hBuckets ⋈ bBuckets is a
-    // bucket-scale join (one row per shingle); the chunk-pair rows then
-    // re-shuffle ONCE round-robin — the whole joined posting mass
-    // crosses that exchange (small buckets as one chunk-pair row, hot
-    // ones as their slice pairs), the bucketSelfPairCounts trade
-    // (measured win at sf0.1; same §2.5 treatment, bipartite form).
-    val hBuckets = hPost
-      .groupBy(col("sh"))
-      .agg(cappedCollectList(col("__hid"), cfg.jaccardDfCap).as("hdocs"))
     def chunksOf(c: Column) = transform(
       sequence(lit(0), ((size(c) - lit(1)) / lit(chunk)).cast("int")),
       i => slice(c, i * chunk + 1, lit(chunk)))
     val parts = spark.sessionState.conf.numShufflePartitions
-    // Unconditional chunking, one path (a hot/cold filter split would
-    // re-evaluate the unpersisted bucket build once per branch — the
-    // bucketSelfPairCounts lesson); small buckets are one chunk-pair.
-    val histDrops = bBuckets.join(hBuckets, Seq("sh"))
-      .select(chunksOf(col("bdocs")).as("__bc"), chunksOf(col("hdocs")).as("__hc"))
-      .select(explode(col("__bc")).as("__ci"), col("__hc"))
-      .select(col("__ci"), explode(col("__hc")).as("__cj"))
-      .repartition(parts)
-      .select(explode(col("__ci")).as("a"), col("__cj"))
-      .select(col("a"), explode(col("__cj")).as("__hid"))
-      .groupBy(col(s"a.${cfg.idCol}").as(cfg.idCol), col("__hid"),
-        col("a.__n_sh").as("__n_sh"))
-      .agg(count(lit(1)).as("shared"))
-      .join(survivors.select(id.as("__hid"), col("__n_sh").as("__hn")),
-        Seq("__hid"))
-      .filter(jac(col("shared"), col("__n_sh"), col("__hn"))
-        >= cfg.jaccardMinJaccard)
-      .select(id).distinct()
+    // history edges: any retained doc within minJaccard vetoes (the
+    // shipped copy stays; the newcomer drops). The history postings are
+    // semi-joined to the kept shingles (the bucket keys ARE the kept
+    // shingles: every batch shingle has a bucket unless the valve
+    // dropped it). hBuckets ⋈ bBuckets is a bucket-scale join (one row
+    // per shingle); the chunk-pair rows then re-shuffle ONCE round-robin
+    // — the whole joined posting mass crosses that exchange (small
+    // buckets as one chunk-pair row, hot ones as their slice pairs), the
+    // bucketSelfPairCounts trade (measured win at sf0.1; same §2.5
+    // treatment, bipartite form). Unconditional chunking, one path (a
+    // hot/cold filter split would re-evaluate the bucket join once per
+    // branch); small buckets are one chunk-pair. Survivors are
+    // parquet-backed state with ONE consumer (the size join): no
+    // reason to materialize a copy.
+    val histDropsF = submit("fold:s4-near") {
+      val survivors = scoped("survivors", survivorsSchema(cfg))
+        .dropDuplicates(cfg.idCol)
+      val hBuckets = scoped("postings", postingsSchema(cfg))
+        .select(id.as("__hid"), col("sh")).distinct()
+        .join(bBuckets.select(col("sh")), Seq("sh"), "left_semi")
+        .groupBy(col("sh"))
+        .agg(cappedCollectList(col("__hid"), cfg.jaccardDfCap).as("hdocs"))
+      pin(bBuckets.join(hBuckets, Seq("sh"))
+        .select(chunksOf(col("bdocs")).as("__bc"), chunksOf(col("hdocs")).as("__hc"))
+        .select(explode(col("__bc")).as("__ci"), col("__hc"))
+        .select(col("__ci"), explode(col("__hc")).as("__cj"))
+        .repartition(parts)
+        .select(explode(col("__ci")).as("a"), col("__cj"))
+        .select(col("a"), explode(col("__cj")).as("__hid"))
+        .groupBy(col(s"a.${cfg.idCol}").as(cfg.idCol), col("__hid"),
+          col("a.__n_sh").as("__n_sh"))
+        .agg(count(lit(1)).as("shared"))
+        .join(survivors.select(id.as("__hid"), col("__n_sh").as("__hn")),
+          Seq("__hid"))
+        .filter(jac(col("shared"), col("__n_sh"), col("__hn"))
+          >= cfg.jaccardMinJaccard)
+        .select(id).distinct()) }
     // within-batch edges: the standalone canonical rule on the batch's
     // own pair graph (quality = length, ties min id)
-    val batchPairs = Dedup.bucketSelfPairCounts(
-        bBuckets.filter(size(col("bdocs")) > 1), "bdocs", cfg.idCol, "__n_sh",
-        chunk)
-      .groupBy(col(s"x.${cfg.idCol}").as("id1"), col(s"y.${cfg.idCol}").as("id2"),
-        col("x.__n_sh").as("n1"), col("y.__n_sh").as("n2"))
-      .agg(count(lit(1)).as("shared"))
-      .filter(jac(col("shared"), col("n1"), col("n2"))
-        >= cfg.jaccardMinJaccard)
-    val nonCanon = phase(spark, "fold:canonical") {
+    val nonCanon = labeled("fold:canonical") {
+      val batchPairs = Dedup.bucketSelfPairCounts(
+          bBuckets.filter(size(col("bdocs")) > 1), "bdocs", cfg.idCol, "__n_sh",
+          chunk)
+        .groupBy(col(s"x.${cfg.idCol}").as("id1"), col(s"y.${cfg.idCol}").as("id2"),
+          col("x.__n_sh").as("n1"), col("y.__n_sh").as("n2"))
+        .agg(count(lit(1)).as("shared"))
+        .filter(jac(col("shared"), col("n1"), col("n2"))
+          >= cfg.jaccardMinJaccard)
       Dedup.canonicalKeepList(batchPairs,
           s3.select(id, length(col(cfg.textCol)).cast("long").as("__q")),
           cfg.idCol, "__q")
         .filter(!col("is_canonical"))
         .select(col("doc_id").as(cfg.idCol)) }
-    val s4 = phase(spark, "fold:s4-near") {
-      s3.join(histDrops, Seq(cfg.idCol), "left_anti")
-        .join(nonCanon, Seq(cfg.idCol), "left_anti")
-        .localCheckpoint() }
+    val s4 = labeled("fold:s4-near") {
+      pin(s3.join(histDropsF.get(), Seq(cfg.idCol), "left_anti")
+        .join(nonCanon, Seq(cfg.idCol), "left_anti")) }
+    val retained = labeled("fold:s5-decontam") {
+      pin(s4.join(contamF.get(), Seq(cfg.idCol), "left_anti")) }
 
-    // Stage 5 — decontamination (stateless vs the fixed bench suite).
-    val contamIds = Dedup.contaminationPairs(s4, bench, cfg.idCol,
-        cfg.textCol, cfg.contamN, cfg.contamMinOverlap, cfg.contamBenchDfCap)
-      .select(col("doc_id").as(cfg.idCol)).distinct()
-    val retained = phase(spark, "fold:s5-decontam") {
-      s4.join(contamIds, Seq(cfg.idCol), "left_anti")
-        .localCheckpoint() }
-
-    // State deltas FIRST (the funnel still commits LAST — it is the
-    // fold's completion record; a replay after any partial append
-    // recomputes identical rows (reads scoped < batchId) and external
-    // readers dedup on the stamps). Every write reads the stage
-    // checkpoints, so these are block-scan + append jobs, never chain
-    // recomputations — and the four deltas land in four INDEPENDENT
-    // directories with no cross-order contract (replay safety does not
-    // depend on which deltas a partial fold left behind), so they and
-    // the stats aggregate run as CONCURRENT jobs (guide §2.6: actions
-    // are only sequential because the driver calls them sequentially;
-    // each write's tail back-fills cores the others free). Measured at
-    // sf0.1 these five one-row-trip jobs were ~1/3 of the fold's tail.
-    // Job descriptions are thread-local, so each task labels itself.
-    // The append-only guard resolves HERE, before the first state
-    // mutation — exactly the refusal point the sequential form had
-    // (nothing was written above; a regressing id still leaves state
-    // untouched), it just stopped serializing its listing jobs ahead
-    // of the chain.
-    guardF.get().foreach(last =>
-      require(batchId >= last,
-        s"batch ids are append-only: $batchId < recorded $last (the " +
-          "MetricsStore rule — re-folding history would forge the funnel)"))
+    // State deltas: each starts as soon as its input exists — fps once
+    // gated is checkpointed, shdf once batch-df is, survivors and
+    // postings here — and each first waits for the append-only guard,
+    // so nothing is written before the refusal point. The overlap is
+    // safe because the four deltas land in four INDEPENDENT
+    // directories with no cross-order contract: a replay after any
+    // partial append reads state scoped < batchId, recomputes identical
+    // stamped rows, and external readers dedup on the stamps — so it
+    // does not matter which deltas a failed fold left behind. A read of
+    // this fold may list a directory while a delta is being appended to
+    // it (s3's fps read, the bucket build's shdf read); whether it sees
+    // the delta's files or not, its `< batchId` scope drops their rows,
+    // and each file appears whole (committed by rename). Every write
+    // reads the stage checkpoints, so these are block-scan + append
+    // jobs, never chain recomputations. The funnel still commits LAST —
+    // it is the fold's completion record, written only after every
+    // delta has landed.
     val stamped = lit(batchId).as("__batch_id")
-    val retSh = batchSh.join(retained.select(id), Seq(cfg.idCol), "left_semi")
-    val writes = Seq[java.util.concurrent.Future[_]](
-      submit(phase(spark, "fold:write-fps") {
-        fps.filter(col("fp").isNotNull).select(col("fp")).distinct()
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("append").parquet(subPath(statePath, "fps")) }),
-      submit(phase(spark, "fold:write-survivors") {
-        retained.select(id, col(cfg.strataCol), col(cfg.textCol),
-            col("__n_tokens"))
-          .join(batchSizes, Seq(cfg.idCol), "left_outer")
-          .select(id, col(cfg.strataCol), col(cfg.textCol), col("__n_tokens"),
-            coalesce(col("__n_sh"), lit(0L)).as("__n_sh"), stamped)
-          .write.mode("append").parquet(subPath(statePath, "survivors")) }),
-      submit(phase(spark, "fold:write-postings") {
-        retSh.select(id, col("sh")).distinct()
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("append").parquet(subPath(statePath, "postings")) }),
-      // shdf counts ALL stage-3 survivors' shingles (not just
-      // retained docs'): the full chain's df cap is computed over s3
-      // in ngramJaccardPairs, so a doc that later drops at near-dup/
-      // decontamination still contributes df there — and must here
-      // too, or the valve diverges from run() when the cap binds.
-      submit(phase(spark, "fold:write-shdf") {
-        batchDf.select(col("sh"), col("bn").as("n"))
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("append").parquet(subPath(statePath, "shdf")) }))
+    val survivorsW = append("survivors") {
+      retained.select(id, col(cfg.strataCol).cast(StringType).as(cfg.strataCol),
+          col(cfg.textCol), col("__n_tokens"))
+        .join(batchSizes, Seq(cfg.idCol), "left_outer")
+        .select(id, col(cfg.strataCol), col(cfg.textCol), col("__n_tokens"),
+          coalesce(col("__n_sh"), lit(0L)).as("__n_sh"), stamped) }
+    val postingsW = append("postings") {
+      batchSh.join(retained.select(id), Seq(cfg.idCol), "left_semi")
+        .select(id, col("sh")).distinct()
+        .withColumn("__batch_id", lit(batchId)) }
     // Funnel counts for THIS batch (additive across batches by
-    // stage): ONE union-aggregate over the (cached) stage frames —
+    // stage): ONE union-aggregate over the checkpointed stage frames —
     // the three per-frame count jobs this replaced each paid a full
     // driver round-trip for a one-row answer (guide §1.2) — running
-    // beside the writes on the pool's fifth thread.
-    val statsF = submit(phase(spark, "fold:stats") {
+    // beside the writes.
+    val statsF = submit("fold:stats") {
       s3.select(lit(3).as("__stage"), col("__n_tokens"))
         .unionByName(s4.select(lit(4).as("__stage"), col("__n_tokens")))
         .unionByName(retained.select(lit(5).as("__stage"), col("__n_tokens")))
@@ -736,11 +776,11 @@ object CurationRound {
         .agg(count(lit(1)).as("d"),
           coalesce(sum(col("__n_tokens")), lit(0L)).as("t"))
         .collect()
-        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap })
+        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap }
     // get() rethrows a task's failure (wrapped): a failed delta write
     // must fail the fold BEFORE the funnel commit below — exactly the
     // partial-append state the replay contract recovers from.
-    writes.foreach(_.get())
+    Seq(fpsW, shdfW, survivorsW, postingsW).foreach(_.get())
     val statByStage = statsF.get()
     val g = gF.get()
     def lng(i: Int): Long = if (g.isNullAt(i)) 0L else g.getLong(i)
@@ -758,15 +798,35 @@ object CurationRound {
       Row(5, "decontaminate", d5, t5, batchId))
     val funnel = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), incFunnelSchema)
-    phase(spark, "fold:write-funnel") {
+    labeled("fold:write-funnel") {
       funnel.write.mode("append").parquet(subPath(statePath, "funnel")) }
-    // releaseLocalCheckpoint, not just unpersist: these are local
-    // checkpoints, whose blocks the plain unpersist leaves pinned for
-    // the application's life (see GraftBridge.releaseLocalCheckpoint).
-    Seq(gated, s3, batchSh, batchDf, s4, retained)
-      .foreach(org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(_))
     funnel
-    } finally pool.shutdown()
+    } catch {
+      case t: Throwable =>
+        // Nothing of a failed fold may outlive the call. Parts not yet
+        // started return at once. Cancelling the fold's tagged jobs
+        // fails the action each running part waits on; it repeats until
+        // every part has returned, because a part still planning can
+        // start a job after a cancel, and once more until no tagged job
+        // is left, because Spark submits shuffle-stage jobs from its
+        // own thread pool. Parts are never interrupted: an interrupted
+        // action skips that cleanup and leaves its shuffle jobs to start
+        // after the fold has returned.
+        aborted = true
+        pool.shutdown()
+        val reason = s"curation fold of batch $batchId failed"
+        GraftBridge.cancelJobsWithTag(sc, tag, reason)
+        while (!pool.awaitTermination(50, java.util.concurrent.TimeUnit.MILLISECONDS))
+          GraftBridge.cancelJobsWithTag(sc, tag, reason)
+        while (GraftBridge.cancelJobsWithTag(sc, tag, reason) > 0) ()
+        throw t
+    } finally {
+      pool.shutdown()
+      // releaseLocalCheckpoint, not just unpersist: these are local
+      // checkpoints, whose blocks the plain unpersist leaves pinned for
+      // the application's life (see GraftBridge.releaseLocalCheckpoint).
+      pinned.forEach(GraftBridge.releaseLocalCheckpoint(_))
+    }
   }
 
   /** The retained corpus pool under `statePath` (replay-deduped):
@@ -774,7 +834,7 @@ object CurationRound {
   def readRetained(spark: SparkSession, statePath: String,
                    cfg: Config): DataFrame =
     readState(spark, statePath, "survivors",
-        survivorsSchema(cfg, StringType))
+        survivorsSchema(cfg))
       .dropDuplicates(cfg.idCol)
       .select(col(cfg.idCol), col(cfg.strataCol), col(cfg.textCol),
         col("__n_tokens").as("n_tokens"))
@@ -867,15 +927,12 @@ object CurationRound {
         val spark = batch.sparkSession
         sinceCompaction += 1
         if (sinceCompaction >= compactEvery) {
-          val p = subPath(statePath, "shdf")
-          if (dirNonEmpty(spark, p)) {
-            val m = spark.read.option("mergeSchema", "true").parquet(p)
-              .agg(max(col("__batch_id"))).head()
-            if (!m.isNullAt(0) && m.getLong(0) < batchId) {
-              graft.streaming.EventStream.compactCensusState(spark, p,
-                Seq("sh"), Seq("n"))
-              sinceCompaction = 0
-            }
+          val m = readState(spark, statePath, "shdf", shdfSchema)
+            .agg(max(col("__batch_id"))).head()
+          if (!m.isNullAt(0) && m.getLong(0) < batchId) {
+            graft.streaming.EventStream.compactCensusState(spark,
+              subPath(statePath, "shdf"), Seq("sh"), Seq("n"))
+            sinceCompaction = 0
           }
         }
         foldBatch(spark, statePath, batch.toDF(), bench, cfg, batchId)

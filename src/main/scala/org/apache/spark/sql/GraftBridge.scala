@@ -37,4 +37,15 @@ object GraftBridge {
       }
     case _ => ()
   }
+
+  /** Cancel every active job tagged `tag`; returns once the scheduler
+    * has failed them, with how many there were.
+    * `SparkContext.cancelJobsWithTag` only posts the request, so its
+    * jobs may still be running when it returns; the future form
+    * (Spark-internal) completes after the scheduler has handled it. */
+  def cancelJobsWithTag(sc: org.apache.spark.SparkContext, tag: String,
+                        reason: String): Int =
+    org.apache.spark.util.ThreadUtils.awaitResult(
+      sc.cancelJobsWithTagWithFuture(tag, reason),
+      scala.concurrent.duration.Duration.Inf).size
 }

@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
+import scala.jdk.CollectionConverters._
 
 /** The incremental curation loop's contract: folding monotone ingest
   * batches through [[CurationRound.foldBatch]] maintains exactly the
@@ -318,5 +323,184 @@ class CurationIncrementalSpec extends AnyFunSuite {
       Seq((5L, "en", mkDoc("qq"))).toDF("doc_id", "lang", "text"),
       bench, cfg, 1L)
     assert(ids(CurationRound.readRetained(spark, statePath, cfg)) == Set(5L))
+  }
+
+  /** Every job the session runs while installed: its description and
+    * its scheduler start/end times. */
+  private final class JobLog extends SparkListener {
+    final case class Job(desc: String, start: Long, end: Long = -1L)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.merge(e.jobId,
+        Job(Option(e.properties).map(_.getProperty("spark.job.description")).orNull,
+          e.time),
+        (old, j) => old.copy(desc = j.desc, start = j.start)); ()
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+      jobs.merge(e.jobId, Job(null, -1L, e.time),
+        (old, j) => old.copy(end = j.end)); ()
+    }
+    /** Runs a job labeled `name` and waits until the log has seen it
+      * end: the listener bus is FIFO, so every event posted before the
+      * marker has been delivered by then. */
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      eventually(timeout(30.seconds)) {
+        assert(jobs.values.asScala.exists(j => j.desc == name && j.end >= 0))
+      }
+    }
+    def all: Seq[Job] = jobs.values.asScala.toSeq
+  }
+
+  private def withJobLog[T](body: JobLog => T): T = {
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try body(log) finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  /** Committed state files: parquet files outside `_temporary`. */
+  private def stateFiles(statePath: String): Set[String] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.getName.startsWith("_")) Nil
+      else if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
+      else Seq(f)
+    Option(new java.io.File(statePath).listFiles).toSeq.flatten.flatMap(walk)
+      .map(_.getPath).filter(_.endsWith(".parquet")).toSet
+  }
+
+  private val FoldLabels = Seq("guard", "gate-census", "gated", "s3-exact",
+    "shingle", "batch-df", "canonical", "s4-near", "s5-decontam", "write-fps",
+    "write-survivors", "write-postings", "write-shdf", "stats", "write-funnel")
+    .map("fold:" + _).toSet
+
+  /** Folds `batch` expecting a failure; then checks that no job of the
+    * fold was left running or started after the throw, and that no
+    * state file appears afterwards. Returns the failure. */
+  private def failedFold(statePath: String, batch: DataFrame,
+                         bench: DataFrame, batchId: Long): Throwable =
+    withJobLog { log =>
+      val e = intercept[Exception] {
+        CurationRound.foldBatch(spark, statePath, batch, bench, cfg, batchId)
+      }
+      val thrownAt = System.currentTimeMillis()
+      val files = stateFiles(statePath)
+      log.marker("spec:after-failed-fold")
+      val fold = log.all.filter(j => j.desc != null && j.desc.startsWith("fold:"))
+      assert(fold.nonEmpty)
+      assert(fold.forall(j => j.end >= 0 && j.end <= thrownAt),
+        s"fold jobs still running after the fold threw at $thrownAt: $fold")
+      assert(!fold.exists(_.start > thrownAt), "a fold job started after the throw")
+      Thread.sleep(2000)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+      assert(stateFiles(statePath) == files, "state files appeared after the fold threw")
+      e
+    }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("a failed fold leaves nothing running: jobs cancelled, no state file appears afterwards") {
+    val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
+    def batch(k: Int) = (1 to 4)
+      .map(i => (k * 10L + i, "en", mkDoc(s"f$k$i"))).toDF("doc_id", "lang", "text")
+
+    // A delta write that fails while the others run: `fps` is a plain
+    // file, so its append cannot create the directory.
+    val blocked = java.nio.file.Files.createTempDirectory("graft-cur-fail-w")
+    java.nio.file.Files.writeString(blocked.resolve("fps"), "not a directory")
+    failedFold(blocked.toString, batch(0), bench, 0L)
+
+    // A bench probe that throws inside its job, on a fold with history.
+    val statePath = java.nio.file.Files
+      .createTempDirectory("graft-cur-fail-p").toString
+    CurationRound.foldBatch(spark, statePath, batch(0), bench, cfg, 0L)
+    val boom = udf((s: String) => {
+      if (s != null) throw new IllegalStateException("bench probe failed"); s
+    }).asNondeterministic()
+    val e = failedFold(statePath, batch(1),
+      bench.withColumn("text", boom(col("text"))), 1L)
+    assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("bench probe failed")))
+    // the same batch re-folds cleanly over whatever the failed fold left
+    CurationRound.foldBatch(spark, statePath, batch(1), bench, cfg, 1L)
+    assert(ids(CurationRound.readRetained(spark, statePath, cfg))
+      == Set(1L, 2L, 3L, 4L, 11L, 12L, 13L, 14L))
+    assert(CurationRound.incrementalFunnel(spark, statePath).count() == 12)
+  }
+
+  test("every job a fold starts carries one of the fold:* phase labels") {
+    val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
+    val statePath = java.nio.file.Files
+      .createTempDirectory("graft-cur-labels").toString
+    val labels = withJobLog { log =>
+      log.marker("spec:before-folds")
+      CurationRound.foldBatch(spark, statePath,
+        Seq((1L, "en", mkDoc("ka")), (2L, "en", mkDoc("kb")))
+          .toDF("doc_id", "lang", "text"), bench, cfg, 0L)
+      // history present: the guard, state reads and history edges run
+      CurationRound.foldBatch(spark, statePath,
+        Seq((11L, "en", mkDoc("ka", 5)), (12L, "en", mkDoc("kc")))
+          .toDF("doc_id", "lang", "text"), bench, cfg, 1L)
+      log.marker("spec:after-folds")
+      val js = log.all
+      val t0 = js.filter(_.desc == "spec:before-folds").map(_.end).max
+      val t1 = js.filter(_.desc == "spec:after-folds").map(_.start).min
+      js.filter(j => j.start >= t0 && j.start <= t1 &&
+        !String.valueOf(j.desc).startsWith("spec:")).map(_.desc)
+    }
+    val unlabeled = labels.filterNot(FoldLabels.contains)
+    assert(unlabeled.isEmpty, s"jobs without a fold label: $unlabeled")
+    Seq("guard", "canonical", "s4-near", "s5-decontam", "write-funnel")
+      .foreach(p => assert(labels.contains(s"fold:$p"), s"no fold:$p job"))
+    assert(ids(CurationRound.readRetained(spark, statePath, cfg)) == Set(1L, 2L, 12L))
+  }
+
+  test("foldBatch releases its checkpoint blocks with history present: no persistent RDD outlives clearCache") {
+    val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
+    val statePath = java.nio.file.Files
+      .createTempDirectory("graft-cur-leak-hist").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    CurationRound.foldBatch(spark, statePath,
+      Seq((1L, "en", mkDoc("ha")), (2L, "en", mkDoc("hb")))
+        .toDF("doc_id", "lang", "text"), bench, cfg, 0L)
+    // batch 1 meets history: 11 drops on its edge to shipped 1
+    CurationRound.foldBatch(spark, statePath,
+      Seq((11L, "en", mkDoc("ha", 5)), (12L, "en", mkDoc("hc")))
+        .toDF("doc_id", "lang", "text"), bench, cfg, 1L)
+    spark.catalog.clearCache()
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "foldBatch leaked checkpoint RDD blocks")
+    assert(ids(CurationRound.readRetained(spark, statePath, cfg)) == Set(1L, 2L, 12L))
+  }
+
+  test("decontamination probed over s3 then restricted to s4 ≡ run(): stage 4/5 counts and retained ids") {
+    // One bench line; quoting it contaminates a doc (overlap 1.0).
+    val quote = "the quoted bench line data item zeta."
+    val bench = Seq((900L, quote)).toDF("doc_id", "text")
+    val batch0 = Seq(
+      (1L, "en", mkDoc("ww")),                        // shipped twin of 11
+      (2L, "en", mkDoc("cc")))                        // clean
+    val batch1 = Seq(
+      (11L, "en", mkDoc("ww", 5) + "\n" + quote),    // history near-dup loser AND contaminated
+      (12L, "en", mkDoc("bb") + "\n" + quote),       // contaminated only
+      (13L, "en", mkDoc("dd")),                       // clean
+      (14L, "en", mkDoc("dd", 5) + "\n" + quote))    // in-batch near-dup loser AND contaminated
+    def df(b: Seq[(Long, String, String)]) = b.toDF("doc_id", "lang", "text")
+    val statePath = java.nio.file.Files
+      .createTempDirectory("graft-cur-decontam").toString
+    CurationRound.foldBatch(spark, statePath, df(batch0), bench, cfg, 0L)
+    val f1 = funnelRows(
+      CurationRound.foldBatch(spark, statePath, df(batch1), bench, cfg, 1L))
+    // batch 1: 11 and 14 drop at near-dup (before decontamination could
+    // count them), 12 at decontamination
+    assert(f1.map(_._3).drop(3) == Seq(4L, 2L, 1L))
+
+    val full = CurationRound.run(spark, df(batch0 ++ batch1), bench, cfg)
+    def stages45(f: Seq[(Int, String, Long, Long)]) = f.filter(r => r._1 == 4 || r._1 == 5)
+    assert(stages45(funnelRows(CurationRound.cumulativeFunnel(spark, statePath)))
+      == stages45(funnelRows(full.funnel.filter(col("stage_ord") <= 5))))
+    assert(ids(CurationRound.readRetained(spark, statePath, cfg)) == ids(full.curated))
+    assert(ids(full.curated) == Set(1L, 2L, 13L))
+    full.unpersist()
   }
 }

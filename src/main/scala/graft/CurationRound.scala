@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{Dedup, Packing, Sampling, TextAnalysis}
+import graft.sources.Tables
 
 /** One CURATION round over a document corpus — the pre-training data
   * chain composed end-to-end from the engine's standalone operators,
@@ -158,7 +159,7 @@ object CurationRound {
     def seam(stageName: String, compute: () => DataFrame): DataFrame = {
       val p = path(stageName)
       if (!done(p)) compute().write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
+      Tables.parquet(spark, p)
     }
     def tinySeam(stageName: String, compute: () => DataFrame): DataFrame =
       seam(stageName, () => compute().coalesce(1))
@@ -275,7 +276,7 @@ object CurationRound {
       case _ =>
         val p = tempTableDir(spark)
         mixedPlan().write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
+        Tables.parquet(spark, p)
     }
 
     // Funnel counts: stage frames are id-scale and persisted; ONE
@@ -387,23 +388,6 @@ object CurationRound {
   private def subPath(statePath: String, name: String): String =
     statePath.stripSuffix("/") + "/" + name
 
-  /** Label every job a fold phase fires (guide §1.5) with its phase
-    * name, and tag it with the fold's `tag` so a failed fold can cancel
-    * whatever is still running. Both are thread-local: every pool task
-    * labels and tags itself. The PREVIOUS description (a calling harness
-    * may have set one) is captured and restored afterwards rather than
-    * clobbered to null. */
-  private def phase[T](spark: SparkSession, tag: String, name: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(name)
-    sc.addJobTag(tag)
-    try body finally {
-      sc.removeJobTag(tag)
-      sc.setJobDescription(prev)
-    }
-  }
-
   private def dirNonEmpty(spark: SparkSession, p: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(p)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -495,11 +479,9 @@ object CurationRound {
     * round-cut decision — see [[cutRound]]). */
   def foldBatch(spark: SparkSession, statePath: String, batch: DataFrame,
                 bench: DataFrame, cfg: Config, batchId: Long): DataFrame = {
-    // One small pool runs every INDEPENDENT part of this fold as a
-    // concurrent job (guide §2.6: actions are only sequential because
-    // the driver calls them sequentially; each job's tail back-fills
-    // the cores the others leave idle). What overlaps, and why it is
-    // safe:
+    // A JobPool runs every INDEPENDENT part of this fold as a
+    // concurrent job under a `fold:*` label. What overlaps, and why it
+    // is safe:
     //  - the append-only guard and the gate census start at fold start:
     //    the guard's answer is only needed before the first state write
     //    (and for the shdf frontier, after batch-df), the census row
@@ -516,24 +498,12 @@ object CurationRound {
     //    taken once their inputs are ready;
     //  - each state delta starts as soon as its input exists (see
     //    "State deltas" below).
-    // Every job carries the fold's tag. If any part fails, the tagged
-    // jobs are cancelled, queued parts never start, and the fold throws
-    // only once no thread or job of it is left running.
-    val sc = spark.sparkContext
-    val tag = s"graft-fold-${java.util.UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-    def labeled[T](name: String)(body: => T): T = phase(spark, tag, name)(body)
-    @volatile var aborted = false
-    def submit[T](name: String)(body: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        def call(): T =
-          if (aborted) throw new java.util.concurrent.CancellationException(name)
-          else labeled(name)(body) })
     // Stage checkpoints, released when the fold ends, either way.
     val pinned = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
     def pin(df: DataFrame): DataFrame = {
       val c = df.localCheckpoint(); pinned.add(c); c }
-    try {
+    try JobPool.run(spark, s"curation fold of batch $batchId") { jp =>
+    import jp.{labeled, submit}
     val guardF = submit("fold:guard") { foldFrontier(spark, statePath) }
     // The refusal point: every state write (and the shdf read) passes
     // here first, so a refused batch leaves state untouched. Returns
@@ -801,27 +771,7 @@ object CurationRound {
     labeled("fold:write-funnel") {
       funnel.write.mode("append").parquet(subPath(statePath, "funnel")) }
     funnel
-    } catch {
-      case t: Throwable =>
-        // Nothing of a failed fold may outlive the call. Parts not yet
-        // started return at once. Cancelling the fold's tagged jobs
-        // fails the action each running part waits on; it repeats until
-        // every part has returned, because a part still planning can
-        // start a job after a cancel, and once more until no tagged job
-        // is left, because Spark submits shuffle-stage jobs from its
-        // own thread pool. Parts are never interrupted: an interrupted
-        // action skips that cleanup and leaves its shuffle jobs to start
-        // after the fold has returned.
-        aborted = true
-        pool.shutdown()
-        val reason = s"curation fold of batch $batchId failed"
-        GraftBridge.cancelJobsWithTag(sc, tag, reason)
-        while (!pool.awaitTermination(50, java.util.concurrent.TimeUnit.MILLISECONDS))
-          GraftBridge.cancelJobsWithTag(sc, tag, reason)
-        while (GraftBridge.cancelJobsWithTag(sc, tag, reason) > 0) ()
-        throw t
     } finally {
-      pool.shutdown()
       // releaseLocalCheckpoint, not just unpersist: these are local
       // checkpoints, whose blocks the plain unpersist leaves pinned for
       // the application's life (see GraftBridge.releaseLocalCheckpoint).

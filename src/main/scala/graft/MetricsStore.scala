@@ -51,7 +51,7 @@ object MetricsStore {
   /** The full history (all rounds). A filter on `round_id` prunes to one
     * partition directory — the read path every query below uses. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.Tables.parquet(spark, path)
 
   /** One round's rows, partition-pruned. */
   def readRound(spark: SparkSession, path: String, roundId: Long): DataFrame =

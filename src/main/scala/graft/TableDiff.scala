@@ -159,6 +159,12 @@ object TableDiff {
   def mismatchMatrixMulti(left: DataFrame, right: DataFrame, pks: Seq[String],
                           exclude: Seq[String] = Nil, idCap: Int = 1000000): DataFrame = {
     require(idCap > 0, "idCap must be positive")
+    matrix(left, right, pks, exclude, Some(idCap))
+  }
+
+  /** The matrix, capped per hash bucket when `idCap` is set. */
+  private def matrix(left: DataFrame, right: DataFrame, pks: Seq[String],
+                     exclude: Seq[String], idCap: Option[Int]): DataFrame = {
     val cols = compareCols(left, pks, exclude)
     val d = diff(left, right, pks, exclude).filter(col("hash_mismatch"))
     // All non-PK columns excluded (e.g. a pure-key link table): no cells
@@ -167,16 +173,17 @@ object TableDiff {
     if (cols.isEmpty)
       return d.select(col("pk").as("id"), lit("").as("column_name"),
         lit("").as("hive"), lit("").as("snowflake")).limit(0)
-    val buckets = math.max(1, math.min(CapBuckets, idCap))
-    // Long math: ceil over Int overflows for probe-style idCap=MaxValue.
-    val perBucket = ((idCap.toLong + buckets - 1) / buckets).toInt
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__bkt")).orderBy(col("pk"))
-    val capped = d
-      .withColumn("__bkt", pmod(xxhash64(col("pk").cast("string")), lit(buckets.toLong)))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= perBucket)
-      .drop("__bkt", "__rn")
+    val capped = idCap.fold(d) { cap =>
+      val buckets = math.max(1, math.min(CapBuckets, cap))
+      // Long math: ceil over Int overflows for idCap near Int.MaxValue.
+      val perBucket = ((cap.toLong + buckets - 1) / buckets).toInt
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("__bkt")).orderBy(col("pk"))
+      d.withColumn("__bkt", pmod(xxhash64(col("pk").cast("string")), lit(buckets.toLong)))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") <= perBucket)
+        .drop("__bkt", "__rn")
+    }
     // Names are spliced into stack() SQL: escape quote chars so an exotic
     // (or hostile) source column name can't break or alter the expression.
     val stackArgs = cols.map { c =>
@@ -206,12 +213,11 @@ object TableDiff {
     // — a numeric literal against a string pk would coerce the COLUMN and
     // defeat the scan pushdown this probe exists for.
     val keep = col(pk).isin(ids: _*)
-    // The probe input is already bounded by the id filter, so the matrix
-    // cap is vacuous here — and an exact small idCap would be wrong: the
-    // hash-bucketed cap is approximate (per-bucket limits), so two probe
-    // ids colliding into one bucket would silently drop one.
-    mismatchMatrixMulti(left.filter(keep), right.filter(keep), Seq(pk),
-      exclude, idCap = Int.MaxValue)
+    // The probe input is already bounded by the id filter, so it takes
+    // the UNCAPPED matrix: no per-bucket row_number window (a shuffle
+    // plus a sort per probe), and no approximate cap — with per-bucket
+    // limits, two probe ids colliding into one bucket could drop one.
+    matrix(left.filter(keep), right.filter(keep), Seq(pk), exclude, None)
   }
 
   /** Catalog-driven [[metricsMulti]]: primary keys AND audit-column
@@ -450,10 +456,20 @@ object TableDiff {
     * {ok, type_drift, hive_only, sf_only}, left-schema order first then
     * right-only columns in right-schema order. */
   def schemaDrift(left: DataFrame, right: DataFrame): DataFrame = {
-    val rTypes = right.schema.fields
+    val spark = left.sparkSession
+    import spark.implicits._
+    schemaDriftRows(left.schema, right.schema)
+      .toDF("column", "hive_type", "sf_type", "status")
+  }
+
+  /** [[schemaDrift]]'s rows (column, hive_type, sf_type, status), built
+    * on the driver from the two schemas: deciding drift needs no job. */
+  private[graft] def schemaDriftRows(left: org.apache.spark.sql.types.StructType,
+      right: org.apache.spark.sql.types.StructType): Seq[(String, String, String, String)] = {
+    val rTypes = right.fields
       .map(f => f.name.toLowerCase -> f.dataType.simpleString).toMap
-    val lNames = left.schema.fieldNames.map(_.toLowerCase).toSet
-    val fromLeft = left.schema.fields.map { f =>
+    val lNames = left.fieldNames.map(_.toLowerCase).toSet
+    val fromLeft = left.fields.map { f =>
       val rt = rTypes.get(f.name.toLowerCase)
       val lt = f.dataType.simpleString
       val status = rt match {
@@ -463,13 +479,10 @@ object TableDiff {
       }
       (f.name, lt, rt.orNull, status)
     }
-    val fromRight = right.schema.fields
+    val fromRight = right.fields
       .filterNot(f => lNames.contains(f.name.toLowerCase))
       .map(f => (f.name, null: String, f.dataType.simpleString, "sf_only"))
-    val spark = left.sparkSession
-    import spark.implicits._
     (fromLeft ++ fromRight).toSeq
-      .toDF("column", "hive_type", "sf_type", "status")
   }
 
   /** Discrepancy-rate estimate from a consistent BY-KEY sample: both

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.Future
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,7 +24,7 @@ import org.apache.spark.sql.types._
   *
   * The report is one bounded row per table (sample lists capped by
   * `sampleCap`), built driver-side — table COUNT is metadata-scale; the
-  * per-pair work is Spark jobs.
+  * per-pair work is Spark jobs, run concurrently (see [[report]]).
   */
 object ValidationRound {
 
@@ -108,150 +110,155 @@ object ValidationRound {
 
   /** Per-pair status: `schema_drift` (gate failed, no data read),
     * `clean` (checksum triage proved parity — row diff skipped; counts
-    * come from the triage summaries), or `diffed` (full metrics row). */
+    * come from the triage summaries), or `diffed` (full metrics row).
+    *
+    * The schema gate is decided on the driver. Every other part runs as
+    * a concurrent job on a [[JobPool]], for all pairs at once: each
+    * pair's checksum→diff chain (`report:checksum`, then
+    * `report:metrics`), its PSI monitor (`report:psi`), the count-anomaly
+    * monitor of each side (`report:anomaly`) and each census read
+    * (`report:census`). That is safe because every part only READS (the
+    * pair's frames or maintained state) and hands nothing to another;
+    * only the chain is ordered, as triage decides whether the diff runs.
+    * Rows are assembled in pair order, so the report equals the
+    * sequential one. If any part fails, the report's jobs are cancelled,
+    * parts not yet started never run, and the first failure is rethrown
+    * once no job or pool thread of the report is left. */
   def report(spark: SparkSession, pairs: Seq[TablePair],
              sampleCap: Int = 100): DataFrame = {
-    val rows = pairs.map { p =>
+    val rows = JobPool.run(spark, "validation report") { jp =>
       // The gate honors the pair's exclusions: a one-sided audit column
       // the catalog already excludes (the reference's operating mode)
       // must not permanently fail the pair as schema_drift.
-      val drifted = TableDiff.schemaDrift(
-          p.left.drop(p.exclude: _*), p.right.drop(p.exclude: _*))
-        .filter(col("status") =!= "ok").count()
-      // Census monitors read MAINTAINED state, never the pair's tables,
-      // so they run regardless of the schema gate. Worst-source summary
-      // with deterministic ties (smallest source); a not-yet-created
-      // state directory reports NULLs (no batch has committed yet).
-      def exists(path: String): Boolean = {
-        val hp = new org.apache.hadoop.fs.Path(path)
-        hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
+      val gated = pairs.map(p => p -> TableDiff.schemaDriftRows(
+        p.left.drop(p.exclude: _*).schema, p.right.drop(p.exclude: _*).schema)
+        .forall(_._4 == "ok"))
+      // The pool starts parts in submission order: the chains, the
+      // longest parts, go first.
+      val verdicts = gated.map { case (p, ok) =>
+        if (ok) jp.submit("report:checksum")(verdict(jp, p, sampleCap))
+        else JobPool.done(Seq("schema_drift", false) ++ Seq.fill(7)(0L) ++ Seq.fill(3)(""))
       }
-      val censusCols: Seq[Any] = {
-        val dup = p.census.flatMap(_.dupRatePath).filter(exists).map { path =>
-          val r = graft.operators.Monitoring.dupRateFromState(
-              graft.streaming.EventStream.readDupRateState(spark, path))
-            .agg(max(col("dup_rate")),
-              min_by(col("source"), struct(-col("dup_rate"), col("source"))))
-            .head()
-          (if (r.isNullAt(0)) null else r.getDouble(0), r.getString(1))
-        }
-        val nov = p.census.flatMap(_.noveltyPath).filter(exists).map { path =>
-          val r = graft.operators.Vocab.noveltyFromState(
-              graft.streaming.EventStream.readNoveltyState(spark, path))
-            .agg(min(col("novelty")),
-              min_by(col("source"), struct(col("novelty"), col("source"))))
-            .head()
-          (if (r.isNullAt(0)) null else r.getDouble(0), r.getString(1))
-        }
-        val gop = p.census.flatMap(_.gopherRatePath).filter(exists).map { path =>
-          val r = graft.streaming.EventStream.readGopherRate(spark, path)
-            .agg(min(col("pass_rate")),
-              min_by(col("source"), struct(col("pass_rate"), col("source"))))
-            .head()
-          (if (r.isNullAt(0)) null else r.getDouble(0), r.getString(1))
-        }
-        val pii = p.census.flatMap(_.piiRatePath).filter(exists).map { path =>
-          val r = graft.streaming.EventStream.readPiiRate(spark, path)
-            .agg(max(col("dirty_rate")),
-              min_by(col("source"), struct(-col("dirty_rate"), col("source"))))
-            .head()
-          (if (r.isNullAt(0)) null else r.getDouble(0), r.getString(1))
-        }
-        Seq(dup.map(_._1).orNull, dup.map(_._2).orNull,
-          nov.map(_._1).orNull, nov.map(_._2).orNull,
-          gop.map(_._1).orNull, gop.map(_._2).orNull,
-          pii.map(_._1).orNull, pii.map(_._2).orNull)
+      val monitors = gated.map { case (p, ok) =>
+        (if (ok) monitorParts(jp, p) else Seq(JobPool.done(Seq.fill[Any](5)(null)))) ++
+          censusParts(jp, spark, p)
       }
-      // Monitors run once the schema gate passes (they read data, the
-      // gate's contract forbids that on drift) and regardless of the
-      // triage verdict: PSI on a checksum-clean pair is provably 0 —
-      // the row then DOCUMENTS stability — and count anomaly watches
-      // each side's own history, which parity between sides never
-      // vouches for. The summary values are aggregations OF the
-      // standalone query outputs (spec-proven equal), not parallel
-      // reimplementations: psi_total sums the same psi_term column
-      // q_psi_drift emits; anomaly counts flag rows of the same frame
-      // q_count_anomaly emits.
-      def monitorCols: Seq[Any] =
-        if (drifted > 0) Seq(null, null, null, null, null)
-        else {
-          // flatMap + isEmpty guard: an empty/all-null reference side
-          // defines no bins (the operator throws by contract); in a
-          // ROUND a not-yet-populated table must yield NULL monitor
-          // columns, not fail the whole report. isEmpty is a limit-1
-          // probe, not a scan.
-          val psi = p.drift.flatMap { d =>
-            if (p.left.filter(col(d.valueCol).isNotNull).isEmpty) None
-            else Some {
-            val t = (if (d.sketch)
-              graft.operators.Monitoring.distributionDriftSketch(
-                p.left, p.right, d.valueCol, d.nBuckets)
-            else
-              graft.operators.Monitoring.distributionDrift(
-                p.left, p.right, d.valueCol, d.nBuckets))
-              .agg(sum(col("psi_term")), sum(col("one_sided").cast("long")))
-              .head()
-            val total = if (t.isNullAt(0)) 0.0 else t.getDouble(0)
-            val oneSided = if (t.isNullAt(1)) 0L else t.getLong(1)
-            // One-sided buckets outrank the numeric reading: their
-            // psi_terms are NULL by the operator's contract (a one-sided
-            // bucket IS categorical drift — ε-smoothing would let a
-            // magic constant dominate), so a fully disjoint pair sums to
-            // 0.0 and would otherwise report "stable" with mass the
-            // score never saw. The flag column is the alarm; the status
-            // must agree with it.
-            val status =
-              if (oneSided > 0) "one_sided"
-              else if (total < 0.1) "stable"
-              else if (total < 0.25) "moderate" else "major"
-            (total, oneSided, status)
-          }}
-          val anom = p.anomaly.map { a =>
-            def flagged(df: DataFrame): Long =
-              graft.operators.Monitoring.countAnomaly(df, a.dims, a.period,
-                a.nMads).filter(col("is_anomaly") === 1).count()
-            (flagged(p.left), flagged(p.right))
-          }
-          Seq(psi.map(_._1).orNull, psi.map(_._2).orNull,
-            psi.map(_._3).orNull, anom.map(_._1).orNull,
-            anom.map(_._2).orNull)
-        }
-      if (drifted > 0)
-        Row.fromSeq(Seq(p.name, "schema_drift", false, 0L, 0L, 0L, 0L, 0L,
-          0L, 0L, "", "", "") ++ monitorCols ++ censusCols)
-      else {
-        val triage = p.partCol.map { pc =>
-          // coalesce: an empty pair (not-yet-populated table) sums to
-          // NULL over zero partitions and must report clean, not NPE.
-          TableDiff.partitionChecksum(p.left, p.right, pc, p.pks, p.exclude)
-            .agg(count(lit(1)),
-              count(when(col("status") =!= "ok", 1)),
-              coalesce(sum(col("hive_count")), lit(0L)),
-              coalesce(sum(col("sf_count")), lit(0L))).head()
-        }
-        val (nParts, nDrifted) =
-          triage.map(t => (t.getLong(0), t.getLong(1))).getOrElse((0L, 0L))
-        if (triage.isDefined && nDrifted == 0L) {
-          // Checksums prove parity: report the counts the triage already
-          // paid for and SKIP the diff join entirely.
-          val t = triage.get
-          Row.fromSeq(Seq(p.name, "clean", true, nParts, 0L,
-            t.getLong(2), t.getLong(3), 0L, 0L, 0L, "", "", "") ++ monitorCols ++ censusCols)
-        } else {
-          val m = TableDiff.metricsMulti(p.left, p.right, p.name, p.pks,
-            p.exclude, sampleCap).head()
-          Row.fromSeq(Seq(p.name, "diffed", true, nParts, nDrifted,
-            m.getAs[Long]("total_record_count_hive"),
-            m.getAs[Long]("total_record_count_sf"),
-            m.getAs[Long]("hive_only_count"),
-            m.getAs[Long]("sf_only_count"),
-            m.getAs[Long]("data_discrepancy_count"),
-            m.getAs[String]("hive_only_pk_values"),
-            m.getAs[String]("sf_only_pk_values"),
-            m.getAs[String]("data_discrepancy_pk_values")) ++ monitorCols ++ censusCols)
-        }
+      gated.zip(verdicts).zip(monitors).map { case (((p, _), v), ms) =>
+        Row.fromSeq(p.name +: (v +: ms).flatMap(_.get()))
       }
     }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** The pair's verdict columns, `status` through the PK samples. */
+  private def verdict(jp: JobPool, p: TablePair, sampleCap: Int): Seq[Any] = {
+    val triage = p.partCol.map { pc =>
+      // coalesce: an empty pair (not-yet-populated table) sums to
+      // NULL over zero partitions and must report clean, not NPE.
+      TableDiff.partitionChecksum(p.left, p.right, pc, p.pks, p.exclude)
+        .agg(count(lit(1)),
+          count(when(col("status") =!= "ok", 1)),
+          coalesce(sum(col("hive_count")), lit(0L)),
+          coalesce(sum(col("sf_count")), lit(0L))).head()
+    }
+    val (nParts, nDrifted) =
+      triage.map(t => (t.getLong(0), t.getLong(1))).getOrElse((0L, 0L))
+    // Checksums prove parity: report the counts the triage already paid
+    // for and SKIP the diff join entirely.
+    if (triage.isDefined && nDrifted == 0L)
+      Seq("clean", true, nParts, 0L, triage.get.getLong(2), triage.get.getLong(3),
+        0L, 0L, 0L, "", "", "")
+    else jp.labeled("report:metrics") {
+      val m = TableDiff.metricsMulti(p.left, p.right, p.name, p.pks,
+        p.exclude, sampleCap).head()
+      Seq("diffed", true, nParts, nDrifted) ++ schema.fieldNames.slice(5, 13)
+        .map(c => m.getAs[Any](c))
+    }
+  }
+
+  /** The monitor columns of a pair that passed the schema gate (they
+    * read data, which the gate's contract forbids on drift). They run
+    * regardless of the triage verdict: PSI on a checksum-clean pair is
+    * provably 0 — the row then DOCUMENTS stability — and count anomaly
+    * watches each side's own history, which parity between sides never
+    * vouches for. The values are aggregations OF the standalone query
+    * outputs (spec-proven equal), not parallel reimplementations:
+    * psi_total sums the same psi_term column q_psi_drift emits; anomaly
+    * counts flag rows of the same frame q_count_anomaly emits. */
+  private def monitorParts(jp: JobPool, p: TablePair): Seq[Future[Seq[Any]]] = {
+    val psi = p.drift.fold(JobPool.done(Seq[Any](null, null, null))) { d =>
+      jp.submit("report:psi") {
+        // isEmpty guard: an empty/all-null reference side defines no
+        // bins (the operator throws by contract); in a ROUND a
+        // not-yet-populated table must yield NULL monitor columns, not
+        // fail the whole report. isEmpty is a limit-1 probe, not a scan.
+        if (p.left.filter(col(d.valueCol).isNotNull).isEmpty) Seq(null, null, null)
+        else {
+          val t = (if (d.sketch)
+            graft.operators.Monitoring.distributionDriftSketch(
+              p.left, p.right, d.valueCol, d.nBuckets)
+          else
+            graft.operators.Monitoring.distributionDrift(
+              p.left, p.right, d.valueCol, d.nBuckets))
+            .agg(sum(col("psi_term")), sum(col("one_sided").cast("long")))
+            .head()
+          val total = if (t.isNullAt(0)) 0.0 else t.getDouble(0)
+          val oneSided = if (t.isNullAt(1)) 0L else t.getLong(1)
+          // One-sided buckets outrank the numeric reading: their
+          // psi_terms are NULL by the operator's contract (a one-sided
+          // bucket IS categorical drift — ε-smoothing would let a
+          // magic constant dominate), so a fully disjoint pair sums to
+          // 0.0 and would otherwise report "stable" with mass the
+          // score never saw. The flag column is the alarm; the status
+          // must agree with it.
+          val status =
+            if (oneSided > 0) "one_sided"
+            else if (total < 0.1) "stable"
+            else if (total < 0.25) "moderate" else "major"
+          Seq(total, oneSided, status)
+        }
+      }
+    }
+    psi +: Seq(p.left, p.right).map { side =>
+      p.anomaly.fold(JobPool.done(Seq[Any](null))) { a =>
+        jp.submit("report:anomaly")(Seq(graft.operators.Monitoring.countAnomaly(
+          side, a.dims, a.period, a.nMads).filter(col("is_anomaly") === 1).count()))
+      }
+    }
+  }
+
+  /** Census monitors read MAINTAINED state, never the pair's tables,
+    * so they run regardless of the schema gate. Worst-source summary
+    * with deterministic ties (smallest source); a not-yet-created state
+    * directory reports NULLs (no batch has committed yet). */
+  private def censusParts(jp: JobPool, spark: SparkSession,
+                          p: TablePair): Seq[Future[Seq[Any]]] = {
+    import graft.streaming.EventStream
+    // (declared path, its per-source frame, value column, worst is max)
+    val specs = Seq[(Option[String], String => DataFrame, String, Boolean)](
+      (p.census.flatMap(_.dupRatePath), path => graft.operators.Monitoring
+        .dupRateFromState(EventStream.readDupRateState(spark, path)), "dup_rate", true),
+      (p.census.flatMap(_.noveltyPath), path => graft.operators.Vocab
+        .noveltyFromState(EventStream.readNoveltyState(spark, path)), "novelty", false),
+      (p.census.flatMap(_.gopherRatePath), EventStream.readGopherRate(spark, _),
+        "pass_rate", false),
+      (p.census.flatMap(_.piiRatePath), EventStream.readPiiRate(spark, _),
+        "dirty_rate", true))
+    specs.map { case (path, read, value, worstIsMax) =>
+      path.fold(JobPool.done(Seq[Any](null, null))) { path =>
+        jp.submit("report:census") {
+          val hp = new org.apache.hadoop.fs.Path(path)
+          if (!hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp))
+            Seq(null, null)
+          else {
+            val v = col(value)
+            val r = read(path).agg(if (worstIsMax) max(v) else min(v),
+                min_by(col("source"), struct(if (worstIsMax) -v else v, col("source"))))
+              .head()
+            Seq(if (r.isNullAt(0)) null else r.getDouble(0), r.getString(1))
+          }
+        }
+      }
+    }
   }
 }

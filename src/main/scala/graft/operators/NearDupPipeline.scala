@@ -144,7 +144,7 @@ object NearDupPipeline {
       }
       fresh
     }
-    s.read.parquet(entry.path)
+    graft.sources.Tables.parquet(s, entry.path)
   }
 
   /** Jaccard pairs from the shared table — output-identical to

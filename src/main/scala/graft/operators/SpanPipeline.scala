@@ -152,7 +152,7 @@ object SpanPipeline {
       hookEviction(s)
       cache.getOrElseUpdate(key, build(df, key))
     }
-    s.read.parquet(entry.path)
+    graft.sources.Tables.parquet(s, entry.path)
   }
 
   /** Census report off the shared table — output-identical to

@@ -17,7 +17,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads as a
     // raw long (spark.sql.legacy.parquet.nanosAsLong, set by GraftSession);
     // truncate nanos→micros like DuckDB/Arrow do when downcasting.
@@ -25,6 +25,20 @@ object Tables {
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else df
   }
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema Spark would infer is read from the same footer on the driver
+    * ([[org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge]])
+    * and passed to `spark.read.schema`, so the load itself starts no
+    * Spark job. Nothing is memoized: every call lists the path afresh,
+    * so a replaced file is read as it is now. Where the bridge declines
+    * (a glob, a missing or empty path) Spark infers, and raises its own
+    * errors. Reads that merge schemas need every footer and keep
+    * Spark's job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+      .inferredSchema(spark, path)
+      .fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
 
   /** CSV table load with an EXPLICIT schema — the reference's warehouse
     * dumps arrive as headered CSV (tools/snowflake_tool.py:146-165 renders

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sources.Tables
+
 /** Structured Streaming twins of the batch event operators (SURVEY.md §2
   * #34): watermarked tumbling-window aggregation, list-state gap
   * sessionization via flatMapGroupsWithState, watermarked dedup (by id
@@ -390,7 +392,7 @@ object EventStream {
     * feed to [[graft.operators.Vocab.noveltyFromState]] or
     * [[graft.operators.Vocab.overlapFromState]]. */
   def readNoveltyState(spark: SparkSession, statePath: String): DataFrame =
-    spark.read.parquet(statePath).distinct()
+    Tables.parquet(spark, statePath).distinct()
 
   /** Streaming maintenance for the Markov transition census
     * ([[graft.operators.Eval.transitionMatrix]]): each micro-batch
@@ -442,7 +444,7 @@ object EventStream {
           org.apache.spark.sql.types.StructField("last_state",
             org.apache.spark.sql.types.StringType))))
     } else {
-      val all = spark.read.parquet(s"$statePath/carry")
+      val all = Tables.parquet(spark, s"$statePath/carry")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("key")).orderBy(col("__batch_id").desc)
       all.withColumn("__rn", row_number().over(w))
@@ -456,7 +458,7 @@ object EventStream {
     * contract, from folded deltas (replay-deduped on batch id). */
   def readTransitionState(spark: SparkSession, statePath: String): DataFrame =
     graft.operators.Eval.transitionsFromCounts(
-      spark.read.parquet(s"$statePath/transitions")
+      Tables.parquet(spark, s"$statePath/transitions")
         .dropDuplicates("__batch_id", "from_state", "to_state"))
 
   /** Streaming maintenance for the AUC monitor

@@ -1,13 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.SpanSugar._
-import scala.jdk.CollectionConverters._
 
 /** The incremental curation loop's contract: folding monotone ingest
   * batches through [[CurationRound.foldBatch]] maintains exactly the
@@ -325,40 +320,6 @@ class CurationIncrementalSpec extends AnyFunSuite {
     assert(ids(CurationRound.readRetained(spark, statePath, cfg)) == Set(5L))
   }
 
-  /** Every job the session runs while installed: its description and
-    * its scheduler start/end times. */
-  private final class JobLog extends SparkListener {
-    final case class Job(desc: String, start: Long, end: Long = -1L)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      jobs.merge(e.jobId,
-        Job(Option(e.properties).map(_.getProperty("spark.job.description")).orNull,
-          e.time),
-        (old, j) => old.copy(desc = j.desc, start = j.start)); ()
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-      jobs.merge(e.jobId, Job(null, -1L, e.time),
-        (old, j) => old.copy(end = j.end)); ()
-    }
-    /** Runs a job labeled `name` and waits until the log has seen it
-      * end: the listener bus is FIFO, so every event posted before the
-      * marker has been delivered by then. */
-    def marker(name: String): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-      eventually(timeout(30.seconds)) {
-        assert(jobs.values.asScala.exists(j => j.desc == name && j.end >= 0))
-      }
-    }
-    def all: Seq[Job] = jobs.values.asScala.toSeq
-  }
-
-  private def withJobLog[T](body: JobLog => T): T = {
-    val log = new JobLog
-    spark.sparkContext.addSparkListener(log)
-    try body(log) finally spark.sparkContext.removeSparkListener(log)
-  }
-
   /** Committed state files: parquet files outside `_temporary`. */
   private def stateFiles(statePath: String): Set[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -379,7 +340,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
     * state file appears afterwards. Returns the failure. */
   private def failedFold(statePath: String, batch: DataFrame,
                          bench: DataFrame, batchId: Long): Throwable =
-    withJobLog { log =>
+    JobLog.during(spark) { log =>
       val e = intercept[Exception] {
         CurationRound.foldBatch(spark, statePath, batch, bench, cfg, batchId)
       }
@@ -432,8 +393,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
     val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
     val statePath = java.nio.file.Files
       .createTempDirectory("graft-cur-labels").toString
-    val labels = withJobLog { log =>
-      log.marker("spec:before-folds")
+    val labels = JobLog.startedBy(spark) {
       CurationRound.foldBatch(spark, statePath,
         Seq((1L, "en", mkDoc("ka")), (2L, "en", mkDoc("kb")))
           .toDF("doc_id", "lang", "text"), bench, cfg, 0L)
@@ -441,13 +401,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
       CurationRound.foldBatch(spark, statePath,
         Seq((11L, "en", mkDoc("ka", 5)), (12L, "en", mkDoc("kc")))
           .toDF("doc_id", "lang", "text"), bench, cfg, 1L)
-      log.marker("spec:after-folds")
-      val js = log.all
-      val t0 = js.filter(_.desc == "spec:before-folds").map(_.end).max
-      val t1 = js.filter(_.desc == "spec:after-folds").map(_.start).min
-      js.filter(j => j.start >= t0 && j.start <= t1 &&
-        !String.valueOf(j.desc).startsWith("spec:")).map(_.desc)
-    }
+    }.map(_.desc)
     val unlabeled = labels.filterNot(FoldLabels.contains)
     assert(unlabeled.isEmpty, s"jobs without a fold label: $unlabeled")
     Seq("guard", "canonical", "s4-near", "s5-decontam", "write-funnel")

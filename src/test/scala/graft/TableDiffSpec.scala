@@ -216,4 +216,23 @@ class TableDiffSpec extends AnyFunSuite {
       .select($"id").as[Long].collect().toSet
     assert(ids == Set(k1, k2))
   }
+
+  test("mismatchProbe is the capped matrix filtered to its ids, planned without a Window") {
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val ids = Seq(2L, 4L, 5L)
+    val probe = TableDiff.mismatchProbe(left, right, "id", ids)
+    val want = sorted(TableDiff.mismatchMatrix(left, right, "id").filter($"id".isin(ids: _*)))
+    assert(want.nonEmpty && sorted(probe) == want)
+    val (h, f) = (Fixtures.hiveOrders(spark, TestSpark.Sf0001),
+      Fixtures.sfOrders(spark, TestSpark.Sf0001))
+    val oIds = Seq(89L, 131L, 178L, 262L, 267L)
+    val oProbe = TableDiff.mismatchProbe(h, f, "o_orderkey", oIds)
+    assert(sorted(oProbe) == sorted(TableDiff.mismatchMatrix(h, f, "o_orderkey")
+      .filter($"id".isin(oIds: _*))))
+    // The cap is a per-bucket row_number window; the probe needs none.
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    assert(plan(TableDiff.mismatchMatrix(left, right, "id")).contains("Window"))
+    Seq(probe, oProbe).foreach(p => assert(!plan(p).contains("Window"), plan(p)))
+  }
 }
+

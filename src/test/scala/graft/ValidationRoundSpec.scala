@@ -278,4 +278,104 @@ class ValidationRoundSpec extends AnyFunSuite {
     assert(exp == ("web" -> 0.5), "web leaks 1 of 2 docs")
     assert(out("bare").isNullAt(out("bare").fieldIndex("pii_dirty_rate_max")))
   }
+
+  test("the schema gate starts no Spark job: a schema_drift-only report runs none") {
+    val dir = TestSpark.Sf0001
+    val l = graft.sources.Tables.load(spark, dir, "region")
+    val r = l.withColumn("r_regionkey", col("r_regionkey").cast("string"))
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = JobLog.startedBy(spark) {
+      out = ValidationRound.report(spark, Seq(
+        TablePair("region", l, r, Seq("r_regionkey"), partCol = Some("r_name"))))
+    }
+    assert(jobs.isEmpty, s"jobs started by the schema gate: $jobs")
+    assert(out.collect().map(_.getString(1)).toSeq == Seq("schema_drift"))
+  }
+
+  /** A 4-pair catalog touching every report part: triage (clean and
+    * drifted), the diff, PSI, count anomaly and a census read. */
+  private def catalog(): Seq[TablePair] = {
+    import graft.ValidationRound.{AnomalySpec, CensusSpec, DriftSpec}
+    val dir = TestSpark.Sf0001
+    val (h, f) = (Fixtures.hiveOrders(spark, dir), Fixtures.sfOrders(spark, dir))
+    val region = graft.sources.Tables.load(spark, dir, "region")
+    val nation = graft.sources.Tables.load(spark, dir, "nation")
+    val dupDir = java.nio.file.Files.createTempDirectory("graft-vr-par").toString
+    graft.operators.Monitoring.dupRateState(
+        Seq((1L, "alpha beta", "web"), (2L, "alpha beta", "web")).toDF("doc_id", "text", "source"),
+        "source", graft.operators.TextAnalysis.docFingerprint(col("text")))
+      .withColumn("__batch_id", lit(0L)).write.mode("append").parquet(dupDir)
+    Seq(
+      TablePair("orders", h, f, Seq("o_orderkey"),
+        drift = Some(DriftSpec("o_totalprice_cents")),
+        anomaly = Some(AnomalySpec(Seq("o_orderstatus"), col("o_orderdate")))),
+      TablePair("region", region, region, Seq("r_regionkey"), partCol = Some("r_name")),
+      TablePair("nation", nation,
+        nation.withColumn("n_name", when(col("n_nationkey") === 3, lit("x"))
+          .otherwise(col("n_name"))),
+        Seq("n_nationkey"), partCol = Some("n_regionkey")),
+      TablePair("census", region, region, Seq("r_regionkey"),
+        census = Some(CensusSpec(Some(dupDir)))))
+  }
+
+  test("every job a report starts carries a report:* label; rows come back in pair order") {
+    val pairs = catalog()
+    var rows: Seq[org.apache.spark.sql.Row] = Nil
+    val jobs = JobLog.startedBy(spark) {
+      rows = ValidationRound.report(spark, pairs).collect().toSeq
+    }
+    assert(rows.map(_.getString(0)) == pairs.map(_.name))
+    assert(rows.map(_.getString(1)) == Seq("diffed", "clean", "diffed", "diffed"))
+    assert(rows(2).getAs[String]("data_discrepancy_pk_values") == "3")
+    assert(rows(3).getAs[String]("dup_rate_max_source") == "web")
+    val parts = Set("checksum", "metrics", "psi", "anomaly", "census").map("report:" + _)
+    val labels = jobs.map(_.desc)
+    assert(labels.filterNot(parts.contains).isEmpty,
+      s"jobs without a report label: ${labels.filterNot(parts.contains)}")
+    parts.foreach(p => assert(labels.contains(p), s"no $p job"))
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  private def poolThreads: Seq[Thread] =
+    scala.jdk.CollectionConverters.SetHasAsScala(Thread.getAllStackTraces.keySet)
+      .asScala.toSeq.filter(t => t.isAlive && t.getName.startsWith("graft-pool-"))
+
+  test("a failed report rethrows the monitor's failure and leaves no job or pool thread behind") {
+    import graft.ValidationRound.AnomalySpec
+    // Slow sides keep other parts' jobs running when the monitor fails.
+    val slow = udf((x: Long) => { Thread.sleep(100); x }).asNondeterministic()
+    def slowSide = spark.range(0, 16, 1, 4).select(col("id"), slow(col("id")).as("v"))
+    val boom = udf((x: Long) => {
+      Thread.sleep(300)
+      if (x >= 0) throw new IllegalStateException("monitor failed"); x
+    }).asNondeterministic()
+    val small = spark.range(0, 4, 1, 2).select(col("id"), col("id").as("v"))
+    val pairs = Seq(
+      TablePair("slow_a", slowSide, slowSide, Seq("id")),
+      TablePair("slow_b", slowSide, slowSide, Seq("id")),
+      TablePair("failing", small, small, Seq("id"),
+        anomaly = Some(AnomalySpec(Seq("id"), boom(col("v"))))),
+      TablePair("slow_c", slowSide, slowSide, Seq("id")))
+    JobLog.during(spark) { log =>
+      val e = intercept[Exception](ValidationRound.report(spark, pairs))
+      val thrownAt = System.currentTimeMillis()
+      assert(poolThreads.isEmpty, s"pool threads left: $poolThreads")
+      assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+      assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("monitor failed")),
+        s"not the monitor's failure: $e")
+      log.marker("spec:after-failed-report")
+      val report = log.all.filter(j => String.valueOf(j.desc).startsWith("report:"))
+      assert(report.nonEmpty)
+      assert(report.forall(j => j.end >= 0 && j.end <= thrownAt),
+        s"report jobs still running after the report threw at $thrownAt: $report")
+      assert(!report.exists(_.start > thrownAt), "a report job started after the throw")
+      Thread.sleep(1000)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    }
+    // the session is unharmed: the next report runs
+    val rows = ValidationRound.report(spark, catalog()).collect()
+    assert(rows.map(_.getString(1)).toSeq == Seq("diffed", "clean", "diffed", "diffed"))
+  }
 }

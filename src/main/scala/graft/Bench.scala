@@ -2,6 +2,37 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
+  /** A cross-query memo the suite shares: the build that fills it (timed
+    * as its own `_…_build` row), the queries that reuse it, and the hook
+    * that drops it. */
+  final case class SharedBuild(name: String, family: Set[String],
+                               build: (SparkSession, String) => Unit,
+                               invalidate: SparkSession => Unit)
+
+  val sharedBuilds: Seq[SharedBuild] = Seq(
+    SharedBuild("_neardup_pairs_build", Set("q_dedup_ngram_jaccard",
+        "q_dedup_clusters", "q_dedup_canonical", "q_dedup_containment",
+        "q_pagerank", "q_graph_degree", "q_dedup_threshold_curve"),
+      graft.queries.TextQueries.buildNearDupPairs,
+      graft.operators.NearDupPipeline.invalidateAll),
+    SharedBuild("_span_census_build", Set("q_span_dedup", "q_span_strike"),
+      graft.queries.TextQueries.buildSpanCensus,
+      graft.operators.SpanPipeline.invalidateAll),
+    SharedBuild("_curation_chain_build", Set("q_curation_round", "q_curation_pack"),
+      graft.queries.TextQueries.buildCurationChain, CurationRound.invalidateAll),
+    SharedBuild("_unigram_fit_build", Set("q_unigram_vocab", "q_unigram_encode",
+        "q_tokenizer_fertility"),
+      graft.queries.TextQueries.buildUnigramFit,
+      graft.operators.Unigram.invalidateAll),
+    SharedBuild("_kmeans_fit_build", Set("q_ann_ivf_fit", "q_cluster_cap_sample",
+        "q_silhouette"),
+      graft.queries.SimilarityQueries.buildKmeansFit,
+      graft.operators.Similarity.invalidateFitMemo))
+
+  /** Drop every shared memo `spark` owns — the pass-boundary hook. */
+  def invalidateMemos(spark: SparkSession): Unit =
+    sharedBuilds.foreach(_.invalidate(spark))
+
   /** Median of the timed samples — robust to a single GC pause / JIT blip
     * in a way neither mean nor min is (min hides a genuinely bimodal
     * query; mean lets one outlier dominate). Even count → mean of the two
@@ -14,10 +45,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Driver contract: bench runs at local[32]. (Round-1 defaulted to 4 —
-    // the driver doesn't set SPARK_GRAFT_CPUS, so BENCH_r01's 207.9s was
-    // a quarter-width run.)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Timed samples per query (median reported). BENCH_r02 showed 3-9x
     // cross-JVM noise on single-sample timings: one warmup of only the
     // FIRST query let a cold/contended JVM inflate whichever queries ran
@@ -27,10 +54,7 @@ object Bench {
     // max(1): a zero/negative override would crash median() on an empty
     // sample AFTER burning the warmup sweep.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     // Optional comma-separated subset filter for targeted perf iteration,
     // and an exclusion list (SPARK_GRAFT_SKIP) for large-sf runs: a few
     // queries are QUADRATIC-BY-CONTRACT verify-scale baselines (exact
@@ -85,39 +109,10 @@ object Bench {
     // materialized table — the economy this design exists to measure —
     // while across passes each timed build sample rebuilds it.
     val names = order.map(_._1).toSet
-    val nearDupFamily = Set("q_dedup_ngram_jaccard", "q_dedup_clusters",
-      "q_dedup_canonical", "q_dedup_containment", "q_pagerank", "q_graph_degree",
-      "q_dedup_threshold_curve")
-    val spanFamily = Set("q_span_dedup", "q_span_strike")
-    val curationFamily = Set("q_curation_round", "q_curation_pack")
-    val unigramFamily = Set("q_unigram_vocab", "q_unigram_encode",
-      "q_tokenizer_fertility")
-    val kmeansFamily = Set("q_ann_ivf_fit", "q_cluster_cap_sample",
-      "q_silhouette")
-    val builds: Seq[(String, () => Unit)] =
-      (if (names.exists(nearDupFamily)) Seq("_neardup_pairs_build" ->
-        (() => graft.queries.TextQueries.buildNearDupPairs(spark, sfDir))) else Nil) ++
-      (if (names.exists(spanFamily)) Seq("_span_census_build" ->
-        (() => graft.queries.TextQueries.buildSpanCensus(spark, sfDir))) else Nil) ++
-      (if (names.exists(curationFamily)) Seq("_curation_chain_build" ->
-        (() => graft.queries.TextQueries.buildCurationChain(spark, sfDir))) else Nil) ++
-      (if (names.exists(unigramFamily)) Seq("_unigram_fit_build" ->
-        (() => graft.queries.TextQueries.buildUnigramFit(spark, sfDir))) else Nil) ++
-      (if (names.exists(kmeansFamily)) Seq("_kmeans_fit_build" ->
-        (() => graft.queries.SimilarityQueries.buildKmeansFit(spark, sfDir))) else Nil)
-    val familyOf: Map[String, Set[String]] = Map(
-      "_neardup_pairs_build" -> nearDupFamily,
-      "_span_census_build" -> spanFamily,
-      "_curation_chain_build" -> curationFamily,
-      "_unigram_fit_build" -> unigramFamily,
-      "_kmeans_fit_build" -> kmeansFamily)
+    val builds = sharedBuilds.filter(_.family.exists(names))
     def pass(): Map[String, Option[Double]] = {
-      graft.operators.NearDupPipeline.invalidateAll(spark)
-      graft.operators.SpanPipeline.invalidateAll(spark)
-      graft.CurationRound.invalidateAll(spark)
-      graft.operators.Unigram.invalidateAll(spark)
-      graft.operators.Similarity.invalidateFitMemo(spark)
-      val buildResults = builds.map { case (name, body) => name -> timed(name, body) }
+      invalidateMemos(spark)
+      val buildResults = builds.map(b => b.name -> timed(b.name, () => b.build(spark, sfDir)))
       // A failed build contaminates its family THIS PASS: each family
       // query would silently rebuild the memo inside its own timing, so
       // its sample would be build-inclusive while other passes' samples
@@ -125,8 +120,8 @@ object Bench {
       // pass's family samples instead; the short sample count surfaces
       // the query in "errors" (and the raw "samples" arrays show which
       // pass is missing), never as a silently mixed median.
-      val contaminated: Set[String] = buildResults.collect {
-        case (n, None) => familyOf.getOrElse(n, Set.empty[String])
+      val contaminated: Set[String] = builds.zip(buildResults).collect {
+        case (b, (_, None)) => b.family
       }.flatten.toSet
       val queryResults = order.map { case (name, fn) =>
         if (contaminated.contains(name)) {
@@ -138,7 +133,7 @@ object Bench {
     }
     pass() // warmup
     val passes = (1 to runs).map(_ => pass())
-    val allNames = builds.map(_._1) ++ order.map(_._1)
+    val allNames = builds.map(_.name) ++ order.map(_._1)
     val perQuerySamples = allNames.map { name =>
       name -> passes.flatMap(_(name))
     }

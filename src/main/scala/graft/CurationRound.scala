@@ -350,13 +350,13 @@ object CurationRound {
   // batch side shuffles.
   //
   // MAINTENANCE: `shdf` is the one ADDITIVE census here — compact it
-  // with EventStream.compactCensusState(keyCols=Seq("sh"),
-  // valueCols=Seq("n")); foldBatch's read is summary-scoped (latest
-  // summary + newer deltas) and REFUSES to fold a batch at or below
-  // the compaction frontier W (a summary folds batches ≤ W
-  // irreversibly, so a replayed batch ≤ W could no longer exclude its
-  // own prior contribution — compact only batches the checkpoint has
-  // committed; see streamCuration's compact-before-fold schedule).
+  // with EventStream.compactCensusState over `shdfCensus`; foldBatch's
+  // read is summary-scoped (latest summary + newer deltas) and REFUSES
+  // to fold a batch at or below the compaction frontier W (a summary
+  // folds batches ≤ W irreversibly, so a replayed batch ≤ W could no
+  // longer exclude its own prior contribution — compact only batches
+  // the checkpoint has committed; see streamCuration's
+  // compact-before-fold schedule).
   // `funnel` is per-batch HISTORY (the MetricsStore shape) — folding
   // it across batches would collapse incrementalFunnel's rows into one
   // pseudo-batch; never compact it. `fps`/`postings`/`survivors` are
@@ -421,6 +421,10 @@ object CurationRound {
     StructField("stage_ord", IntegerType), StructField("stage", StringType),
     StructField("n_docs", LongType), StructField("n_tokens", LongType),
     StructField("__batch_id", LongType)))
+  /** The shdf census shape: shingle key `sh`, document frequency `n`. */
+  val shdfCensus: graft.streaming.Census =
+    graft.streaming.Census(Seq("sh"), Seq("n"))
+
   /** shdf deltas plus the columns of a compaction summary, which
     * additionally carries `__compacted_through` (NULL on deltas). */
   private def shdfSchema = StructType(Seq(StructField("sh", LongType),
@@ -881,7 +885,7 @@ object CurationRound {
             .agg(max(col("__batch_id"))).head()
           if (!m.isNullAt(0) && m.getLong(0) < batchId) {
             graft.streaming.EventStream.compactCensusState(spark,
-              subPath(statePath, "shdf"), Seq("sh"), Seq("n"))
+              subPath(statePath, "shdf"), shdfCensus)
             sinceCompaction = 0
           }
         }

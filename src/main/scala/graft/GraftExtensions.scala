@@ -123,4 +123,16 @@ object GraftSession {
       // measured on interleaved sweeps). JVM-global, so it must be set
       // before the first codegen compile.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+
+  /** The session every `graft.*` main runs on: `local[SPARK_GRAFT_CPUS]`
+    * with as many shuffle partitions and no UI. The default of 32 is the
+    * bench contract — the runner does not set SPARK_GRAFT_CPUS, and a
+    * default of 4 once made a whole bench round a quarter-width run. */
+  def forMain(logLevel: String = "WARN"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = builder(s"local[$cpus]", cpus.toInt)
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

@@ -14,11 +14,7 @@ object JobProfile {
     val name = args.head
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val repeats = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain(logLevel = "ERROR")
     @volatile var jobs = List.empty[(Int, Long, Long, String)]
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -37,11 +33,7 @@ object JobProfile {
     })
     val fn = SparkEntry.queries(name)
     (1 to repeats).foreach { pass =>
-      graft.operators.NearDupPipeline.invalidateAll(spark)
-      graft.operators.SpanPipeline.invalidateAll(spark)
-      graft.CurationRound.invalidateAll(spark)
-      graft.operators.Unigram.invalidateAll(spark)
-      graft.operators.Similarity.invalidateFitMemo(spark)
+      Bench.invalidateMemos(spark)
       jobs = Nil
       val w0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -167,10 +167,7 @@ object ScaleUp {
     // output would collide key offsets ((r1+r2)·stride repeats across
     // replica pairs, producing duplicate PKs) — always scale from the
     // ORIGINAL source directory in one run.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     val embDim = Tables.load(spark, srcDir, "embeddings")
       .select(size(col("embedding"))).head().getInt(0)
     AllTables.foreach { t =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.HiveFunctions.rowFingerprint
+import graft.streaming.Census
 
 /** The discrepancy engine: Spark-native rebuild of the reference's
   * Snowflake-vs-Hive validation surface —
@@ -268,21 +269,6 @@ object TableDiff {
     conv(substring(graft.functions.HiveFunctions.rowHashSafe(cols), 1, 15),
       16, 10).cast("decimal(38,0)")
 
-  /** Production-lane checksum term: the low 60 bits of the two-lane
-    * xxhash64 row fingerprint's first lane, folded with the second so
-    * both lanes contribute. Whole-stage-codegen'd raw-byte hashing — no
-    * md5, no string casts — ~5× cheaper per row than [[checksumTerm]] at
-    * the same 60-bit sum-collision regime. NOT portable across engines:
-    * use it when both sides are computed by THIS engine (the production
-    * triage loop); use [[checksumTerm]] when an external SQL engine must
-    * reproduce the sums (cross-engine verification). Same non-negative
-    * [0, 2^60) range, so the two lanes are drop-in interchangeable. */
-  def checksumTermFast(df: DataFrame, cols: Seq[String]): Column = {
-    val fp = graft.functions.HiveFunctions.rowFingerprint(df, cols)
-    (fp.getField("h1").bitwiseXOR(shiftright(fp.getField("h2"), 7))
-      .bitwiseAND(lit((1L << 60) - 1))).cast("decimal(38,0)")
-  }
-
   /** One side's per-partition summary: (partition, n, checksum). The
     * checksum is a SUM of per-row terms — commutative AND associative,
     * so the value is independent of row order, partitioning, and merge
@@ -291,10 +277,9 @@ object TableDiff {
     * maintains this table incrementally per ingest batch instead of
     * re-scanning 100 TB per validation round. */
   def sideChecksums(df: DataFrame, partCol: String, pks: Seq[String],
-                    exclude: Seq[String] = Nil,
-                    portable: Boolean = true): DataFrame =
+                    exclude: Seq[String] = Nil): DataFrame =
     sideChecksumsOver(df, partCol,
-      pks ++ compareCols(df, pks :+ partCol, exclude), portable)
+      pks ++ compareCols(df, pks :+ partCol, exclude))
 
   /** [[sideChecksums]] with the hash-column ORDER fixed by the caller:
     * the per-row term hashes columns positionally, so the two sides of a
@@ -302,15 +287,14 @@ object TableDiff {
     * columns differently ([[partitionChecksum]] passes the left side's
     * order to both). */
   def sideChecksumsOver(df: DataFrame, partCol: String,
-                        hashCols: Seq[String],
-                        portable: Boolean = true): DataFrame = {
-    val term =
-      if (portable) checksumTerm(hashCols.map(col))
-      else checksumTermFast(df, hashCols)
+                        hashCols: Seq[String]): DataFrame =
     df.groupBy(col(partCol).as("partition"))
       .agg(count(lit(1)).as("n"),
-        sum(term).cast("decimal(38,0)").as("checksum"))
-  }
+        sum(checksumTerm(hashCols.map(col))).cast("decimal(38,0)").as("checksum"))
+
+  /** [[sideChecksums]]'s census shape: a maintained summary folds by
+    * per-partition sums (graft.streaming.EventStream.maintainChecksums). */
+  val checksumCensus: Census = Census(Seq("partition"), Seq("n", "checksum"))
 
   /** Fold a new batch's [[sideChecksums]] into a running summary: counts
     * and checksum sums add per partition (null-safe partition equality,
@@ -372,8 +356,7 @@ object TableDiff {
     * NULLs still triages those rows (as one "NULL partition" bucket)
     * instead of misreporting them one-sided. */
   def partitionChecksum(left: DataFrame, right: DataFrame, partCol: String,
-                        pks: Seq[String], exclude: Seq[String] = Nil,
-                        portable: Boolean = true): DataFrame = {
+                        pks: Seq[String], exclude: Seq[String] = Nil): DataFrame = {
     require(!(exclude.map(_.toLowerCase).contains(partCol.toLowerCase)),
       s"partition column $partCol must not be excluded")
     // Drifted column SETS make the checksums structurally incomparable
@@ -387,8 +370,8 @@ object TableDiff {
         (pks.map(_.toLowerCase) ++ rc.map(_.toLowerCase)).toSet,
       s"compare-column drift between sides ($hashCols vs $rc): run schemaDrift first")
     checksumStatus(
-      sideChecksumsOver(left, partCol, hashCols, portable),
-      sideChecksumsOver(right, partCol, hashCols, portable))
+      sideChecksumsOver(left, partCol, hashCols),
+      sideChecksumsOver(right, partCol, hashCols))
   }
 
   /** Row-level diff restricted to the partitions [[partitionChecksum]]
@@ -403,10 +386,10 @@ object TableDiff {
     * instead of a degenerate IN-list of thousands of literals. */
   def targetedDiff(left: DataFrame, right: DataFrame, partCol: String,
                    pks: Seq[String], exclude: Seq[String] = Nil,
-                   maxSuspects: Int = 10000, portable: Boolean = true): DataFrame = {
+                   maxSuspects: Int = 10000): DataFrame = {
     require(!(exclude.map(_.toLowerCase).contains(partCol.toLowerCase)),
       s"partition column $partCol must not be excluded (the output carries it)")
-    val summary = partitionChecksum(left, right, partCol, pks, exclude, portable)
+    val summary = partitionChecksum(left, right, partCol, pks, exclude)
     val suspects = summary.filter(col("status") =!= "ok")
       .select(col("partition")).collect().map(_.get(0)).toSeq
     require(suspects.length <= maxSuspects,

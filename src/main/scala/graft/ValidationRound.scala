@@ -48,7 +48,7 @@ object ValidationRound {
 
   /** Opt-in CENSUS monitors read from MAINTAINED state directories —
     * the operating round consuming the streaming family's work
-    * ([[graft.streaming.EventStream.maintainDupRateState]] /
+    * ([[graft.streaming.EventStream.maintainCensusState]] /
     * [[graft.streaming.EventStream.maintainNoveltyState]]) instead of
     * re-scanning any corpus: the round row summarizes each declared
     * monitor to its WORST source (max dup_rate; min novelty), ties
@@ -233,17 +233,18 @@ object ValidationRound {
     * directory reports NULLs (no batch has committed yet). */
   private def censusParts(jp: JobPool, spark: SparkSession,
                           p: TablePair): Seq[Future[Seq[Any]]] = {
-    import graft.streaming.EventStream
+    import graft.operators.{Monitoring, TextAnalysis, Vocab}
+    import graft.streaming.EventStream.{readCensusState, readNoveltyState}
     // (declared path, its per-source frame, value column, worst is max)
     val specs = Seq[(Option[String], String => DataFrame, String, Boolean)](
-      (p.census.flatMap(_.dupRatePath), path => graft.operators.Monitoring
-        .dupRateFromState(EventStream.readDupRateState(spark, path)), "dup_rate", true),
-      (p.census.flatMap(_.noveltyPath), path => graft.operators.Vocab
-        .noveltyFromState(EventStream.readNoveltyState(spark, path)), "novelty", false),
-      (p.census.flatMap(_.gopherRatePath), EventStream.readGopherRate(spark, _),
-        "pass_rate", false),
-      (p.census.flatMap(_.piiRatePath), EventStream.readPiiRate(spark, _),
-        "dirty_rate", true))
+      (p.census.flatMap(_.dupRatePath), path => Monitoring.dupRateFromState(
+        readCensusState(spark, path, Monitoring.dupRateCensus)), "dup_rate", true),
+      (p.census.flatMap(_.noveltyPath), path => Vocab.noveltyFromState(
+        readNoveltyState(spark, path)), "novelty", false),
+      (p.census.flatMap(_.gopherRatePath), path => TextAnalysis.gopherRateFromCounts(
+        readCensusState(spark, path, TextAnalysis.passRateCensus)), "pass_rate", false),
+      (p.census.flatMap(_.piiRatePath), path => TextAnalysis.piiRateFromCounts(
+        readCensusState(spark, path, TextAnalysis.piiRateCensus)), "dirty_rate", true))
     specs.map { case (path, read, value, worstIsMax) =>
       path.fold(JobPool.done(Seq[Any](null, null))) { path =>
         jp.submit("report:census") {

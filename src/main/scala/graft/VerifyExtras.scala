@@ -631,8 +631,8 @@ object VerifyExtras {
     * is quadratic-by-contract (the brute-force truths over every %100
     * probe cost probes × corpus exact cosines — fine at sf≤1, 2.6e10
     * pairs at sf10). Truth is exact brute force over a deterministic
-    * hash-ordered probe sample of `probeCap` (the IvfPqLab sampling
-    * contract), so the recall measured is the same quantity the full
+    * hash-ordered probe sample of `probeCap` (the sampling contract of
+    * the IVFPQ_LAB_SF10.json measurement), so the recall measured is the same quantity the full
     * checks measure, on a sample. Every ANN variant here runs with the
     * EXACT config its query wiring uses — at sf10 ivfPqParamsFor no
     * longer coincides with the pinned (16, 6), which is precisely what
@@ -738,11 +738,7 @@ object VerifyExtras {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "VERIFY_EXTRAS.json"
     val probeCap = if (args.length > 2) Some(args(2).toInt) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     val ok = writeJson(spark, sfDir, Seq(out), probeCap)
     spark.stop()
     if (!ok) sys.exit(1)

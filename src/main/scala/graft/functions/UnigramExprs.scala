@@ -143,128 +143,6 @@ object UnigramSegmentExpr {
     GraftBridge.column(UnigramSegmentCountExpr(GraftBridge.expression(c), model))
 }
 
-/** Forward–backward EXPECTED piece counts of one token under a
-  * [[UnigramModel]] — soft-EM's E-step (Kudo 2018's actual estimator)
-  * as a native expression, the production twin of the Viterbi decoder
-  * above: same code-point lattice, posterior mass instead of argmax.
-  * Returns array<struct<piece string, emicro long>> — one entry per
-  * DISTINCT piece of the word, `emicro` = round(Σ posteriors · 1e6).
-  *
-  * Determinism discipline, stated plainly: the forward/backward doubles
-  * run in a FIXED sequential order inside one word (bit-reproducible —
-  * StrictMath.exp of frozen micro scores, left-to-right sums), and the
-  * quantization to micro-longs happens per (word, piece) BEFORE any
-  * cross-word aggregation — so the trainer's count table is an exact
-  * integer sum, associative and commutative, identical across
-  * partitionings/JVMs/re-runs exactly like the hard path's 1-best
-  * counts. Bound: Σ emicro·wordFreq stays < 2⁶³ while the corpus holds
-  * under ~10¹² word occurrences of length ≤ maxPieceLen·…; at scales
-  * beyond that, shard the fit per stratum (the DoReMi shape) or drop
-  * the quantum to 1e3.
-  *
-  * Unknown single code points price at the UNK floor so every word
-  * stays coverable; a word with zero lattice mass (cannot happen while
-  * singles always price) would return an empty array, never NaNs. */
-case class UnigramExpectExpr(child: Expression, model: UnigramModel)
-    extends UnaryExpression {
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("piece", StringType, nullable = false),
-    StructField("emicro", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "unigram_expect"
-
-  override def nullSafeEval(s: Any): Any =
-    UnigramExpectExpr.expectCounts(s.asInstanceOf[UTF8String], model)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("unigramModel", model, classOf[UnigramModel].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.UnigramExpectExpr.expectCounts($c, $m)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UnigramExpectExpr =
-    copy(child = newChild)
-}
-
-object UnigramExpectExpr {
-  import org.apache.spark.sql.catalyst.InternalRow
-
-  def expectCounts(token: UTF8String, model: UnigramModel): GenericArrayData = {
-    val s = token.toString
-    if (s.isEmpty) return new GenericArrayData(Array.empty[Any])
-    val n = s.codePointCount(0, s.length)
-    val bounds = new Array[Int](n + 1)
-    var i = 0; var ci = 0
-    while (i < s.length) {
-      bounds(ci) = i; ci += 1; i += Character.charCount(s.codePointAt(i))
-    }
-    bounds(n) = s.length
-    val maxL = model.maxPieceLen
-    def price(b: Int, e: Int): Double = {
-      val piece = s.substring(bounds(b), bounds(e))
-      model.table.get(piece) match {
-        case null =>
-          if (e - b == 1) StrictMath.exp(model.unkMicro / 1e6) else 0.0
-        case v => StrictMath.exp(v.longValue() / 1e6)
-      }
-    }
-    val alpha = new Array[Double](n + 1)
-    alpha(0) = 1.0
-    var e = 1
-    while (e <= n) {
-      var b = math.max(0, e - maxL); var acc = 0.0
-      while (b < e) { acc += alpha(b) * price(b, e); b += 1 }
-      alpha(e) = acc; e += 1
-    }
-    if (alpha(n) <= 0.0) return new GenericArrayData(Array.empty[Any])
-    val beta = new Array[Double](n + 1)
-    beta(n) = 1.0
-    var b2 = n - 1
-    while (b2 >= 0) {
-      var ee = b2 + 1; var acc = 0.0
-      val lim = math.min(n, b2 + maxL)
-      while (ee <= lim) { acc += price(b2, ee) * beta(ee); ee += 1 }
-      beta(b2) = acc; b2 -= 1
-    }
-    val z = alpha(n)
-    // Accumulate per-piece posterior mass in a per-word LinkedHashMap:
-    // insertion order is the deterministic left-to-right scan order, so
-    // the output array (and everything downstream) is reproducible.
-    val acc = new java.util.LinkedHashMap[String, Double]()
-    var bb = 0
-    while (bb < n) {
-      var ee = bb + 1
-      val lim = math.min(n, bb + maxL)
-      while (ee <= lim) {
-        val p = price(bb, ee)
-        if (p > 0.0) {
-          val post = alpha(bb) * p * beta(ee) / z
-          if (post > 0.0) {
-            val piece = s.substring(bounds(bb), bounds(ee))
-            val prev = acc.get(piece)
-            acc.put(piece, (if (prev == null) 0.0 else prev.doubleValue()) + post)
-          }
-        }
-        ee += 1
-      }
-      bb += 1
-    }
-    val out = new Array[Any](acc.size)
-    val it = acc.entrySet().iterator()
-    var k = 0
-    while (it.hasNext) {
-      val en = it.next()
-      val micro = math.round(en.getValue.doubleValue() * 1e6)
-      out(k) = InternalRow(UTF8String.fromString(en.getKey), micro)
-      k += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  def expect(c: Column, model: UnigramModel): Column =
-    GraftBridge.column(UnigramExpectExpr(GraftBridge.expression(c), model))
-}
-
 /** `size(segment(...))` without materializing the piece array. */
 case class UnigramSegmentCountExpr(child: Expression, model: UnigramModel)
     extends UnaryExpression {

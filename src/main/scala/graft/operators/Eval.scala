@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Census
+
 /** Classifier-evaluation and distribution-association statistics for the
   * training-data pipeline: histogram rank-sum AUC, binned calibration,
   * chi-square / Cramér's V association, two-sample KS drift, event
@@ -48,9 +50,8 @@ object Eval {
     aucFromHistogram(aucHistogram(df, groupCol, scoreCol, positiveCol))
 
   /** The (grp, score_milli, pos, neg) histogram [[aucFromHistogram]]
-    * scores — an ADDITIVE MONOID (counts sum cell-wise), so the
-    * streaming loop maintains it per micro-batch
-    * ([[graft.streaming.EventStream.maintainAucState]]) and reads the
+    * scores — an ADDITIVE MONOID (counts sum cell-wise, [[aucCensus]]),
+    * so the streaming loop maintains it per micro-batch and reads the
     * current AUC without replaying scores. */
   def aucHistogram(df: DataFrame, groupCol: String, scoreCol: String,
                    positiveCol: Column): DataFrame =
@@ -61,6 +62,9 @@ object Eval {
       .groupBy(col("grp"), col("score_milli"))
       .agg(sum(col("is_pos")).cast("long").as("pos"),
         sum(lit(1) - col("is_pos")).cast("long").as("neg"))
+
+  /** [[aucHistogram]]'s census shape. */
+  val aucCensus: Census = Census(Seq("grp", "score_milli"), Seq("pos", "neg"))
 
   /** Exact tie-corrected AUC from an [[aucHistogram]] (possibly folded
     * across micro-batches — cells re-summed first so a fold is safe). */
@@ -138,15 +142,17 @@ object Eval {
     chiSquareCellsFromCounts(assocState(df, aCol, bCol))
 
   /** The (a, b, n) contingency census [[chiSquareCellsFromCounts]]
-    * scores — an ADDITIVE MONOID (cell counts sum), so the streaming
-    * loop maintains it per micro-batch
-    * ([[graft.streaming.EventStream.maintainAssocState]]) and reads the
+    * scores — an ADDITIVE MONOID (cell counts sum, [[assocCensus]]), so
+    * the streaming loop maintains it per micro-batch and reads the
     * current association without replaying the corpus. One corpus-scale
     * map-side-combinable groupBy; output is the |A|·|B| dimension. */
   def assocState(df: DataFrame, aCol: String, bCol: String): DataFrame =
     df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).as("a"), col(bCol).as("b"))
       .agg(count(lit(1)).as("n"))
+
+  /** [[assocState]]'s census shape. */
+  val assocCensus: Census = Census(Seq("a", "b"), Seq("n"))
 
   /** Per-cell chi-square detail from an [[assocState]] census (possibly
     * folded across micro-batches — cells are re-summed first so a fold
@@ -231,15 +237,20 @@ object Eval {
     ksFromCounts(ksState(df, groupCol, valueCol), baseline)
 
   /** The (grp, v_milli, n) quantized-value census [[ksFromCounts]]
-    * scores — an ADDITIVE MONOID, so the streaming loop maintains it per
-    * micro-batch ([[graft.streaming.EventStream.maintainKsState]]) and
-    * reads the current KS drift without replaying values. Quantization
-    * to milli is the operator's contract AND what bounds the grid. */
+    * scores — an ADDITIVE MONOID ([[ksCensus]]), so the streaming loop
+    * maintains it per micro-batch and reads the current KS drift without
+    * replaying values. Quantization to milli is the operator's contract
+    * AND what bounds the grid; unlike PSI the grid needs no pinned cuts,
+    * so cells from any batch are comparable by construction and the
+    * read side evaluates both CDFs on the union grid. */
   def ksState(df: DataFrame, groupCol: String, valueCol: String): DataFrame =
     df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("grp"),
         round(col(valueCol) * 1000).cast("long").as("v_milli"))
       .groupBy(col("grp"), col("v_milli")).agg(count(lit(1)).as("n"))
+
+  /** [[ksState]]'s census shape. */
+  val ksCensus: Census = Census(Seq("grp", "v_milli"), Seq("n"))
 
   /** KS sup-distance per group vs `baseline` from a [[ksState]] census
     * (possibly folded — cells re-summed first so a fold is safe). */
@@ -381,13 +392,16 @@ object Eval {
     hhiFromCounts(hhiState(df, groupCol, partCol))
 
   /** The (grp, part, n) share census [[hhiFromCounts]] scores — an
-    * ADDITIVE MONOID, so the streaming loop maintains it per micro-batch
-    * ([[graft.streaming.EventStream.maintainHhiState]]) and reads the
-    * current concentration without replaying the corpus. */
+    * ADDITIVE MONOID ([[hhiCensus]]), so the streaming loop maintains it
+    * per micro-batch and reads the current concentration without
+    * replaying the corpus. */
   def hhiState(df: DataFrame, groupCol: String, partCol: String): DataFrame =
     df.filter(col(groupCol).isNotNull && col(partCol).isNotNull)
       .groupBy(col(groupCol).as("grp"), col(partCol).as("part"))
       .agg(count(lit(1)).as("n"))
+
+  /** [[hhiState]]'s census shape. */
+  val hhiCensus: Census = Census(Seq("grp", "part"), Seq("n"))
 
   /** HHI per group from a [[hhiState]] census (possibly folded — cells
     * re-summed first so a fold is safe). */

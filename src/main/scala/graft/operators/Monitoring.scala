@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Census
+
 /** Volume-drift monitoring: the first alarm a warehouse-parity pipeline
   * watches (the reference triages per-table discrepancy metrics; a feed
   * that silently drops or doubles shows up as a period-over-period count
@@ -215,14 +217,17 @@ object Monitoring {
   /** The (dims, day, n) periodic-count table both count monitors fold
     * over — an ADDITIVE monoid (counts of disjoint batches add per key),
     * so the production loop can maintain it per ingest batch
-    * ([[graft.streaming.EventStream.maintainCountState]]) and read the
-    * monitors off folded state without replaying events — the
-    * [[dupRateState]] precedent applied to the volume monitors. */
+    * ([[countCensus]]) and read the monitors off folded state without
+    * replaying events — the [[dupRateState]] precedent applied to the
+    * volume monitors. */
   def countState(df: DataFrame, dims: Seq[String], period: Column): DataFrame = {
     requireNoOutputCollision(dims)
     df.groupBy(dims.map(col) :+ period.as("day"): _*)
       .agg(count(lit(1)).as("n"))
   }
+
+  /** [[countState]]'s census shape: keys `dims :+ "day"`, value `n`. */
+  def countCensus(dims: Seq[String]): Census = Census(dims :+ "day", Seq("n"))
 
   /** A dim named like one of the monitors' output columns would be
     * silently overwritten by the report's withColumns — repeated in the
@@ -334,7 +339,7 @@ object Monitoring {
     * KLL-family sketch, then PIN for every maintained batch — cuts that
     * drifted per batch would make folded bucket counts incomparable, the
     * same reason a fitted IVF model is frozen across queries. Feed to
-    * [[psiBucketState]] / [[graft.streaming.EventStream.maintainPsiState]]. */
+    * [[psiBucketState]]. */
   def psiCuts(reference: DataFrame, valueCol: String, nBuckets: Int = 10,
               accuracy: Int = 10000): Seq[Double] = {
     require(nBuckets >= 2 && nBuckets <= 1024,
@@ -354,18 +359,24 @@ object Monitoring {
 
   /** One side's (bucket, n) counts under PINNED cuts — the additive
     * monoid the PSI report folds (counts of disjoint batches add per
-    * bucket), mirroring [[countState]] for the volume monitors. The
-    * bucket assignment is a zero-shuffle when-chain projection; the
-    * frame collapses to ≤ nBuckets rows map-side. */
+    * bucket, [[psiCensus]]), mirroring [[countState]] for the volume
+    * monitors. Maintain one state directory per side (the frozen
+    * reference side can be a single batch), every batch bucketed by the
+    * same [[psiCuts]]. The bucket assignment is a zero-shuffle
+    * when-chain projection; the frame collapses to ≤ nBuckets rows
+    * map-side. */
   def psiBucketState(df: DataFrame, valueCol: String,
                      cuts: Seq[Double]): DataFrame =
     df.filter(col(valueCol).isNotNull)
       .select(bucketOf(col(valueCol).cast("double"), cuts).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
 
+  /** [[psiBucketState]]'s census shape. */
+  val psiCensus: Census = Census(Seq("bucket"), Seq("n"))
+
   /** PSI report off two folded (bucket, n) states — the
     * [[distributionDrift]] output contract from maintained state
-    * ([[graft.streaming.EventStream.readPsiDrift]]); equal to the batch
+    * ([[psiCensus]] folds); equal to the batch
     * sketch variant when both states were bucketed by the same pinned
     * [[psiCuts]] over the same data.
     *
@@ -537,6 +548,9 @@ object Monitoring {
       .filter(col("fp").isNotNull)
       .groupBy(col("source"), col("fp"))
       .agg(count(lit(1)).as("n"))
+
+  /** [[dupRateState]]'s census shape. */
+  val dupRateCensus: Census = Census(Seq("source", "fp"), Seq("n"))
 
   /** Fold a new batch's [[dupRateState]] into a running state: counts
     * add per (source, fp), null-safe on source (a NULL-source bucket

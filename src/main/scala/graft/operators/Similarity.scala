@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Census
+
 /** Embedding similarity search (SURVEY.md §2 #24-#26): brute-force cosine
   * top-k as the exact baseline, random-hyperplane LSH bucketing as the
   * scale path, and cosine near-duplicate pairs with label blocking.
@@ -472,10 +474,12 @@ object Similarity {
   // memo also carries the corpus count so callers don't re-run the
   // sizing count job. semDedup does NOT share this memo — it fits over
   // its own injected-duplicate corpus, a different training set.
-  // Staleness contract as everywhere: per (session, corpusKey, params),
-  // does NOT watch the data — the bench invalidates at pass boundaries
-  // and prices the fit as its own `_kmeans_fit_build` row.
-  private type FitKey = (org.apache.spark.sql.SparkSession, String, Int, Int)
+  // Staleness contract as everywhere: per (session, corpusKey, columns,
+  // params), does NOT watch the data — `corpusKey` must name the training
+  // frame; the bench invalidates at pass boundaries and prices the fit
+  // as its own `_kmeans_fit_build` row.
+  private type FitKey =
+    (org.apache.spark.sql.SparkSession, String, String, String, Int)
   private val fitMemoMap = new graft.KeyedMemo[FitKey, (Long, Seq[Seq[Double]])]
 
   /** The fitted (corpus count, centroids) for (`corpusKey`, params),
@@ -485,7 +489,7 @@ object Similarity {
   def kmeansFitMemo(df: DataFrame, corpusKey: String, maxIter: Int = 5,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): (Long, Seq[Seq[Double]]) = {
-    val key: FitKey = (df.sparkSession, corpusKey, maxIter, 0)
+    val key: FitKey = (df.sparkSession, corpusKey, idCol, vecCol, maxIter)
     fitMemoMap.getOrBuild(key) {
       val n = df.count()
       (n, kmeansFit(df, k = cellsFor(n), maxIter = maxIter,
@@ -749,7 +753,7 @@ object Similarity {
     * ≈ 75 probe cells of ~targetCell rows instead of 6 monolithic cells
     * of n/16 rows, so candidate generation partitions evenly (no
     * 12.5%-of-corpus skew cells) and per-task state stays bounded by
-    * targetCell, not by n. Measured at sf10 (200k vectors, IvfPqLab —
+    * targetCell, not by n. Measured at sf10 (200k vectors,
     * IVFPQ_LAB_SF10.json): this rule holds recall@5 at 0.48 (sf1: 0.59;
     * floor 0.4, VERIFY_EXTRAS_SF10.json) where the fixed config decays
     * to 0.41; wall is 26.8 s vs the fixed config's 20.8 s — the rule
@@ -926,9 +930,12 @@ object Similarity {
         sum(col("bm")).as("sb"), sum(col("sm")).as("ss"))
   }
 
+  /** [[silhouetteState]]'s census shape. */
+  val silhouetteCensus: Census = Census(Seq("cell"), Seq("n", "sa", "sb", "ss"))
+
   /** [[clusterSilhouette]]'s per-cell report over an already-built
     * census — the direct entry point for counts folded from maintained
-    * state ([[graft.streaming.EventStream.readSilhouette]]). Means are
+    * state ([[silhouetteCensus]] folds). Means are
     * exact integer ratios of the folded sums, so a fold and a one-pass
     * census report identically. */
   def silhouetteFromCounts(counts: DataFrame): DataFrame =

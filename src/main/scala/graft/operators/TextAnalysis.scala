@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Census
+
 /** Text-analysis operators for training-data pipelines (SURVEY.md §2
   * #27-#30): language-ID heuristic, quality scoring, token counting,
   * document fingerprinting. All pure `Column` combinators over codegen'd
@@ -216,9 +218,13 @@ object TextAnalysis {
           .as("n_dirty"))
   }
 
+  /** [[piiRateState]]'s census shape. */
+  val piiRateCensus: Census =
+    Census(Seq("source"), Seq("n_docs", "n_emails", "n_phones", "n_dirty"))
+
   /** The PII leak-rate report over an already-built census — the direct
     * entry point for counts folded from maintained state
-    * ([[graft.streaming.EventStream.readPiiRate]]). dirty_rate is ONE
+    * ([[piiRateCensus]] folds). dirty_rate is ONE
     * IEEE division of exact longs, so the report is oracle-exact. */
   def piiRateFromCounts(counts: DataFrame): DataFrame =
     counts.select(col("source"), col("n_docs"), col("n_emails"),
@@ -310,8 +316,8 @@ object TextAnalysis {
 
   /** Additive (source, n_docs, n_pass) census of the Gopher verdict —
     * the quality-gate health monitor's state ([[gopherRateFromCounts]]
-    * reports off it; the streaming loop maintains it via
-    * maintainGopherRateState). Sources × 1 rows, never doc scale.
+    * reports off it; the streaming loop maintains it as a
+    * [[passRateCensus]]). Sources × 1 rows, never doc scale.
     * NULL source/text rows drop under the monitor family's shared
     * convention (see [[piiRateState]]). */
   def gopherRateState(df: DataFrame, sourceCol: String, textCol: String,
@@ -322,6 +328,10 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"),
         sum(when(pass, 1L).otherwise(0L)).as("n_pass"))
   }
+
+  /** The census shape of both quality-gate verdict states,
+    * [[gopherRateState]] and [[c4RateState]]. */
+  val passRateCensus: Census = Census(Seq("source"), Seq("n_docs", "n_pass"))
 
   /** Per-source quality-gate pass rate off an existing (source, n_docs,
     * n_pass) count table ([[gopherRateState]] or a fold of maintained

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{UnigramModel, UnigramSegmentExpr}
+import graft.streaming.Census
 
 /** Unigram-LM tokenizer training (Kudo 2018 — the OTHER production
   * tokenizer family next to [[Bpe]]; sentencepiece's default): seed a
@@ -53,17 +54,16 @@ object Unigram {
   private[graft] def isSingle(p: String): Boolean =
     p.codePointCount(0, p.length) == 1
 
-  /** The seed vocabulary selection, shared between [[fit]] and the
-    * soft-EM lab so both trainers start from the IDENTICAL candidate
-    * set: (singles — every seeded code point, the coverage set kept for
-    * life; multiTop — the seedSize most frequent multi-code-point
-    * substrings at or above minCount, ties broken by piece). Spark's
-    * `length` counts CODE POINTS (UTF8String.numChars), so `=== 1`
-    * matches isSingle exactly and bounds the singles collect to the
-    * alphabet — a `<= 2` pre-filter would also collect every character
-    * BIGRAM in the corpus (O(alphabet²) rows on a CJK-like corpus) only
-    * to discard them driver-side. isSingle stays as a belt-and-braces
-    * guard on the contract. */
+  /** [[fit]]'s seed vocabulary selection: (singles — every seeded code
+    * point, the coverage set kept for life; multiTop — the seedSize
+    * most frequent multi-code-point substrings at or above minCount,
+    * ties broken by piece). Spark's `length` counts CODE POINTS
+    * (UTF8String.numChars), so `=== 1` matches isSingle exactly and
+    * bounds the singles collect to the alphabet — a `<= 2` pre-filter
+    * would also collect every character BIGRAM in the corpus
+    * (O(alphabet²) rows on a CJK-like corpus) only to discard them
+    * driver-side. isSingle stays as a belt-and-braces guard on the
+    * contract. */
   private[graft] def seedVocab(words: DataFrame, maxPieceLen: Int,
                                seedSize: Int, minCount: Long):
       (Array[(String, Long)], Array[(String, Long)]) = {
@@ -84,24 +84,13 @@ object Unigram {
     * [[TextAnalysis.tokens]] over [[TextAnalysis.normalized]] text (the
     * text family's contract, same as BPE).
     *
-    * `softEm = true` opts into Kudo 2018's ACTUAL E-step — distributed
-    * forward–backward expected counts via the native
-    * [[graft.functions.UnigramExpectExpr]] — under the same determinism
-    * discipline as the hard path: posteriors micro-quantize to longs
-    * per (word, piece) BEFORE aggregation, so the count table is an
-    * exact integer sum, partition-order-free. The M-step, prune
-    * schedule, and freeze are literally shared; only the count source
-    * differs (expected micro-counts at 1e6 scale — minCount compares
-    * at the same scale, and freeze's log(c/total) is scale-invariant).
-    * Hard-EM (1-best) stays the default and the query surface's
-    * contract: it maximizes exactly the Viterbi likelihood the encoder
-    * uses (UNIGRAM_LAB measures the trade: identical encoding on the
-    * lab corpus, LL/word −4.26 hard vs −4.41 soft), and its counts
-    * need no quantization headroom. */
+    * Hard-EM (1-best counts) maximizes exactly the Viterbi likelihood
+    * the encoder uses. UNIGRAM_LAB.json records the measured trade
+    * against forward–backward soft EM: identical encoding on the lab
+    * corpus, LL/word −4.26 hard vs −4.41 soft. */
   def fit(df: DataFrame, textCol: String, vocabSize: Int = 400,
           rounds: Int = 3, maxPieceLen: Int = 6, seedSize: Int = 4000,
-          minCount: Long = 2L, unkMicro: Long = -100000000L,
-          softEm: Boolean = false): UnigramModel = {
+          minCount: Long = 2L, unkMicro: Long = -100000000L): UnigramModel = {
     require(vocabSize >= 1, s"vocabSize must be >= 1, got $vocabSize")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(seedSize >= vocabSize,
@@ -122,31 +111,19 @@ object Unigram {
       }
       var model = freeze((singles ++ multiTop).distinct)
       val singleSet = singles.map(_._1).toSet
-      // Soft counts live at 1e6 micro scale; the prune threshold moves
-      // with them so minCount means "expected occurrences" either way.
-      val minC = if (softEm) minCount * 1000000L else minCount
       var r = 1
       while (r <= rounds) {
-        // E over the word table (vocab-scale): 1-best piece counts
-        // (hard) or forward–backward expected micro-counts (soft) —
-        // exact longs under aggregation in BOTH modes.
+        // E over the word table (vocab-scale): 1-best piece counts,
+        // exact longs under aggregation.
         val counts =
-          if (!softEm)
-            words.select(col("n"),
-                explode(UnigramSegmentExpr.segment(col("token"), model)).as("piece"))
-              .groupBy(col("piece")).agg(sum(col("n")).cast("long").as("cnt"))
-              .collect().map(x => (x.getString(0), x.getLong(1))).toMap
-          else
-            words.select(col("n"),
-                explode(graft.functions.UnigramExpectExpr
-                  .expect(col("token"), model)).as("x"))
-              .groupBy(col("x.piece").as("piece"))
-              .agg(sum(col("x.emicro") * col("n")).cast("long").as("cnt"))
-              .collect().map(x => (x.getString(0), x.getLong(1))).toMap
+          words.select(col("n"),
+              explode(UnigramSegmentExpr.segment(col("token"), model)).as("piece"))
+            .groupBy(col("piece")).agg(sum(col("n")).cast("long").as("cnt"))
+            .collect().map(x => (x.getString(0), x.getLong(1))).toMap
         // M + prune on the driver (model-scale)
         val multis = model.pieces.iterator.filter(p => !isSingle(p))
           .map(p => (p, counts.getOrElse(p, 0L)))
-          .filter { case (_, c) => c >= minC }
+          .filter { case (_, c) => c >= minCount }
           .toSeq.sortBy { case (p, c) => (-c, p) }
         val targetMulti =
           if (r == rounds) math.max(0, vocabSize - singleSet.size)
@@ -171,7 +148,7 @@ object Unigram {
   // Staleness contract as everywhere: per (session, corpusKey, params),
   // does NOT watch the data — the bench invalidates at pass boundaries.
   private type FitKey =
-    (SparkSession, String, String, Int, Int, Int, Int, Long, Long, Boolean)
+    (SparkSession, String, String, Int, Int, Int, Int, Long, Long)
   private val memo = new graft.KeyedMemo[FitKey, UnigramModel]
 
   /** The trained model for (`corpusKey`, params), fit at most once per
@@ -183,13 +160,12 @@ object Unigram {
   def fitMemo(df: DataFrame, corpusKey: String, textCol: String,
               vocabSize: Int = 400, rounds: Int = 3, maxPieceLen: Int = 6,
               seedSize: Int = 4000, minCount: Long = 2L,
-              unkMicro: Long = -100000000L,
-              softEm: Boolean = false): UnigramModel = {
+              unkMicro: Long = -100000000L): UnigramModel = {
     val key: FitKey = (df.sparkSession, corpusKey, textCol, vocabSize,
-      rounds, maxPieceLen, seedSize, minCount, unkMicro, softEm)
+      rounds, maxPieceLen, seedSize, minCount, unkMicro)
     memo.getOrBuild(key)(
       fit(df, textCol, vocabSize, rounds, maxPieceLen, seedSize,
-        minCount, unkMicro, softEm))
+        minCount, unkMicro))
   }
 
   /** Drop every memo'd model owned by `s` — pass-boundary hook. */
@@ -216,7 +192,11 @@ object Unigram {
     * language slice off ONE report. ADDITIVE MONOID given the frozen
     * model (piece counts are deterministic per word), so the streaming
     * loop maintains it like every other census
-    * ([[graft.streaming.EventStream.maintainTokenizerFertilityState]]).
+    * ([[tokenizerFertilityCensus]]). The model is FROZEN: the caller
+    * trains (or loads) it once and every micro-batch prices against the
+    * same piece table, so the fold equals a batch recompute. Retraining
+    * the tokenizer means a new census directory, exactly like changing
+    * `ngrams` on the DSIR census.
     *
     * Scale shape: the base lanes ride the scan (one map-side-combinable
     * groupBy); the unigram lane explodes tokens to a (source, lang,
@@ -254,6 +234,11 @@ object Unigram {
         coalesce(col("uni_chars"), lit(0L)).as("uni_chars"),
         coalesce(col("uni_pieces"), lit(0L)).as("uni_pieces"))
   }
+
+  /** [[fertilityCensus]]'s census shape: [[Vocab.fertilityCensus]] plus
+    * the unigram lane. */
+  val tokenizerFertilityCensus: Census = Vocab.fertilityCensus.copy(values =
+    Vocab.fertilityCensus.values ++ Seq("uni_words", "uni_chars", "uni_pieces"))
 
   /** Fertility report from a [[fertilityCensus]] (possibly folded
     * across micro-batches — cells re-summed first so a fold is safe):

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Census
+
 /** Corpus-level token statistics: the vocabulary/frequency pass every
   * tokenizer-training and TF-IDF pipeline starts from.
   *
@@ -332,15 +334,18 @@ object Vocab {
   /** The (source, lang, n) count table [[langPurity]] folds over — an
     * ADDITIVE monoid (counts of disjoint batches add per cell), so the
     * production loop can maintain it per ingest batch
-    * ([[graft.streaming.EventStream.maintainLangPurityState]]) and read
-    * the purity report off folded state without replaying documents —
-    * the [[graft.operators.Monitoring.countState]] precedent applied to
+    * ([[langPurityCensus]]) and read the purity report off folded state
+    * without replaying documents — the
+    * [[graft.operators.Monitoring.countState]] precedent applied to
     * the mixture-curation monitor. */
   def langPurityState(df: DataFrame, sourceCol: String,
                       langCol: String): DataFrame =
     df.select(col(sourceCol).as("source"), col(langCol).as("lang"))
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n"))
+
+  /** [[langPurityState]]'s census shape. */
+  val langPurityCensus: Census = Census(Seq("source", "lang"), Seq("n"))
 
   /** [[langPurity]]'s report off an existing (source, lang, n) count
     * table ([[langPurityState]] or a fold of maintained state) — the
@@ -629,7 +634,11 @@ object Vocab {
     * exactly like a PSI bucket fit can't see a new mode; refit to see
     * it). Lanes are zero-filled (full outer), never dropped: a batch
     * whose domain has unigram mass but no bigrams still banks the
-    * unigram lane. */
+    * unigram lane. The price tables are the PINNED model
+    * ([[doremiPrices]], fit once over a reference corpus, the psiCuts
+    * rule): pass the SAME two frames to every maintained batch — a
+    * per-batch refit would cost the same token differently across
+    * appends and corrupt the fold. */
   def doremiLmState(df: DataFrame, domainCol: String, textCol: String,
                     uniPrices: DataFrame, biPrices: DataFrame): DataFrame = {
     val dec = "decimal(18,6)"
@@ -666,15 +675,18 @@ object Vocab {
         coalesce(col("sb"), lit(0).cast(dec)).as("sb"))
   }
 
+  /** [[doremiLmState]]'s census shape. */
+  val doremiCensus: Census =
+    Census(Seq("domain"), Seq("n_tokens", "su", "n_bigrams", "sb"))
+
   /** [[doremiWeights]]'s multiplicative-weights chain over an
     * already-built LM-cost census — the direct entry point for counts
-    * folded from maintained state ([[graft.streaming.EventStream
-    * .readDoremiWeights]]). Domains missing either lane (no priced
-    * tokens or no priced bigrams) have no excess-loss reading and are
-    * excluded, matching the one-shot operator's inner lane join. All
-    * the float discipline lives in the parent's scaladoc; the census is
-    * exact, so a fold and a one-pass census run the SAME arithmetic
-    * here on the SAME values. */
+    * folded from maintained state ([[doremiCensus]]). Domains missing
+    * either lane (no priced tokens or no priced bigrams) have no
+    * excess-loss reading and are excluded, matching the one-shot
+    * operator's inner lane join. All the float discipline lives in the
+    * parent's scaladoc; the census is exact, so a fold and a one-pass
+    * census run the SAME arithmetic here on the SAME values. */
   def doremiFromCensus(census: DataFrame, eta: Double = 1.0,
                        smoothing: Double = 1e-3, steps: Int = 5): DataFrame = {
     require(eta > 0, s"eta must be positive, got $eta")
@@ -949,10 +961,11 @@ object Vocab {
   /** The (bucket, n_raw, n_tgt) feature census [[dsirWeights]] prices
     * from — an ADDITIVE monoid (both counts of disjoint batches add per
     * bucket), so the production loop can maintain the DSIR model per
-    * ingest batch ([[graft.streaming.EventStream.maintainDsirCensus]])
-    * and score any batch against the FROZEN folded model via
-    * [[dsirWeightsFromCensus]] — the [[langPurityState]] pattern applied
-    * to the selection family. ≤ numBuckets rows at any corpus size. */
+    * ingest batch ([[dsirModelCensus]]) and score any batch against the
+    * FROZEN folded model via [[dsirWeightsFromCensus]] — the
+    * [[langPurityState]] pattern applied to the selection family.
+    * `numBuckets` and `ngrams` must match between maintenance and read
+    * (the psiCuts pinning rule). ≤ numBuckets rows at any corpus size. */
   def dsirCensus(df: DataFrame, idCol: String, textCol: String,
                  isTarget: Column, numBuckets: Int = 64,
                  ngrams: Int = 1): DataFrame =
@@ -960,6 +973,9 @@ object Vocab {
       .groupBy(col("bucket"))
       .agg(sum(col("tf")).as("n_raw"),
         sum(when(col("__tgt"), col("tf")).otherwise(0L)).as("n_tgt"))
+
+  /** [[dsirCensus]]'s census shape. */
+  val dsirModelCensus: Census = Census(Seq("bucket"), Seq("n_raw", "n_tgt"))
 
   /** [[dsirWeights]] under a PRE-BUILT census ([[dsirCensus]] or a fold
     * of maintained state): scores `df`'s documents against the frozen
@@ -1378,11 +1394,14 @@ object Vocab {
       .groupBy(col("source"), col("bucket"))
       .agg(count(lit(1)).as("n"))
 
+  /** [[divergenceState]]'s census shape. */
+  val divergenceCensus: Census = Census(Seq("source", "bucket"), Seq("n"))
+
   /** [[sourceDivergence]]'s pairwise-JS report over an already-built
     * (source, bucket, n) census — the direct entry point for counts
-    * folded from maintained state ([[graft.streaming.EventStream
-    * .readSourceDivergence]]). Exactness is the parent's: the census is
-    * exact counts and all the ln/divide discipline lives here. */
+    * folded from maintained state ([[divergenceCensus]]). Exactness is
+    * the parent's: the census is exact counts and all the ln/divide
+    * discipline lives here. */
   def sourceDivergenceFromCounts(counts: DataFrame): DataFrame = {
     // The census is read by both pair sides, the totals and the two
     // absent-bucket anti probes — PERSIST it (sources×(k+1) rows;
@@ -1528,9 +1547,9 @@ object Vocab {
 
   /** The (source, lang, n_docs, ws_tokens, lex_tokens, n_chars) census
     * [[fertilityFromCounts]] scores — an ADDITIVE MONOID, so the
-    * streaming loop maintains it per micro-batch
-    * ([[graft.streaming.EventStream.maintainFertilityState]]) and reads
-    * current tokenizer efficiency without replaying documents. */
+    * streaming loop maintains it per micro-batch ([[fertilityCensus]])
+    * and reads current tokenizer efficiency without replaying
+    * documents. */
   def fertilityState(df: DataFrame, textCol: String, sourceCol: String,
                      langCol: String): DataFrame =
     df.filter(col(sourceCol).isNotNull && col(langCol).isNotNull &&
@@ -1544,6 +1563,10 @@ object Vocab {
         sum(col("__ws")).as("ws_tokens"),
         sum(col("__lex")).as("lex_tokens"),
         sum(col("__chars")).as("n_chars"))
+
+  /** [[fertilityState]]'s census shape. */
+  val fertilityCensus: Census = Census(Seq("source", "lang"),
+    Seq("n_docs", "ws_tokens", "lex_tokens", "n_chars"))
 
   /** Fertility report from a [[fertilityState]] census (possibly folded
     * across micro-batches — cells re-summed first so a fold is safe). */

@@ -1326,7 +1326,7 @@ object TextQueries {
     // Tokenizer-efficiency census per (source, lang): chars-per-token
     // under both tokenization lanes + lex-per-ws fertility, each frozen
     // by one exact integer floor-division. Additive census — the
-    // streaming loop maintains it (maintainFertilityState).
+    // streaming loop maintains it (Vocab.fertilityCensus).
     "q_token_fertility" -> ((s, dir) =>
       Vocab.tokenFertility(Tables.load(s, dir, "documents"),
           "text", "source", "lang")
@@ -1340,7 +1340,7 @@ object TextQueries {
     // UnigramSpec proves the census lane sums equal q_unigram_encode's
     // per-doc totals, and VerifyExtras pins that equality as a floor at
     // every scale. Additive given the frozen model — maintained for
-    // free (maintainTokenizerFertilityState). q_token_fertility itself
+    // free (Unigram.tokenizerFertilityCensus). q_token_fertility itself
     // stays untouched (its static lanes keep their DuckDB oracle).
     "q_tokenizer_fertility" -> ((s, dir) =>
       Unigram.tokenizerFertility(Tables.load(s, dir, "documents"),
@@ -1382,7 +1382,7 @@ object TextQueries {
     }),
 
     // C4 gate health per source — the gopher-rate monitor's twin on the
-    // C4 axis; additive census, maintained by maintainC4RateState.
+    // C4 axis; additive census, maintained as TA.passRateCensus.
     "q_c4_rate" -> ((s, dir) =>
       TA.c4Rate(c4Corpus(s, dir), "source", "c4_text")
         .orderBy(col("source"))),
@@ -1405,7 +1405,7 @@ object TextQueries {
     // (source, n_docs, n_pass, pass_rate) census — the monitor a corpus
     // operator reads round-over-round (a sagging source is rotting
     // upstream of dedup). Additive census → the streaming loop maintains
-    // it (maintainGopherRateState, fold ≡ recompute spec-pinned); one
+    // it (TA.passRateCensus, fold ≡ recompute spec-pinned); one
     // map-side-combinable aggregate, report over the source dimension.
     "q_gopher_rate" -> ((s, dir) =>
       TA.gopherRate(gopherCorpus(s, dir), "source", "gopher_text",

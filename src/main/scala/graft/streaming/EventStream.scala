@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.sources.Tables
 
@@ -79,35 +79,47 @@ object EventStream {
     * the reference. Returns the started query; callers own its lifecycle. */
   def stageDeltas(sparse: DataFrame, dw: DataFrame, pk: String,
                   stagePath: String, checkpointPath: String,
-                  preferDw: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery =
-    sparse.writeStream
+                  preferDw: Seq[String] = Nil): StreamingQuery =
+    eachBatch(sparse, checkpointPath) { (batch, batchId) =>
+      graft.operators.MergePipeline.sparseDwMerge(batch, dw, pk, preferDw)
+        .withColumn("__batch_id", lit(batchId))
+        .write.mode("append").parquet(stagePath)
+    }
+
+  /** Runs `append` on every micro-batch of `rows` with the batch id.
+    * Returns the started query; callers own its lifecycle. */
+  private def eachBatch(rows: DataFrame, checkpointPath: String)(
+      append: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
       .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.MergePipeline.sparseDwMerge(batch.toDF(), dw, pk, preferDw)
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("append").parquet(stagePath)
-        ()
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        append(batch.toDF(), batchId)
       }
       .start()
 
-  /** The ONE maintenance shape every census monitor shares: per
-    * micro-batch, collapse the batch to its model-scale census rows via
-    * `census` (an additive or union-idempotent monoid over the census
-    * key — counts, checksums, histogram cells, distinct pairs), stamp
-    * the micro-batch id, append to `statePath`. The read side
-    * ([[readCensusState]], or `distinct()` for set monoids) folds the
-    * deltas into current state, equal to a batch recompute over
-    * everything ever ingested — the firehose is never re-scanned.
+  /** [[maintainCensusState]]'s in-loop compaction schedule: fold the
+    * directory every `everyBatches` appended deltas. */
+  final case class AutoCompact(everyBatches: Int = 32) {
+    require(everyBatches >= 1, s"everyBatches must be >= 1, got $everyBatches")
+  }
+
+  /** The ONE maintenance shape every additive census monitor shares:
+    * per micro-batch, collapse the batch to its model-scale census rows
+    * via `build` (an additive monoid over `census.keys` — counts,
+    * checksums, histogram cells), stamp the micro-batch id, append to
+    * `statePath`. [[readCensusState]] folds the deltas into current
+    * state, equal to a batch recompute over everything ever ingested —
+    * the firehose is never re-scanned.
     *
     * At-least-once → effectively-once: a replayed batch appends
     * IDENTICAL (__batch_id, census-key) rows; the read side's
-    * dropDuplicates keys on them before the fold. Set-monoid censuses
-    * (already idempotent under union) pass `stampBatchId = false` and
-    * skip the stamp entirely. Returns the started query; callers own
-    * its lifecycle. Every named maintainer below is this function plus
-    * its operator's census; new monitors whose state is a census fold
-    * (counts over (dims, cell) — lang-purity, chi², HHI, KS, …) get
-    * maintenance for free by passing their state builder.
+    * dropDuplicates keys on them before the fold. Returns the started
+    * query; callers own its lifecycle. Each monitor declares its
+    * [[Census]] next to its `*State` builder, so maintaining it is this
+    * function with that census and builder, and reading it is
+    * [[readCensusState]] then the operator's `*FromCounts`/`*FromState`
+    * finisher. Set-monoid censuses (already idempotent under union)
+    * skip the stamp and this function ([[maintainNoveltyState]]).
     *
     * `autoCompact` wires the maintenance valve INTO the loop: every
     * `everyBatches` appended deltas the writer folds the directory via
@@ -122,45 +134,30 @@ object EventStream {
     * both correct. The batch counter is in-memory per started query:
     * after a driver restart compaction re-arms from zero (at worst one
     * interval later than it would have), never double-folds. */
-  final case class AutoCompact(keyCols: Seq[String], valueCols: Seq[String],
-                               everyBatches: Int = 32) {
-    require(everyBatches >= 1, s"everyBatches must be >= 1, got $everyBatches")
-  }
-
   def maintainCensusState(rows: DataFrame, statePath: String,
-                          checkpointPath: String,
-                          census: DataFrame => DataFrame,
-                          stampBatchId: Boolean = true,
-                          autoCompact: Option[AutoCompact] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(autoCompact.isEmpty || stampBatchId,
-      "autoCompact requires stampBatchId=true (set-monoid directories " +
-        "compact as a plain distinct() rewrite, not a batch-id fold)")
+                          checkpointPath: String, census: Census,
+                          build: DataFrame => DataFrame,
+                          autoCompact: Option[AutoCompact] = None): StreamingQuery = {
     // Driver-side (foreachBatch bodies run on the driver); one counter
     // per started query, so two maintainers on different paths never
     // share a schedule.
     var sinceCompaction = 0
-    rows.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val c = census(batch.toDF())
-        (if (stampBatchId) c.withColumn("__batch_id", lit(batchId)) else c)
-          .write.mode("append").parquet(statePath)
-        autoCompact.foreach { ac =>
-          sinceCompaction += 1
-          if (sinceCompaction >= ac.everyBatches) {
-            compactCensusState(batch.sparkSession, statePath,
-              ac.keyCols, ac.valueCols)
-            sinceCompaction = 0
-          }
+    eachBatch(rows, checkpointPath) { (batch, batchId) =>
+      build(batch).withColumn("__batch_id", lit(batchId))
+        .write.mode("append").parquet(statePath)
+      autoCompact.foreach { ac =>
+        sinceCompaction += 1
+        if (sinceCompaction >= ac.everyBatches) {
+          compactCensusState(batch.sparkSession, statePath, census)
+          sinceCompaction = 0
         }
-        ()
       }
-      .start()
+    }
   }
 
   /** Current state from a [[maintainCensusState]] directory holding an
     * ADDITIVE census: replay-dedup on (__batch_id, keys), then per-key
-    * sums of `valueCols`. Scan is O(batches × census) summary rows
+    * sums of the census values. Scan is O(batches × census) summary rows
     * between compactions; [[compactCensusState]] rewrites the fold so
     * the steady-state read cost is O(census) + deltas-since-compaction.
     *
@@ -175,8 +172,7 @@ object EventStream {
     * reconciles the delta rows appended after a compaction, which lack
     * the stamp column. */
   def readCensusState(spark: SparkSession, statePath: String,
-                      keyCols: Seq[String],
-                      valueCols: Seq[String]): DataFrame = {
+                      census: Census): DataFrame = {
     val raw = spark.read.option("mergeSchema", "true").parquet(statePath)
     val scoped =
       if (!raw.columns.contains("__compacted_through")) raw
@@ -191,11 +187,12 @@ object EventStream {
         }
       }
     scoped
-      .dropDuplicates("__batch_id" +: keyCols)
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(valueCols.head).as(valueCols.head),
-        valueCols.tail.map(c => sum(c).as(c)): _*)
+      .dropDuplicates("__batch_id" +: census.keys)
+      .groupBy(census.keys.map(col): _*)
+      .agg(sum(census.values.head).as(census.values.head),
+        census.values.tail.map(c => sum(c).as(c)): _*)
   }
+
 
   /** Fold a [[maintainCensusState]] delta directory down to its summary —
     * the maintenance valve that keeps [[readCensusState]]'s scan at
@@ -232,12 +229,11 @@ object EventStream {
     *
     * Scheduling: pass [[AutoCompact]] to [[maintainCensusState]] for
     * the in-loop policy, or run this from the maintenance owner on its
-    * own schedule. Set-monoid directories (`stampBatchId = false`)
+    * own schedule. Set-monoid directories ([[maintainNoveltyState]])
     * don't need this machinery: their compaction is a plain
     * `.distinct()` rewrite, idempotent under replay by definition. */
   def compactCensusState(spark: SparkSession, statePath: String,
-                         keyCols: Seq[String], valueCols: Seq[String],
-                         gc: Boolean = true): Long = {
+                         census: Census, gc: Boolean = true): Long = {
     val raw = spark.read.option("mergeSchema", "true").parquet(statePath)
     val hasStamp = raw.columns.contains("__compacted_through")
     val wRow = raw.agg(
@@ -248,7 +244,7 @@ object EventStream {
     val w = wRow.getLong(0).max(if (wRow.isNullAt(1)) Long.MinValue else wRow.getLong(1))
     val alreadyThrough = !wRow.isNullAt(1) && wRow.getLong(1) == w
     if (!alreadyThrough) {
-      val folded = readCensusState(spark, statePath, keyCols, valueCols)
+      val folded = readCensusState(spark, statePath, census)
         .withColumn("__batch_id", lit(w))
         .withColumn("__compacted_through", lit(w))
       folded.coalesce(1).write.mode("append").parquet(statePath)
@@ -303,6 +299,7 @@ object EventStream {
     removed
   }
 
+
   /** Continuous partition-checksum maintenance — the streaming half of
     * TableDiff's incremental validation loop: each micro-batch's side
     * summary (graft.TableDiff.sideChecksums — O(#partitions) rows, the
@@ -315,7 +312,7 @@ object EventStream {
   def maintainChecksums(rows: DataFrame, partCol: String, pks: Seq[String],
                         summaryPath: String, checkpointPath: String,
                         exclude: Seq[String] = Nil,
-                        hashCols: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery = {
+                        hashCols: Seq[String] = Nil): StreamingQuery = {
     // The checksum term is POSITIONAL over its hash columns. For a
     // single maintained side that's self-consistent; but two summaries
     // compared via checksumStatus must hash in the SAME column order
@@ -326,6 +323,7 @@ object EventStream {
       if (hashCols.nonEmpty) hashCols
       else pks ++ graft.TableDiff.compareCols(rows, pks :+ partCol, exclude)
     maintainCensusState(rows, summaryPath, checkpointPath,
+      graft.TableDiff.checksumCensus,
       b => graft.TableDiff.sideChecksumsOver(b, partCol, pinned))
   }
 
@@ -340,53 +338,26 @@ object EventStream {
     * [[maintainChecksums]] (the term is positional; schema-order-derived
     * columns from differently-ordered sides would read as data_drift). */
   def readChecksums(spark: SparkSession, summaryPath: String): DataFrame = {
-    val folded = readCensusState(spark, summaryPath,
-      Seq("partition"), Seq("n", "checksum"))
+    val folded = readCensusState(spark, summaryPath, graft.TableDiff.checksumCensus)
     // Pin the checksum's width: the batch summary carries decimal(38,0)
     // and checksumStatus compares positionally-typed columns.
     folded.withColumn("checksum", col("checksum").cast("decimal(38,0)"))
   }
-
-  /** Streaming maintenance for the per-source duplication-rate monitor
-    * ([[graft.operators.Monitoring.dupRateBySource]]): each micro-batch
-    * appends its (source, fp, n) count state — the additive monoid the
-    * batch monitor folds — to `statePath`; the read side folds across
-    * batches. The [[maintainChecksums]] shape, applied to the census
-    * monitor: the ingest firehose never re-scans for "how duplicated is
-    * each source today".
-    *
-    * At-least-once → effectively-once: a replayed batch appends
-    * IDENTICAL (__batch_id, source, fp, n) rows; the read-side
-    * dropDuplicates keys on them before the fold. */
-  def maintainDupRateState(docs: DataFrame, sourceCol: String,
-                           fingerprint: org.apache.spark.sql.Column,
-                           statePath: String, checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.Monitoring.dupRateState(b, sourceCol, fingerprint))
-
-  /** Fold a [[maintainDupRateState]] delta directory to the current
-    * (source, fp, n) state — feed it to
-    * [[graft.operators.Monitoring.dupRateFromState]] (the monitor row)
-    * or [[graft.operators.Monitoring.crossSourceMatrixFromState]] (the
-    * mirror matrix). Counts ADD across batches after replay dedup;
-    * null sources fold like any other bucket (the mergeDupRateState
-    * convention). Scan is O(batches × state) — compact by rewriting
-    * the fold result when that grows. */
-  def readDupRateState(spark: SparkSession, statePath: String): DataFrame =
-    readCensusState(spark, statePath, Seq("source", "fp"), Seq("n"))
 
   /** Streaming maintenance for the source-novelty/overlap census
     * ([[graft.operators.Vocab.sourceNovelty]] /
     * [[graft.operators.Vocab.sourceOverlap]]): appends each batch's
     * DISTINCT (source, shingle-key) pairs. The monoid is set UNION —
     * idempotent, so replayed batches need no batch-id dedup at all;
-    * the read side just re-distincts. */
+    * the read side just re-distincts, and compaction is a plain
+    * `.distinct()` rewrite. */
   def maintainNoveltyState(docs: DataFrame, textCol: String, sourceCol: String,
                            statePath: String, checkpointPath: String,
-                           n: Int = 3): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.Vocab.sourceNoveltyState(b, textCol, sourceCol, n),
-      stampBatchId = false)
+                           n: Int = 3): StreamingQuery =
+    eachBatch(docs, checkpointPath) { (batch, _) =>
+      graft.operators.Vocab.sourceNoveltyState(batch, textCol, sourceCol, n)
+        .write.mode("append").parquet(statePath)
+    }
 
   /** Current novelty census from a [[maintainNoveltyState]] directory —
     * feed to [[graft.operators.Vocab.noveltyFromState]] or
@@ -400,7 +371,7 @@ object EventStream {
     * transitions plus the per-user boundary transition stitched from the
     * carried last event — and the updated per-user carry. Two state
     * kinds under one root: `statePath/transitions` (additive monoid,
-    * batch-id deduped on read like the dup-rate state) and
+    * batch-id deduped on read like every census) and
     * `statePath/carry` (latest-per-key, resolved by batch id).
     *
     * Contract ([[graft.operators.Eval.transitionStep]]): batches arrive
@@ -408,21 +379,16 @@ object EventStream {
     * one-row-per-active-user — never event-count scale. */
   def maintainTransitionState(events: DataFrame, keyCol: String,
                               tsCol: String, idCol: String, stateCol: String,
-                              statePath: String, checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val carry = readTransitionCarry(spark, statePath)
-        val (deltas, newCarry) = graft.operators.Eval.transitionStep(
-          batch.toDF(), carry, keyCol, tsCol, idCol, stateCol)
-        deltas.withColumn("__batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$statePath/transitions")
-        newCarry.withColumn("__batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$statePath/carry")
-        ()
-      }
-      .start()
+                              statePath: String, checkpointPath: String): StreamingQuery =
+    eachBatch(events, checkpointPath) { (batch, batchId) =>
+      val carry = readTransitionCarry(batch.sparkSession, statePath)
+      val (deltas, newCarry) = graft.operators.Eval.transitionStep(
+        batch, carry, keyCol, tsCol, idCol, stateCol)
+      deltas.withColumn("__batch_id", lit(batchId))
+        .write.mode("append").parquet(s"$statePath/transitions")
+      newCarry.withColumn("__batch_id", lit(batchId))
+        .write.mode("append").parquet(s"$statePath/carry")
+    }
 
   /** Latest-per-key carry from a [[maintainTransitionState]] directory
     * (empty frame before the first batch commits — typed to the event
@@ -460,409 +426,6 @@ object EventStream {
     graft.operators.Eval.transitionsFromCounts(
       Tables.parquet(spark, s"$statePath/transitions")
         .dropDuplicates("__batch_id", "from_state", "to_state"))
-
-  /** Streaming maintenance for the AUC monitor
-    * ([[graft.operators.Eval.aucByGroup]]): each micro-batch appends its
-    * (grp, score_milli, pos, neg) histogram cells — the additive monoid
-    * the exact tie-corrected AUC is computed from — so "is the quality
-    * score still separating?" reads from state without replaying scores.
-    * State is histogram-dimension (groups × distinct quantized scores),
-    * never event-count scale; replay-safe via batch-id dedup. */
-  def maintainAucState(rows: DataFrame, groupCol: String, scoreCol: String,
-                       positiveCol: org.apache.spark.sql.Column,
-                       statePath: String, checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(rows, statePath, checkpointPath,
-      b => graft.operators.Eval.aucHistogram(b, groupCol, scoreCol,
-        positiveCol))
-
-  /** Current per-group AUC from a [[maintainAucState]] directory —
-    * [[graft.operators.Eval.aucByGroup]]'s output contract from folded
-    * histogram cells (replay-deduped on batch id; aucFromHistogram
-    * re-sums cells, so cross-batch duplication of a cell key is the
-    * normal fold, not an error). */
-  def readAucState(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.Eval.aucFromHistogram(readCensusState(spark, statePath,
-      Seq("grp", "score_milli"), Seq("pos", "neg")))
-
-  /** Streaming maintenance for the volume monitors
-    * ([[graft.operators.Monitoring.countDrift]] /
-    * [[graft.operators.Monitoring.countAnomaly]]): each micro-batch
-    * appends its (dims, day, n) periodic counts — the additive monoid
-    * both monitors fold ([[graft.operators.Monitoring.countState]]) —
-    * so "did any group's volume drift / spike?" reads from state
-    * without replaying the event firehose. State is group-dimension
-    * (dim cardinality × periods), never event-count scale; replay-safe
-    * via batch-id dedup, the [[maintainAucState]] shape. */
-  def maintainCountState(events: DataFrame, dims: Seq[String],
-                         period: org.apache.spark.sql.Column,
-                         statePath: String, checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(events, statePath, checkpointPath,
-      b => graft.operators.Monitoring.countState(b, dims, period))
-
-  /** Current (dims, day, n) count table from a [[maintainCountState]]
-    * directory: a replayed batch appends IDENTICAL (__batch_id, dims,
-    * day, n) rows — dedup on the key, then counts ADD across batches.
-    * Feed to [[readCountDrift]] / [[readCountAnomaly]] (or the
-    * FromCounts operators directly). Scan is O(batches × groups) —
-    * compact by rewriting the fold result when that grows. */
-  def readCountState(spark: SparkSession, statePath: String,
-                     dims: Seq[String]): DataFrame =
-    readCensusState(spark, statePath, dims :+ "day", Seq("n"))
-
-  /** [[graft.operators.Monitoring.countDrift]]'s verdicts off maintained
-    * state — equal to a batch recompute over everything ever ingested
-    * (the count monoid is exact, no approximation anywhere). */
-  def readCountDrift(spark: SparkSession, statePath: String,
-                     dims: Seq[String], factor: Int = 2): DataFrame =
-    graft.operators.Monitoring.countDriftFromCounts(
-      readCountState(spark, statePath, dims), dims, factor)
-
-  /** [[graft.operators.Monitoring.countAnomaly]]'s robust med/MAD flags
-    * off maintained state — same equality-to-batch contract as
-    * [[readCountDrift]]; the MAD math always ran over group rows, so
-    * folded state feeds it unchanged. */
-  def readCountAnomaly(spark: SparkSession, statePath: String,
-                       dims: Seq[String], nMads: Double = 3.0): DataFrame =
-    graft.operators.Monitoring.countAnomalyFromCounts(
-      readCountState(spark, statePath, dims), dims, nMads)
-
-  /** Streaming maintenance for the PSI drift monitor
-    * ([[graft.operators.Monitoring.distributionDrift]]): each
-    * micro-batch appends its (bucket, n) counts under cut points PINNED
-    * at fit time ([[graft.operators.Monitoring.psiCuts]] on a reference
-    * snapshot — cuts drifting per batch would make folded counts
-    * incomparable). Maintain one state directory per side (the frozen
-    * reference side can be a single batch); the read side folds and
-    * scores. State is ≤ nBuckets rows per batch — never value-count
-    * scale; replay-safe via batch-id dedup, the [[maintainAucState]]
-    * shape. */
-  def maintainPsiState(rows: DataFrame, valueCol: String, cuts: Seq[Double],
-                       statePath: String, checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(rows, statePath, checkpointPath,
-      b => graft.operators.Monitoring.psiBucketState(b, valueCol, cuts))
-
-  /** Current (bucket, n) counts from a [[maintainPsiState]] directory:
-    * replayed batches dedup on (__batch_id, bucket), then counts ADD. */
-  def readPsiState(spark: SparkSession, statePath: String): DataFrame =
-    readCensusState(spark, statePath, Seq("bucket"), Seq("n"))
-
-  /** [[graft.operators.Monitoring.distributionDrift]]'s per-bucket PSI
-    * report off two maintained state directories — equal to the batch
-    * sketch variant over everything ever ingested when both sides were
-    * bucketed by the same pinned cuts. */
-  def readPsiDrift(spark: SparkSession, leftStatePath: String,
-                   rightStatePath: String, nBuckets: Int = 10): DataFrame =
-    graft.operators.Monitoring.psiFromStates(
-      readPsiState(spark, leftStatePath),
-      readPsiState(spark, rightStatePath), nBuckets)
-
-  /** Streaming maintenance for the language-purity monitor
-    * ([[graft.operators.Vocab.langPurity]]): each micro-batch appends
-    * its (source, lang, n) counts — the additive census the purity
-    * report folds ([[graft.operators.Vocab.langPurityState]]) — so "is
-    * this source still one language" reads from state without replaying
-    * documents. The first monitor wired straight onto
-    * [[maintainCensusState]] with no bespoke plumbing: state is
-    * sources × languages rows per batch, never doc scale. */
-  def maintainLangPurityState(docs: DataFrame, sourceCol: String,
-                              langCol: String, statePath: String,
-                              checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.Vocab.langPurityState(b, sourceCol, langCol))
-
-  /** [[graft.operators.Vocab.langPurity]]'s report off a
-    * [[maintainLangPurityState]] directory — equal to a batch recompute
-    * over everything ever ingested (the census is an exact count
-    * monoid; the entropy/top-share math always ran over census rows). */
-  def readLangPurity(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.Vocab.langPurityFromCounts(
-      readCensusState(spark, statePath, Seq("source", "lang"), Seq("n")))
-
-  /** Streaming maintenance for the Gopher quality-gate health monitor
-    * ([[graft.operators.TextAnalysis.gopherRate]]): each micro-batch
-    * appends its (source, n_docs, n_pass) verdict census —
-    * "is this source's pass rate sagging" reads from sources × 1 state
-    * without replaying documents. */
-  def maintainGopherRateState(docs: DataFrame, sourceCol: String,
-                              textCol: String, stops: Seq[String],
-                              statePath: String,
-                              checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.TextAnalysis.gopherRateState(b, sourceCol, textCol, stops))
-
-  /** [[graft.operators.TextAnalysis.gopherRate]]'s report off a
-    * [[maintainGopherRateState]] directory — equal to a batch recompute
-    * over everything ever ingested (the census is an exact count
-    * monoid; the rate is one division over folded counts). */
-  def readGopherRate(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.TextAnalysis.gopherRateFromCounts(
-      readCensusState(spark, statePath, Seq("source"), Seq("n_docs", "n_pass")))
-
-  /** Streaming maintenance for the source-divergence monitor
-    * ([[graft.operators.Vocab.sourceDivergence]]): each micro-batch
-    * appends its (source, bucket, n) unigram census under a PINNED
-    * bucket vocabulary ([[graft.operators.Vocab.divergenceState]]) —
-    * "are two sources drifting apart (or a new source converging)"
-    * reads pairwise JS from sources×(k+1) state without replaying
-    * documents. `vocab` is the pinned model (the psiCuts rule): fit it
-    * once — e.g. [[graft.operators.Vocab.vocabTopK]] over a reference
-    * corpus — and pass the SAME frame to every maintenance run; a
-    * per-batch refit would bucket the same token differently across
-    * appends and corrupt the fold. */
-  def maintainDivergenceState(docs: DataFrame, sourceCol: String,
-                              textCol: String, vocab: DataFrame,
-                              statePath: String,
-                              checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.Vocab.divergenceState(b, sourceCol, textCol, vocab))
-
-  /** [[graft.operators.Vocab.sourceDivergence]]'s pairwise-JS report off
-    * a [[maintainDivergenceState]] directory — equal to a batch
-    * recompute over everything ever ingested under the same pinned
-    * vocabulary (the census is an exact count monoid; every ln/divide
-    * always ran over census rows, never documents). */
-  def readSourceDivergence(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.Vocab.sourceDivergenceFromCounts(
-      readCensusState(spark, statePath, Seq("source", "bucket"), Seq("n")))
-
-  /** Streaming maintenance for the C4 quality-gate health monitor
-    * ([[graft.operators.TextAnalysis.c4Rate]]) — the gopher-rate shape
-    * on the C4 axis: per micro-batch (source, n_docs, n_pass) verdict
-    * census, pass rate read from sources × 1 state. */
-  def maintainC4RateState(docs: DataFrame, sourceCol: String,
-                          textCol: String, statePath: String,
-                          checkpointPath: String,
-                          minSentences: Int = 5): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.TextAnalysis.c4RateState(b, sourceCol, textCol,
-        minSentences))
-
-  /** [[graft.operators.TextAnalysis.c4Rate]]'s report off a
-    * [[maintainC4RateState]] directory — equal to a batch recompute
-    * over everything ever ingested. */
-  def readC4Rate(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.TextAnalysis.c4RateFromCounts(
-      readCensusState(spark, statePath, Seq("source"), Seq("n_docs", "n_pass")))
-
-  /** Streaming maintenance for the PII leak-rate monitor
-    * ([[graft.operators.TextAnalysis.piiRate]]): each micro-batch
-    * appends its (source, n_docs, n_emails, n_phones, n_dirty) census —
-    * "which source is leaking, and is it getting worse" reads from
-    * sources × 1 state without replaying documents. */
-  def maintainPiiRateState(docs: DataFrame, sourceCol: String,
-                           textCol: String, statePath: String,
-                           checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.TextAnalysis.piiRateState(b, sourceCol, textCol))
-
-  /** [[graft.operators.TextAnalysis.piiRate]]'s report off a
-    * [[maintainPiiRateState]] directory — equal to a batch recompute
-    * over everything ever ingested (exact count monoid; the rate is one
-    * division over folded counts). */
-  def readPiiRate(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.TextAnalysis.piiRateFromCounts(
-      readCensusState(spark, statePath, Seq("source"),
-        Seq("n_docs", "n_emails", "n_phones", "n_dirty")))
-
-  /** Streaming maintenance for the cluster-quality monitor
-    * ([[graft.operators.Similarity.clusterSilhouette]]): each
-    * micro-batch appends its (cell, n, sa, sb, ss) micro-quantized
-    * silhouette census under PINNED centroids
-    * ([[graft.operators.Similarity.silhouetteState]] — fit the model
-    * once, the psiCuts rule), so "are the semantic cells degrading as
-    * new data arrives" reads from ≤ cells rows of state without
-    * replaying vectors. */
-  def maintainSilhouetteState(vecs: DataFrame, centroids: Seq[Seq[Double]],
-                              idCol: String, vecCol: String,
-                              statePath: String,
-                              checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(vecs, statePath, checkpointPath,
-      b => graft.operators.Similarity.silhouetteState(b, centroids, idCol, vecCol))
-
-  /** [[graft.operators.Similarity.clusterSilhouette]]'s per-cell report
-    * off a [[maintainSilhouetteState]] directory — equal to a batch
-    * recompute over everything ever ingested under the same pinned
-    * centroids (the census is additive micro-integers; the means are
-    * exact ratios of folded sums). */
-  def readSilhouette(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.Similarity.silhouetteFromCounts(
-      readCensusState(spark, statePath, Seq("cell"),
-        Seq("n", "sa", "sb", "ss")))
-
-  /** Streaming maintenance for the DoReMi excess-loss monitor
-    * ([[graft.operators.Vocab.doremiWeights]]): each micro-batch appends
-    * its (domain, n_tokens, su, n_bigrams, sb) LM-cost census under the
-    * PINNED price tables ([[graft.operators.Vocab.doremiPrices]] — fit
-    * once over a reference corpus, the psiCuts rule), so "which domain
-    * has the most learnable structure left, and is the learned mixture
-    * drifting" reads from domains×1 state without replaying documents.
-    * A per-batch price refit would cost the same token differently
-    * across appends and corrupt the fold — pass the SAME two frames to
-    * every maintenance run. */
-  def maintainDoremiState(docs: DataFrame, domainCol: String,
-                          textCol: String, uniPrices: DataFrame,
-                          biPrices: DataFrame, statePath: String,
-                          checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.Vocab.doremiLmState(b, domainCol, textCol,
-        uniPrices, biPrices))
-
-  /** [[graft.operators.Vocab.doremiWeights]]'s multiplicative-weights
-    * report off a [[maintainDoremiState]] directory — equal to a batch
-    * recompute over everything ever ingested under the same pinned
-    * prices (the census is additive: exact long counts + exact decimal
-    * cost sums; the MW chain always ran over census rows). */
-  def readDoremiWeights(spark: SparkSession, statePath: String,
-                        eta: Double = 1.0, smoothing: Double = 1e-3,
-                        steps: Int = 5): DataFrame =
-    graft.operators.Vocab.doremiFromCensus(
-      readCensusState(spark, statePath, Seq("domain"),
-        Seq("n_tokens", "su", "n_bigrams", "sb")),
-      eta, smoothing, steps)
-
-  /** Streaming maintenance for the categorical-association monitor
-    * ([[graft.operators.Eval.chiSquareCells]] / cramersV): each
-    * micro-batch appends its (a, b, n) contingency cells — the additive
-    * census the chi-square scorer folds
-    * ([[graft.operators.Eval.assocState]]) — so "is language mix still
-    * independent of source" reads from |A|·|B| state without replaying
-    * documents. */
-  def maintainAssocState(rows: DataFrame, aCol: String, bCol: String,
-                         statePath: String,
-                         checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(rows, statePath, checkpointPath,
-      b => graft.operators.Eval.assocState(b, aCol, bCol))
-
-  /** Per-cell chi-square detail off a [[maintainAssocState]] directory —
-    * equal to a batch recompute over everything ever ingested. */
-  def readChiSquareCells(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.Eval.chiSquareCellsFromCounts(
-      readCensusState(spark, statePath, Seq("a", "b"), Seq("n")))
-
-  /** One-row chi-square + Cramér's V off a [[maintainAssocState]]
-    * directory. */
-  def readCramersV(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.Eval.cramersVFromCounts(
-      readCensusState(spark, statePath, Seq("a", "b"), Seq("n")))
-
-  /** Streaming maintenance for the concentration monitor
-    * ([[graft.operators.Eval.hhiConcentration]]): each micro-batch
-    * appends its (grp, part, n) share cells
-    * ([[graft.operators.Eval.hhiState]]) — "is any language's slice
-    * becoming single-source" reads from dimension state without
-    * replaying the corpus. */
-  def maintainHhiState(rows: DataFrame, groupCol: String, partCol: String,
-                       statePath: String,
-                       checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(rows, statePath, checkpointPath,
-      b => graft.operators.Eval.hhiState(b, groupCol, partCol))
-
-  /** HHI per group off a [[maintainHhiState]] directory — equal to a
-    * batch recompute over everything ever ingested. */
-  def readHhi(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.Eval.hhiFromCounts(
-      readCensusState(spark, statePath, Seq("grp", "part"), Seq("n")))
-
-  /** Streaming maintenance for the KS distribution-drift monitor
-    * ([[graft.operators.Eval.ksAgainstBaseline]]): each micro-batch
-    * appends its (grp, v_milli, n) quantized-value census
-    * ([[graft.operators.Eval.ksState]]). Unlike PSI the grid needs no
-    * pinned cuts — milli quantization IS the contract, so cells from any
-    * batch are comparable by construction and the read side evaluates
-    * both CDFs on the union grid. */
-  def maintainKsState(rows: DataFrame, groupCol: String, valueCol: String,
-                      statePath: String,
-                      checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(rows, statePath, checkpointPath,
-      b => graft.operators.Eval.ksState(b, groupCol, valueCol))
-
-  /** KS sup-distance per group vs `baseline` off a [[maintainKsState]]
-    * directory — equal to a batch recompute over everything ever
-    * ingested. */
-  def readKsDrift(spark: SparkSession, statePath: String,
-                  baseline: String): DataFrame =
-    graft.operators.Eval.ksFromCounts(
-      readCensusState(spark, statePath, Seq("grp", "v_milli"), Seq("n")),
-      baseline)
-
-  /** Streaming maintenance for the tokenizer-efficiency monitor
-    * ([[graft.operators.Vocab.tokenFertility]]): each micro-batch
-    * appends its (source, lang, n_docs, ws_tokens, lex_tokens, n_chars)
-    * sums ([[graft.operators.Vocab.fertilityState]]) — "is a language
-    * slice's chars-per-token collapsing" reads from (source, lang)
-    * state without replaying documents. */
-  def maintainFertilityState(docs: DataFrame, textCol: String,
-                             sourceCol: String, langCol: String,
-                             statePath: String,
-                             checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.Vocab.fertilityState(b, textCol, sourceCol, langCol))
-
-  /** Fertility report off a [[maintainFertilityState]] directory —
-    * equal to a batch recompute over everything ever ingested. */
-  def readFertility(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.Vocab.fertilityFromCounts(
-      readCensusState(spark, statePath, Seq("source", "lang"),
-        Seq("n_docs", "ws_tokens", "lex_tokens", "n_chars")))
-
-  /** [[maintainFertilityState]] with the TRAINED UNIGRAM LANE
-    * ([[graft.operators.Unigram.fertilityCensus]]): the census stays an
-    * additive monoid because the model is FROZEN — the caller trains
-    * (or loads) it once and every micro-batch prices against the same
-    * piece table, so the fold equals a batch recompute. Retraining the
-    * tokenizer means a new census directory, exactly like changing
-    * `ngrams` on the DSIR maintainer. */
-  def maintainTokenizerFertilityState(docs: DataFrame, textCol: String,
-                                      sourceCol: String, langCol: String,
-                                      model: graft.functions.UnigramModel,
-                                      statePath: String,
-                                      checkpointPath: String,
-                                      autoCompact: Option[AutoCompact] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.Unigram.fertilityCensus(b, textCol, sourceCol,
-        langCol, model),
-      autoCompact = autoCompact)
-
-  /** Tokenizer-fertility report off a
-    * [[maintainTokenizerFertilityState]] directory. */
-  def readTokenizerFertility(spark: SparkSession, statePath: String): DataFrame =
-    graft.operators.Unigram.fertilityFromCensus(
-      readCensusState(spark, statePath, Seq("source", "lang"),
-        Seq("n_docs", "ws_tokens", "lex_tokens", "n_chars",
-          "uni_words", "uni_chars", "uni_pieces")))
-
-  /** Streaming maintenance for the DSIR selection MODEL
-    * ([[graft.operators.Vocab.dsirWeights]]'s bucket census): each
-    * micro-batch appends its (bucket, n_raw, n_tgt) feature counts —
-    * both additive ([[graft.operators.Vocab.dsirCensus]]) — so the
-    * importance-resampling model stays current per ingest batch and any
-    * batch scores against the FROZEN folded model
-    * ([[readDsirWeights]]) with zero corpus rescans. `numBuckets` and
-    * `ngrams` must match between maintenance and read (the psiCuts
-    * pinning rule). State is ≤ numBuckets rows per batch. */
-  def maintainDsirCensus(docs: DataFrame, idCol: String, textCol: String,
-                         isTarget: org.apache.spark.sql.Column,
-                         statePath: String, checkpointPath: String,
-                         numBuckets: Int = 64,
-                         ngrams: Int = 1): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainCensusState(docs, statePath, checkpointPath,
-      b => graft.operators.Vocab.dsirCensus(b, idCol, textCol, isTarget,
-        numBuckets, ngrams))
-
-  /** Current (bucket, n_raw, n_tgt) DSIR model from a
-    * [[maintainDsirCensus]] directory. */
-  def readDsirCensus(spark: SparkSession, statePath: String): DataFrame =
-    readCensusState(spark, statePath, Seq("bucket"), Seq("n_raw", "n_tgt"))
-
-  /** Score a document batch against the MAINTAINED DSIR model — equal
-    * to [[graft.operators.Vocab.dsirWeights]] over everything ever
-    * ingested when `docs` is that corpus (spec-pinned); in production
-    * `docs` is the next batch and the model is the frozen history. */
-  def readDsirWeights(spark: SparkSession, statePath: String,
-                      docs: DataFrame, idCol: String, textCol: String,
-                      numBuckets: Int = 64, ngrams: Int = 1): DataFrame =
-    graft.operators.Vocab.dsirWeightsFromCensus(docs, idCol, textCol,
-      readDsirCensus(spark, statePath), numBuckets, ngrams)
 
   /** Streaming exact dedup on event_id: state is bounded by the watermark
     * (duplicates arriving later than `watermark` after the original are

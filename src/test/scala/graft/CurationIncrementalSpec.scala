@@ -200,7 +200,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
     // gc=false first: superseded deltas REMAIN next to the summary —
     // the fold must scope to the summary, not sum both (double-count)
     graft.streaming.EventStream.compactCensusState(spark, shdfA,
-      Seq("sh"), Seq("n"), gc = false)
+      CurationRound.shdfCensus, gc = false)
     CurationRound.foldBatch(spark, a, batch(2), bench, cfg, 2L)
     CurationRound.foldBatch(spark, b, batch(2), bench, cfg, 2L)
     def view(p: String) = (
@@ -216,7 +216,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
     // batches <= W irreversibly; a replay below it could no longer
     // exclude its own prior df contribution)
     graft.streaming.EventStream.compactCensusState(spark, shdfA,
-      Seq("sh"), Seq("n"))
+      CurationRound.shdfCensus)
     val e = intercept[IllegalArgumentException] {
       CurationRound.foldBatch(spark, a, batch(3), bench, cfg, 3L)
     }

@@ -66,25 +66,6 @@ class PartitionDiffSpec extends AnyFunSuite {
       t.compareTo(new java.math.BigDecimal(java.math.BigInteger.ONE.shiftLeft(60))) < 0))
   }
 
-  test("fast (xxhash) checksum lane matches the portable lane's verdicts") {
-    def statuses(portable: Boolean) =
-      TableDiff.partitionChecksum(hive, sf, "part", Seq("id"), portable = portable)
-        .select("partition", "status").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(statuses(portable = true) == statuses(portable = false))
-    def targeted(portable: Boolean) =
-      TableDiff.targetedDiff(hive, sf, "part", Seq("id"), portable = portable)
-        .select("pk", "partition", "status").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    assert(targeted(portable = true) == targeted(portable = false))
-    // Fast terms stay in the same non-negative 60-bit range.
-    val terms = hive.select(
-      TableDiff.checksumTermFast(hive, Seq("id", "v")).as("t"))
-      .collect().map(_.getDecimal(0))
-    assert(terms.forall(t => t.signum() >= 0 &&
-      t.compareTo(new java.math.BigDecimal(java.math.BigInteger.ONE.shiftLeft(60))) < 0))
-  }
-
   test("targetedDiff equals the full diff's discrepant rows") {
     val targeted = TableDiff.targetedDiff(hive, sf, "part", Seq("id"))
       .select("pk", "partition", "status")

@@ -191,6 +191,26 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("kmeansFitMemo: the key covers the vector column — another column under the same corpusKey gets its own centroids") {
+    Similarity.invalidateFitMemo(spark)
+    val df = blobCorpus(nBlobs = 4, perBlob = 50, noise = 0.08)
+      .withColumn("flipped", transform($"embedding", x => -x))
+    def close(a: Seq[Seq[Double]], b: Seq[Seq[Double]]): Boolean =
+      a.length == b.length && a.zip(b).forall { case (x, y) =>
+        x.zip(y).forall { case (p, q) => math.abs(p - q) <= 1e-12 } }
+    try {
+      val (n, plain) = Similarity.kmeansFitMemo(df, "memo-cols-spec")
+      val (_, flipped) = Similarity.kmeansFitMemo(df, "memo-cols-spec",
+        vecCol = "flipped")
+      val direct = Similarity.kmeansFit(df, k = Similarity.cellsFor(n),
+        maxIter = 5, vecCol = "flipped")
+      assert(close(flipped, direct), "the flipped column must train its own model")
+      assert(!close(flipped, plain))
+      // the first column's entry is still served from the memo
+      assert(Similarity.kmeansFitMemo(df, "memo-cols-spec")._2 eq plain)
+    } finally Similarity.invalidateFitMemo(spark)
+  }
+
   test("fitted-centroid IVF: high recall on clustered data, edge cases guarded") {
     val df = blobCorpus(nBlobs = 4, perBlob = 50, noise = 0.08)
     val probes = df.filter($"vec_id" % 20 === 0)

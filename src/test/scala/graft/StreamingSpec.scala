@@ -5,11 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.EventQueries
 import graft.sources.Tables
-import graft.streaming.EventStream
+import graft.operators.{Eval, Monitoring, Similarity, TextAnalysis, Vocab}
+import graft.streaming.{Census, EventStream}
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Current dup-rate census folded from a maintained directory. */
+  private def dupRates(dir: String) =
+    EventStream.readCensusState(spark, dir, Monitoring.dupRateCensus)
 
   /** Stage sf0.001 events (micros ts) to a temp dir so readStream gets a
     * clean schema, then drive the stream synchronously. */
@@ -497,9 +502,9 @@ class StreamingSpec extends AnyFunSuite {
     val stateDir = java.nio.file.Files.createTempDirectory("graft-dup").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-dup-ck").toString
     val fp = graft.operators.TextAnalysis.docFingerprint(col("text"))
-    val q = EventStream.maintainDupRateState(
-      src.toDS().toDF("doc_id", "text", "source"), "source", fp,
-      stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("doc_id", "text", "source"), stateDir, ckpt,
+      Monitoring.dupRateCensus, b => Monitoring.dupRateState(b, "source", fp))
     // the cross-source duplicate pair (docs 1 and 4) is SPLIT across
     // batches — the case a per-batch census gets wrong
     val all = Seq(
@@ -515,7 +520,7 @@ class StreamingSpec extends AnyFunSuite {
         .orderBy($"source").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSeq
-    val maintained = report(EventStream.readDupRateState(spark, stateDir))
+    val maintained = report(dupRates(stateDir))
     val recomputed = report(graft.operators.Monitoring.dupRateState(
       all.toDF("doc_id", "text", "source"), "source", fp))
     assert(maintained == recomputed)
@@ -523,7 +528,7 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch: identical (__batch_id, source, fp, n) rows fold once
     val existing = spark.read.parquet(stateDir)
     existing.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(report(EventStream.readDupRateState(spark, stateDir)) == recomputed)
+    assert(report(dupRates(stateDir)) == recomputed)
   }
 
   test("maintainTransitionState: streamed matrix equals batch recompute; replays dedup") {
@@ -571,9 +576,9 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[(String, Double, Int)]
     val stateDir = java.nio.file.Files.createTempDirectory("graft-auc").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-auc-ck").toString
-    val q = EventStream.maintainAucState(
-      src.toDS().toDF("grp", "score", "pos"), "grp", "score", $"pos" === 1,
-      stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("grp", "score", "pos"), stateDir, ckpt, Eval.aucCensus,
+      b => Eval.aucHistogram(b, "grp", "score", $"pos" === 1))
     // group t's tied positive/negative pair is SPLIT across batches — the
     // tie correction only a folded histogram gets right.
     val all = Seq(
@@ -587,7 +592,8 @@ class StreamingSpec extends AnyFunSuite {
       df.orderBy($"grp").collect()
         .map(r => (r.getString(0), r.getAs[Long]("n_pos"),
           r.getAs[Long]("n_neg"), r.getAs[Long]("auc_ppm"))).toSeq
-    val maintained = report(EventStream.readAucState(spark, stateDir))
+    val maintained = report(Eval.aucFromHistogram(
+      EventStream.readCensusState(spark, stateDir, Eval.aucCensus)))
     val recomputed = report(graft.operators.Eval.aucByGroup(
       all.toDF("grp", "score", "pos"), "grp", "score", $"pos" === 1))
     assert(maintained == recomputed)
@@ -595,7 +601,8 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch: identical (__batch_id, grp, score_milli) cells fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(report(EventStream.readAucState(spark, stateDir)) == recomputed)
+    assert(report(Eval.aucFromHistogram(
+      EventStream.readCensusState(spark, stateDir, Eval.aucCensus))) == recomputed)
   }
 
   test("maintainCountState: streamed volume monitors equal batch recompute; replays dedup") {
@@ -604,9 +611,10 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[(String, String)]
     val stateDir = java.nio.file.Files.createTempDirectory("graft-cnt").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-cnt-ck").toString
-    val q = EventStream.maintainCountState(
-      src.toDS().toDF("event_type", "d"), Seq("event_type"), $"d",
-      stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("event_type", "d"), stateDir, ckpt,
+      Monitoring.countCensus(Seq("event_type")),
+      b => Monitoring.countState(b, Seq("event_type"), $"d"))
     // (a, d2) is SPLIT across batches — its count must ADD across the
     // fold (3 = 2 + 1), the property that makes the state a monoid and
     // not a latest-wins snapshot. Group a's d3 spike (6 events vs med 3)
@@ -625,8 +633,10 @@ class StreamingSpec extends AnyFunSuite {
     val batchDf = all.toDF("event_type", "d")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"event_type", $"day").collect().map(_.toSeq).toSeq
+    def counts() = EventStream.readCensusState(spark, stateDir,
+      Monitoring.countCensus(Seq("event_type")))
     val anomalyMaintained = rows(
-      EventStream.readCountAnomaly(spark, stateDir, Seq("event_type")))
+      Monitoring.countAnomalyFromCounts(counts(), Seq("event_type")))
     assert(anomalyMaintained == rows(
       graft.operators.Monitoring.countAnomaly(batchDf, Seq("event_type"), $"d")))
     // the split (a, d2) group folded to 3; the d3 spike flags
@@ -635,13 +645,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(anomalyMaintained.exists(r =>
       r(0) == "a" && r(1) == "d3" && r.last == 1))
     val driftMaintained = rows(
-      EventStream.readCountDrift(spark, stateDir, Seq("event_type")))
+      Monitoring.countDriftFromCounts(counts(), Seq("event_type")))
     assert(driftMaintained == rows(
       graft.operators.Monitoring.countDrift(batchDf, Seq("event_type"), $"d")))
     // replayed batch: identical (__batch_id, dims, day, n) rows fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(rows(EventStream.readCountAnomaly(spark, stateDir, Seq("event_type"))) ==
+    assert(rows(Monitoring.countAnomalyFromCounts(counts(), Seq("event_type"))) ==
       anomalyMaintained)
   }
 
@@ -659,8 +669,9 @@ class StreamingSpec extends AnyFunSuite {
       val src = MemoryStream[Double]
       val stateDir = java.nio.file.Files.createTempDirectory(s"graft-psi-$tag").toString
       val ckpt = java.nio.file.Files.createTempDirectory(s"graft-psi-$tag-ck").toString
-      val q = EventStream.maintainPsiState(
-        src.toDS().toDF("v"), "v", cuts, stateDir, ckpt)
+      val q = EventStream.maintainCensusState(
+        src.toDS().toDF("v"), stateDir, ckpt, Monitoring.psiCensus,
+        b => Monitoring.psiBucketState(b, "v", cuts))
       try {
         // split mid-bucket so at least one bucket's count must ADD
         // across the fold rather than arrive whole in one batch
@@ -673,7 +684,9 @@ class StreamingSpec extends AnyFunSuite {
     val rDir = maintain(rightVals, "r")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"bucket").collect().map(_.toSeq).toSeq
-    val maintained = rows(EventStream.readPsiDrift(spark, lDir, rDir))
+    val maintained = rows(Monitoring.psiFromStates(
+      EventStream.readCensusState(spark, lDir, Monitoring.psiCensus),
+      EventStream.readCensusState(spark, rDir, Monitoring.psiCensus)))
     // Same pinned cuts + same data => bit-identical to the batch sketch
     // variant (which re-fits cuts from the same left side at the same
     // accuracy).
@@ -687,7 +700,9 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch: identical (__batch_id, bucket, n) rows fold once
     val st = spark.read.parquet(rDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(rDir)
-    assert(rows(EventStream.readPsiDrift(spark, lDir, rDir)) == maintained)
+    assert(rows(Monitoring.psiFromStates(
+      EventStream.readCensusState(spark, lDir, Monitoring.psiCensus),
+      EventStream.readCensusState(spark, rDir, Monitoring.psiCensus))) == maintained)
   }
 
   test("maintainLangPurityState: streamed purity equals batch recompute; replays dedup") {
@@ -696,8 +711,9 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[(String, String)]
     val stateDir = java.nio.file.Files.createTempDirectory("graft-lp").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-lp-ck").toString
-    val q = EventStream.maintainLangPurityState(
-      src.toDS().toDF("source", "lang"), "source", "lang", stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("source", "lang"), stateDir, ckpt, Vocab.langPurityCensus,
+      b => Vocab.langPurityState(b, "source", "lang"))
     // (web, en) is SPLIT across batches — its count must ADD across the
     // fold (3 = 2 + 1), so the maintained entropy/top-share read a
     // genuine cross-batch census, not a latest-wins snapshot.
@@ -712,7 +728,8 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     def report(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"source").collect().map(_.toSeq).toSeq
-    val maintained = report(EventStream.readLangPurity(spark, stateDir))
+    val maintained = report(Vocab.langPurityFromCounts(
+      EventStream.readCensusState(spark, stateDir, Vocab.langPurityCensus)))
     val recomputed = report(graft.operators.Vocab.langPurity(
       all.toDF("source", "lang"), "source", "lang"))
     assert(maintained == recomputed)
@@ -724,7 +741,8 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch: identical (__batch_id, source, lang) cells fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(report(EventStream.readLangPurity(spark, stateDir)) == maintained)
+    assert(report(Vocab.langPurityFromCounts(
+      EventStream.readCensusState(spark, stateDir, Vocab.langPurityCensus))) == maintained)
   }
 
   test("maintainDivergenceState: streamed JS equals batch recompute under the pinned vocab; replays dedup") {
@@ -747,16 +765,17 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("doc_id", "source", "text")
     // the pinned model: vocab fit ONCE over the reference corpus
     val vocab = graft.operators.Vocab.vocabTopK(fullDf, "doc_id", "text", 4)
-    val q = EventStream.maintainDivergenceState(
-      src.toDS().toDF("source", "text"), "source", "text", vocab,
-      stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("source", "text"), stateDir, ckpt, Vocab.divergenceCensus,
+      b => Vocab.divergenceState(b, "source", "text", vocab))
     try {
       src.addData(all.take(3): _*); q.processAllAvailable()
       src.addData(all.drop(3): _*); q.processAllAvailable()
     } finally q.stop()
     def report(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"source_a", $"source_b").collect().map(_.toSeq).toSeq
-    val maintained = report(EventStream.readSourceDivergence(spark, stateDir))
+    val maintained = report(Vocab.sourceDivergenceFromCounts(
+      EventStream.readCensusState(spark, stateDir, Vocab.divergenceCensus)))
     // same pinned vocab + same data => equal to the one-shot batch
     // operator (which fits its vocab from the same full corpus at k=4)
     val recomputed = report(graft.operators.Vocab.sourceDivergence(
@@ -770,7 +789,8 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch: identical (__batch_id, source, bucket) cells fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(report(EventStream.readSourceDivergence(spark, stateDir)) == maintained)
+    assert(report(Vocab.sourceDivergenceFromCounts(
+      EventStream.readCensusState(spark, stateDir, Vocab.divergenceCensus))) == maintained)
   }
 
   test("maintainC4RateState: streamed C4 pass rate equals batch recompute; replays dedup") {
@@ -780,8 +800,9 @@ class StreamingSpec extends AnyFunSuite {
     val stateDir = java.nio.file.Files.createTempDirectory("graft-c4r").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-c4r-ck").toString
     val passPage = (1 to 5).map(i => s"good sentence number $i.").mkString("\n")
-    val q = EventStream.maintainC4RateState(
-      src.toDS().toDF("source", "text"), "source", "text", stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("source", "text"), stateDir, ckpt,
+      TextAnalysis.passRateCensus, b => TextAnalysis.c4RateState(b, "source", "text"))
     // web's pass/fail docs SPLIT across batches -> rate must fold 1/2
     val all = Seq(
       ("web", passPage),
@@ -794,7 +815,8 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     def report(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"source").collect().map(_.toSeq).toSeq
-    val maintained = report(EventStream.readC4Rate(spark, stateDir))
+    val maintained = report(TextAnalysis.c4RateFromCounts(
+      EventStream.readCensusState(spark, stateDir, TextAnalysis.passRateCensus)))
     val recomputed = report(graft.operators.TextAnalysis.c4Rate(
       all.toDF("source", "text"), "source", "text"))
     assert(maintained == recomputed)
@@ -803,7 +825,8 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch: identical (__batch_id, source) cells fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(report(EventStream.readC4Rate(spark, stateDir)) == maintained)
+    assert(report(TextAnalysis.c4RateFromCounts(
+      EventStream.readCensusState(spark, stateDir, TextAnalysis.passRateCensus))) == maintained)
   }
 
   test("maintainSilhouetteState: streamed cluster quality equals batch recompute under pinned centroids; replays dedup") {
@@ -821,16 +844,18 @@ class StreamingSpec extends AnyFunSuite {
       (100L, Array(0.0f, 1.0f))) ++ Seq(
       (2L, Array(1.0f, 0.0f)), (200L, Array(1.0f, 1.0f)),
       (101L, Array(0.0f, 1.0f)))
-    val q = EventStream.maintainSilhouetteState(
-      src.toDS().toDF("vec_id", "embedding"), cents, "vec_id", "embedding",
-      stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("vec_id", "embedding"), stateDir, ckpt,
+      Similarity.silhouetteCensus,
+      b => Similarity.silhouetteState(b, cents, "vec_id", "embedding"))
     try {
       src.addData(all.take(3): _*); q.processAllAvailable()
       src.addData(all.drop(3): _*); q.processAllAvailable()
     } finally q.stop()
     def report(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"cell").collect().map(_.toSeq).toSeq
-    val maintained = report(EventStream.readSilhouette(spark, stateDir))
+    val maintained = report(Similarity.silhouetteFromCounts(
+      EventStream.readCensusState(spark, stateDir, Similarity.silhouetteCensus)))
     val recomputed = report(graft.operators.Similarity.clusterSilhouette(
       all.toDF("vec_id", "embedding"), centroids = cents))
     assert(maintained == recomputed)
@@ -840,7 +865,8 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch: identical (__batch_id, cell) census rows fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(report(EventStream.readSilhouette(spark, stateDir)) == maintained)
+    assert(report(Similarity.silhouetteFromCounts(
+      EventStream.readCensusState(spark, stateDir, Similarity.silhouetteCensus))) == maintained)
   }
 
   test("maintainPiiRateState: streamed leak rates equal batch recompute; replays dedup") {
@@ -849,8 +875,9 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[(String, String)]
     val stateDir = java.nio.file.Files.createTempDirectory("graft-pii").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-pii-ck").toString
-    val q = EventStream.maintainPiiRateState(
-      src.toDS().toDF("source", "text"), "source", "text", stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("source", "text"), stateDir, ckpt,
+      TextAnalysis.piiRateCensus, b => TextAnalysis.piiRateState(b, "source", "text"))
     // web's dirty docs are SPLIT across batches (1 + 1) — n_dirty must
     // ADD across the fold for the rate to read 2/3.
     val all = Seq(
@@ -865,7 +892,8 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     def report(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"source").collect().map(_.toSeq).toSeq
-    val maintained = report(EventStream.readPiiRate(spark, stateDir))
+    val maintained = report(TextAnalysis.piiRateFromCounts(
+      EventStream.readCensusState(spark, stateDir, TextAnalysis.piiRateCensus)))
     val recomputed = report(graft.operators.TextAnalysis.piiRate(
       all.toDF("source", "text"), "source", "text"))
     assert(maintained == recomputed)
@@ -878,11 +906,12 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch: identical (__batch_id, source) cells fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(report(EventStream.readPiiRate(spark, stateDir)) == maintained)
+    assert(report(TextAnalysis.piiRateFromCounts(
+      EventStream.readCensusState(spark, stateDir, TextAnalysis.piiRateCensus))) == maintained)
     // the monitor read is compaction-invariant: rewrite the fold, same report
-    EventStream.compactCensusState(spark, stateDir, Seq("source"),
-      Seq("n_docs", "n_emails", "n_phones", "n_dirty"))
-    assert(report(EventStream.readPiiRate(spark, stateDir)) == maintained)
+    EventStream.compactCensusState(spark, stateDir, TextAnalysis.piiRateCensus)
+    assert(report(TextAnalysis.piiRateFromCounts(
+      EventStream.readCensusState(spark, stateDir, TextAnalysis.piiRateCensus))) == maintained)
   }
 
   test("compactCensusState: fold invariant under compaction, pre-compaction replays, and new deltas") {
@@ -892,9 +921,9 @@ class StreamingSpec extends AnyFunSuite {
     val stateDir = java.nio.file.Files.createTempDirectory("graft-compact").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-compact-ck").toString
     val fp = graft.operators.TextAnalysis.docFingerprint(col("text"))
-    val q = EventStream.maintainDupRateState(
-      src.toDS().toDF("doc_id", "text", "source"), "source", fp,
-      stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("doc_id", "text", "source"), stateDir, ckpt,
+      Monitoring.dupRateCensus, b => Monitoring.dupRateState(b, "source", fp))
     // (7, "other a", "a") repeats batch 0's (a, fp) cell in batch 2, so
     // the fold genuinely MERGES delta rows — compaction must shrink the
     // stored row count, not merely rewrite it
@@ -911,14 +940,13 @@ class StreamingSpec extends AnyFunSuite {
       graft.operators.Monitoring.dupRateFromState(state)
         .orderBy($"source").collect().map(_.toSeq).toSeq
     def stateRows() = spark.read.option("mergeSchema", "true").parquet(stateDir)
-    val keys = Seq("source", "fp"); val vals = Seq("n")
-    val before = report(EventStream.readDupRateState(spark, stateDir))
+    val before = report(dupRates(stateDir))
     val preCompactScan = stateRows().count()
 
     // fold-after ≡ fold-before; W = highest batch id folded (ids 0..2)
-    val w = EventStream.compactCensusState(spark, stateDir, keys, vals)
+    val w = EventStream.compactCensusState(spark, stateDir, Monitoring.dupRateCensus)
     assert(w == 2L)
-    assert(report(EventStream.readDupRateState(spark, stateDir)) == before)
+    assert(report(dupRates(stateDir)) == before)
     // the scan actually shrank to one summary batch of census rows
     assert(stateRows().count() < preCompactScan)
     assert(stateRows().select("__batch_id").distinct().count() == 1)
@@ -930,7 +958,7 @@ class StreamingSpec extends AnyFunSuite {
         Seq(all(0), all(1)).toDF("doc_id", "text", "source"), "source", fp)
       .withColumn("__batch_id", lit(0L))
       .write.mode("append").parquet(stateDir)
-    assert(report(EventStream.readDupRateState(spark, stateDir)) == before)
+    assert(report(dupRates(stateDir)) == before)
 
     // a FRESH post-compaction batch (monotonic id W+1) folds on top
     val extra = Seq((6L, "same text", "a"))
@@ -940,12 +968,12 @@ class StreamingSpec extends AnyFunSuite {
       .write.mode("append").parquet(stateDir)
     val recomputedAll = report(graft.operators.Monitoring.dupRateState(
       (all ++ extra).toDF("doc_id", "text", "source"), "source", fp))
-    assert(report(EventStream.readDupRateState(spark, stateDir)) == recomputedAll)
+    assert(report(dupRates(stateDir)) == recomputedAll)
 
     // compaction composes: summary + newer delta fold into a higher-W summary
-    val w2 = EventStream.compactCensusState(spark, stateDir, keys, vals)
+    val w2 = EventStream.compactCensusState(spark, stateDir, Monitoring.dupRateCensus)
     assert(w2 == w + 1)
-    assert(report(EventStream.readDupRateState(spark, stateDir)) == recomputedAll)
+    assert(report(dupRates(stateDir)) == recomputedAll)
     assert(stateRows().select("__batch_id").distinct().count() == 1)
   }
 
@@ -956,21 +984,20 @@ class StreamingSpec extends AnyFunSuite {
     val stateDir = java.nio.file.Files.createTempDirectory("graft-autoc").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-autoc-ck").toString
     val fp = graft.operators.TextAnalysis.docFingerprint(col("text"))
-    val keys = Seq("source", "fp"); val vals = Seq("n")
     // everyBatches = 2: the policy must fire INSIDE the stream, twice
     // over four batches, with no maintenance owner in sight.
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("doc_id", "text", "source"), stateDir, ckpt,
+      Monitoring.dupRateCensus,
       b => graft.operators.Monitoring.dupRateState(b, "source", fp),
-      autoCompact = Some(EventStream.AutoCompact(keys, vals, everyBatches = 2)))
+      autoCompact = Some(EventStream.AutoCompact(everyBatches = 2)))
     val batches = Seq(
       Seq((1L, "same text", "a"), (2L, "other a", "a")),
       Seq((3L, "only b", "b"), (4L, "same text", "b")),
       Seq((5L, "more b", "b"), (6L, "same text", "a")),
       Seq((7L, "other a", "a")))
     def report() =
-      graft.operators.Monitoring.dupRateFromState(
-          EventStream.readDupRateState(spark, stateDir))
+      graft.operators.Monitoring.dupRateFromState(dupRates(stateDir))
         .orderBy($"source").collect().map(_.toSeq).toSeq
     def recompute(upTo: Int) =
       graft.operators.Monitoring.dupRateFromState(
@@ -1009,25 +1036,25 @@ class StreamingSpec extends AnyFunSuite {
   test("compactCensusState: append-first summary is read-correct with no directory swap; re-compaction without new deltas is a no-op") {
     // Build a small uncompacted directory by hand (batch-stamped deltas)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-appf").toString
-    val keys = Seq("k"); val vals = Seq("n")
+    val census = Census(Seq("k"), Seq("n"))
     Seq(("a", 1L), ("b", 2L)).toDF("k", "n")
       .withColumn("__batch_id", lit(0L)).write.mode("append").parquet(stateDir)
     Seq(("a", 3L)).toDF("k", "n")
       .withColumn("__batch_id", lit(1L)).write.mode("append").parquet(stateDir)
-    def fold() = EventStream.readCensusState(spark, stateDir, keys, vals)
+    def fold() = EventStream.readCensusState(spark, stateDir, census)
       .orderBy($"k").collect().map(_.toSeq).toSeq
     val before = fold()
     // gc=false: the summary is appended but superseded deltas remain —
     // the read must ALREADY be correct (the summary wins by stamp), so
     // a reader racing the later gc step never sees a gap
-    val w = EventStream.compactCensusState(spark, stateDir, keys, vals, gc = false)
+    val w = EventStream.compactCensusState(spark, stateDir, census, gc = false)
     assert(w == 1L)
     assert(fold() == before)
     val nFilesPreGc = new java.io.File(stateDir).listFiles
       .count(_.getName.endsWith(".parquet"))
     assert(nFilesPreGc >= 3, "superseded deltas should still be present pre-gc")
     // second compaction with no new deltas: nothing new appended
-    val w2 = EventStream.compactCensusState(spark, stateDir, keys, vals, gc = false)
+    val w2 = EventStream.compactCensusState(spark, stateDir, census, gc = false)
     assert(w2 == 1L)
     assert(new java.io.File(stateDir).listFiles
       .count(_.getName.endsWith(".parquet")) == nFilesPreGc)
@@ -1052,16 +1079,16 @@ class StreamingSpec extends AnyFunSuite {
     // interleaving: a fresh delta lands BETWEEN the summary append and
     // the gc (exactly where a concurrent maintainer would put it).
     val stateDir = java.nio.file.Files.createTempDirectory("graft-race").toString
-    val keys = Seq("k"); val vals = Seq("n")
+    val census = Census(Seq("k"), Seq("n"))
     def delta(bid: Long, rows: (String, Long)*): Unit =
       rows.toSeq.toDF("k", "n").withColumn("__batch_id", lit(bid))
         .write.mode("append").parquet(stateDir)
-    def fold() = EventStream.readCensusState(spark, stateDir, keys, vals)
+    def fold() = EventStream.readCensusState(spark, stateDir, census)
       .orderBy($"k").collect().map(_.toSeq).toSeq
     delta(0L, "a" -> 1L, "b" -> 2L)
     delta(1L, "a" -> 3L)
     // summary appended (W=1), superseded deltas still on disk...
-    assert(EventStream.compactCensusState(spark, stateDir, keys, vals,
+    assert(EventStream.compactCensusState(spark, stateDir, census,
       gc = false) == 1L)
     // ...and the racing append (monotonic id 2) lands before the gc
     delta(2L, "b" -> 5L, "c" -> 7L)
@@ -1074,7 +1101,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(fold() == Seq(Seq("a", 4L), Seq("b", 7L), Seq("c", 7L)))
     assert(new java.io.File(stateDir).listFiles.forall(!_.isDirectory))
     // the next compaction folds the racer into a higher-W summary
-    assert(EventStream.compactCensusState(spark, stateDir, keys, vals) == 2L)
+    assert(EventStream.compactCensusState(spark, stateDir, census) == 2L)
     assert(fold() == Seq(Seq("a", 4L), Seq("b", 7L), Seq("c", 7L)))
   }
 
@@ -1095,16 +1122,17 @@ class StreamingSpec extends AnyFunSuite {
     val fullDf = all.toDF("source", "text")
     // pinned model: prices fit ONCE over the reference corpus
     val (uniP, biP) = graft.operators.Vocab.doremiPrices(fullDf, "text")
-    val q = EventStream.maintainDoremiState(
-      src.toDS().toDF("source", "text"), "source", "text", uniP, biP,
-      stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("source", "text"), stateDir, ckpt, Vocab.doremiCensus,
+      b => Vocab.doremiLmState(b, "source", "text", uniP, biP))
     try {
       src.addData(all.take(2): _*); q.processAllAvailable()
       src.addData(all.drop(2): _*); q.processAllAvailable()
     } finally q.stop()
     def report(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"domain").collect().map(_.toSeq).toSeq
-    val maintained = report(EventStream.readDoremiWeights(spark, stateDir))
+    val maintained = report(Vocab.doremiFromCensus(
+      EventStream.readCensusState(spark, stateDir, Vocab.doremiCensus)))
     // same pinned prices + same data => equal to the one-shot operator
     // (whose internal fit runs over the same full corpus)
     val recomputed = report(graft.operators.Vocab.doremiWeights(
@@ -1117,7 +1145,8 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch: identical (__batch_id, domain) census rows fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(report(EventStream.readDoremiWeights(spark, stateDir)) == maintained)
+    assert(report(Vocab.doremiFromCensus(
+      EventStream.readCensusState(spark, stateDir, Vocab.doremiCensus))) == maintained)
   }
 
   test("maintainGopherRateState: streamed pass rate equals batch recompute; replays dedup") {
@@ -1127,9 +1156,10 @@ class StreamingSpec extends AnyFunSuite {
     val stateDir = java.nio.file.Files.createTempDirectory("graft-gr").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-gr-ck").toString
     val stops = Seq("the", "a")
-    val q = EventStream.maintainGopherRateState(
-      src.toDS().toDF("source", "text"), "source", "text", stops,
-      stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("source", "text"), stateDir, ckpt,
+      TextAnalysis.passRateCensus,
+      b => TextAnalysis.gopherRateState(b, "source", "text", stops))
     // One passing doc (50+ alpha words incl. both stops), one failing
     // (too short). "web" is SPLIT across batches — its counts must ADD
     // (2 docs, 1 pass) across the fold, not latest-wins.
@@ -1143,7 +1173,8 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     def report(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"source").collect().map(_.toSeq).toSeq
-    val maintained = report(EventStream.readGopherRate(spark, stateDir))
+    val maintained = report(TextAnalysis.gopherRateFromCounts(
+      EventStream.readCensusState(spark, stateDir, TextAnalysis.passRateCensus)))
     val recomputed = report(graft.operators.TextAnalysis.gopherRate(
       all.toDF("source", "text"), "source", "text", stops))
     assert(maintained == recomputed)
@@ -1152,7 +1183,8 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch: identical (__batch_id, source) cells fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(report(EventStream.readGopherRate(spark, stateDir)) == maintained)
+    assert(report(TextAnalysis.gopherRateFromCounts(
+      EventStream.readCensusState(spark, stateDir, TextAnalysis.passRateCensus))) == maintained)
   }
 
   test("maintainAssocState: streamed chi2/V equals batch recompute; replays dedup") {
@@ -1161,8 +1193,9 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[(String, String)]
     val stateDir = java.nio.file.Files.createTempDirectory("graft-assoc").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-assoc-ck").toString
-    val q = EventStream.maintainAssocState(
-      src.toDS().toDF("source", "lang"), "source", "lang", stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("source", "lang"), stateDir, ckpt, Eval.assocCensus,
+      b => Eval.assocState(b, "source", "lang"))
     // (web, en) is SPLIT across batches — its observed count must ADD
     // across the fold (3 = 2 + 1) before margins/expected are derived;
     // (wiki, fr) is a zero cell only the densified grid sees.
@@ -1178,19 +1211,22 @@ class StreamingSpec extends AnyFunSuite {
     def cells(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"a", $"b").collect().map(_.toSeq).toSeq
     val corpus = all.toDF("source", "lang")
-    val maintained = cells(EventStream.readChiSquareCells(spark, stateDir))
+    val maintained = cells(Eval.chiSquareCellsFromCounts(
+      EventStream.readCensusState(spark, stateDir, Eval.assocCensus)))
     assert(maintained ==
       cells(graft.operators.Eval.chiSquareCells(corpus, "source", "lang")))
     // zero cell present in the densified grid
     assert(maintained.exists(r => r(0) == "wiki" && r(1) == "fr" &&
       r(2) == 0L))
-    val v = EventStream.readCramersV(spark, stateDir).collect().map(_.toSeq).toSeq
+    val v = Eval.cramersVFromCounts(
+      EventStream.readCensusState(spark, stateDir, Eval.assocCensus)).collect().map(_.toSeq).toSeq
     assert(v == graft.operators.Eval.cramersV(corpus, "source", "lang")
       .collect().map(_.toSeq).toSeq)
     // replayed batch: identical (__batch_id, a, b) cells fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(cells(EventStream.readChiSquareCells(spark, stateDir)) == maintained)
+    assert(cells(Eval.chiSquareCellsFromCounts(
+      EventStream.readCensusState(spark, stateDir, Eval.assocCensus))) == maintained)
   }
 
   test("maintainHhiState: streamed concentration equals batch recompute; replays dedup") {
@@ -1199,8 +1235,9 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[(String, String)]
     val stateDir = java.nio.file.Files.createTempDirectory("graft-hhi").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-hhi-ck").toString
-    val q = EventStream.maintainHhiState(
-      src.toDS().toDF("lang", "source"), "lang", "source", stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("lang", "source"), stateDir, ckpt, Eval.hhiCensus,
+      b => Eval.hhiState(b, "lang", "source"))
     // (en, web) is SPLIT across batches: its share must fold to 3/4
     // (HHI = (3² + 1²)/4² = 625000 ppm), not a per-batch snapshot.
     val all = Seq(
@@ -1212,14 +1249,16 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"grp").collect().map(_.toSeq).toSeq
-    val maintained = rows(EventStream.readHhi(spark, stateDir))
+    val maintained = rows(Eval.hhiFromCounts(
+      EventStream.readCensusState(spark, stateDir, Eval.hhiCensus)))
     assert(maintained == rows(graft.operators.Eval.hhiConcentration(
       all.toDF("lang", "source"), "lang", "source")))
     assert(maintained.exists(r => r(0) == "en" && r(3) == 625000L))
     assert(maintained.exists(r => r(0) == "fr" && r(3) == 1000000L))
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(rows(EventStream.readHhi(spark, stateDir)) == maintained)
+    assert(rows(Eval.hhiFromCounts(
+      EventStream.readCensusState(spark, stateDir, Eval.hhiCensus))) == maintained)
   }
 
   test("maintainKsState: streamed KS drift equals batch recompute; replays dedup") {
@@ -1228,8 +1267,9 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[(String, Double)]
     val stateDir = java.nio.file.Files.createTempDirectory("graft-ks").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ks-ck").toString
-    val q = EventStream.maintainKsState(
-      src.toDS().toDF("grp", "v"), "grp", "v", stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("grp", "v"), stateDir, ckpt, Eval.ksCensus,
+      b => Eval.ksState(b, "grp", "v"))
     // (base, 1.0) mass is SPLIT across batches: the baseline CDF at
     // v_milli=1000 must fold both counts or the sup distance shifts.
     val all = Seq(
@@ -1243,14 +1283,16 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"grp").collect().map(_.toSeq).toSeq
-    val maintained = rows(EventStream.readKsDrift(spark, stateDir, "base"))
+    val maintained = rows(Eval.ksFromCounts(
+      EventStream.readCensusState(spark, stateDir, Eval.ksCensus), "base"))
     assert(maintained == rows(graft.operators.Eval.ksAgainstBaseline(
       all.toDF("grp", "v"), "grp", "v", "base")))
     // cand CDF(3.0) = 1/4 vs base 4/5 → sup = |1·5 − 4·4|·1e6/20 = 550000
     assert(maintained == Seq(Seq("cand", 4L, 5L, 550000L)))
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(rows(EventStream.readKsDrift(spark, stateDir, "base")) == maintained)
+    assert(rows(Eval.ksFromCounts(
+      EventStream.readCensusState(spark, stateDir, Eval.ksCensus), "base")) == maintained)
   }
 
   test("maintainFertilityState: streamed tokenizer-efficiency equals batch recompute; replays dedup") {
@@ -1259,9 +1301,9 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[(String, String, String)]
     val stateDir = java.nio.file.Files.createTempDirectory("graft-fert").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-fert-ck").toString
-    val q = EventStream.maintainFertilityState(
-      src.toDS().toDF("source", "lang", "text"), "text", "source", "lang",
-      stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("source", "lang", "text"), stateDir, ckpt,
+      Vocab.fertilityCensus, b => Vocab.fertilityState(b, "text", "source", "lang"))
     // (a, en) token/char mass is SPLIT across batches: chars-per-token
     // must fold 4 chars / 3 ws tokens = 1333, not a per-batch snapshot.
     val all = Seq(
@@ -1273,13 +1315,15 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"source", $"lang").collect().map(_.toSeq).toSeq
-    val maintained = rows(EventStream.readFertility(spark, stateDir))
+    val maintained = rows(Vocab.fertilityFromCounts(
+      EventStream.readCensusState(spark, stateDir, Vocab.fertilityCensus)))
     assert(maintained == rows(graft.operators.Vocab.tokenFertility(
       all.toDF("source", "lang", "text"), "text", "source", "lang")))
     assert(maintained.exists(r => r(0) == "a" && r(6) == 1333L))
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(rows(EventStream.readFertility(spark, stateDir)) == maintained)
+    assert(rows(Vocab.fertilityFromCounts(
+      EventStream.readCensusState(spark, stateDir, Vocab.fertilityCensus))) == maintained)
   }
 
   test("maintainDsirCensus: scoring off the folded model equals the one-pass fit; replays dedup") {
@@ -1288,9 +1332,9 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[(Long, String)]
     val stateDir = java.nio.file.Files.createTempDirectory("graft-dsir").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-dsir-ck").toString
-    val q = EventStream.maintainDsirCensus(
-      src.toDS().toDF("doc_id", "text"), "doc_id", "text",
-      isTarget = $"doc_id" % 7 === 0, stateDir, ckpt)
+    val q = EventStream.maintainCensusState(
+      src.toDS().toDF("doc_id", "text"), stateDir, ckpt, Vocab.dsirModelCensus,
+      b => Vocab.dsirCensus(b, "doc_id", "text", isTarget = $"doc_id" % 7 === 0))
     // target bucket mass is SPLIT across batches (doc 0 in batch 1,
     // doc 7 in batch 2): the folded model's add-1 prices must see the
     // cross-batch totals, not a snapshot.
@@ -1304,16 +1348,16 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = all.toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"doc_id").collect().map(_.toSeq).toSeq
-    val maintained = rows(EventStream.readDsirWeights(spark, stateDir,
-      corpus, "doc_id", "text"))
+    val maintained = rows(Vocab.dsirWeightsFromCensus(corpus, "doc_id", "text",
+      EventStream.readCensusState(spark, stateDir, Vocab.dsirModelCensus)))
     val recomputed = rows(graft.operators.Vocab.dsirWeights(corpus,
       "doc_id", "text", isTarget = $"doc_id" % 7 === 0))
     assert(maintained == recomputed)
     // replayed batch: identical (__batch_id, bucket) cells fold once
     val st = spark.read.parquet(stateDir)
     st.filter($"__batch_id" === 0L).write.mode("append").parquet(stateDir)
-    assert(rows(EventStream.readDsirWeights(spark, stateDir,
-      corpus, "doc_id", "text")) == maintained)
+    assert(rows(Vocab.dsirWeightsFromCensus(corpus, "doc_id", "text",
+      EventStream.readCensusState(spark, stateDir, Vocab.dsirModelCensus))) == maintained)
   }
 
   test("maintainNoveltyState: streamed census equals batch novelty and overlap") {

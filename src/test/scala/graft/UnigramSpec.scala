@@ -114,64 +114,6 @@ class UnigramSpec extends AnyFunSuite {
     Unigram.invalidateAll(spark)
   }
 
-  test("UnigramExpectExpr: hand-computed forward-backward posteriors, micro-quantized; UNK floor covers; empty token yields empty") {
-    import graft.functions.UnigramExpectExpr
-    val microA = math.round(StrictMath.log(0.25) * 1e6)
-    val microAb = math.round(StrictMath.log(0.5) * 1e6)
-    val mm = m("a" -> microA, "b" -> microA, "ab" -> microAb)
-    // word "ab": two paths — a·b (pa·pb) and ab (pab); posteriors by hand
-    val pa = StrictMath.exp(microA / 1e6)
-    val pab = StrictMath.exp(microAb / 1e6)
-    val z = pa * pa + pab
-    def got(w: String): Map[String, Long] =
-      Seq(w).toDF("t")
-        .select(explode(UnigramExpectExpr.expect($"t", mm)).as("x"))
-        .select($"x.piece", $"x.emicro").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val ab = got("ab")
-    assert(ab("a") == math.round(pa * pa / z * 1e6))
-    assert(ab("b") == math.round(pa * pa / z * 1e6))
-    assert(ab("ab") == math.round(pab / z * 1e6))
-    // an unknown single prices at the UNK floor, so "xb" still covers
-    // (posteriors sum to 1 per boundary-crossing family: x and b certain)
-    val xb = got("xb")
-    assert(xb("x") == 1000000L && xb("b") == 1000000L)
-    // empty token → empty expectation array (split parity with segment)
-    assert(got("").isEmpty)
-  }
-
-  test("soft-EM fit: partition-order-free determinism (micro-quantized expectations), shared prune schedule, distinct memo key") {
-    val docs = Tables.load(spark, TestSpark.Sf0001, "documents").limit(100)
-    val a = Unigram.fit(docs, "text", vocabSize = 50, rounds = 2,
-      maxPieceLen = 4, seedSize = 500, softEm = true)
-    // identical across physical layouts: quantization happens per
-    // (word, piece) BEFORE the aggregation, so partitioning can't
-    // reorder any float sum
-    val b = Unigram.fit(docs.repartition(7), "text", vocabSize = 50,
-      rounds = 2, maxPieceLen = 4, seedSize = 500, softEm = true)
-    assert(a.pieces.toSeq == b.pieces.toSeq)
-    assert(a.scoresMicro.toSeq == b.scoresMicro.toSeq)
-    // same vocab-size contract as hard mode; singles coverage holds
-    val hard = Unigram.fit(docs, "text", vocabSize = 50, rounds = 2,
-      maxPieceLen = 4, seedSize = 500)
-    assert(a.pieces.length == hard.pieces.length)
-    val singles = hard.pieces.filter(Unigram.isSingle).toSet
-    assert(a.pieces.filter(Unigram.isSingle).toSet == singles)
-    // the encoder runs under the soft model (coverage never regresses)
-    val seg = UnigramSegmentExpr.segmentPieces("theword", a)
-    assert(seg.nonEmpty && seg.mkString == "theword")
-    // memo: soft and hard are DIFFERENT keys — no collision either way
-    Unigram.invalidateAll(spark)
-    val mh = Unigram.fitMemo(docs, "em-spec", "text", vocabSize = 50,
-      rounds = 2, maxPieceLen = 4, seedSize = 500)
-    val ms = Unigram.fitMemo(docs, "em-spec", "text", vocabSize = 50,
-      rounds = 2, maxPieceLen = 4, seedSize = 500, softEm = true)
-    assert(!(ms eq mh))
-    assert(ms.scoresMicro.toSeq == a.scoresMicro.toSeq)
-    assert(mh.scoresMicro.toSeq == hard.scoresMicro.toSeq)
-    Unigram.invalidateAll(spark)
-  }
-
   test("tokenizerFertility: unigram lane totals equal the per-doc encode; null dims route around; ratios are exact floors") {
     val docs = Seq(
       (1L, "web", "en", "the cat sat on the mat"),
@@ -224,15 +166,16 @@ class UnigramSpec extends AnyFunSuite {
     val src = MemoryStream[(Long, String, String, String)]
     val stateDir = java.nio.file.Files.createTempDirectory("graft-tokf").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-tokf-ck").toString
-    val q = graft.streaming.EventStream.maintainTokenizerFertilityState(
-      src.toDS().toDF("doc_id", "source", "lang", "text"),
-      "text", "source", "lang", model, stateDir, ckpt)
+    val q = graft.streaming.EventStream.maintainCensusState(
+      src.toDS().toDF("doc_id", "source", "lang", "text"), stateDir, ckpt,
+      Unigram.tokenizerFertilityCensus,
+      b => Unigram.fertilityCensus(b, "text", "source", "lang", model))
     try {
       src.addData(all.take(2): _*); q.processAllAvailable()
       src.addData(all.drop(2): _*); q.processAllAvailable()
     } finally q.stop()
-    val maintained = graft.streaming.EventStream
-      .readTokenizerFertility(spark, stateDir)
+    val maintained = Unigram.fertilityFromCensus(graft.streaming.EventStream
+        .readCensusState(spark, stateDir, Unigram.tokenizerFertilityCensus))
       .orderBy($"source", $"lang").collect().map(_.toSeq).toSeq
     val recomputed = Unigram.tokenizerFertility(
         all.toDF("doc_id", "source", "lang", "text"),

@@ -3,35 +3,29 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** A cross-query memo the suite shares: the build that fills it (timed
-    * as its own `_…_build` row), the queries that reuse it, and the hook
-    * that drops it. */
+    * as its own `_…_build` row) and the queries that reuse it. Every
+    * memo drops through [[SessionMemo.invalidateAll]]. */
   final case class SharedBuild(name: String, family: Set[String],
-                               build: (SparkSession, String) => Unit,
-                               invalidate: SparkSession => Unit)
+                               build: (SparkSession, String) => Unit)
 
   val sharedBuilds: Seq[SharedBuild] = Seq(
     SharedBuild("_neardup_pairs_build", Set("q_dedup_ngram_jaccard",
         "q_dedup_clusters", "q_dedup_canonical", "q_dedup_containment",
         "q_pagerank", "q_graph_degree", "q_dedup_threshold_curve"),
-      graft.queries.TextQueries.buildNearDupPairs,
-      graft.operators.NearDupPipeline.invalidateAll),
+      graft.queries.TextQueries.buildNearDupPairs),
     SharedBuild("_span_census_build", Set("q_span_dedup", "q_span_strike"),
-      graft.queries.TextQueries.buildSpanCensus,
-      graft.operators.SpanPipeline.invalidateAll),
+      graft.queries.TextQueries.buildSpanCensus),
     SharedBuild("_curation_chain_build", Set("q_curation_round", "q_curation_pack"),
-      graft.queries.TextQueries.buildCurationChain, CurationRound.invalidateAll),
+      graft.queries.TextQueries.buildCurationChain),
     SharedBuild("_unigram_fit_build", Set("q_unigram_vocab", "q_unigram_encode",
         "q_tokenizer_fertility"),
-      graft.queries.TextQueries.buildUnigramFit,
-      graft.operators.Unigram.invalidateAll),
+      graft.queries.TextQueries.buildUnigramFit),
     SharedBuild("_kmeans_fit_build", Set("q_ann_ivf_fit", "q_cluster_cap_sample",
         "q_silhouette"),
-      graft.queries.SimilarityQueries.buildKmeansFit,
-      graft.operators.Similarity.invalidateFitMemo))
-
-  /** Drop every shared memo `spark` owns — the pass-boundary hook. */
-  def invalidateMemos(spark: SparkSession): Unit =
-    sharedBuilds.foreach(_.invalidate(spark))
+      graft.queries.SimilarityQueries.buildKmeansFit),
+    SharedBuild("_metrics_table_build", Set("q_metrics_filter",
+        "q_discrepancy_lookup"),
+      (s, dir) => { graft.queries.CoreQueries.metricsTable(s, dir); () }))
 
   /** Median of the timed samples — robust to a single GC pause / JIT blip
     * in a way neither mean nor min is (min hides a genuinely bimodal
@@ -55,16 +49,10 @@ object Bench {
     // sample AFTER burning the warmup sweep.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     val spark = GraftSession.forMain()
-    // Optional comma-separated subset filter for targeted perf iteration,
-    // and an exclusion list (SPARK_GRAFT_SKIP) for large-sf runs: a few
-    // queries are QUADRATIC-BY-CONTRACT verify-scale baselines (exact
-    // brute-force/all-pairs truths whose scale-path twins are in the
-    // suite); excluded names are recorded in the JSON's "skipped" field
-    // so a selective bench is visible in the artifact, never silent.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").toSet).getOrElse(Set.empty[String])
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.contains(n)) && !skip.contains(n) }
+    // Skipped names are recorded in the JSON's "skipped" field so a
+    // selective bench is visible in the artifact, never silent.
+    val skip = SparkEntry.skipped
+    val selected = SparkEntry.selected
 
     // noop sink: fully materializes every output column (count() lets
     // Catalyst prune unreferenced projections, faking scan-heavy timings)
@@ -111,7 +99,7 @@ object Bench {
     val names = order.map(_._1).toSet
     val builds = sharedBuilds.filter(_.family.exists(names))
     def pass(): Map[String, Option[Double]] = {
-      invalidateMemos(spark)
+      SessionMemo.invalidateAll(spark)
       val buildResults = builds.map(b => b.name -> timed(b.name, () => b.build(spark, sfDir)))
       // A failed build contaminates its family THIS PASS: each family
       // query would silently rebuild the memo inside its own timing, so

@@ -103,108 +103,48 @@ object CurationRound {
     StructField("doc_retention", DoubleType, nullable = false),
     StructField("token_retention", DoubleType, nullable = false)))
 
-  /** Where a run's stage frames land between stages. */
-  private sealed trait Seams {
-    /** Materialize a stage frame; `compute` is skipped when the seam
-      * can serve the stage from storage (resume). */
-    def seam(stageName: String, compute: () => DataFrame): DataFrame
-    /** Frames [[Result.unpersist]] must release (cache seams only). */
-    def pinned: Seq[DataFrame]
-    /** One-row frames (the gate census) — storage seams persist these
-      * too so a resumed run skips even the corpus gate scan. */
-    def tinySeam(stageName: String, compute: () => DataFrame): DataFrame
-  }
-
-  /** The in-session default: localCheckpoint (cache + logical lineage
-    * cut), not plain persist — each stage's analyzed plan embeds every
+  /** Run the chain. `corpus` needs (idCol, strataCol, textCol);
+    * `bench` needs (idCol, textCol) — the benchmark suite
+    * decontamination protects.
+    *
+    * Each stage boundary is a localCheckpoint (cache + logical lineage
+    * cut), not a plain persist: each stage's analyzed plan embeds every
     * upstream stage's tree, and with the gate signal bundles inlined
     * the tree size compounds MULTIPLICATIVELY across six stages
     * (measured at sf0.01: analyzer cost alone took the chain to ~35 s
     * on a 739-row corpus; truncation returns it to data-proportional
-    * cost). Re-measured this round (guide §1.1): swapping the id-scale
-    * seams for LAZY persists — hoping to save their materialization
-    * jobs — took the sf0.1 build from 14 s to 20 s, because every
-    * downstream ACTION (the final-survivor write, the stats, each
-    * consumer) re-analyzes the untruncated trees; the eager
-    * checkpoints pay one small job each and keep planning O(stage).
-    * The price is recompute-on-executor-loss within the round. */
-  private final class CacheSeams extends Seams {
-    private var frames = List.empty[DataFrame]
-    def seam(stageName: String, compute: () => DataFrame): DataFrame = {
-      val f = compute().localCheckpoint()
-      frames = f :: frames
-      f
-    }
-    def tinySeam(stageName: String, compute: () => DataFrame): DataFrame =
-      compute()
-    def pinned: Seq[DataFrame] = frames.reverse
-  }
-
-  /** The production seam: every stage frame is a RELIABLE STAGING
-    * TABLE (parquet under `root/<stage>`), the shape a 100 TB run uses
-    * so stages survive executor AND driver loss. A stage directory
-    * already carrying a `_SUCCESS` marker is read instead of
-    * recomputed — re-running a failed chain RESUMES from the last
-    * completed stage (same seams, same semantics as the cache run;
-    * CurationRoundSpec proves frame-for-frame equality). Stale staging
-    * from an older corpus is the caller's contract to clear, exactly
-    * like the census-state and NearDupPipeline staleness rules. */
-  private final class StorageSeams(spark: SparkSession, root: String) extends Seams {
-    private def path(stageName: String) =
-      root.stripSuffix("/") + "/" + stageName
-    private def done(p: String): Boolean = {
-      val sp = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-      sp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sp)
-    }
-    def seam(stageName: String, compute: () => DataFrame): DataFrame = {
-      val p = path(stageName)
-      if (!done(p)) compute().write.mode("overwrite").parquet(p)
-      Tables.parquet(spark, p)
-    }
-    def tinySeam(stageName: String, compute: () => DataFrame): DataFrame =
-      seam(stageName, () => compute().coalesce(1))
-    def pinned: Seq[DataFrame] = Nil
-  }
-
-  /** Run the chain with in-session cache seams (see [[CacheSeams]]). */
+    * cost). Swapping the id-scale seams for LAZY persists — hoping to
+    * save their materialization jobs — took the sf0.1 build from 14 s
+    * to 20 s, because every downstream ACTION (the final-survivor
+    * write, the stats, each consumer) re-analyzes the untruncated
+    * trees; the eager checkpoints pay one small job each and keep
+    * planning O(stage). The price is recompute-on-executor-loss within
+    * the round. The FINAL survivor frame additionally lands in parquet
+    * (see the [[Result.unpersist]] contract). */
   def run(spark: SparkSession, corpus: DataFrame, bench: DataFrame,
-          cfg: Config): Result =
-    runSeamed(spark, corpus, bench, cfg, new CacheSeams)
-
-  /** Run the chain with RELIABLE staging-table seams under
-    * `stagingPath` (see [[StorageSeams]]): each stage writes
-    * `stagingPath/<stage>` parquet, and a re-run resumes from the last
-    * stage whose directory committed. Output is frame-for-frame equal
-    * to [[run]]'s. */
-  def runStaged(spark: SparkSession, corpus: DataFrame, bench: DataFrame,
-                cfg: Config, stagingPath: String): Result =
-    runSeamed(spark, corpus, bench, cfg, new StorageSeams(spark, stagingPath))
-
-  /** The chain body. `corpus` needs (idCol, strataCol, textCol);
-    * `bench` needs (idCol, textCol) — the benchmark suite
-    * decontamination protects. Stage boundaries materialize through
-    * `seams`; the FINAL survivor frame additionally lands in parquet
-    * in every mode (see the [[Result.unpersist]] contract). */
-  private def runSeamed(spark: SparkSession, corpus: DataFrame,
-                        bench: DataFrame, cfg: Config,
-                        seams: Seams): Result = {
+          cfg: Config): Result = {
+    var pinned = List.empty[DataFrame]
+    def seam(f: DataFrame): DataFrame = {
+      val c = f.localCheckpoint()
+      pinned = c :: pinned
+      c
+    }
     val id = col(cfg.idCol)
     val nTok = TextAnalysis.wsTokenCount(col(cfg.textCol)).cast("long")
     val base = corpus.select(id, col(cfg.strataCol), col(cfg.textCol),
       nTok.as("__n_tokens"))
 
     // Stages 0-2 ride ONE scan (the filterFunnel discipline): total,
-    // after the C4 page verdict, after C4 && Gopher. The census is a
-    // tiny seam so a staged resume skips even this corpus scan.
+    // after the C4 page verdict, after C4 && Gopher.
     val c4p = TextAnalysis.c4Signals(col(cfg.textCol), cfg.c4MinSentences).pass
     val gop = TextAnalysis.gopherSignals(col(cfg.textCol), cfg.gopherStops).pass
-    val g = seams.tinySeam("s0_gate_census", () => base.agg(
+    val g = base.agg(
       count(lit(1)).as("d0"),
       coalesce(sum(col("__n_tokens")), lit(0L)).as("t0"),
       count(when(c4p, 1)).as("d1"),
       coalesce(sum(when(c4p, col("__n_tokens"))), lit(0L)).as("t1"),
       count(when(c4p && gop, 1)).as("d2"),
-      coalesce(sum(when(c4p && gop, col("__n_tokens"))), lit(0L)).as("t2")))
+      coalesce(sum(when(c4p && gop, col("__n_tokens"))), lit(0L)).as("t2"))
       .head()
     def lng(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
 
@@ -212,72 +152,53 @@ object CurationRound {
     // exact-dedup fingerprint materialize HERE once (gate + fp ride one
     // scan — guide §2.3) instead of re-deriving the signal bundles per
     // stage (and the signal trees leave every downstream plan).
-    // Staging-layout versioning: a resumed s2_gated written BEFORE the
-    // fingerprint rode this seam lacks __fp — recompute it from the
-    // staged text (same deterministic function, identical values)
-    // instead of failing the resume on a missing column.
-    val gatedRaw = seams.seam("s2_gated", () => base.filter(c4p && gop)
+    val gated = seam(base.filter(c4p && gop)
       .withColumn("__fp", TextAnalysis.docFingerprint(col(cfg.textCol))))
-    val gated =
-      if (gatedRaw.columns.contains("__fp")) gatedRaw
-      else gatedRaw.withColumn("__fp",
-        TextAnalysis.docFingerprint(col(cfg.textCol)))
 
     // Stage 3 — exact dedup: min id per fingerprint keeps; null
     // fingerprints pass through (the exactGroups contract).
-    val exactIds = seams.seam("s3_exact_ids", () => {
-      val fps = gated.select(id, col("__fp"))
-      fps.filter(col("__fp").isNotNull)
-        .groupBy(col("__fp")).agg(min(id).as(cfg.idCol))
-        .select(id)
-        .unionByName(fps.filter(col("__fp").isNull).select(id))
-    })
+    val fps = gated.select(id, col("__fp"))
+    val exactIds = seam(fps.filter(col("__fp").isNotNull)
+      .groupBy(col("__fp")).agg(min(id).as(cfg.idCol))
+      .select(id)
+      .unionByName(fps.filter(col("__fp").isNull).select(id)))
     val s3 = gated.join(exactIds, Seq(cfg.idCol), "left_semi").drop("__fp")
 
     // Stage 4 — near dedup: pair candidates over exact survivors, then
     // the canonical keep/drop verdicts; docs in no pair survive free.
-    val nearIds = seams.seam("s4_near_ids", () => {
-      val pairs = Dedup.ngramJaccardPairs(s3, cfg.idCol, cfg.textCol,
-        cfg.jaccardN, cfg.jaccardMinJaccard, cfg.jaccardDfCap)
-      val verdicts = Dedup.canonicalKeepList(pairs,
-        s3.select(id, length(col(cfg.textCol)).cast("long").as("__q")),
-        cfg.idCol, "__q")
-      exactIds.join(
-        verdicts.filter(!col("is_canonical"))
-          .select(col("doc_id").as(cfg.idCol)),
-        Seq(cfg.idCol), "left_anti")
-    })
+    val pairs = Dedup.ngramJaccardPairs(s3, cfg.idCol, cfg.textCol,
+      cfg.jaccardN, cfg.jaccardMinJaccard, cfg.jaccardDfCap)
+    val verdicts = Dedup.canonicalKeepList(pairs,
+      s3.select(id, length(col(cfg.textCol)).cast("long").as("__q")),
+      cfg.idCol, "__q")
+    val nearIds = seam(exactIds.join(
+      verdicts.filter(!col("is_canonical"))
+        .select(col("doc_id").as(cfg.idCol)),
+      Seq(cfg.idCol), "left_anti"))
     val s4 = gated.join(nearIds, Seq(cfg.idCol), "left_semi").drop("__fp")
 
     // Stage 5 — decontamination: any benchmark overlap hit drops.
-    val cleanIds = seams.seam("s5_clean_ids", () => {
-      val contamIds = Dedup.contaminationPairs(s4, bench, cfg.idCol,
-          cfg.textCol, cfg.contamN, cfg.contamMinOverlap,
-          cfg.contamBenchDfCap)
-        .select(col("doc_id").as(cfg.idCol)).distinct()
-      nearIds.join(contamIds, Seq(cfg.idCol), "left_anti")
-    })
+    val contamIds = Dedup.contaminationPairs(s4, bench, cfg.idCol,
+        cfg.textCol, cfg.contamN, cfg.contamMinOverlap,
+        cfg.contamBenchDfCap)
+      .select(col("doc_id").as(cfg.idCol)).distinct()
+    val cleanIds = seam(nearIds.join(contamIds, Seq(cfg.idCol), "left_anti"))
     val s5 = gated.join(cleanIds, Seq(cfg.idCol), "left_semi").drop("__fp")
 
     // Stage 6 — mixture rebalance on the survivors' token mass. The
-    // final survivor frame ALWAYS lands in parquet (a per-process temp
-    // table when no staging path was given — the NearDupPipeline
-    // materialization convention): it is the one frame every returned
-    // output reads, so backing it with storage instead of a cache
-    // makes Result.unpersist / clearCache safe by construction, and it
-    // is id-scale (id, stratum, token count — never text), so the
-    // write is noise next to the chain it concludes.
-    val mixedPlan = () => Sampling.mixtureRebalance(
-      s5.select(id, col(cfg.strataCol), col("__n_tokens")),
-      cfg.idCol, cfg.strataCol, col("__n_tokens"), cfg.mixTargets,
-      cfg.salt)
-    val mixed = seams match {
-      case ss: StorageSeams => ss.seam("s6_mixed_ids", mixedPlan)
-      case _ =>
-        val p = tempTableDir(spark)
-        mixedPlan().write.mode("overwrite").parquet(p)
-        Tables.parquet(spark, p)
-    }
+    // final survivor frame lands in parquet (a SessionMemo temp table —
+    // the NearDupPipeline materialization convention): it is the one
+    // frame every returned output reads, so backing it with storage
+    // instead of a cache makes Result.unpersist / clearCache safe by
+    // construction, and it is id-scale (id, stratum, token count —
+    // never text), so the write is noise next to the chain it concludes.
+    val mixedPath = SessionMemo.tempDir(spark, "graft_curation")
+    Sampling.mixtureRebalance(
+        s5.select(id, col(cfg.strataCol), col("__n_tokens")),
+        cfg.idCol, cfg.strataCol, col("__n_tokens"), cfg.mixTargets,
+        cfg.salt)
+      .write.mode("overwrite").parquet(mixedPath)
+    val mixed = Tables.parquet(spark, mixedPath)
 
     // Funnel counts: stage frames are id-scale and persisted; ONE
     // union-aggregate job replaces the four per-stage count jobs (each
@@ -320,7 +241,7 @@ object CurationRound {
     val stats = Packing.packStats(
       mixed.select(id, col("__n_tokens").as("n_tokens")),
       cfg.idCol, "n_tokens", cfg.packMaxTokens)
-    Result(funnel, curated, packed, stats, seams.pinned)
+    Result(funnel, curated, packed, stats, pinned.reverse)
   }
 
   // ---- incremental fold ----------------------------------------------
@@ -471,11 +392,6 @@ object CurationRound {
       (opt(0), opt(1))
     }
   }
-
-  /** Highest batch id recorded anywhere under `statePath` (partial
-    * folds count — the funnel commits LAST), or None on fresh state. */
-  def lastFoldedBatch(spark: SparkSession, statePath: String): Option[Long] =
-    foldFrontier(spark, statePath)._1
 
   /** Fold one ingest batch (rows: idCol, strataCol, textCol) through
     * the chain against `statePath`; appends the batch's state deltas
@@ -895,78 +811,25 @@ object CurationRound {
       .start()
   }
 
-  // ---- final-survivor temp tables (cache-seam mode) -----------------
-  // Per-process root + counter, the NearDupPipeline path convention:
-  // two JVMs curating concurrently never collide, and a process-wide
-  // counter keeps every run on a fresh path. Files are deleted when the
-  // owning session's application ends.
-  private val pathSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private val livePaths =
-    scala.collection.mutable.Map.empty[org.apache.spark.SparkContext,
-      scala.collection.mutable.Buffer[String]]
-
-  /** A fresh per-process state/table directory, deleted when the
-    * session's application ends — the query surface's home for
-    * single-run incremental folds. */
-  private[graft] def tempStatePath(spark: SparkSession): String =
-    tempTableDir(spark)
-
-  private def tempTableDir(spark: SparkSession): String = {
-    val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_curation_" + ProcessHandle.current().pid() + "_" +
-        pathSeq.incrementAndGet()).getPath
-    val sc = spark.sparkContext
-    livePaths.synchronized {
-      if (!livePaths.contains(sc)) {
-        livePaths.update(sc, scala.collection.mutable.Buffer.empty)
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            livePaths.synchronized {
-              livePaths.remove(sc).toSeq.flatten
-                .foreach(d => deleteRecursively(new java.io.File(d)))
-            }
-        })
-      }
-      livePaths(sc) += p
-    }
-    p
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(deleteRecursively)
-    f.delete(); ()
-  }
-
   // ---- cross-query memo ---------------------------------------------
   // The NearDupPipeline `_build` economy applied to the whole chain:
   // five/two consumers of one expensive composed artifact must not each
   // re-run it. The memo'd Result is clearCache-immune by construction
   // (funnel driver-backed, everything else parquet-rooted), and its
-  // stage caches are released eagerly inside the build. Staleness
-  // contract as everywhere: per (session, corpusKey, cfg), does NOT
-  // watch the data — new round over changed data calls invalidate/
-  // invalidateAll first (the bench does so at every pass boundary).
-  private val memo = new KeyedMemo[(SparkSession, String, Config), Result]
+  // stage caches are released eagerly inside the build. Dropping an
+  // entry releases nothing: a consumer may still hold a returned frame,
+  // so the id-scale survivor table stays until application end.
+  private val memo = SessionMemo[Config, Result]()
 
   /** The chain's Result for (`corpusKey`, `cfg`), built at most once
-    * per session: first caller runs the chain (and releases its stage
-    * caches — the returned frames don't need them); later callers get
-    * the same Result. Per-key double-checked ([[KeyedMemo]]): two
-    * concurrent first callers on the SAME key build once, while a
-    * first caller for a DIFFERENT (session, corpus, cfg) key builds
-    * in parallel instead of queueing behind this chain's six stages. */
+    * per session ([[SessionMemo]]): first caller runs the chain (and
+    * releases its stage caches — the returned frames don't need them);
+    * later callers get the same Result. */
   def memoized(spark: SparkSession, corpusKey: String, corpus: => DataFrame,
                bench: => DataFrame, cfg: Config): Result =
-    memo.getOrBuild((spark, corpusKey, cfg)) {
+    memo(spark, corpusKey, cfg) {
       val r = run(spark, corpus, bench, cfg)
       r.unpersist()
       r
     }
-
-  /** Drop every memo owned by `s` — pass-boundary hook for the bench.
-    * Backing temp tables stay until application end (a consumer may
-    * hold a returned frame); they are id-scale files. */
-  def invalidateAll(s: SparkSession): Unit =
-    memo.invalidateIf { case (sess, _, _) => sess eq s }
 }

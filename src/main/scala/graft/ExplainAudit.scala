@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan auditor: prints per-query physical-plan health — shuffle count,
@@ -12,10 +11,7 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.builder("local[4]", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain(logLevel = "ERROR")
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))

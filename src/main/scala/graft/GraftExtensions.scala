@@ -95,13 +95,11 @@ object GraftSession {
       // 128-group sort fallback is far too eager for <= K-element buffers.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Env-overridable for A/B measurement only (the bench and all
-      // deployments run the default true): AQE's per-query-stage jobs
-      // multiply driver round-trips on fixed-cost-bound suites, and
-      // r16/r17 measured whether that tax is real (it was not — see
-      // OPTIMIZATION_r17.md; the knob stays for future measurement).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE's per-query-stage jobs multiply driver round-trips on
+      // fixed-cost-bound suites; r16/r17 measured whether that tax is
+      // real (it was not — see OPTIMIZATION_r17.md). A runtime SQL conf:
+      // an A/B sets it with spark.conf.set.
+      .config("spark.sql.adaptive.enabled", "true")
       // AQE's coalescing floor (default 1 MB) collapses a small shuffle
       // output to 1-2 partitions BY BYTES, blind to downstream fan-out:
       // a bucket table of a few MB whose next stage double-explodes
@@ -113,10 +111,10 @@ object GraftSession {
       // 16-query subset total 0.88x). At production shuffle sizes
       // partitions are advisory-sized (64 MB+) and this floor never
       // binds — a small-input floor, not a local-mode tune (guide
-      // §2.2). Env-overridable so deployments (and A/B measurement)
-      // can retune without a rebuild.
+      // §2.2). A runtime SQL conf: deployments retune it with
+      // spark.conf.set, no rebuild.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "131072"))
+        "131072")
       // The generated-class cache defaults to 100 entries; a workload
       // cycling through this library's ~60-query surface evicts
       // constantly and re-Janinos every plan (~40% wall-time overhead

@@ -33,7 +33,7 @@ object JobProfile {
     })
     val fn = SparkEntry.queries(name)
     (1 to repeats).foreach { pass =>
-      Bench.invalidateMemos(spark)
+      SessionMemo.invalidateAll(spark)
       jobs = Nil
       val w0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

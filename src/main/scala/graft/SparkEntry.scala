@@ -22,6 +22,21 @@ object SparkEntry {
       SimilarityQueries.queries ++ EventQueries.queries ++
       MultimodalQueries.queries ++ AnalyticsQueries.queries
 
+  /** Queries named in SPARK_GRAFT_SKIP (comma list), which the mains
+    * leave out — large-sf runs skip the quadratic-by-contract exact
+    * baselines. */
+  def skipped: Set[String] =
+    sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").toSet).getOrElse(Set.empty)
+
+  /** The queries a main runs: every one, or only those named in
+    * SPARK_GRAFT_ONLY (comma list) for targeted iteration, minus
+    * [[skipped]]. */
+  def selected: Map[String, (SparkSession, String) => DataFrame] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val skip = skipped
+    queries.filter { case (n, _) => only.forall(_.contains(n)) && !skip(n) }
+  }
+
   /** DuckDB-equivalent SQL per query key; keys absent here get the driver's
     * weaker rows-only check (non-SQL-expressible operators). */
   def oracleSql: Map[String, String] =

@@ -8,16 +8,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated subset filter and exclusion list (same
-    // contract as Bench) — local iteration and large-sf sweeps (the two
-    // quadratic-by-contract exact baselines are skipped at sf10); the
-    // driver runs the full sweep.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").toSet)
-      .getOrElse(Set.empty[String])
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) && !skip.contains(n) }
-      .foreach { case (name, fn) =>
+    SparkEntry.selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

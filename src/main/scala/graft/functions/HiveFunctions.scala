@@ -179,11 +179,6 @@ object HiveFunctions {
   def argmaxByConcat(value: Column, ts: Column): Column =
     substring(max(concat(toNumberCustom(ts), value)), 14, Int.MaxValue)
 
-  /** `reflect("java.net.URLDecoder", "decode", v [, "UTF-8"])` ≡ Snowflake
-    * custom `decodeurl` (converter rule 8). Catalyst expression in
-    * [[graft.functions.UrlDecode]]; this is the Column-facing wrapper. */
-  def decodeUrl(col: Column): Column = UrlDecode.decodeurl(col)
-
   /** Deterministic string hash ("hashcode", converter rule 10): Spark's
     * codegen'd Murmur3 hash — stable across JVMs/partitions. (Rule 10 maps
     * Hive `hash` to Snowflake `hashcode`; neither side promises the other's

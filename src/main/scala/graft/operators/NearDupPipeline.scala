@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Family-level near-duplicate PAIR TABLE, materialized once per corpus
@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * reads it back across validation steps (tools/db-setup.sql:63-76 in the
   * reference repo); this object is that artifact for the near-dup family.
   *
-  * MATERIALIZATION: the scored pair table is WRITTEN TO PARQUET under
-  * java.io.tmpdir and read back, not `persist()`-ed. Two reasons:
+  * MATERIALIZATION: the scored pair table is WRITTEN TO PARQUET under a
+  * [[graft.SessionMemo.tempDir]] path and read back, not `persist()`-ed. Two reasons:
   * (a) at 100 TB the pair table is a cross-job artifact — a downstream
   *     cluster/canonical/rank job reads it from storage, it does not share
   *     an in-memory cache with the pair builder; writing it is the honest
@@ -32,119 +32,43 @@ import org.apache.spark.sql.functions._
   * 199.5 M candidate pairs the pipeline scores), so the write itself is
   * noise next to the pair phase it amortizes.
   *
-  * STALENESS CONTRACT (same as CoreQueries.metricsTable): the memo is
-  * per (session, corpusKey, shape params) and does NOT watch the
-  * underlying data — callers starting a new round over changed data must
-  * call [[invalidate]]/[[invalidateAll]] first. Entries are evicted when
-  * the owning session's application ends, and the backing files live
-  * under a per-process temp dir so concurrent JVMs never collide.
+  * STALENESS CONTRACT: the [[graft.SessionMemo]] one — per (session,
+  * corpusKey, params), floors included, and blind to the data; a new
+  * round over changed data calls `SessionMemo.invalidate` first, which
+  * also deletes the table's files.
   */
 object NearDupPipeline {
 
   /** Shape parameters of the candidate pipeline plus the family's score
     * floors. The floors are part of the MATERIALIZED table (rows below
-    * both floors are never written); accessors may filter at or above
-    * them, and a request BELOW a stored floor transparently rebuilds the
-    * table at the lower floor (correctness is never silently narrowed). */
+    * both floors are never written), so they are part of the memo key:
+    * a request at other floors builds its own table and is never
+    * served a narrower one. */
   final case class Params(idCol: String, textCol: String, n: Int = 3,
                           dfCap: Int = 10000, minJaccard: Double = 0.5,
                           minContainment: Double = 0.8)
 
-  private final case class Entry(path: String, minJaccard: Double,
-                                 minContainment: Double)
-
-  /** Key deliberately excludes the floors: one table serves every floor
-    * at-or-above its stored pair (see [[Params]]). */
-  private type Key = (SparkSession, String, String, String, Int, Int)
-  private val cache = scala.collection.mutable.Map.empty[Key, Entry]
-
-  private val evictionHooked =
-    scala.collection.mutable.Set.empty[org.apache.spark.SparkContext]
-
-  private def hookEviction(s: SparkSession): Unit = {
-    val sc = s.sparkContext
-    if (evictionHooked.add(sc)) {
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          cache.synchronized {
-            // Delete the backing files too: the per-(pid, counter) path
-            // naming means no later run ever reuses them, so a map-only
-            // eviction leaks one table dir per corpus per run.
-            val dead = cache.collect {
-              case ((sess, _, _, _, _, _), e) if sess.sparkContext eq sc => e
-            }.toSeq
-            cache.filterInPlace { case ((sess, _, _, _, _, _), _) =>
-              sess.sparkContext ne sc }
-            evictionHooked.remove(sc)
-            dead.foreach(e => deleteRecursively(new java.io.File(e.path)))
-          }
-      })
-    }
-  }
-
-  /** Per-process root so two JVMs verifying the same corpus concurrently
-    * never overwrite each other's files (the metricsTable/historyStore
-    * convention). A process-wide counter joins the key hash: two DISTINCT
-    * keys whose 32-bit hashCodes collide must not share a path, or the
-    * second build would silently overwrite the first entry's live files. */
-  private val pathSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private def tableDir(key: Key): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_neardup_" + ProcessHandle.current().pid() + "_" +
-        Integer.toHexString((key._2, key._3, key._4, key._5, key._6).hashCode) +
-        "_" + pathSeq.incrementAndGet())
-      .getPath
-
-  private def build(df: DataFrame, key: Key, minJ: Double, minC: Double): Entry = {
-    val path = tableDir(key)
-    Dedup.shinglePairCounts(df, key._3, key._4, key._5, key._6)
-      .withColumn("jaccard",
-        col("shared").cast("double") /
-          (col("n1") + col("n2") - col("shared")).cast("double"))
-      .withColumn("containment",
-        col("shared").cast("double") / least(col("n1"), col("n2")).cast("double"))
-      .filter(col("jaccard") >= minJ || col("containment") >= minC)
-      .write.mode("overwrite").parquet(path)
-    Entry(path, minJ, minC)
-  }
+  private val memo = graft.SessionMemo[Params, String](graft.SessionMemo.delete)
 
   /** The materialized scored pair table for (`corpusKey`, `p`):
     * (id1, id2, shared, n1, n2, jaccard, containment), containing every
     * pair at-or-above EITHER floor. First caller builds and writes;
-    * subsequent callers (same session + key + shape) read the parquet.
-    * A caller whose floors are lower than the stored ones triggers a
-    * rebuild at the elementwise-min floors. Synchronized for the same
-    * reason metricsTable is: two concurrent first callers must not each
-    * run the full candidate pipeline. The ONE global lock does mean an
-    * unrelated key's caller waits out a ~28 s (sf10) build — accepted
-    * deliberately (the metricsTable tradeoff: driver-side access,
-    * contention is nil in the verify/bench loops, correctness matters);
-    * a per-key latch is the upgrade if concurrent multi-corpus drivers
-    * ever appear. */
+    * subsequent callers (same session + key + params) read the parquet. */
   def pairsTable(df: DataFrame, corpusKey: String, p: Params): DataFrame = {
     val s = df.sparkSession
-    val key: Key = (s, corpusKey, p.idCol, p.textCol, p.n, p.dfCap)
-    val entry = cache.synchronized {
-      hookEviction(s)
-      val cur = cache.get(key)
-      val fresh = cur match {
-        case Some(e) if e.minJaccard <= p.minJaccard &&
-                        e.minContainment <= p.minContainment => e
-        case old =>
-          val e = build(df, key,
-            math.min(p.minJaccard, old.map(_.minJaccard).getOrElse(p.minJaccard)),
-            math.min(p.minContainment, old.map(_.minContainment).getOrElse(p.minContainment)))
-          // lower-floor rebuilds land on a fresh path (counter); drop
-          // the superseded files like invalidate would (best-effort —
-          // same caveat as there for a reader mid-scan).
-          old.foreach(o => deleteRecursively(new java.io.File(o.path)))
-          cache.update(key, e)
-          e
-      }
-      fresh
+    val path = memo(s, corpusKey, p) {
+      val path = graft.SessionMemo.tempDir(s, "graft_neardup")
+      Dedup.shinglePairCounts(df, p.idCol, p.textCol, p.n, p.dfCap)
+        .withColumn("jaccard",
+          col("shared").cast("double") /
+            (col("n1") + col("n2") - col("shared")).cast("double"))
+        .withColumn("containment",
+          col("shared").cast("double") / least(col("n1"), col("n2")).cast("double"))
+        .filter(col("jaccard") >= p.minJaccard || col("containment") >= p.minContainment)
+        .write.mode("overwrite").parquet(path)
+      path
     }
-    graft.sources.Tables.parquet(s, entry.path)
+    graft.sources.Tables.parquet(s, path)
   }
 
   /** Jaccard pairs from the shared table — output-identical to
@@ -170,30 +94,4 @@ object NearDupPipeline {
       .select(col("id1"), col("id2"),
         coalesce(col("shared"), lit(0L)).as("shared"),
         col("n1"), col("n2"), col("containment"), col("contained_id"))
-
-  /** Drop the memo for one (session, corpusKey) across all shape params —
-    * the "new round over changed data" hook. Backing files are deleted
-    * best-effort (a reader mid-scan on another thread keeps its snapshot;
-    * the next pairsTable call rewrites the path). */
-  def invalidate(s: SparkSession, corpusKey: String): Unit =
-    cache.synchronized {
-      val dead = cache.keys.filter(k => (k._1 eq s) && k._2 == corpusKey).toSeq
-      dead.foreach { k =>
-        cache.remove(k).foreach(e => deleteRecursively(new java.io.File(e.path)))
-      }
-    }
-
-  /** Drop every memo owned by `s` — pass-boundary hook for the bench. */
-  def invalidateAll(s: SparkSession): Unit =
-    cache.synchronized {
-      val dead = cache.keys.filter(_._1 eq s).toSeq
-      dead.foreach { k =>
-        cache.remove(k).foreach(e => deleteRecursively(new java.io.File(e.path)))
-      }
-    }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(deleteRecursively)
-    f.delete(); ()
-  }
 }

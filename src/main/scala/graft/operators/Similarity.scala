@@ -474,32 +474,22 @@ object Similarity {
   // memo also carries the corpus count so callers don't re-run the
   // sizing count job. semDedup does NOT share this memo — it fits over
   // its own injected-duplicate corpus, a different training set.
-  // Staleness contract as everywhere: per (session, corpusKey, columns,
-  // params), does NOT watch the data — `corpusKey` must name the training
-  // frame; the bench invalidates at pass boundaries and prices the fit
-  // as its own `_kmeans_fit_build` row.
-  private type FitKey =
-    (org.apache.spark.sql.SparkSession, String, String, String, Int)
-  private val fitMemoMap = new graft.KeyedMemo[FitKey, (Long, Seq[Seq[Double]])]
+  // Staleness contract: the [[graft.SessionMemo]] one — `corpusKey`
+  // must name the training frame; the bench invalidates at pass
+  // boundaries and prices the fit as its own `_kmeans_fit_build` row.
+  private val kmeansMemo =
+    graft.SessionMemo[(String, String, Int), (Long, Seq[Seq[Double]])]()
 
   /** The fitted (corpus count, centroids) for (`corpusKey`, params),
-    * trained at most once per session: k = [[cellsFor]](count(df)).
-    * Per-key double-checked ([[graft.KeyedMemo]]) like the unigram and
-    * curation memos. */
+    * trained at most once per session: k = [[cellsFor]](count(df)). */
   def kmeansFitMemo(df: DataFrame, corpusKey: String, maxIter: Int = 5,
                     idCol: String = "vec_id",
-                    vecCol: String = "embedding"): (Long, Seq[Seq[Double]]) = {
-    val key: FitKey = (df.sparkSession, corpusKey, idCol, vecCol, maxIter)
-    fitMemoMap.getOrBuild(key) {
+                    vecCol: String = "embedding"): (Long, Seq[Seq[Double]]) =
+    kmeansMemo(df.sparkSession, corpusKey, (idCol, vecCol, maxIter)) {
       val n = df.count()
       (n, kmeansFit(df, k = cellsFor(n), maxIter = maxIter,
         idCol = idCol, vecCol = vecCol))
     }
-  }
-
-  /** Drop every memo'd model owned by `s` — pass-boundary hook. */
-  def invalidateFitMemo(s: org.apache.spark.sql.SparkSession): Unit =
-    fitMemoMap.invalidateIf(_._1 eq s)
 
   /** Bits per band for [[cosineNearDupPairsLsh]], derived from the corpus
     * size so expected bucket population stays ~`targetBucket` as the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Family-level SPAN CENSUS, materialized once per corpus and shared by
@@ -18,43 +18,15 @@ import org.apache.spark.sql.functions._
   * positions whose k-token span occurs in ≥ minDocs DISTINCT documents.
   * Everything both consumers need, and nothing corpus-positional: the
   * stats query reads counts off it; the strike joins it back to one
-  * fresh token scan and rebuilds. Same parquet-not-persist reasoning,
-  * staleness contract, eviction hook, and pass-boundary bench
-  * invalidation as [[NearDupPipeline]] (see its scaladoc — kept
-  * deliberately parallel rather than abstracted so each family's shape
-  * stays readable).
+  * fresh token scan and rebuilds. Same parquet-not-persist reasoning
+  * and [[graft.SessionMemo]] staleness contract as [[NearDupPipeline]].
   */
 object SpanPipeline {
 
   import TextAnalysis.{normalized, tokens}
 
-  private final case class Entry(path: String)
-  private type Key = (SparkSession, String, String, String, Int, Int)
-  private val cache = scala.collection.mutable.Map.empty[Key, Entry]
-
-  private val evictionHooked =
-    scala.collection.mutable.Set.empty[org.apache.spark.SparkContext]
-
-  private def hookEviction(s: SparkSession): Unit = {
-    val sc = s.sparkContext
-    if (evictionHooked.add(sc)) {
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          cache.synchronized {
-            // Files too, not just map entries (NearDupPipeline's
-            // reasoning: per-(pid, counter) paths are never reused).
-            val dead = cache.collect {
-              case ((sess, _, _, _, _, _), e) if sess.sparkContext eq sc => e
-            }.toSeq
-            cache.filterInPlace { case ((sess, _, _, _, _, _), _) =>
-              sess.sparkContext ne sc }
-            evictionHooked.remove(sc)
-            dead.foreach(e => deleteRecursively(new java.io.File(e.path)))
-          }
-      })
-    }
-  }
+  private val memo =
+    graft.SessionMemo[(String, String, Int, Int), String](graft.SessionMemo.delete)
 
   /** Dup-key broadcast ceiling for the semi join (rows): 16-byte struct
     * keys land ~100 B/row in a HashedRelation, so 8M keys ≈ 0.8 GB —
@@ -65,19 +37,8 @@ object SpanPipeline {
     * boilerplate corpora, which keep the fallback shuffle path. */
   private val BroadcastKeyCap = 8L * 1000 * 1000
 
-  /** Key hash + process-wide counter: distinct keys with colliding
-    * 32-bit hashCodes must not share a path (NearDupPipeline.tableDir's
-    * reasoning). */
-  private val pathSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private def tableDir(key: Key): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_spancensus_" + ProcessHandle.current().pid() + "_" +
-        Integer.toHexString((key._2, key._3, key._4, key._5, key._6).hashCode) +
-        "_" + pathSeq.incrementAndGet())
-      .getPath
-
-  private def build(df: DataFrame, key: Key): Entry = {
-    val (_, _, idCol, textCol, k, minDocs) = key
+  private def build(df: DataFrame, path: String, idCol: String,
+                    textCol: String, k: Int, minDocs: Int): Unit = {
     val toksExpr = filter(tokens(normalized(col(textCol))), t => length(t) > 0)
     // The build has THREE consumers of the tokenized corpus (dup-key
     // census, dup-start collection, n_spans) — persist the per-doc
@@ -126,7 +87,6 @@ object SpanPipeline {
           // sort_array: collect_list order is run-dependent; the artifact
           // on disk should not be.
           .agg(sort_array(collect_list(col("i"))).as("dup_starts"))
-        val path = tableDir(key)
         base
           .select(col("doc_id"),
             (size(col("__toks")) - k + 1).cast("long").as("n_spans"))
@@ -135,7 +95,6 @@ object SpanPipeline {
             coalesce(col("dup_starts"),
               array().cast("array<int>")).as("dup_starts"))
           .write.mode("overwrite").parquet(path)
-        Entry(path)
       } finally { dupKeys.unpersist(); () }
     } finally { base.unpersist(); () }
   }
@@ -147,12 +106,12 @@ object SpanPipeline {
     require(k > 0, "span length must be positive")
     require(minDocs >= 2, "minDocs below 2 marks every span duplicated")
     val s = df.sparkSession
-    val key: Key = (s, corpusKey, idCol, textCol, k, minDocs)
-    val entry = cache.synchronized {
-      hookEviction(s)
-      cache.getOrElseUpdate(key, build(df, key))
+    val path = memo(s, corpusKey, (idCol, textCol, k, minDocs)) {
+      val path = graft.SessionMemo.tempDir(s, "graft_spancensus")
+      build(df, path, idCol, textCol, k, minDocs)
+      path
     }
-    graft.sources.Tables.parquet(s, entry.path)
+    graft.sources.Tables.parquet(s, path)
   }
 
   /** Census report off the shared table — output-identical to
@@ -191,29 +150,5 @@ object SpanPipeline {
         size(col("__kp")).cast("long").as("n_kept"),
         array_join(transform(col("__kp"), p => element_at(col("__toks"), p)), " ")
           .as("text_out"))
-  }
-
-  /** Drop the memo for one (session, corpusKey) — the per-round
-    * staleness hook (the metricsTable contract). */
-  def invalidate(s: SparkSession, corpusKey: String): Unit =
-    cache.synchronized {
-      val dead = cache.keys.filter(k => (k._1 eq s) && k._2 == corpusKey).toSeq
-      dead.foreach { k =>
-        cache.remove(k).foreach(e => deleteRecursively(new java.io.File(e.path)))
-      }
-    }
-
-  /** Drop every memo owned by `s` — the bench's pass-boundary hook. */
-  def invalidateAll(s: SparkSession): Unit =
-    cache.synchronized {
-      val dead = cache.keys.filter(_._1 eq s).toSeq
-      dead.foreach { k =>
-        cache.remove(k).foreach(e => deleteRecursively(new java.io.File(e.path)))
-      }
-    }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(deleteRecursively)
-    f.delete(); ()
   }
 }

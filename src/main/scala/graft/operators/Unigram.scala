@@ -145,32 +145,20 @@ object Unigram {
   // NearDupPipeline `_build` economy applied to a driver-side model
   // artifact. The model is bounded (≤ seedSize (piece, micro) pairs) and
   // bit-reproducible, so memoizing it changes no output anywhere.
-  // Staleness contract as everywhere: per (session, corpusKey, params),
-  // does NOT watch the data — the bench invalidates at pass boundaries.
-  private type FitKey =
-    (SparkSession, String, String, Int, Int, Int, Int, Long, Long)
-  private val memo = new graft.KeyedMemo[FitKey, UnigramModel]
+  // Staleness contract: the [[graft.SessionMemo]] one.
+  private val memo =
+    graft.SessionMemo[(String, Int, Int, Int, Int, Long, Long), UnigramModel]()
 
   /** The trained model for (`corpusKey`, params), fit at most once per
-    * session; later callers get the identical frozen model. Per-key
-    * double-checked ([[graft.KeyedMemo]]): two concurrent first
-    * callers on the SAME key fit once, while a first caller for a
-    * DIFFERENT (session, corpus, params) key fits in parallel instead
-    * of queueing behind this fit's EM rounds. */
+    * session; later callers get the identical frozen model. */
   def fitMemo(df: DataFrame, corpusKey: String, textCol: String,
               vocabSize: Int = 400, rounds: Int = 3, maxPieceLen: Int = 6,
               seedSize: Int = 4000, minCount: Long = 2L,
-              unkMicro: Long = -100000000L): UnigramModel = {
-    val key: FitKey = (df.sparkSession, corpusKey, textCol, vocabSize,
-      rounds, maxPieceLen, seedSize, minCount, unkMicro)
-    memo.getOrBuild(key)(
+              unkMicro: Long = -100000000L): UnigramModel =
+    memo(df.sparkSession, corpusKey, (textCol, vocabSize, rounds,
+        maxPieceLen, seedSize, minCount, unkMicro))(
       fit(df, textCol, vocabSize, rounds, maxPieceLen, seedSize,
         minCount, unkMicro))
-  }
-
-  /** Drop every memo'd model owned by `s` — pass-boundary hook. */
-  def invalidateAll(s: SparkSession): Unit =
-    memo.invalidateIf(_._1 eq s)
 
   /** The trained vocabulary as a frame: (rank, piece, cnt-frozen
     * micro log-prob) ordered by score desc then piece — the committed,

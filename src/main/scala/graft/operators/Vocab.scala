@@ -1310,14 +1310,14 @@ object Vocab {
   def overlapMinHashFromState(state: DataFrame, numHashes: Int = 128): DataFrame = {
     require(numHashes > 0 && numHashes <= 4096,
       s"numHashes must be in [1, 4096], got $numHashes")
-    // PERSISTED: the pairwise self-join below references the signature
-    // frame twice (probe side + broadcast side), and an unpersisted
-    // reference re-runs the whole corpus-scan + per-lane hashing
-    // aggregate per side — the query's dominant job, paid double (the
-    // r17 plan dump showed two full aggregate subtrees). The cached
-    // frame is dimension-scale (sources × numHashes longs — a bounded
-    // model artifact); left cached for the session like semDedup's
-    // assignment, sweep callers clearCache() between corpora.
+    // COLLECTED into a local relation: the pairwise self-join below
+    // references the signature frame twice (probe side + broadcast
+    // side), and a lazy reference re-runs the whole corpus-scan +
+    // per-lane hashing aggregate per side — the query's dominant job,
+    // paid double (the r17 plan dump showed two full aggregate
+    // subtrees). The frame is dimension-scale (sources × numHashes
+    // longs — a bounded model artifact), so one collect runs the
+    // aggregate once and leaves no cached block behind.
     // Lane hashing stays one XxHash64 EXPRESSION PER LANE, by
     // measurement: a fused native all-lanes-in-one-call expression
     // (array of 128 longs per row, aggregate mins via element_at) was
@@ -1325,11 +1325,12 @@ object Vocab {
     // 2.54 s at sf0.1) — the per-row array allocation costs more than
     // the 128 allocation-free codegen'd hash expressions it replaced;
     // reverted (guide §1.1: measure, keep the empirical winner).
-    val sig = state.filter(col("source").isNotNull)
+    val sigPlan = state.filter(col("source").isNotNull)
       .groupBy(col("source"))
       .agg(array((0 until numHashes).map(h =>
         min(xxhash64(lit(h), col("sh")))): _*).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sig = state.sparkSession.createDataFrame(
+      java.util.Arrays.asList(sigPlan.collect(): _*), sigPlan.schema)
     val a = sig.select(col("source").as("source_a"), col("sig").as("sig_a"))
     val b = sig.select(col("source").as("source_b"), col("sig").as("sig_b"))
     a.join(broadcast(b), col("source_a") < col("source_b"))

@@ -82,6 +82,8 @@ object CoreQueries {
       .unionByName(TableDiff.metrics(region, region, "region", "r_regionkey"))
   }
 
+  private val metricsMemo = graft.SessionMemo[Unit, DataFrame]()
+
   /** The materialized `dw_data_metrics` table: each diff runs ONCE per
     * (session, dir) and the resulting metrics rows — O(#tables), each
     * O(sampleCap) — are kept as a LocalRelation that downstream consumers
@@ -91,72 +93,15 @@ object CoreQueries {
     * validation round, and every tool QUERIES that table
     * (snowflake_tool.py:23-39) rather than re-diffing the warehouse —
     * recomputing three full-outer diffs per metrics lookup is exactly the
-    * 100 TB mistake the persistent table exists to avoid. */
-  private val metricsCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  // Sessions whose SparkContext already carries our eviction listener —
-  // without it, a long-lived driver cycling sessions would pin every
-  // stopped session's collected metrics rows (strong map keys) forever.
-  private val evictionHooked =
-    scala.collection.mutable.Set.empty[org.apache.spark.SparkContext]
-
-  private def hookEviction(s: SparkSession): Unit = {
-    val sc = s.sparkContext
-    if (evictionHooked.add(sc)) {
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          metricsCache.synchronized {
-            metricsCache.filterInPlace { case ((sess, _), _) => sess.sparkContext ne sc }
-            evictionHooked.remove(sc); ()
-          }
-      })
-    }
-  }
-
-  // synchronized: Map.getOrElseUpdate evaluates the thunk without a lock,
-  // so two concurrent first callers would each run the three full diffs.
-  // Driver-side metadata access — contention is nil, correctness matters.
-  //
-  // STALENESS CONTRACT: the memo is per (session, dir) and does NOT watch
-  // the files under `dir` — callers starting a new validation round over
-  // changed data must call [[invalidateMetricsTable]] first (the reference
-  // re-writes its persistent dw_data_metrics per round in the same way).
-  // Entries are evicted automatically when the owning session's
-  // application ends, so stopped sessions don't leak collected rows.
+    * 100 TB mistake the persistent table exists to avoid. The memo is
+    * blind to the files under `dir`: a new validation round over
+    * changed data calls `SessionMemo.invalidate(s, dir)` first, as the
+    * reference re-writes dw_data_metrics per round. */
   def metricsTable(s: SparkSession, dir: String): DataFrame =
-    metricsCache.synchronized {
-      hookEviction(s)
-      metricsCache.getOrElseUpdate((s, dir), {
-        val u = metricsUnion(s, dir)
-        s.createDataFrame(java.util.Arrays.asList(u.collect(): _*), u.schema)
-      })
+    metricsMemo(s, dir, ()) {
+      val u = metricsUnion(s, dir)
+      s.createDataFrame(java.util.Arrays.asList(u.collect(): _*), u.schema)
     }
-
-  /** Start a new validation round over `dir`: drop the memoized metrics
-    * so the next [[metricsTable]] call re-diffs current data (the
-    * reference re-writes dw_data_metrics per round; without this a
-    * long-lived session would serve stale metrics forever). */
-  def invalidateMetricsTable(s: SparkSession, dir: String): Unit =
-    metricsCache.synchronized { metricsCache.remove((s, dir)); () }
-
-  /** Deterministic store path for [[MetricsStore]] under this `dir` —
-    * wiped and rebuilt per invocation so verify/bench runs reproduce.
-    * Keyed by PROCESS as well as dir: two JVMs verifying the same sfDir
-    * concurrently must not wipe each other's store mid-read (the query's
-    * output is path-independent, so the pid costs no determinism). */
-  private def historyStorePath(dir: String): String = {
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_metrics_store_" + ProcessHandle.current().pid() + "_" +
-        Integer.toHexString(dir.hashCode))
-    def del(x: java.io.File): Unit = {
-      if (x.isDirectory) Option(x.listFiles).toSeq.flatten.foreach(del)
-      x.delete(); ()
-    }
-    del(f)
-    f.getPath
-  }
 
   val queries: Map[String, Q] = Map(
     // Persistent validation HISTORY (the reference's dw_data_metrics is
@@ -169,7 +114,8 @@ object CoreQueries {
     // disappeared / appeared in one report.
     "q_metrics_history" -> ((s, dir) => {
       import graft.MetricsStore
-      val store = historyStorePath(dir)
+      // A fresh store per call, so verify/bench runs reproduce.
+      val store = graft.SessionMemo.tempDir(s, "graft_metrics_store")
       val region = Tables.load(s, dir, "region")
       val nation = Tables.load(s, dir, "nation")
       MetricsStore.appendMetrics(metricsUnion(s, dir), store, roundId = 1L)

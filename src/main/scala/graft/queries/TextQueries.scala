@@ -1629,7 +1629,7 @@ object TextQueries {
     "q_curation_incremental" -> ((s, dir) => {
       val cc = curationCorpus(s, dir)
       val bench = benchCorpus(s, dir)
-      val statePath = graft.CurationRound.tempStatePath(s)
+      val statePath = graft.SessionMemo.tempDir(s, "graft_curation")
       val m = col("doc_id") % 1000000000L
       Seq(m < 100000L, m >= 100000L && m < 200000L, m >= 200000L)
         .zipWithIndex.foreach { case (p, i) =>

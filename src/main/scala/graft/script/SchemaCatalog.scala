@@ -43,7 +43,6 @@ final case class DwValidationConfig(mode: String = "TESTING") {
   /** Physical (mode-suffixed) table name. */
   def physicalName(table: String): String = s"$table$tableSuffix"
   def dwTable(table: String): String = s"$dwSchema.${physicalName(table)}"
-  def hiveTable(table: String): String = s"$hiveSchema.${physicalName(table)}"
   /** The mismatch proc's staged-delta twin (snowflake_tool.py:47). */
   def deltaStageName(table: String): String = s"DELTA_STAGE_${physicalName(table)}"
 }

@@ -16,7 +16,7 @@ class BucketedJoinSpec extends AnyFunSuite {
   test("bucketed tables join without a shuffle") {
     // Explicit per-table paths: the (static) warehouse dir is never used
     // for data; only the derby metastore lands in cwd (gitignored).
-    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
+    val wh = TestSpark.tempDir("graft-wh").toString
     val o = Tables.load(spark, TestSpark.Sf0001, "orders")
       .select($"o_orderkey", $"o_custkey")
     val li = Tables.load(spark, TestSpark.Sf0001, "lineitem")

@@ -58,8 +58,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
     val bench = Seq((900L, mkDoc("ee", 4))).toDF("doc_id", "text")
     def df(b: Seq[(Long, String, String)]) = b.toDF("doc_id", "lang", "text")
 
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-cur-inc").toString
+    val statePath = TestSpark.tempDir("graft-cur-inc").toString
     CurationRound.foldBatch(spark, statePath, df(batch0), bench, cfg, 0L)
     CurationRound.foldBatch(spark, statePath, df(batch1), bench, cfg, 1L)
     CurationRound.foldBatch(spark, statePath, df(batch2), bench, cfg, 2L)
@@ -127,8 +126,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
     val b0 = Seq((1L, "en", short)).toDF("doc_id", "lang", "text")
     val b1 = Seq((11L, "en", long)).toDF("doc_id", "lang", "text")
 
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-cur-div").toString
+    val statePath = TestSpark.tempDir("graft-cur-div").toString
     CurationRound.foldBatch(spark, statePath, b0, bench, cfg, 0L)
     CurationRound.foldBatch(spark, statePath, b1, bench, cfg, 1L)
     // the loop keeps what it shipped; the newcomer drops on its history edge
@@ -153,8 +151,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
     val b1 = Seq((11L, "en", y)).toDF("doc_id", "lang", "text")
 
     // Uncapped control: Y drops on its history edge to X1 (jaccard ≈ .87).
-    val openPath = java.nio.file.Files
-      .createTempDirectory("graft-cur-valve-open").toString
+    val openPath = TestSpark.tempDir("graft-cur-valve-open").toString
     CurationRound.foldBatch(spark, openPath, b0, bench, cfg, 0L)
     CurationRound.foldBatch(spark, openPath, b1, bench, cfg, 1L)
     assert(ids(CurationRound.readRetained(spark, openPath, cfg)) == Set(1L))
@@ -166,8 +163,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
     // SURVIVES. Counting retained docs only (the pre-fix census) would
     // put the shared shingles at pool df 2 ≤ cap and wrongly drop Y.
     val valveCfg = cfg.copy(jaccardDfCap = 2)
-    val cappedPath = java.nio.file.Files
-      .createTempDirectory("graft-cur-valve-cap").toString
+    val cappedPath = TestSpark.tempDir("graft-cur-valve-cap").toString
     CurationRound.foldBatch(spark, cappedPath, b0, bench, valveCfg, 0L)
     CurationRound.foldBatch(spark, cappedPath, b1, bench, valveCfg, 1L)
     assert(ids(CurationRound.readRetained(spark, cappedPath, valveCfg))
@@ -190,8 +186,8 @@ class CurationIncrementalSpec extends AnyFunSuite {
     def batch(k: Int) =
       Seq((k * 10L + 1L, "en", mkDoc(s"t$k")), (k * 10L + 2L, "en", mkDoc(s"u$k")))
         .toDF("doc_id", "lang", "text")
-    val a = java.nio.file.Files.createTempDirectory("graft-cur-cmp-a").toString
-    val b = java.nio.file.Files.createTempDirectory("graft-cur-cmp-b").toString
+    val a = TestSpark.tempDir("graft-cur-cmp-a").toString
+    val b = TestSpark.tempDir("graft-cur-cmp-b").toString
     (0 to 1).foreach { k =>
       CurationRound.foldBatch(spark, a, batch(k), bench, cfg, k.toLong)
       CurationRound.foldBatch(spark, b, batch(k), bench, cfg, k.toLong)
@@ -236,10 +232,8 @@ class CurationIncrementalSpec extends AnyFunSuite {
           (12L, "en", mkDoc("cc"))),
       Seq((21L, "en", mkDoc("bb", 5)),   // shorter near-dup of shipped 2
           (22L, "en", mkDoc("dd"))))
-    val streamed = java.nio.file.Files
-      .createTempDirectory("graft-cur-stream").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-cur-stream-ck").toString
+    val streamed = TestSpark.tempDir("graft-cur-stream").toString
+    val ckpt = TestSpark.tempDir("graft-cur-stream-ck").toString
     val src = MemoryStream[(Long, String, String)]
     val q = CurationRound.streamCuration(
       src.toDF().toDF("doc_id", "lang", "text"), streamed, ckpt, bench, cfg,
@@ -249,8 +243,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
     } finally q.stop()
 
     // ≡ the same three folds driven by hand
-    val manual = java.nio.file.Files
-      .createTempDirectory("graft-cur-manual").toString
+    val manual = TestSpark.tempDir("graft-cur-manual").toString
     batches.zipWithIndex.foreach { case (rows, k) =>
       CurationRound.foldBatch(spark, manual,
         rows.toDF("doc_id", "lang", "text"), bench, cfg, k.toLong)
@@ -289,8 +282,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
     // sweep-scale leak behind the sf10 span-build inflation). Each fold
     // must leave the persistent-RDD set exactly as it found it.
     val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-cur-leak").toString
+    val statePath = TestSpark.tempDir("graft-cur-leak").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet
     CurationRound.foldBatch(spark, statePath,
       Seq((1L, "en", mkDoc("la")), (2L, "en", mkDoc("lb")))
@@ -305,8 +297,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
   }
 
   test("fold on fresh state from an empty batch records zero rows and survives") {
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-cur-empty").toString
+    val statePath = TestSpark.tempDir("graft-cur-empty").toString
     val bench = Seq((900L, "bench words only here.")).toDF("doc_id", "text")
     val empty = Seq.empty[(Long, String, String)].toDF("doc_id", "lang", "text")
     val f = CurationRound.foldBatch(spark, statePath, empty, bench, cfg, 0L)
@@ -368,13 +359,12 @@ class CurationIncrementalSpec extends AnyFunSuite {
 
     // A delta write that fails while the others run: `fps` is a plain
     // file, so its append cannot create the directory.
-    val blocked = java.nio.file.Files.createTempDirectory("graft-cur-fail-w")
+    val blocked = TestSpark.tempDir("graft-cur-fail-w")
     java.nio.file.Files.writeString(blocked.resolve("fps"), "not a directory")
     failedFold(blocked.toString, batch(0), bench, 0L)
 
     // A bench probe that throws inside its job, on a fold with history.
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-cur-fail-p").toString
+    val statePath = TestSpark.tempDir("graft-cur-fail-p").toString
     CurationRound.foldBatch(spark, statePath, batch(0), bench, cfg, 0L)
     val boom = udf((s: String) => {
       if (s != null) throw new IllegalStateException("bench probe failed"); s
@@ -391,8 +381,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
 
   test("every job a fold starts carries one of the fold:* phase labels") {
     val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-cur-labels").toString
+    val statePath = TestSpark.tempDir("graft-cur-labels").toString
     val labels = JobLog.startedBy(spark) {
       CurationRound.foldBatch(spark, statePath,
         Seq((1L, "en", mkDoc("ka")), (2L, "en", mkDoc("kb")))
@@ -411,8 +400,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
 
   test("foldBatch releases its checkpoint blocks with history present: no persistent RDD outlives clearCache") {
     val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-cur-leak-hist").toString
+    val statePath = TestSpark.tempDir("graft-cur-leak-hist").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet
     CurationRound.foldBatch(spark, statePath,
       Seq((1L, "en", mkDoc("ha")), (2L, "en", mkDoc("hb")))
@@ -440,8 +428,7 @@ class CurationIncrementalSpec extends AnyFunSuite {
       (13L, "en", mkDoc("dd")),                       // clean
       (14L, "en", mkDoc("dd", 5) + "\n" + quote))    // in-batch near-dup loser AND contaminated
     def df(b: Seq[(Long, String, String)]) = b.toDF("doc_id", "lang", "text")
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-cur-decontam").toString
+    val statePath = TestSpark.tempDir("graft-cur-decontam").toString
     CurationRound.foldBatch(spark, statePath, df(batch0), bench, cfg, 0L)
     val f1 = funnelRows(
       CurationRound.foldBatch(spark, statePath, df(batch1), bench, cfg, 1L))

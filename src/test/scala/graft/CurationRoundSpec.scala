@@ -134,22 +134,10 @@ class CurationRoundSpec extends AnyFunSuite {
     // double unpersist is harmless
     r.unpersist()
 
-    // SAME contract in the staged seam mode (pinned is empty there —
-    // every frame is parquet-rooted, so release + clearCache is free)
-    val staging = java.nio.file.Files.createTempDirectory("graft-cur-unp").toString
-    val s = CurationRound.runStaged(spark, corpus, bench, cfg, staging)
-    s.unpersist()
-    spark.catalog.clearCache()
-    assert(s.funnel.orderBy($"stage_ord").collect().map(_.toSeq).toSeq
-      == funnelBefore)
-    assert(ids(s.curated) == curatedBefore)
-    assert(s.packed.count() > 0)
-    assert(s.packStats.head().getAs[Long]("n_docs") == curatedBefore.size)
-
     // and via the MEMO path q_curation_round/q_curation_pack consume
     // (memoized unpersists inside the build — the returned frames must
     // still serve every consumer, across cache drops)
-    CurationRound.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
     val m = CurationRound.memoized(spark, "unpersist-spec",
       TextQueries.curationCorpus(spark, TestSpark.Sf0001),
       TextQueries.benchCorpus(spark, TestSpark.Sf0001), cfg)
@@ -160,11 +148,11 @@ class CurationRoundSpec extends AnyFunSuite {
     assert(ids(m.curated) == curatedBefore)
     assert(m.packed.count() > 0)
     assert(m.packStats.head().getAs[Long]("n_docs") == curatedBefore.size)
-    CurationRound.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
   }
 
   test("memoized builds the chain once per (session, corpus); invalidateAll forces a rebuild") {
-    CurationRound.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
     val cfg = TextQueries.curationConfig
     var builds = 0
     def corpus = { builds += 1; TextQueries.curationCorpus(spark, TestSpark.Sf0001) }
@@ -177,59 +165,11 @@ class CurationRoundSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     assert(r1.funnel.count() == 7)
     assert(r1.packStats.head().getAs[Long]("n_docs") == ids(r1.curated).size)
-    CurationRound.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
     val r3 = CurationRound.memoized(spark, "memo-spec", corpus, bench, cfg)
     assert(builds == 2 && !(r3 eq r1))
     assert(ids(r3.curated) == ids(r1.curated))
-    CurationRound.invalidateAll(spark)
-  }
-
-  test("runStaged: staging-table seams produce frame-for-frame the cache-seam output; a re-run resumes from storage") {
-    val cfg = TextQueries.curationConfig
-    val corpus = TextQueries.curationCorpus(spark, TestSpark.Sf0001)
-    val bench = TextQueries.benchCorpus(spark, TestSpark.Sf0001)
-    val staging = java.nio.file.Files.createTempDirectory("graft-cur-stage").toString
-
-    val cached = CurationRound.run(spark, corpus, bench, cfg)
-    val staged = CurationRound.runStaged(spark, corpus, bench, cfg, staging)
-    // seam-for-seam equality of the outputs
-    assert(staged.funnel.orderBy($"stage_ord").collect().map(_.toSeq).toSeq
-      == cached.funnel.orderBy($"stage_ord").collect().map(_.toSeq).toSeq)
-    assert(ids(staged.curated) == ids(cached.curated))
-    assert(staged.packed.orderBy($"doc_id").collect().map(_.toSeq).toSeq
-      == cached.packed.orderBy($"doc_id").collect().map(_.toSeq).toSeq)
-    assert(staged.packStats.head().toSeq == cached.packStats.head().toSeq)
-    cached.unpersist()
-    // every stage committed a reliable table
-    val stages = Seq("s0_gate_census", "s2_gated", "s3_exact_ids",
-      "s4_near_ids", "s5_clean_ids", "s6_mixed_ids")
-    stages.foreach { s =>
-      assert(new java.io.File(staging, s + "/_SUCCESS").exists(), s)
-    }
-
-    // RESUME: re-run against a poisoned corpus — every stage is already
-    // staged, so nothing recomputes and the output matches the ORIGINAL
-    // data (proof the seams read storage, not lineage)
-    val poisoned = corpus.limit(0)
-    val resumed = CurationRound.runStaged(spark, poisoned, bench, cfg, staging)
-    assert(resumed.funnel.orderBy($"stage_ord").collect().map(_.toSeq).toSeq
-      == staged.funnel.orderBy($"stage_ord").collect().map(_.toSeq).toSeq)
-    assert(resumed.packed.orderBy($"doc_id").collect().map(_.toSeq).toSeq
-      == staged.packed.orderBy($"doc_id").collect().map(_.toSeq).toSeq,
-      "resume must rebuild the packed artifact from the staged survivors")
-
-    // RESUME FROM A FAILED STAGE: drop the final stage's table — the
-    // re-run recomputes ONLY it, from the staged stage-5 survivors
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(deleteRec)
-      f.delete(); ()
-    }
-    deleteRec(new java.io.File(staging, "s6_mixed_ids"))
-    val resumed2 = CurationRound.runStaged(spark, poisoned, bench, cfg, staging)
-    assert(resumed2.funnel.orderBy($"stage_ord").collect().map(_.toSeq).toSeq
-      == staged.funnel.orderBy($"stage_ord").collect().map(_.toSeq).toSeq)
-    assert(new java.io.File(staging, "s6_mixed_ids/_SUCCESS").exists())
-    deleteRec(new java.io.File(staging))
+    SessionMemo.invalidateAll(spark)
   }
 
   test("curation funnel on an empty corpus reports zeros, not NaNs") {

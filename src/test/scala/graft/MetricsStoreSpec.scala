@@ -8,7 +8,7 @@ class MetricsStoreSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpStore(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_store_spec").toFile
+    val d = TestSpark.tempDir("graft_store_spec").toFile
     d.delete()
     d.getPath
   }

@@ -18,7 +18,7 @@ class NearDupPipelineSpec extends AnyFunSuite {
 
   test("memoized jaccard/containment pairs are output-identical to the direct operators") {
     val corpus = TextQueries.dupCorpus(spark, TestSpark.Sf0001)
-    NearDupPipeline.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
 
     val memoJ = NearDupPipeline.jaccardPairs(corpus, "spec-corpus", p)
     val dirJ = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 3, 0.5, 10000)
@@ -29,7 +29,7 @@ class NearDupPipelineSpec extends AnyFunSuite {
     val dirC = Dedup.containmentPairs(corpus, "doc_id", "text", 3, 0.8, 10000)
     assert(memoC.schema == dirC.schema)
     assert(rowsOf(memoC) == rowsOf(dirC))
-    NearDupPipeline.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
   }
 
   test("memo serves the materialized table until invalidated; invalidate picks up new data") {
@@ -40,7 +40,7 @@ class NearDupPipelineSpec extends AnyFunSuite {
     val b = Seq(
       (1L, "one two three four five six"),
       (9L, "unrelated content in the second corpus")).toDF("doc_id", "text")
-    NearDupPipeline.invalidate(spark, "memo-test")
+    SessionMemo.invalidate(spark, "memo-test")
 
     val fromA = rowsOf(NearDupPipeline.jaccardPairs(a, "memo-test", p))
     assert(fromA.nonEmpty) // 1-2 duplicate pair present
@@ -48,14 +48,14 @@ class NearDupPipelineSpec extends AnyFunSuite {
     // watch the input (exactly metricsTable's documented behavior).
     assert(rowsOf(NearDupPipeline.jaccardPairs(b, "memo-test", p)) == fromA)
     // New round over changed data: invalidate, then the table rebuilds.
-    NearDupPipeline.invalidate(spark, "memo-test")
+    SessionMemo.invalidate(spark, "memo-test")
     val fromB = rowsOf(NearDupPipeline.jaccardPairs(b, "memo-test", p))
     assert(fromB != fromA && fromB.isEmpty)
     // Distinct corpus keys are isolated entries: rebuilding "memo-test"
     // never touched another key's table.
     val other = rowsOf(NearDupPipeline.jaccardPairs(a, "memo-other", p))
     assert(other == fromA)
-    NearDupPipeline.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
   }
 
   test("a request below the stored floors rebuilds instead of silently narrowing") {
@@ -66,7 +66,7 @@ class NearDupPipelineSpec extends AnyFunSuite {
       (1L, "a b c d e f g h i j"),
       (2L, "a b c d e f g x y z"),
       (3L, "q r s t u v w")).toDF("doc_id", "text")
-    NearDupPipeline.invalidate(spark, "floor-test")
+    SessionMemo.invalidate(spark, "floor-test")
     // Build at the family floors: the 0.43 pair is BELOW them and not in
     // the materialized table.
     assert(NearDupPipeline.jaccardPairs(docs, "floor-test", p).count() == 0)
@@ -78,6 +78,6 @@ class NearDupPipelineSpec extends AnyFunSuite {
     // And the rebuilt (lower-floored) table still serves the original
     // higher floor correctly — filter, not a narrower table.
     assert(NearDupPipeline.jaccardPairs(docs, "floor-test", p).count() == 0)
-    NearDupPipeline.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
   }
 }

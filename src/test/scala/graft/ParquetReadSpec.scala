@@ -14,7 +14,7 @@ class ParquetReadSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestSpark.tempDir(prefix).toString
 
   private def assertSameRead(path: String): Unit = {
     val inferred = spark.read.parquet(path)

@@ -92,7 +92,7 @@ class PartitionDiffSpec extends AnyFunSuite {
   }
 
   test("targetedDiff prunes partitions on a partitioned parquet layout") {
-    val dir = java.nio.file.Files.createTempDirectory("pdiff").toString
+    val dir = TestSpark.tempDir("pdiff").toString
     hive.write.partitionBy("part").parquet(s"$dir/hive")
     sf.write.partitionBy("part").parquet(s"$dir/sf")
     val l = spark.read.parquet(s"$dir/hive")

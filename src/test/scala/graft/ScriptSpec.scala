@@ -316,7 +316,7 @@ class ScriptSpec extends AnyFunSuite {
   }
 
   test("fromCsvFiles loads reference-shaped metadata through the CSV source") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cat")
+    val dir = TestSpark.tempDir("graft-cat")
     val tPath = dir.resolve("schema_table.csv")
     val cPath = dir.resolve("schema_column.csv")
     java.nio.file.Files.writeString(tPath,

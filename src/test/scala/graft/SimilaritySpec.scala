@@ -192,7 +192,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("kmeansFitMemo: the key covers the vector column — another column under the same corpusKey gets its own centroids") {
-    Similarity.invalidateFitMemo(spark)
+    SessionMemo.invalidateAll(spark)
     val df = blobCorpus(nBlobs = 4, perBlob = 50, noise = 0.08)
       .withColumn("flipped", transform($"embedding", x => -x))
     def close(a: Seq[Seq[Double]], b: Seq[Seq[Double]]): Boolean =
@@ -208,7 +208,7 @@ class SimilaritySpec extends AnyFunSuite {
       assert(!close(flipped, plain))
       // the first column's entry is still served from the memo
       assert(Similarity.kmeansFitMemo(df, "memo-cols-spec")._2 eq plain)
-    } finally Similarity.invalidateFitMemo(spark)
+    } finally SessionMemo.invalidateAll(spark)
   }
 
   test("fitted-centroid IVF: high recall on clustered data, edge cases guarded") {

@@ -36,7 +36,7 @@ class SketchesAndSinksSpec extends AnyFunSuite {
   }
 
   test("partitioned sink prunes partitions on read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    val dir = TestSpark.tempDir("graft-sink").toString
     val e = Tables.load(spark, TestSpark.Sf0001, "events")
     Sinks.writePartitioned(e, dir, Seq("event_type"))
     val back = spark.read.parquet(dir).filter($"event_type" === "click")
@@ -47,7 +47,7 @@ class SketchesAndSinksSpec extends AnyFunSuite {
   }
 
   test("sorted sink round-trips with identical data") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sort").toString
+    val dir = TestSpark.tempDir("graft-sort").toString
     val e = Tables.load(spark, TestSpark.Sf0001, "events")
     Sinks.writeSorted(e, dir, Seq("ts"), files = 2)
     assert(spark.read.parquet(dir).count() == e.count())
@@ -56,8 +56,8 @@ class SketchesAndSinksSpec extends AnyFunSuite {
   test("CSV and JSONL sources round-trip orders with an explicit schema") {
     val orders = Tables.load(spark, TestSpark.Sf0001, "orders")
       .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice")
-    val csvDir = java.nio.file.Files.createTempDirectory("graft-csv").toString
-    val jsonDir = java.nio.file.Files.createTempDirectory("graft-json").toString
+    val csvDir = TestSpark.tempDir("graft-csv").toString
+    val jsonDir = TestSpark.tempDir("graft-json").toString
     orders.write.mode("overwrite").option("header", "true").csv(csvDir)
     orders.write.mode("overwrite").json(jsonDir)
     def key(df: org.apache.spark.sql.DataFrame) =
@@ -70,7 +70,7 @@ class SketchesAndSinksSpec extends AnyFunSuite {
   }
 
   test("CSV report sink writes one bounded headered file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-report").toString
+    val dir = TestSpark.tempDir("graft-report").toString
     val m = TableDiff.metrics(Fixtures.hiveOrders(spark, TestSpark.Sf0001),
       Fixtures.sfOrders(spark, TestSpark.Sf0001), "orders", "o_orderkey")
     Sinks.writeCsvReport(m, dir)
@@ -100,7 +100,7 @@ class SketchesAndSinksSpec extends AnyFunSuite {
 
   test("writeSorted with a file count gives files DISJOINT sort-key ranges") {
     import graft.sources.Sinks
-    val dir = java.nio.file.Files.createTempDirectory("graft-sorted").toString
+    val dir = TestSpark.tempDir("graft-sorted").toString
     val df = spark.range(0, 10000).toDF("k")
       .withColumn("v", col("k") * 2)
     Sinks.writeSorted(df, dir, Seq("k"), files = 4)
@@ -124,7 +124,7 @@ class SketchesAndSinksSpec extends AnyFunSuite {
 
   test("loadJsonlQuarantine: good rows pass, malformed lines land in quarantine") {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val dir = java.nio.file.Files.createTempDirectory("jsonlq")
+    val dir = TestSpark.tempDir("jsonlq")
     val data = dir.resolve("in.jsonl")
     java.nio.file.Files.writeString(data,
       """{"id": 1, "name": "a"}
@@ -157,7 +157,7 @@ class SketchesAndSinksSpec extends AnyFunSuite {
   }
 
   test("ORC round-trip: partitioned layout prunes, filters push to the ORC scan") {
-    val dir = java.nio.file.Files.createTempDirectory("orcsink").toString
+    val dir = TestSpark.tempDir("orcsink").toString
     val df = Fixtures.hiveOrders(spark, TestSpark.Sf0001)
       .withColumn("o_status_part", col("o_orderstatus"))
     Sinks.writeOrc(df, dir, partitionCols = Seq("o_status_part"))

@@ -158,7 +158,7 @@ class SkewAndAggSpec extends AnyFunSuite {
   }
 
   test("streaming dedup drops duplicate event_ids within the watermark") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dup").toString
+    val dir = TestSpark.tempDir("graft-dup").toString
     val e = Tables.load(spark, TestSpark.Sf0001, "events")
       .withColumn("ts", col("ts").cast("timestamp"))
     e.unionByName(e).write.mode("overwrite").parquet(dir) // every event twice

@@ -15,7 +15,7 @@ class SpanPipelineSpec extends AnyFunSuite {
 
   test("memoized census/strike are output-identical to the direct operators") {
     val docs = Tables.load(spark, TestSpark.Sf0001, "documents")
-    SpanPipeline.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
 
     val memoStats = SpanPipeline.spanDedupStats(docs, "span-spec", "doc_id", "text", k = 6)
     val dirStats = Dedup.duplicatedSpans(docs, "doc_id", "text", k = 6)
@@ -27,7 +27,7 @@ class SpanPipelineSpec extends AnyFunSuite {
     val dirStrike = Dedup.strikeDuplicatedSpans(docs, "doc_id", "text", k = 6)
     assert(memoStrike.schema == dirStrike.schema)
     assert(rowsOf(memoStrike) == rowsOf(dirStrike))
-    SpanPipeline.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
   }
 
   test("memo staleness contract: stale until invalidated, keys isolated") {
@@ -37,17 +37,17 @@ class SpanPipelineSpec extends AnyFunSuite {
       (3L, "totally different words appear in this one")).toDF("doc_id", "text")
     val b = Seq((9L, "nine distinct words that never repeat anywhere at all"))
       .toDF("doc_id", "text")
-    SpanPipeline.invalidate(spark, "span-memo")
+    SessionMemo.invalidate(spark, "span-memo")
     val fromA = rowsOf(SpanPipeline.spanDedupStats(a, "span-memo", "doc_id", "text", 6))
     assert(fromA.nonEmpty)
     // same key + different data = stale by contract
     assert(rowsOf(SpanPipeline.spanDedupStats(b, "span-memo", "doc_id", "text", 6)) == fromA)
-    SpanPipeline.invalidate(spark, "span-memo")
+    SessionMemo.invalidate(spark, "span-memo")
     val fromB = rowsOf(SpanPipeline.spanDedupStats(b, "span-memo", "doc_id", "text", 6))
     assert(fromB != fromA)
     // other keys untouched by the rebuild
     assert(rowsOf(SpanPipeline.spanDedupStats(a, "span-other", "doc_id", "text", 6)) == fromA)
-    SpanPipeline.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
   }
 
   test("strike keeps sub-k and no-dup docs whole; fully-struck docs drop") {
@@ -56,12 +56,12 @@ class SpanPipelineSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "a b c d e f"), (2L, "a b c d e f"),
       (3L, "tiny doc"), (4L, "u v w x y z q")).toDF("doc_id", "text")
-    SpanPipeline.invalidate(spark, "strike-edge")
+    SessionMemo.invalidate(spark, "strike-edge")
     val out = SpanPipeline.strike(docs, "strike-edge", "doc_id", "text", 6)
       .orderBy($"doc_id").collect()
     assert(out.map(_.getLong(0)).toSeq == Seq(3L, 4L))
     assert(out(0).getAs[String]("text_out") == "tiny doc")
     assert(out(1).getAs[Long]("n_kept") == 7L)
-    SpanPipeline.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
   }
 }

@@ -19,7 +19,7 @@ class StreamingSpec extends AnyFunSuite {
   /** Stage sf0.001 events (micros ts) to a temp dir so readStream gets a
     * clean schema, then drive the stream synchronously. */
   private lazy val stagedDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = TestSpark.tempDir("graft-stream").toString
     Tables.load(spark, TestSpark.Sf0001, "events")
       .withColumn("ts", col("ts").cast("timestamp"))
       .write.mode("overwrite").parquet(dir)
@@ -93,8 +93,8 @@ class StreamingSpec extends AnyFunSuite {
     val dw = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
       .toDF("id", "name", "v")
     val src = MemoryStream[(Long, String, Long)]
-    val stage = java.nio.file.Files.createTempDirectory("graft-stage").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val stage = TestSpark.tempDir("graft-stage").toString
+    val ckpt = TestSpark.tempDir("graft-ckpt").toString
     val q = EventStream.stageDeltas(
       src.toDS().toDF("id", "name", "v"), dw, "id", stage, ckpt)
     try {
@@ -118,8 +118,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, String, Long)]
-    val sumDir = java.nio.file.Files.createTempDirectory("graft-cksum").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cksum-ck").toString
+    val sumDir = TestSpark.tempDir("graft-cksum").toString
+    val ckpt = TestSpark.tempDir("graft-cksum-ck").toString
     val q = EventStream.maintainChecksums(
       src.toDS().toDF("id", "part", "v"), "part", Seq("id"), sumDir, ckpt)
     val all = Seq(
@@ -499,8 +499,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-dup").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-dup-ck").toString
+    val stateDir = TestSpark.tempDir("graft-dup").toString
+    val ckpt = TestSpark.tempDir("graft-dup-ck").toString
     val fp = graft.operators.TextAnalysis.docFingerprint(col("text"))
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("doc_id", "text", "source"), stateDir, ckpt,
@@ -535,8 +535,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, java.sql.Timestamp, Long, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-trans").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-trans-ck").toString
+    val stateDir = TestSpark.tempDir("graft-trans").toString
+    val ckpt = TestSpark.tempDir("graft-trans-ck").toString
     def t(ms: Long) = new java.sql.Timestamp(ms)
     val q = EventStream.maintainTransitionState(
       src.toDS().toDF("user_id", "ts", "event_id", "event_type"),
@@ -574,8 +574,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, Double, Int)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-auc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-auc-ck").toString
+    val stateDir = TestSpark.tempDir("graft-auc").toString
+    val ckpt = TestSpark.tempDir("graft-auc-ck").toString
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("grp", "score", "pos"), stateDir, ckpt, Eval.aucCensus,
       b => Eval.aucHistogram(b, "grp", "score", $"pos" === 1))
@@ -609,8 +609,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-cnt").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cnt-ck").toString
+    val stateDir = TestSpark.tempDir("graft-cnt").toString
+    val ckpt = TestSpark.tempDir("graft-cnt-ck").toString
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("event_type", "d"), stateDir, ckpt,
       Monitoring.countCensus(Seq("event_type")),
@@ -667,8 +667,8 @@ class StreamingSpec extends AnyFunSuite {
     val cuts = graft.operators.Monitoring.psiCuts(leftDf, "v", nBuckets = 10)
     def maintain(vals: Seq[Double], tag: String): String = {
       val src = MemoryStream[Double]
-      val stateDir = java.nio.file.Files.createTempDirectory(s"graft-psi-$tag").toString
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft-psi-$tag-ck").toString
+      val stateDir = TestSpark.tempDir(s"graft-psi-$tag").toString
+      val ckpt = TestSpark.tempDir(s"graft-psi-$tag-ck").toString
       val q = EventStream.maintainCensusState(
         src.toDS().toDF("v"), stateDir, ckpt, Monitoring.psiCensus,
         b => Monitoring.psiBucketState(b, "v", cuts))
@@ -709,8 +709,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-lp").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-lp-ck").toString
+    val stateDir = TestSpark.tempDir("graft-lp").toString
+    val ckpt = TestSpark.tempDir("graft-lp-ck").toString
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("source", "lang"), stateDir, ckpt, Vocab.langPurityCensus,
       b => Vocab.langPurityState(b, "source", "lang"))
@@ -749,8 +749,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-sd").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sd-ck").toString
+    val stateDir = TestSpark.tempDir("graft-sd").toString
+    val ckpt = TestSpark.tempDir("graft-sd-ck").toString
     // web's (web, 'the')/(web, 'data') cells are SPLIT across batches —
     // their counts must ADD across the fold for the JS read to match a
     // batch recompute.
@@ -797,8 +797,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-c4r").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-c4r-ck").toString
+    val stateDir = TestSpark.tempDir("graft-c4r").toString
+    val ckpt = TestSpark.tempDir("graft-c4r-ck").toString
     val passPage = (1 to 5).map(i => s"good sentence number $i.").mkString("\n")
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("source", "text"), stateDir, ckpt,
@@ -833,8 +833,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, Array[Float])]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-sil").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sil-ck").toString
+    val stateDir = TestSpark.tempDir("graft-sil").toString
+    val ckpt = TestSpark.tempDir("graft-sil-ck").toString
     val cents = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
     // cell 0's members are SPLIT across batches (incl. the equidistant
     // probe) — its sums must ADD across the fold for the mean to read
@@ -873,8 +873,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-pii").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-pii-ck").toString
+    val stateDir = TestSpark.tempDir("graft-pii").toString
+    val ckpt = TestSpark.tempDir("graft-pii-ck").toString
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("source", "text"), stateDir, ckpt,
       TextAnalysis.piiRateCensus, b => TextAnalysis.piiRateState(b, "source", "text"))
@@ -918,8 +918,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-compact-ck").toString
+    val stateDir = TestSpark.tempDir("graft-compact").toString
+    val ckpt = TestSpark.tempDir("graft-compact-ck").toString
     val fp = graft.operators.TextAnalysis.docFingerprint(col("text"))
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("doc_id", "text", "source"), stateDir, ckpt,
@@ -981,8 +981,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-autoc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-autoc-ck").toString
+    val stateDir = TestSpark.tempDir("graft-autoc").toString
+    val ckpt = TestSpark.tempDir("graft-autoc-ck").toString
     val fp = graft.operators.TextAnalysis.docFingerprint(col("text"))
     // everyBatches = 2: the policy must fire INSIDE the stream, twice
     // over four batches, with no maintenance owner in sight.
@@ -1035,7 +1035,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("compactCensusState: append-first summary is read-correct with no directory swap; re-compaction without new deltas is a no-op") {
     // Build a small uncompacted directory by hand (batch-stamped deltas)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-appf").toString
+    val stateDir = TestSpark.tempDir("graft-appf").toString
     val census = Census(Seq("k"), Seq("n"))
     Seq(("a", 1L), ("b", 2L)).toDF("k", "n")
       .withColumn("__batch_id", lit(0L)).write.mode("append").parquet(stateDir)
@@ -1065,7 +1065,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(new java.io.File(stateDir).listFiles
       .count(_.getName.endsWith(".parquet")) == 1)
     // gc on a never-compacted directory is a no-op
-    val plainDir = java.nio.file.Files.createTempDirectory("graft-appf2").toString
+    val plainDir = TestSpark.tempDir("graft-appf2").toString
     Seq(("a", 1L)).toDF("k", "n")
       .withColumn("__batch_id", lit(0L)).write.mode("append").parquet(plainDir)
     assert(EventStream.gcCensusState(spark, plainDir) == 0)
@@ -1078,7 +1078,7 @@ class StreamingSpec extends AnyFunSuite {
     // append-first design has NO such window; this pins the concrete
     // interleaving: a fresh delta lands BETWEEN the summary append and
     // the gc (exactly where a concurrent maintainer would put it).
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-race").toString
+    val stateDir = TestSpark.tempDir("graft-race").toString
     val census = Census(Seq("k"), Seq("n"))
     def delta(bid: Long, rows: (String, Long)*): Unit =
       rows.toSeq.toDF("k", "n").withColumn("__batch_id", lit(bid))
@@ -1109,8 +1109,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-dw").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-dw-ck").toString
+    val stateDir = TestSpark.tempDir("graft-dw").toString
+    val ckpt = TestSpark.tempDir("graft-dw-ck").toString
     // struct's token/bigram mass is SPLIT across batches — its census
     // sums must ADD across the fold for the MW chain to see the same
     // excess loss as the one-shot fit.
@@ -1153,8 +1153,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-gr").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-gr-ck").toString
+    val stateDir = TestSpark.tempDir("graft-gr").toString
+    val ckpt = TestSpark.tempDir("graft-gr-ck").toString
     val stops = Seq("the", "a")
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("source", "text"), stateDir, ckpt,
@@ -1191,8 +1191,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-assoc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-assoc-ck").toString
+    val stateDir = TestSpark.tempDir("graft-assoc").toString
+    val ckpt = TestSpark.tempDir("graft-assoc-ck").toString
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("source", "lang"), stateDir, ckpt, Eval.assocCensus,
       b => Eval.assocState(b, "source", "lang"))
@@ -1233,8 +1233,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-hhi").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-hhi-ck").toString
+    val stateDir = TestSpark.tempDir("graft-hhi").toString
+    val ckpt = TestSpark.tempDir("graft-hhi-ck").toString
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("lang", "source"), stateDir, ckpt, Eval.hhiCensus,
       b => Eval.hhiState(b, "lang", "source"))
@@ -1265,8 +1265,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, Double)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-ks").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ks-ck").toString
+    val stateDir = TestSpark.tempDir("graft-ks").toString
+    val ckpt = TestSpark.tempDir("graft-ks-ck").toString
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("grp", "v"), stateDir, ckpt, Eval.ksCensus,
       b => Eval.ksState(b, "grp", "v"))
@@ -1299,8 +1299,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(String, String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-fert").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-fert-ck").toString
+    val stateDir = TestSpark.tempDir("graft-fert").toString
+    val ckpt = TestSpark.tempDir("graft-fert-ck").toString
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("source", "lang", "text"), stateDir, ckpt,
       Vocab.fertilityCensus, b => Vocab.fertilityState(b, "text", "source", "lang"))
@@ -1330,8 +1330,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-dsir").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-dsir-ck").toString
+    val stateDir = TestSpark.tempDir("graft-dsir").toString
+    val ckpt = TestSpark.tempDir("graft-dsir-ck").toString
     val q = EventStream.maintainCensusState(
       src.toDS().toDF("doc_id", "text"), stateDir, ckpt, Vocab.dsirModelCensus,
       b => Vocab.dsirCensus(b, "doc_id", "text", isTarget = $"doc_id" % 7 === 0))
@@ -1364,8 +1364,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-nov").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-nov-ck").toString
+    val stateDir = TestSpark.tempDir("graft-nov").toString
+    val ckpt = TestSpark.tempDir("graft-nov-ck").toString
     val q = EventStream.maintainNoveltyState(
       src.toDS().toDF("doc_id", "text", "source"), "text", "source",
       stateDir, ckpt)

@@ -163,7 +163,7 @@ class TableDiffSpec extends AnyFunSuite {
     // memoized per (session, dir): second call returns the same frame
     assert(CoreQueries.metricsTable(spark, TestSpark.Sf0001) eq t)
     // a new validation round invalidates the memo and re-materializes
-    CoreQueries.invalidateMetricsTable(spark, TestSpark.Sf0001)
+    SessionMemo.invalidate(spark, TestSpark.Sf0001)
     val t2 = CoreQueries.metricsTable(spark, TestSpark.Sf0001)
     assert(!(t2 eq t))
     assert(t2.collect().map(_.toString).sorted.toSeq == fresh)

@@ -91,7 +91,7 @@ class UnigramSpec extends AnyFunSuite {
   }
 
   test("fitMemo: one fit per (session, corpus, params); invalidateAll forces a refit; model identical to a direct fit") {
-    Unigram.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
     val docs = Tables.load(spark, TestSpark.Sf0001, "documents").limit(100)
     val direct = Unigram.fit(docs, "text", vocabSize = 50, rounds = 2,
       maxPieceLen = 4, seedSize = 500)
@@ -107,11 +107,11 @@ class UnigramSpec extends AnyFunSuite {
     val m3 = Unigram.fitMemo(docs, "memo-spec", "text", vocabSize = 40,
       rounds = 2, maxPieceLen = 4, seedSize = 500)
     assert(!(m3 eq m1) && m3.pieces.length != m1.pieces.length)
-    Unigram.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
     val m4 = Unigram.fitMemo(docs, "memo-spec", "text", vocabSize = 50,
       rounds = 2, maxPieceLen = 4, seedSize = 500)
     assert(!(m4 eq m1) && m4.pieces.toSeq == m1.pieces.toSeq)
-    Unigram.invalidateAll(spark)
+    SessionMemo.invalidateAll(spark)
   }
 
   test("tokenizerFertility: unigram lane totals equal the per-doc encode; null dims route around; ratios are exact floors") {
@@ -164,8 +164,8 @@ class UnigramSpec extends AnyFunSuite {
     val model = Unigram.fit(all.toDF("doc_id", "source", "lang", "text"),
       "text", vocabSize = 30, rounds = 1, maxPieceLen = 3, seedSize = 100)
     val src = MemoryStream[(Long, String, String, String)]
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-tokf").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tokf-ck").toString
+    val stateDir = TestSpark.tempDir("graft-tokf").toString
+    val ckpt = TestSpark.tempDir("graft-tokf-ck").toString
     val q = graft.streaming.EventStream.maintainCensusState(
       src.toDS().toDF("doc_id", "source", "lang", "text"), stateDir, ckpt,
       Unigram.tokenizerFertilityCensus,

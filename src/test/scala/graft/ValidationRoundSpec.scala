@@ -163,8 +163,8 @@ class ValidationRoundSpec extends AnyFunSuite {
       (5L, "unique content nowhere else found", "wiki"),
       (6L, "totally fresh words appearing once", "mail"))
       .toDF("doc_id", "text", "source")
-    val dupDir = java.nio.file.Files.createTempDirectory("graft-vr-dup").toString
-    val novDir = java.nio.file.Files.createTempDirectory("graft-vr-nov").toString
+    val dupDir = TestSpark.tempDir("graft-vr-dup").toString
+    val novDir = TestSpark.tempDir("graft-vr-nov").toString
     val fp = TextAnalysis.docFingerprint(col("text"))
     Seq(docs.filter($"doc_id" <= 3), docs.filter($"doc_id" > 3))
       .zipWithIndex.foreach { case (b, i) =>
@@ -217,7 +217,7 @@ class ValidationRoundSpec extends AnyFunSuite {
       (1L, passDoc, "web"), (2L, "too short", "web"),
       (3L, passDoc, "wiki"), (4L, passDoc, "wiki"))
       .toDF("doc_id", "text", "source")
-    val gDir = java.nio.file.Files.createTempDirectory("graft-vr-gop").toString
+    val gDir = TestSpark.tempDir("graft-vr-gop").toString
     // state written exactly as maintainCensusState does, split in two
     // batches so web's counts fold across the batch boundary
     Seq(docs.filter($"doc_id" <= 2), docs.filter($"doc_id" > 2))
@@ -253,7 +253,7 @@ class ValidationRoundSpec extends AnyFunSuite {
       (3L, "call 555-123-4567", "wiki"), (4L, "clean", "wiki"),
       (5L, "clean", "wiki"))
       .toDF("doc_id", "text", "source")
-    val pDir = java.nio.file.Files.createTempDirectory("graft-vr-pii").toString
+    val pDir = TestSpark.tempDir("graft-vr-pii").toString
     // state written exactly as maintainCensusState does, split so web's
     // counts fold across the batch boundary
     Seq(docs.filter($"doc_id" <= 1), docs.filter($"doc_id" > 1))
@@ -300,7 +300,7 @@ class ValidationRoundSpec extends AnyFunSuite {
     val (h, f) = (Fixtures.hiveOrders(spark, dir), Fixtures.sfOrders(spark, dir))
     val region = graft.sources.Tables.load(spark, dir, "region")
     val nation = graft.sources.Tables.load(spark, dir, "nation")
-    val dupDir = java.nio.file.Files.createTempDirectory("graft-vr-par").toString
+    val dupDir = TestSpark.tempDir("graft-vr-par").toString
     graft.operators.Monitoring.dupRateState(
         Seq((1L, "alpha beta", "web"), (2L, "alpha beta", "web")).toDF("doc_id", "text", "source"),
         "source", graft.operators.TextAnalysis.docFingerprint(col("text")))

@@ -193,6 +193,16 @@ class VocabStatsSpec extends AnyFunSuite {
       Vocab.overlapMinHashFromState(folded, numHashes = 0))
   }
 
+  test("overlapMinHashFromState leaves no persisted block behind") {
+    val docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val est = Vocab.overlapMinHashFromState(
+      Vocab.sourceNoveltyState(docs, "text", "source"))
+    assert(est.collect().nonEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "the signature frame must not stay cached after the call")
+  }
+
   test("sourceOverlap: overlapFromState over folded batches equals full recompute") {
     val docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
     val b1 = docs.filter($"doc_id" % 2 === 0)

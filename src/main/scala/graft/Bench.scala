@@ -3,29 +3,35 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** A cross-query memo the suite shares: the build that fills it (timed
-    * as its own `_…_build` row) and the queries that reuse it. Every
-    * memo drops through [[SessionMemo.invalidateAll]]. */
+    * as its own `_…_build` row, so a chunked sweep cannot pin the build
+    * cost on whichever family query runs first) and the queries that
+    * reuse it. Every memo drops through [[SessionMemo.invalidateAll]]. */
   final case class SharedBuild(name: String, family: Set[String],
-                               build: (SparkSession, String) => Unit)
+                               build: (SparkSession, String) => Any)
 
-  val sharedBuilds: Seq[SharedBuild] = Seq(
-    SharedBuild("_neardup_pairs_build", Set("q_dedup_ngram_jaccard",
-        "q_dedup_clusters", "q_dedup_canonical", "q_dedup_containment",
-        "q_pagerank", "q_graph_degree", "q_dedup_threshold_curve"),
-      graft.queries.TextQueries.buildNearDupPairs),
-    SharedBuild("_span_census_build", Set("q_span_dedup", "q_span_strike"),
-      graft.queries.TextQueries.buildSpanCensus),
-    SharedBuild("_curation_chain_build", Set("q_curation_round", "q_curation_pack"),
-      graft.queries.TextQueries.buildCurationChain),
-    SharedBuild("_unigram_fit_build", Set("q_unigram_vocab", "q_unigram_encode",
-        "q_tokenizer_fertility"),
-      graft.queries.TextQueries.buildUnigramFit),
-    SharedBuild("_kmeans_fit_build", Set("q_ann_ivf_fit", "q_cluster_cap_sample",
-        "q_silhouette"),
-      graft.queries.SimilarityQueries.buildKmeansFit),
-    SharedBuild("_metrics_table_build", Set("q_metrics_filter",
-        "q_discrepancy_lookup"),
-      (s, dir) => { graft.queries.CoreQueries.metricsTable(s, dir); () }))
+  val sharedBuilds: Seq[SharedBuild] = {
+    import graft.queries.{CoreQueries, SimilarityQueries, TextQueries}
+    Seq(
+      SharedBuild("_neardup_pairs_build", Set("q_dedup_ngram_jaccard",
+          "q_dedup_clusters", "q_dedup_canonical", "q_dedup_containment",
+          "q_pagerank", "q_graph_degree", "q_dedup_threshold_curve"),
+        (s, dir) => graft.operators.NearDupPipeline.pairsTable(
+          TextQueries.dupCorpus(s, dir), TextQueries.nearDupParams)),
+      SharedBuild("_span_census_build", Set("q_span_dedup", "q_span_strike"),
+        (s, dir) => graft.operators.SpanPipeline.censusTable(
+          graft.sources.Tables.load(s, dir, "documents"), "doc_id", "text", k = 6)),
+      SharedBuild("_curation_chain_build", Set("q_curation_round", "q_curation_pack"),
+        TextQueries.curationResult),
+      SharedBuild("_unigram_fit_build", Set("q_unigram_vocab", "q_unigram_encode",
+          "q_tokenizer_fertility"),
+        TextQueries.unigramModel),
+      SharedBuild("_kmeans_fit_build", Set("q_ann_ivf_fit", "q_cluster_cap_sample",
+          "q_silhouette"),
+        SimilarityQueries.embeddingCentroids),
+      SharedBuild("_metrics_table_build", Set("q_metrics_filter",
+          "q_discrepancy_lookup"),
+        CoreQueries.metricsTable))
+  }
 
   /** Median of the timed samples — robust to a single GC pause / JIT blip
     * in a way neither mean nor min is (min hides a genuinely bimodal

@@ -821,14 +821,13 @@ object CurationRound {
   // so the id-scale survivor table stays until application end.
   private val memo = SessionMemo[Config, Result]()
 
-  /** The chain's Result for (`corpusKey`, `cfg`), built at most once
-    * per session ([[SessionMemo]]): first caller runs the chain (and
-    * releases its stage caches — the returned frames don't need them);
-    * later callers get the same Result. */
-  def memoized(spark: SparkSession, corpusKey: String, corpus: => DataFrame,
-               bench: => DataFrame, cfg: Config): Result =
-    memo(spark, corpusKey, cfg) {
-      val r = run(spark, corpus, bench, cfg)
+  /** The chain's Result for (`corpus`, `bench`, `cfg`), built at most
+    * once per session ([[SessionMemo]]): first caller runs the chain
+    * (and releases its stage caches — the returned frames don't need
+    * them); later callers get the same Result. */
+  def memoized(corpus: DataFrame, bench: DataFrame, cfg: Config): Result =
+    memo(Seq(corpus, bench), cfg) {
+      val r = run(corpus.sparkSession, corpus, bench, cfg)
       r.unpersist()
       r
     }

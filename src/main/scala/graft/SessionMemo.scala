@@ -5,14 +5,27 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** One family of cross-query memos: a value built at most once per
-  * (session, corpusKey, params) and shared by every consumer of it —
-  * the reference's write-once `dw_data_metrics` table that every tool
-  * queries (snowflake_tool.py:23-39), applied to the near-dup pair
-  * table, the span census, the metrics table, the curation chain and
-  * the fitted unigram and k-means models.
+  * input and shared by every consumer of it — the reference's
+  * write-once `dw_data_metrics` table that every tool queries
+  * (snowflake_tool.py:23-39), applied to the near-dup pair table, the
+  * span census, the metrics table, the curation chain and the fitted
+  * unigram and k-means models.
+  *
+  * KEY: (session, each input frame's canonicalized analyzed plan, the
+  * (path, length, mtime) of every file those plans scan, params). Two
+  * independent constructions of one query over the same files share an
+  * entry; a frame over a replaced or rewritten file gets a fresh build,
+  * which drops the entry it supersedes (same session, plans and params)
+  * through the family's `release`. The file list is each scan's own
+  * listing, taken when the frame was built, so keying costs no I/O. An
+  * input whose plan never equals itself — one holding a `udaf`, whose
+  * buffer encoder differs per construction — misses on every call:
+  * safe, but it builds every time.
   *
   * Per-key double-checked: the map's bin lock is held only long enough
   * to INSTALL a lazy holder, and the build runs under the holder's own
@@ -20,40 +33,39 @@ import org.apache.spark.sql.SparkSession
   * build in parallel, while two callers racing on the SAME key build
   * exactly once. A build that throws leaves the holder unforced; the
   * next caller for that key retries.
-  *
-  * STALENESS CONTRACT: a memo does NOT watch its input. The key must
-  * name everything the value depends on except the data itself (the
-  * corpus key names the data); a caller starting a new round over
-  * changed data calls [[SessionMemo.invalidate]] first. Dropping an
-  * entry calls the family's `release` on its value (the parquet-backed
-  * families delete their table); every entry of a session goes when its
-  * application ends.
   */
 final class SessionMemo[P, V] private (release: V => Unit) {
-  private type Key = (SparkSession, String, P)
-  private final class Holder(thunk: () => V) {
+  private type Key = (SparkSession, Seq[LogicalPlan], P)
+  private final class Holder(val files: Seq[(String, Long, Long)], thunk: () => V) {
     @volatile var built = false
     lazy val value: V = { val v = thunk(); built = true; v }
   }
   private val m = new ConcurrentHashMap[Key, Holder]()
 
-  /** The value for (`spark`, `corpusKey`, `params`), building it on the
-    * first call. */
-  def apply(spark: SparkSession, corpusKey: String, params: P)(build: => V): V = {
+  /** The value for (`inputs`, `params`), building it on the first call
+    * and again whenever a file the inputs scan has changed. */
+  def apply(inputs: Seq[DataFrame], params: P)(build: => V): V = {
+    val spark = inputs.head.sparkSession
     SessionMemo.track(spark.sparkContext)
-    m.computeIfAbsent((spark, corpusKey, params), _ => new Holder(() => build)).value
+    val plans = inputs.map(_.queryExecution.analyzed)
+    val files = plans.flatMap(SessionMemo.scannedFiles).distinct.sorted
+    var superseded: Option[Holder] = None
+    val h = m.compute((spark, plans.map(_.canonicalized), params), (_, old) =>
+      if (old != null && old.files == files) old
+      else { superseded = Option(old); new Holder(files, () => build) })
+    superseded.filter(_.built).foreach(o => release(o.value))
+    h.value
   }
 
-  /** Drop every entry whose key matches `p`, releasing built values. A
-    * caller mid-build keeps its holder; the entry just stops being
-    * served to new callers (its files still go at application end when
-    * they live under [[SessionMemo.tempDir]]). */
-  private def drop(p: (SparkSession, String) => Boolean): Unit = {
+  /** Drop every entry whose session matches `p`, releasing built
+    * values. A caller mid-build keeps its holder; the entry just stops
+    * being served to new callers (its files still go at application end
+    * when they live under [[SessionMemo.tempDir]]). */
+  private def drop(p: SparkSession => Boolean): Unit = {
     val it = m.entrySet.iterator()
     while (it.hasNext) {
       val e = it.next()
-      val (spark, corpusKey, _) = e.getKey
-      if (p(spark, corpusKey) && m.remove(e.getKey, e.getValue) && e.getValue.built)
+      if (p(e.getKey._1) && m.remove(e.getKey, e.getValue) && e.getValue.built)
         release(e.getValue.value)
     }
   }
@@ -72,15 +84,19 @@ object SessionMemo {
     memo
   }
 
-  /** Drop `spark`'s entries under `corpusKey` in every family — the
-    * "new round over changed data" hook. */
-  def invalidate(spark: SparkSession, corpusKey: String): Unit =
-    families.forEach(_.drop((s, k) => (s eq spark) && k == corpusKey))
-
   /** Drop every entry `spark` owns in every family — the bench's
     * pass-boundary hook. */
   def invalidateAll(spark: SparkSession): Unit =
-    families.forEach(_.drop((s, _) => s eq spark))
+    families.forEach(_.drop(_ eq spark))
+
+  /** (path, length, mtime) of every file `plan` scans, from each file
+    * relation's listing as it stood when the frame was built. */
+  private def scannedFiles(plan: LogicalPlan): Seq[(String, Long, Long)] =
+    plan.collectWithSubqueries { case l: LogicalRelation => l.relation }.flatMap {
+      case r: HadoopFsRelation => r.location.listFiles(Nil, Nil).flatMap(_.files)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      case _ => Nil
+    }
 
   /** A fresh directory path, never created here, deleted when `spark`'s
     * application ends. The process id keeps two JVMs on one machine
@@ -107,7 +123,7 @@ object SessionMemo {
       liveDirs.update(sc, Nil)
       sc.addSparkListener(new SparkListener {
         override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
-          families.forEach(_.drop((s, _) => s.sparkContext eq sc))
+          families.forEach(_.drop(_.sparkContext eq sc))
           liveDirs.synchronized(liveDirs.remove(sc)).toList.flatten
             .foreach(deleteRecursively)
         }

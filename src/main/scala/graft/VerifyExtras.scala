@@ -588,8 +588,7 @@ object VerifyExtras {
     import org.apache.spark.sql.functions._
     val d = graft.sources.Tables.load(spark, sfDir, "documents")
     // the queries' own memo'd fit (same key) — one EM run per session
-    val model = graft.operators.Unigram.fitMemo(d, sfDir, "text",
-      vocabSize = 200, rounds = 2, maxPieceLen = 5, seedSize = 2000)
+    val model = graft.queries.TextQueries.unigramModel(spark, sfDir)
     val agg = graft.operators.Unigram.encodeStats(d, "doc_id", "text", model)
       .agg(sum(col("n_chars_tok")).as("c"), sum(col("n_pieces")).as("t"),
         count(lit(1)).as("n")).head()

@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   */
 object Classify {
 
+  /** Most labels [[naiveBayesConfusion]] accepts: the class-pivoted
+    * model carries two columns and one aggregate per label, so a label
+    * column past a few hundred values (an id mistaken for a label)
+    * would blow up the plan and its codegen. */
+  val MaxLabels = 256
+
   /** Multinomial Naive Bayes self-classification CONFUSION MATRIX:
     * fit per-class token multinomials over (textCol, labelCol), score
     * every document against every class, and report (label, predicted,
@@ -76,17 +82,21 @@ object Classify {
       .agg(count(lit(1)).as("tf"))
     val labeledTf = tf.join(docs, Seq("__doc"))
     // Class stats COLLECT to the driver — the classifier's class
-    // dimension (a handful of labels; the bounded fitted-model collect
-    // pattern, like kmeansFit's centroids), Spark-sorted so the
-    // tie-break below uses Spark's own label ordering. nDocs needs no
-    // extra job: every doc carries ONE label, so the per-class
-    // distinct-doc counts sum to the labeled-doc total.
-    val classes = labeledTf.groupBy(col("label"))
+    // dimension (at most MaxLabels labels, and the collect stops one
+    // past it; the bounded fitted-model collect pattern, like
+    // kmeansFit's centroids), Spark-sorted so the tie-break below uses
+    // Spark's own label ordering. nDocs needs no extra job: the
+    // rollup's grand-total row (the null label — labels are non-null
+    // here) counts the distinct labeled docs, so a doc id filed under
+    // two labels counts once.
+    val (totals, classRows) = labeledTf.rollup(col("label"))
       .agg(count_distinct(col("__doc")).as("n_docs_c"),
         sum(col("tf")).as("tok_c"))
       .orderBy(col("label"))
+      .limit(MaxLabels + 2)
       .collect()
-      .map(r => (r.get(0), r.getLong(1), r.getLong(2)))
+      .partition(_.isNullAt(0))
+    val classes = classRows.map(r => (r.get(0), r.getLong(1), r.getLong(2)))
     if (classes.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -97,7 +107,9 @@ object Classify {
             df.schema(labelCol).dataType),
           org.apache.spark.sql.types.StructField("n_docs",
             org.apache.spark.sql.types.LongType, nullable = false))))
-    val nDocs = classes.map(_._2).sum
+    require(classes.length <= MaxLabels,
+      s"label column $labelCol has more than $MaxLabels distinct labels")
+    val nDocs = totals.head.getLong(1)
     // Vocabulary size over ALL docs' tokens (unlabeled docs count
     // toward V — the smoothing denominator — even though they are
     // never scored).

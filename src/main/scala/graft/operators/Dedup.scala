@@ -368,8 +368,8 @@ object Dedup {
       s"thresholds must lie in [minScore=$minScore, 1.0]")
     val spark = pairs.sparkSession
     import spark.implicits._
-    val th = broadcast(thresholds.sorted.toDF("threshold"))
-    val hit = pairs.join(th, col(scoreCol) >= col("threshold"))
+    val th = thresholds.sorted.toDF("threshold")
+    val hit = pairs.join(broadcast(th), col(scoreCol) >= col("threshold"))
     val np = hit.groupBy(col("threshold"))
       .agg(count(lit(1)).as("n_pairs"))
     val nd = hit.select(col("threshold"),

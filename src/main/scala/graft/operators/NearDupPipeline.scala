@@ -32,10 +32,9 @@ import org.apache.spark.sql.functions._
   * 199.5 M candidate pairs the pipeline scores), so the write itself is
   * noise next to the pair phase it amortizes.
   *
-  * STALENESS CONTRACT: the [[graft.SessionMemo]] one — per (session,
-  * corpusKey, params), floors included, and blind to the data; a new
-  * round over changed data calls `SessionMemo.invalidate` first, which
-  * also deletes the table's files.
+  * The table is keyed by the [[graft.SessionMemo]] rule — the corpus
+  * frame's plan and files plus the params, floors included; a table
+  * superseded by a build over changed files is deleted.
   */
 object NearDupPipeline {
 
@@ -50,13 +49,13 @@ object NearDupPipeline {
 
   private val memo = graft.SessionMemo[Params, String](graft.SessionMemo.delete)
 
-  /** The materialized scored pair table for (`corpusKey`, `p`):
+  /** The materialized scored pair table for (`df`, `p`):
     * (id1, id2, shared, n1, n2, jaccard, containment), containing every
     * pair at-or-above EITHER floor. First caller builds and writes;
-    * subsequent callers (same session + key + params) read the parquet. */
-  def pairsTable(df: DataFrame, corpusKey: String, p: Params): DataFrame = {
+    * subsequent callers (same session + corpus + params) read the parquet. */
+  def pairsTable(df: DataFrame, p: Params): DataFrame = {
     val s = df.sparkSession
-    val path = memo(s, corpusKey, p) {
+    val path = memo(Seq(df), p) {
       val path = graft.SessionMemo.tempDir(s, "graft_neardup")
       Dedup.shinglePairCounts(df, p.idCol, p.textCol, p.n, p.dfCap)
         .withColumn("jaccard",
@@ -74,8 +73,8 @@ object NearDupPipeline {
   /** Jaccard pairs from the shared table — output-identical to
     * [[Dedup.ngramJaccardPairs]] (column set, order, types; proven in
     * NearDupPipelineSpec). */
-  def jaccardPairs(df: DataFrame, corpusKey: String, p: Params): DataFrame =
-    pairsTable(df, corpusKey, p)
+  def jaccardPairs(df: DataFrame, p: Params): DataFrame =
+    pairsTable(df, p)
       .filter(col("jaccard") >= p.minJaccard)
       // coalesce restores `shared`'s non-nullability (count() output),
       // which the parquet roundtrip erases — keeps the accessor schema
@@ -86,8 +85,8 @@ object NearDupPipeline {
 
   /** Containment pairs from the shared table — output-identical to
     * [[Dedup.containmentPairs]]. */
-  def containmentPairs(df: DataFrame, corpusKey: String, p: Params): DataFrame =
-    pairsTable(df, corpusKey, p)
+  def containmentPairs(df: DataFrame, p: Params): DataFrame =
+    pairsTable(df, p)
       .filter(col("containment") >= p.minContainment)
       .withColumn("contained_id",
         when(col("n1") <= col("n2"), col("id1")).otherwise(col("id2")))

@@ -117,7 +117,7 @@ object Sampling {
       s"targets must be exactly ($strataCol, __w), got ${targets.columns.toSeq}")
     // LEFT join from targets: a target stratum absent from the corpus
     // must still contribute tokens=0 to the budget min (see scaladoc).
-    val counts = broadcast(targets)
+    val counts = targets
       .join(df.groupBy(col(strataCol))
           .agg(sum(tokensCol.cast("long")).as("__t")),
         Seq(strataCol), "left")

@@ -473,19 +473,18 @@ object Similarity {
   // Unigram.fitMemo shape): the model is bounded (k×d doubles) and the
   // memo also carries the corpus count so callers don't re-run the
   // sizing count job. semDedup does NOT share this memo — it fits over
-  // its own injected-duplicate corpus, a different training set.
-  // Staleness contract: the [[graft.SessionMemo]] one — `corpusKey`
-  // must name the training frame; the bench invalidates at pass
-  // boundaries and prices the fit as its own `_kmeans_fit_build` row.
+  // its own injected-duplicate corpus, a different training set. The
+  // bench prices the fit as its own `_kmeans_fit_build` row.
   private val kmeansMemo =
     graft.SessionMemo[(String, String, Int), (Long, Seq[Seq[Double]])]()
 
-  /** The fitted (corpus count, centroids) for (`corpusKey`, params),
-    * trained at most once per session: k = [[cellsFor]](count(df)). */
-  def kmeansFitMemo(df: DataFrame, corpusKey: String, maxIter: Int = 5,
+  /** The fitted (corpus count, centroids) for (`df`, params), trained
+    * at most once per session ([[graft.SessionMemo]]):
+    * k = [[cellsFor]](count(df)). */
+  def kmeansFitMemo(df: DataFrame, maxIter: Int = 5,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): (Long, Seq[Seq[Double]]) =
-    kmeansMemo(df.sparkSession, corpusKey, (idCol, vecCol, maxIter)) {
+    kmeansMemo(Seq(df), (idCol, vecCol, maxIter)) {
       val n = df.count()
       (n, kmeansFit(df, k = cellsFor(n), maxIter = maxIter,
         idCol = idCol, vecCol = vecCol))

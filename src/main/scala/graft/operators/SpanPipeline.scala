@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * Everything both consumers need, and nothing corpus-positional: the
   * stats query reads counts off it; the strike joins it back to one
   * fresh token scan and rebuilds. Same parquet-not-persist reasoning
-  * and [[graft.SessionMemo]] staleness contract as [[NearDupPipeline]].
+  * and [[graft.SessionMemo]] key as [[NearDupPipeline]].
   */
 object SpanPipeline {
 
@@ -99,14 +99,14 @@ object SpanPipeline {
     } finally { base.unpersist(); () }
   }
 
-  /** The materialized census table for (`corpusKey`, shape): one row
-    * per doc with ≥ k tokens — (doc_id, n_spans, dup_starts). */
-  def censusTable(df: DataFrame, corpusKey: String, idCol: String,
+  /** The materialized census table for (`df`, shape): one row per doc
+    * with ≥ k tokens — (doc_id, n_spans, dup_starts). */
+  def censusTable(df: DataFrame, idCol: String,
                   textCol: String, k: Int, minDocs: Int = 2): DataFrame = {
     require(k > 0, "span length must be positive")
     require(minDocs >= 2, "minDocs below 2 marks every span duplicated")
     val s = df.sparkSession
-    val path = memo(s, corpusKey, (idCol, textCol, k, minDocs)) {
+    val path = memo(Seq(df), (idCol, textCol, k, minDocs)) {
       val path = graft.SessionMemo.tempDir(s, "graft_spancensus")
       build(df, path, idCol, textCol, k, minDocs)
       path
@@ -118,9 +118,9 @@ object SpanPipeline {
     * [[Dedup.duplicatedSpans]] (spec-pinned): n_dup_spans is the
     * duplicated-start count, the same quantity the direct operator
     * sums over its (span, doc) pairs. */
-  def spanDedupStats(df: DataFrame, corpusKey: String, idCol: String,
-                     textCol: String, k: Int, minDocs: Int = 2): DataFrame =
-    censusTable(df, corpusKey, idCol, textCol, k, minDocs)
+  def spanDedupStats(df: DataFrame, idCol: String, textCol: String,
+                     k: Int, minDocs: Int = 2): DataFrame =
+    censusTable(df, idCol, textCol, k, minDocs)
       .select(col("doc_id"), col("n_spans"),
         size(col("dup_starts")).cast("long").as("n_dup_spans"),
         (size(col("dup_starts")).cast("double") /
@@ -131,9 +131,9 @@ object SpanPipeline {
     * scan joins the per-doc duplicated starts; covered positions and
     * the ordered rebuild are the same per-row projections. The ~25 s
     * (sf10) span-stream + census work never re-runs. */
-  def strike(df: DataFrame, corpusKey: String, idCol: String,
-             textCol: String, k: Int, minDocs: Int = 2): DataFrame = {
-    val table = censusTable(df, corpusKey, idCol, textCol, k, minDocs)
+  def strike(df: DataFrame, idCol: String, textCol: String, k: Int,
+             minDocs: Int = 2): DataFrame = {
+    val table = censusTable(df, idCol, textCol, k, minDocs)
       .select(col("doc_id"), col("dup_starts"))
     val toks = filter(tokens(normalized(col(textCol))), t => length(t) > 0)
     val covered = flatten(transform(

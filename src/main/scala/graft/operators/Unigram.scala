@@ -145,17 +145,17 @@ object Unigram {
   // NearDupPipeline `_build` economy applied to a driver-side model
   // artifact. The model is bounded (≤ seedSize (piece, micro) pairs) and
   // bit-reproducible, so memoizing it changes no output anywhere.
-  // Staleness contract: the [[graft.SessionMemo]] one.
   private val memo =
     graft.SessionMemo[(String, Int, Int, Int, Int, Long, Long), UnigramModel]()
 
-  /** The trained model for (`corpusKey`, params), fit at most once per
-    * session; later callers get the identical frozen model. */
-  def fitMemo(df: DataFrame, corpusKey: String, textCol: String,
+  /** The trained model for (`df`, params), fit at most once per session
+    * ([[graft.SessionMemo]]); later callers get the identical frozen
+    * model. */
+  def fitMemo(df: DataFrame, textCol: String,
               vocabSize: Int = 400, rounds: Int = 3, maxPieceLen: Int = 6,
               seedSize: Int = 4000, minCount: Long = 2L,
               unkMicro: Long = -100000000L): UnigramModel =
-    memo(df.sparkSession, corpusKey, (textCol, vocabSize, rounds,
+    memo(Seq(df), (textCol, vocabSize, rounds,
         maxPieceLen, seedSize, minCount, unkMicro))(
       fit(df, textCol, vocabSize, rounds, maxPieceLen, seedSize,
         minCount, unkMicro))

@@ -39,11 +39,11 @@ object TextQueries {
   /** One shape/floor tuple for the whole exact-shingle near-dup FAMILY
     * (jaccard pairs, containment pairs, clusters, canonical, pagerank):
     * the five queries below share one materialized pair table per
-    * (session, dir) through [[NearDupPipeline]] instead of re-running
+    * (session, corpus) through [[NearDupPipeline]] instead of re-running
     * the ~28 s (sf10) candidate pipeline each. The oracle SQL is
     * unchanged — the memo is output-identical to the direct operators
     * (NearDupPipelineSpec pins this). */
-  private val nearDupParams = NearDupPipeline.Params("doc_id", "text",
+  private[graft] val nearDupParams = NearDupPipeline.Params("doc_id", "text",
     n = 3, dfCap = 10000, minJaccard = 0.5, minContainment = 0.8)
 
   /** Candidate cuts for the threshold tuning curve — all at/above the
@@ -191,57 +191,20 @@ object TextQueries {
       mixTargets = mixTargets)
 
   private def nearDupJaccard(s: SparkSession, dir: String): DataFrame =
-    NearDupPipeline.jaccardPairs(dupCorpus(s, dir), dir, nearDupParams)
-
-  /** Bench hook: eagerly materialize the family's shared pair table (the
-    * ~28 s sf10 candidate pipeline) so the build can be timed as its OWN
-    * bench row. Without this, the build cost lands on whichever family
-    * query happens to run first — fine in a full ordered sweep, but a
-    * chunked sweep (SPARK_GRAFT_ONLY) silently re-attributes it (the r10
-    * sf10 artifact pinned it on q_pagerank). Idempotent within a pass:
-    * the memo absorbs repeat calls. */
-  def buildNearDupPairs(s: SparkSession, dir: String): Unit = {
-    NearDupPipeline.pairsTable(dupCorpus(s, dir), dir, nearDupParams)
-    ()
-  }
-
-  /** Bench hook, span-family twin of [[buildNearDupPairs]]: materialize
-    * the shared span-census table (the ~25 s sf10 span stream). */
-  def buildSpanCensus(s: SparkSession, dir: String): Unit = {
-    graft.operators.SpanPipeline.censusTable(
-      Tables.load(s, dir, "documents"), dir, "doc_id", "text", k = 6)
-    ()
-  }
+    NearDupPipeline.jaccardPairs(dupCorpus(s, dir), nearDupParams)
 
   /** The memo'd end-to-end curation chain for a corpus dir — shared by
     * q_curation_round (funnel) and q_curation_pack (packing census). */
-  private def curationResult(s: SparkSession, dir: String): graft.CurationRound.Result =
-    graft.CurationRound.memoized(s, dir, curationCorpus(s, dir),
-      benchCorpus(s, dir), curationConfig)
-
-  /** Bench hook, curation-family twin of [[buildNearDupPairs]]: run the
-    * six-stage chain once so q_curation_round / q_curation_pack report
-    * their post-build (read-the-artifact) cost and the chain itself is
-    * priced as its own `_curation_chain_build` row. */
-  def buildCurationChain(s: SparkSession, dir: String): Unit = {
-    curationResult(s, dir)
-    ()
-  }
+  private[graft] def curationResult(s: SparkSession, dir: String): graft.CurationRound.Result =
+    graft.CurationRound.memoized(curationCorpus(s, dir), benchCorpus(s, dir),
+      curationConfig)
 
   /** The suite's shared unigram-LM tokenizer (one fit per session +
     * corpus — [[graft.operators.Unigram.fitMemo]]); consumed by
     * q_unigram_vocab and q_unigram_encode. */
   private[graft] def unigramModel(s: SparkSession, dir: String): graft.functions.UnigramModel =
-    Unigram.fitMemo(Tables.load(s, dir, "documents"), dir, "text",
+    Unigram.fitMemo(Tables.load(s, dir, "documents"), "text",
       vocabSize = 200, rounds = 2, maxPieceLen = 5, seedSize = 2000)
-
-  /** Bench hook: train the shared unigram tokenizer once so the encode/
-    * vocab rows report post-fit cost and the EM fit is priced as its
-    * own `_unigram_fit_build` row. */
-  def buildUnigramFit(s: SparkSession, dir: String): Unit = {
-    unigramModel(s, dir)
-    ()
-  }
 
   /** Stand-in eval suite for decontamination: the %7 documents (exactly
     * the ids dupCorpus duplicates at +100000 — known leaked rows). */
@@ -1285,12 +1248,12 @@ object TextQueries {
     // xxhash64 keys; the oracle's md5 twin agrees because both are
     // collision-free and only counts are compared).
     // Census + strike share ONE materialized span-census table per
-    // (session, dir) through SpanPipeline (the NearDupPipeline economy
+    // (session, corpus) through SpanPipeline (the NearDupPipeline economy
     // applied to the Lee et al. substring family) — output-identical
     // to the direct operators, SpanPipelineSpec pins it.
     "q_span_dedup" -> ((s, dir) =>
       graft.operators.SpanPipeline.spanDedupStats(
-          Tables.load(s, dir, "documents"), dir, "doc_id", "text", k = 6)
+          Tables.load(s, dir, "documents"), "doc_id", "text", k = 6)
         .orderBy(col("doc_id"))),
 
     // Exact substring dedup APPLIED — the census's removal half (Lee et
@@ -1300,7 +1263,7 @@ object TextQueries {
     // doc text flows through exactly one join shuffle for the rebuild.
     "q_span_strike" -> ((s, dir) =>
       graft.operators.SpanPipeline.strike(Tables.load(s, dir, "documents"),
-          dir, "doc_id", "text", k = 6)
+          "doc_id", "text", k = 6)
         .orderBy(col("doc_id"))),
 
     // Bigram-LM surprisal — the unigram perplexity filter's next-order
@@ -1714,7 +1677,7 @@ object TextQueries {
     // smaller doc in the larger (a doc quoted whole inside an
     // aggregator page has low Jaccard but containment ~1).
     "q_dedup_containment" -> ((s, dir) =>
-      NearDupPipeline.containmentPairs(dupCorpus(s, dir), dir, nearDupParams)
+      NearDupPipeline.containmentPairs(dupCorpus(s, dir), nearDupParams)
         .orderBy(col("id1"), col("id2"))),
 
     // Per-source shingle novelty — the mixture curator's "is this

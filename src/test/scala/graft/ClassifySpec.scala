@@ -53,6 +53,29 @@ class ClassifySpec extends AnyFunSuite {
     assert(m.values.sum == 4L) // docs 5 and 6 absent
   }
 
+  test("naiveBayesConfusion: a doc id filed under two labels counts once in the priors") {
+    // Doc 1 carries label a and label b: 7 distinct labeled docs, not
+    // the 8 the per-class counts sum to. Every prior is ln(n_c/N)
+    // frozen at 6 decimals, so N reaches the argmax only through that
+    // rounding — and here it moves one a-doc's a-vs-b comparison.
+    val docs = Seq(
+      (1L, "z y", "a"), (2L, "x y", "a"), (3L, "x z y", "b"), (4L, "y", "a"),
+      (5L, "y x x z", "b"), (6L, "z x", "b"), (7L, "z y x", "b"), (1L, "y", "b")
+    ).toDF("doc_id", "text", "lab")
+    val m = matrix(Classify.naiveBayesConfusion(docs, "doc_id", "text", "lab")
+      .collect())
+    assert(m == Map(("a", "a") -> 1L, ("a", "b") -> 2L, ("b", "a") -> 1L,
+      ("b", "b") -> 4L), m)
+  }
+
+  test("naiveBayesConfusion: more labels than MaxLabels fail, naming the label column") {
+    val docs = (0 to Classify.MaxLabels).map(i => (i.toLong, "x y", s"l$i"))
+      .toDF("doc_id", "text", "source_tag")
+    val e = intercept[IllegalArgumentException](
+      Classify.naiveBayesConfusion(docs, "doc_id", "text", "source_tag"))
+    assert(e.getMessage.contains("source_tag"), e.getMessage)
+  }
+
   test("naiveBayesConfusion: matrix counts sum to the scored-doc count at fixture scale") {
     val docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
     val out = Classify.naiveBayesConfusion(docs, "doc_id", "text", "lang")

@@ -138,7 +138,7 @@ class CurationRoundSpec extends AnyFunSuite {
     // (memoized unpersists inside the build — the returned frames must
     // still serve every consumer, across cache drops)
     SessionMemo.invalidateAll(spark)
-    val m = CurationRound.memoized(spark, "unpersist-spec",
+    val m = CurationRound.memoized(
       TextQueries.curationCorpus(spark, TestSpark.Sf0001),
       TextQueries.benchCorpus(spark, TestSpark.Sf0001), cfg)
     m.unpersist() // a second consumer-side release on top of the build's
@@ -154,20 +154,18 @@ class CurationRoundSpec extends AnyFunSuite {
   test("memoized builds the chain once per (session, corpus); invalidateAll forces a rebuild") {
     SessionMemo.invalidateAll(spark)
     val cfg = TextQueries.curationConfig
-    var builds = 0
-    def corpus = { builds += 1; TextQueries.curationCorpus(spark, TestSpark.Sf0001) }
+    def corpus = TextQueries.curationCorpus(spark, TestSpark.Sf0001)
     val bench = TextQueries.benchCorpus(spark, TestSpark.Sf0001)
-    val r1 = CurationRound.memoized(spark, "memo-spec", corpus, bench, cfg)
-    val r2 = CurationRound.memoized(spark, "memo-spec", corpus, bench, cfg)
-    assert(builds == 1, "second call must serve the memo, not re-run the chain")
-    assert(r2 eq r1)
+    val r1 = CurationRound.memoized(corpus, bench, cfg)
+    val r2 = CurationRound.memoized(corpus, bench, cfg)
+    assert(r2 eq r1, "second call must serve the memo, not re-run the chain")
     // memo'd frames survive cache drops (parquet/driver-rooted)
     spark.catalog.clearCache()
     assert(r1.funnel.count() == 7)
     assert(r1.packStats.head().getAs[Long]("n_docs") == ids(r1.curated).size)
     SessionMemo.invalidateAll(spark)
-    val r3 = CurationRound.memoized(spark, "memo-spec", corpus, bench, cfg)
-    assert(builds == 2 && !(r3 eq r1))
+    val r3 = CurationRound.memoized(corpus, bench, cfg)
+    assert(!(r3 eq r1))
     assert(ids(r3.curated) == ids(r1.curated))
     SessionMemo.invalidateAll(spark)
   }

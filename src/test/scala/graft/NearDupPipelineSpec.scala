@@ -20,41 +20,39 @@ class NearDupPipelineSpec extends AnyFunSuite {
     val corpus = TextQueries.dupCorpus(spark, TestSpark.Sf0001)
     SessionMemo.invalidateAll(spark)
 
-    val memoJ = NearDupPipeline.jaccardPairs(corpus, "spec-corpus", p)
+    val memoJ = NearDupPipeline.jaccardPairs(corpus, p)
     val dirJ = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 3, 0.5, 10000)
     assert(memoJ.schema == dirJ.schema) // same columns, order, types
     assert(rowsOf(memoJ) == rowsOf(dirJ))
 
-    val memoC = NearDupPipeline.containmentPairs(corpus, "spec-corpus", p)
+    val memoC = NearDupPipeline.containmentPairs(corpus, p)
     val dirC = Dedup.containmentPairs(corpus, "doc_id", "text", 3, 0.8, 10000)
     assert(memoC.schema == dirC.schema)
     assert(rowsOf(memoC) == rowsOf(dirC))
     SessionMemo.invalidateAll(spark)
   }
 
-  test("memo serves the materialized table until invalidated; invalidate picks up new data") {
+  test("a frame over other data gets its own table; each frame's table is served again") {
     val a = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon zeta"),
       (3L, "totally different words entirely here now")).toDF("doc_id", "text")
-    val b = Seq(
+    def b = Seq(
       (1L, "one two three four five six"),
       (9L, "unrelated content in the second corpus")).toDF("doc_id", "text")
-    SessionMemo.invalidate(spark, "memo-test")
+    SessionMemo.invalidateAll(spark)
 
-    val fromA = rowsOf(NearDupPipeline.jaccardPairs(a, "memo-test", p))
+    val tableA = NearDupPipeline.pairsTable(a, p).inputFiles.toSeq
+    val fromA = rowsOf(NearDupPipeline.jaccardPairs(a, p))
     assert(fromA.nonEmpty) // 1-2 duplicate pair present
-    // Same key, different data: STALE by contract — the memo does not
-    // watch the input (exactly metricsTable's documented behavior).
-    assert(rowsOf(NearDupPipeline.jaccardPairs(b, "memo-test", p)) == fromA)
-    // New round over changed data: invalidate, then the table rebuilds.
-    SessionMemo.invalidate(spark, "memo-test")
-    val fromB = rowsOf(NearDupPipeline.jaccardPairs(b, "memo-test", p))
-    assert(fromB != fromA && fromB.isEmpty)
-    // Distinct corpus keys are isolated entries: rebuilding "memo-test"
-    // never touched another key's table.
-    val other = rowsOf(NearDupPipeline.jaccardPairs(a, "memo-other", p))
-    assert(other == fromA)
+    // Different data: a fresh build, never the first frame's table.
+    val fromB = rowsOf(NearDupPipeline.jaccardPairs(b, p))
+    assert(fromB.isEmpty)
+    // An independently built equal frame is served b's table, and a's
+    // table is still a's: entries are isolated.
+    assert(NearDupPipeline.pairsTable(b, p).inputFiles.toSeq != tableA)
+    assert(NearDupPipeline.pairsTable(a, p).inputFiles.toSeq == tableA)
+    assert(rowsOf(NearDupPipeline.jaccardPairs(a, p)) == fromA)
     SessionMemo.invalidateAll(spark)
   }
 
@@ -66,18 +64,18 @@ class NearDupPipelineSpec extends AnyFunSuite {
       (1L, "a b c d e f g h i j"),
       (2L, "a b c d e f g x y z"),
       (3L, "q r s t u v w")).toDF("doc_id", "text")
-    SessionMemo.invalidate(spark, "floor-test")
+    SessionMemo.invalidateAll(spark)
     // Build at the family floors: the 0.43 pair is BELOW them and not in
     // the materialized table.
-    assert(NearDupPipeline.jaccardPairs(docs, "floor-test", p).count() == 0)
+    assert(NearDupPipeline.jaccardPairs(docs, p).count() == 0)
     // Lower-floor request: must rebuild and surface the pair, matching
     // the direct operator at that floor.
     val low = p.copy(minJaccard = 0.4, minContainment = 0.4)
-    assert(rowsOf(NearDupPipeline.jaccardPairs(docs, "floor-test", low)) ==
+    assert(rowsOf(NearDupPipeline.jaccardPairs(docs, low)) ==
       rowsOf(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.4, 10000)))
     // And the rebuilt (lower-floored) table still serves the original
     // higher floor correctly — filter, not a narrower table.
-    assert(NearDupPipeline.jaccardPairs(docs, "floor-test", p).count() == 0)
+    assert(NearDupPipeline.jaccardPairs(docs, p).count() == 0)
     SessionMemo.invalidateAll(spark)
   }
 }

@@ -1,78 +1,101 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{NearDupPipeline, Similarity, SpanPipeline, Unigram}
-import graft.queries.{CoreQueries, TextQueries}
+import graft.operators.{NearDupPipeline, Similarity, SpanPipeline}
+import graft.queries.{CoreQueries, SimilarityQueries, TextQueries}
 import graft.sources.Tables
 
 class SessionMemoSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  import spark.implicits._
 
-  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  test("one invalidate drops a corpus key's entries in every family; other keys survive") {
+  /** One value per family, each built exactly as the queries and the
+    * bench's shared builds build it; the file-backed tables as their
+    * file lists. */
+  private def families(dir: String): Seq[(String, AnyRef)] = Seq(
+    "pairs" -> NearDupPipeline.pairsTable(TextQueries.dupCorpus(spark, dir),
+      TextQueries.nearDupParams).inputFiles.toSeq,
+    "spans" -> SpanPipeline.censusTable(Tables.load(spark, dir, "documents"),
+      "doc_id", "text", k = 6).inputFiles.toSeq,
+    "curation" -> TextQueries.curationResult(spark, dir),
+    "unigram" -> TextQueries.unigramModel(spark, dir),
+    "kmeans" -> SimilarityQueries.embeddingCentroids(spark, dir),
+    "metrics" -> CoreQueries.metricsTable(spark, dir))
+
+  private def sameBuild(a: AnyRef, b: AnyRef): Boolean = (a, b) match {
+    case (x: Seq[_], y: Seq[_]) => x == y // file lists: the same table
+    case _ => a eq b
+  }
+
+  test("hit guard: independently built inputs share one build per family") {
     SessionMemo.invalidateAll(spark)
-    val k = TestSpark.Sf0001 // metricsTable keys on its warehouse dir
-    val other = "other-corpus"
-    val p = NearDupPipeline.Params("doc_id", "text")
-    val dupA = Seq((1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val dupB = Seq((7L, "one two three four five six"),
-      (8L, "seven eight nine ten eleven twelve")).toDF("doc_id", "text")
-    val docs = Tables.load(spark, TestSpark.Sf0001, "documents").limit(100)
-    val vecs = Tables.load(spark, TestSpark.Sf0001, "embeddings").limit(64)
-    val cfg = TextQueries.curationConfig
-    val curCorpus = TextQueries.curationCorpus(spark, TestSpark.Sf0001).limit(50)
-    val bench = TextQueries.benchCorpus(spark, TestSpark.Sf0001)
-    var curationBuilds = 0
-    def curation(key: String) = CurationRound.memoized(spark, key,
-      { curationBuilds += 1; curCorpus }, bench, cfg)
-    def unigram(key: String) = Unigram.fitMemo(docs, key, "text",
-      vocabSize = 40, rounds = 1, maxPieceLen = 4, seedSize = 300)
-    def spans(df: org.apache.spark.sql.DataFrame, key: String) =
-      rowsOf(SpanPipeline.spanDedupStats(df, key, "doc_id", "text", 6))
-
     try {
-      // Fill every family under both keys.
-      val pairsK = NearDupPipeline.pairsTable(dupA, k, p)
-      val pairFiles = pairsK.inputFiles
-      val jacA = rowsOf(NearDupPipeline.jaccardPairs(dupA, k, p))
-      assert(jacA.nonEmpty && pairFiles.nonEmpty)
-      assert(rowsOf(NearDupPipeline.jaccardPairs(dupA, other, p)) == jacA)
-      val spanA = spans(dupA, k)
-      assert(spanA.nonEmpty && spans(dupA, other) == spanA)
-      val metrics = CoreQueries.metricsTable(spark, k)
-      val curK = curation(k)
-      val curOther = curation(other)
-      val uniK = unigram(k)
-      val uniOther = unigram(other)
-      val kmK = Similarity.kmeansFitMemo(vecs, k)
-      val kmOther = Similarity.kmeansFitMemo(vecs, other)
-      assert(curationBuilds == 2)
+      val first = families(TestSpark.Sf0001)
+      val second = families(TestSpark.Sf0001)
+      first.zip(second).foreach { case ((name, a), (_, b)) =>
+        assert(sameBuild(a, b), s"$name built twice for equal inputs")
+      }
+    } finally SessionMemo.invalidateAll(spark)
+  }
 
-      SessionMemo.invalidate(spark, k)
+  test("every family rebuilds after its files change, with no invalidate call") {
+    SessionMemo.invalidateAll(spark)
+    val dir = TestSpark.fixtureCopy()
+    try {
+      val before = families(dir)
+      val pairFiles = before.head._2.asInstanceOf[Seq[String]]
+      assert(pairFiles.nonEmpty)
+      // documents: a new file moved over the old path; embeddings and
+      // orders: the same file rewritten in place, at a new length.
+      val lengthOf = (n: String) => new java.io.File(s"$dir/$n.parquet").length
+      val oldLengths = Seq("embeddings", "orders").map(lengthOf)
+      TestSpark.rewriteTable(dir, "documents", inPlace = false)(
+        _.filter(col("doc_id") % 2 === 0))
+      TestSpark.rewriteTable(dir, "embeddings", inPlace = true)(
+        _.filter(col("vec_id") % 2 === 0))
+      TestSpark.rewriteTable(dir, "orders", inPlace = true)(
+        _.filter(col("o_orderkey") % 3 =!= 0))
+      assert(Seq("embeddings", "orders").map(lengthOf).zip(oldLengths)
+        .forall { case (n, o) => n != o })
 
-      // Every family rebuilds under k: the file-backed tables over the
-      // new data (their old files are deleted), the rest as new values.
+      val after = families(dir)
+      before.zip(after).foreach { case ((name, a), (_, b)) =>
+        assert(!sameBuild(a, b), s"$name served a build over replaced files")
+      }
       assert(pairFiles.forall(f => !new java.io.File(new java.net.URI(f)).exists),
-        "the dropped pair table's files must be deleted")
-      assert(rowsOf(NearDupPipeline.jaccardPairs(dupB, k, p)).isEmpty)
-      assert(spans(dupB, k) != spanA)
-      assert(!(CoreQueries.metricsTable(spark, k) eq metrics))
-      assert(!(curation(k) eq curK) && curationBuilds == 3)
-      assert(!(unigram(k) eq uniK))
-      assert(!(Similarity.kmeansFitMemo(vecs, k) eq kmK))
+        "the superseded pair table's files must be deleted")
+      // the fresh builds read the new files
+      assert(rowsOf(CoreQueries.metricsTable(spark, dir)) ==
+        rowsOf(CoreQueries.metricsUnion(spark, dir)))
+      assert(SpanPipeline.censusTable(Tables.load(spark, dir, "documents"),
+        "doc_id", "text", k = 6).filter(col("doc_id") % 2 =!= 0).isEmpty)
+      // and are served again until the files change once more
+      families(dir).zip(after).foreach { case ((name, a), (_, b)) =>
+        assert(sameBuild(a, b), s"$name rebuilt over unchanged files")
+      }
+    } finally SessionMemo.invalidateAll(spark)
+  }
 
-      // ...while every family still serves the other key's entry, stale
-      // data and all.
-      assert(rowsOf(NearDupPipeline.jaccardPairs(dupB, other, p)) == jacA)
-      assert(spans(dupB, other) == spanA)
-      assert((curation(other) eq curOther) && curationBuilds == 3)
-      assert(unigram(other) eq uniOther)
-      assert(Similarity.kmeansFitMemo(vecs, other) eq kmOther)
+  test("kmeansFitMemo: another frame with the same columns gets its own fit") {
+    SessionMemo.invalidateAll(spark)
+    val vecs = Tables.load(spark, TestSpark.Sf0001, "embeddings")
+    val even = vecs.filter(col("vec_id") % 2 === 0)
+    val odd = vecs.filter(col("vec_id") % 2 === 1)
+    def close(a: Seq[Seq[Double]], b: Seq[Seq[Double]]): Boolean =
+      a.length == b.length && a.zip(b).forall { case (x, y) =>
+        x.zip(y).forall { case (p, q) => math.abs(p - q) <= 1e-12 } }
+    try {
+      val (nEven, fitEven) = Similarity.kmeansFitMemo(even)
+      val (nOdd, fitOdd) = Similarity.kmeansFitMemo(odd)
+      assert(!close(fitOdd, fitEven))
+      assert(close(fitEven, Similarity.kmeansFit(even, k = Similarity.cellsFor(nEven), maxIter = 5)))
+      assert(close(fitOdd, Similarity.kmeansFit(odd, k = Similarity.cellsFor(nOdd), maxIter = 5)))
+      assert(Similarity.kmeansFitMemo(vecs.filter(col("vec_id") % 2 === 0))._2 eq fitEven)
     } finally SessionMemo.invalidateAll(spark)
   }
 

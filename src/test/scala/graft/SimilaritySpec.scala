@@ -199,15 +199,15 @@ class SimilaritySpec extends AnyFunSuite {
       a.length == b.length && a.zip(b).forall { case (x, y) =>
         x.zip(y).forall { case (p, q) => math.abs(p - q) <= 1e-12 } }
     try {
-      val (n, plain) = Similarity.kmeansFitMemo(df, "memo-cols-spec")
-      val (_, flipped) = Similarity.kmeansFitMemo(df, "memo-cols-spec",
+      val (n, plain) = Similarity.kmeansFitMemo(df)
+      val (_, flipped) = Similarity.kmeansFitMemo(df,
         vecCol = "flipped")
       val direct = Similarity.kmeansFit(df, k = Similarity.cellsFor(n),
         maxIter = 5, vecCol = "flipped")
       assert(close(flipped, direct), "the flipped column must train its own model")
       assert(!close(flipped, plain))
       // the first column's entry is still served from the memo
-      assert(Similarity.kmeansFitMemo(df, "memo-cols-spec")._2 eq plain)
+      assert(Similarity.kmeansFitMemo(df)._2 eq plain)
     } finally SessionMemo.invalidateAll(spark)
   }
 

@@ -5,20 +5,33 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
 
-/** The boilerplate / hot-key regimes SkewBench measures, pinned as
-  * behavior: the df-cap valve must neutralize a corpus-wide banner
-  * (no quadratic candidate generation, no banner-manufactured pairs)
-  * while true duplicates still surface. */
+/** The boilerplate / hot-key regimes of the skew stress measurements
+  * (SKEW_BENCH.json), pinned as behavior: the df-cap valve must
+  * neutralize a corpus-wide banner (no quadratic candidate generation,
+  * no banner-manufactured pairs) while true duplicates still surface. */
 class SkewFixtureSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Shared banner paragraph: every banner line is a corpus-wide common
+    * line and every banner shingle a stop-shingle. */
+  private val Banner: String =
+    "this website uses cookies to improve your browsing experience\n" +
+      "all rights reserved copyright notice terms of service apply\n" +
+      "subscribe to our newsletter for the latest updates and offers"
+
+  /** Hot user 0 absorbs ~30% of all events (Zipf head); remaining rows
+    * keep their original uniform user. Same row count, same columns. */
+  private def zipfEvents(e: org.apache.spark.sql.DataFrame) =
+    e.withColumn("user_id",
+      when(col("event_id") % 10 < 3, lit(0L)).otherwise(col("user_id")))
 
   // 30 docs, every one carrying the shared banner; contents pairwise
   // disjoint except docs 1 and 2, which share identical long content.
   private def corpus = {
     val content = (0 until 30).map { i =>
       val words = (0 until 60).map(j => s"w${i}x$j").mkString(" ")
-      (i.toLong, s"${SkewBench.Banner}\n$words")
+      (i.toLong, s"${Banner}\n$words")
     }
     // doc 100 duplicates doc 1's content exactly (banner included)
     (content :+ (100L, content(1)._2)).toDF("doc_id", "text")
@@ -65,7 +78,7 @@ class SkewFixtureSpec extends AnyFunSuite {
       "doc_id", "lined_text", minDf = 5)
     val texts = out.select("text_out").as[String].collect()
     assert(texts.nonEmpty)
-    val bannerFirst = SkewBench.Banner.split("\n").head
+    val bannerFirst = Banner.split("\n").head
     assert(!texts.exists(_.contains(bannerFirst)))
     assert(texts.exists(_.contains("w5x7"))) // content lines intact
   }
@@ -75,7 +88,7 @@ class SkewFixtureSpec extends AnyFunSuite {
       (i.toLong, new java.sql.Timestamp(1700000000000L + i * 1000L),
         (i % 50).toLong + 1L, if (i % 4 == 0) "purchase" else "view", i * 1.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val z = SkewBench.zipfEvents(e)
+    val z = zipfEvents(e)
     assert(z.count() === 1000L)
     val hot = z.filter(col("user_id") === 0L).count()
     assert(hot === 300L) // event_id % 10 < 3

@@ -160,13 +160,18 @@ class TableDiffSpec extends AnyFunSuite {
     val fresh = CoreQueries.metricsUnion(spark, TestSpark.Sf0001)
       .collect().map(_.toString).sorted.toSeq
     assert(t.collect().map(_.toString).sorted.toSeq == fresh)
-    // memoized per (session, dir): second call returns the same frame
+    // memoized per input: a second call returns the same frame
     assert(CoreQueries.metricsTable(spark, TestSpark.Sf0001) eq t)
-    // a new validation round invalidates the memo and re-materializes
-    SessionMemo.invalidate(spark, TestSpark.Sf0001)
-    val t2 = CoreQueries.metricsTable(spark, TestSpark.Sf0001)
-    assert(!(t2 eq t))
-    assert(t2.collect().map(_.toString).sorted.toSeq == fresh)
+    // a new validation round over changed files re-materializes, with
+    // no invalidate call
+    val dir = TestSpark.fixtureCopy()
+    val c = CoreQueries.metricsTable(spark, dir)
+    assert(CoreQueries.metricsTable(spark, dir) eq c)
+    TestSpark.rewriteTable(dir, "region", inPlace = true)(_.limit(3))
+    val c2 = CoreQueries.metricsTable(spark, dir)
+    assert(!(c2 eq c))
+    val fresh2 = CoreQueries.metricsUnion(spark, dir).collect().map(_.toString).sorted.toSeq
+    assert(c2.collect().map(_.toString).sorted.toSeq == fresh2 && fresh2 != fresh)
   }
 
   test("NULL-PK rows are excluded from presence flags, not miscounted one-sided") {

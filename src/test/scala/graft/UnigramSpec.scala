@@ -95,20 +95,20 @@ class UnigramSpec extends AnyFunSuite {
     val docs = Tables.load(spark, TestSpark.Sf0001, "documents").limit(100)
     val direct = Unigram.fit(docs, "text", vocabSize = 50, rounds = 2,
       maxPieceLen = 4, seedSize = 500)
-    val m1 = Unigram.fitMemo(docs, "memo-spec", "text", vocabSize = 50,
+    val m1 = Unigram.fitMemo(docs, "text", vocabSize = 50,
       rounds = 2, maxPieceLen = 4, seedSize = 500)
-    val m2 = Unigram.fitMemo(docs, "memo-spec", "text", vocabSize = 50,
+    val m2 = Unigram.fitMemo(docs, "text", vocabSize = 50,
       rounds = 2, maxPieceLen = 4, seedSize = 500)
     assert(m2 eq m1, "second call must serve the memo, not refit")
     // memoizing a bit-reproducible model changes no output
     assert(m1.pieces.toSeq == direct.pieces.toSeq)
     assert(m1.scoresMicro.toSeq == direct.scoresMicro.toSeq)
     // different params → different memo entry, not a collision
-    val m3 = Unigram.fitMemo(docs, "memo-spec", "text", vocabSize = 40,
+    val m3 = Unigram.fitMemo(docs, "text", vocabSize = 40,
       rounds = 2, maxPieceLen = 4, seedSize = 500)
     assert(!(m3 eq m1) && m3.pieces.length != m1.pieces.length)
     SessionMemo.invalidateAll(spark)
-    val m4 = Unigram.fitMemo(docs, "memo-spec", "text", vocabSize = 50,
+    val m4 = Unigram.fitMemo(docs, "text", vocabSize = 50,
       rounds = 2, maxPieceLen = 4, seedSize = 500)
     assert(!(m4 eq m1) && m4.pieces.toSeq == m1.pieces.toSeq)
     SessionMemo.invalidateAll(spark)

@@ -408,7 +408,7 @@ object CurationRound {
     //    only at funnel assembly;
     //  - the bench probe starts as soon as s3 exists, and the
     //    history-edge branch (histDrops) runs beside the canonical-keep
-    //    loop, which stays on this thread. The three only READ (s3, the
+    //    step, which stays on this thread. The three only READ (s3, the
     //    batch's bucket build, state scoped < batchId) and share no
     //    intermediate but checkpointed ones. The probe runs over s3,
     //    not s4: a doc's contamination depends only on that doc and the

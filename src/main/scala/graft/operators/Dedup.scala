@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2
   * #20-#23): exact, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -566,7 +570,104 @@ object Dedup {
     * the step that turns pairwise candidates into DELETE LISTS: every
     * doc in a component keeps/loses against one canonical representative
     * (the component's min id), and transitive duplicates (A~B, B~C but
-    * A!~C under the threshold) still land in one cluster.
+    * A!~C under the threshold) still land in one cluster. Output:
+    * (id, comp) for every vertex in `pairs` (singletons are their own
+    * trivial cluster by definition).
+    *
+    * Two paths behind one gate: the closed edge set ([[closedEdges]])
+    * is persisted, then ONE collect pulls at most [[MaxLocalEdges]] + 1
+    * of its undirected rows (src ≤ dst, self-loops included).
+    *  - At or under the bound, with integral ids (byte, short, int,
+    *    long), a driver union-find labels each vertex with its
+    *    component's min id, returned as a local relation. The call runs
+    *    3 Spark jobs (edge shuffle, cache build, collect) where the loop
+    *    runs 17 on a 5-pair graph, and `maxIter` does not bind.
+    *  - Over the bound, or with any other id type, [[labelLoop]] runs
+    *    over the persisted edges: diameter rounds of distributed
+    *    min-label propagation, THROWING when `maxIter` rounds do not
+    *    converge.
+    * Both paths return the same rows under the same schema, NULL ids
+    * included: a NULL id is labeled with the smallest component among
+    * its partners and joins none of them (an equi-join never matches
+    * NULL). */
+  def connectedComponents(pairs: DataFrame, id1: String = "id1",
+                          id2: String = "id2", maxIter: Int = 20): DataFrame = {
+    require(maxIter > 0, "maxIter must be positive")
+    val edges = closedEdges(pairs, id1, id2).persist(StorageLevel.MEMORY_AND_DISK)
+    val local = try localLabels(edges, MaxLocalEdges)
+      catch { case e: Throwable => edges.unpersist(); throw e }
+    local match {
+      case Some(labels) => edges.unpersist(); labels
+      case None => labelLoop(edges, maxIter)
+    }
+  }
+
+  /** Most undirected edge rows [[connectedComponents]] solves on the
+    * driver; E pairs over V vertices make at most E + V rows, and V
+    * never exceeds the row count. Driver heap, measured on JDK 17: a
+    * collected row (two boxed longs) retains ~102 B, an output vertex
+    * ~117 B in the local relation, the union-find 12 B per vertex — so
+    * ~0.25 GB at the bound (0.79M rows solved in 2.8 s on 4 cores), an
+    * eighth of the smallest driver heap the harnesses here give (2 GB).
+    * A constant: past it the loop's rounds are no longer all fixed cost. */
+  private[graft] val MaxLocalEdges: Int = 1 << 20
+
+  /** Both edge directions PLUS self-loops from ONE evaluation of
+    * `pairs` (explode of a four-struct array): a union of selects would
+    * run the whole upstream candidate pipeline once per branch. The
+    * self-loops make the loop's round a single closed-neighborhood min,
+    * and give the driver path every vertex as a (v, v) row. */
+  private[graft] def closedEdges(pairs: DataFrame, id1: String = "id1",
+                                 id2: String = "id2"): DataFrame =
+    pairs
+      .select(explode(array(
+        struct(col(id1).as("src"), col(id2).as("dst")),
+        struct(col(id2).as("src"), col(id1).as("dst")),
+        struct(col(id1).as("src"), col(id1).as("dst")),
+        struct(col(id2).as("src"), col(id2).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .distinct()
+
+  /** The driver path of [[connectedComponents]]: None, with `edges`
+    * untouched, when the ids are not integral or `edges` holds more
+    * than `maxEdges` undirected rows; else the labels as a local
+    * relation with [[labelLoop]]'s exact schema. */
+  private[graft] def localLabels(edges: DataFrame, maxEdges: Int): Option[DataFrame] = {
+    require(maxEdges >= 0 && maxEdges < Int.MaxValue, "maxEdges out of range")
+    val idField = edges.schema("src")
+    Map[DataType, Long => Any](ByteType -> (_.toByte), ShortType -> (_.toShort),
+        IntegerType -> (_.toInt), LongType -> (v => v)).get(idField.dataType)
+      .flatMap { box =>
+        // Each undirected edge and self-loop once, plus (v, NULL) per
+        // vertex paired with a NULL id: NULL drops out of `src <= dst`,
+        // and the coalesce keeps the NULL-dst rows alone.
+        val rows = edges.filter(coalesce(col("src") <= col("dst"), col("dst").isNull))
+          .select(col("src").cast("long"), col("dst").cast("long"))
+          .limit(maxEdges + 1).collect()
+        Option.when(rows.length <= maxEdges) {
+          val verts = rows.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted.distinct
+          def at(r: Row, i: Int) = java.util.Arrays.binarySearch(verts, r.getLong(i))
+          // A union keeps the smaller root, so a root is its set's
+          // smallest index: the min id, as `verts` is sorted.
+          val parent = Array.range(0, verts.length)
+          @scala.annotation.tailrec def find(i: Int): Int =
+            if (parent(i) == i) i else { parent(i) = parent(parent(i)); find(parent(i)) }
+          for (r <- rows if !r.isNullAt(0) && !r.isNullAt(1)) {
+            val (a, b) = (find(at(r, 0)), find(at(r, 1)))
+            parent(math.max(a, b)) = math.min(a, b)
+          }
+          val nullRoots = rows.collect { case r if !r.isNullAt(0) && r.isNullAt(1) => find(at(r, 0)) }
+          val out = verts.indices.map(i => Row(box(verts(i)), box(verts(find(i))))) ++
+            Option.when(nullRoots.nonEmpty)(Row(null, box(verts(nullRoots.min))))
+          edges.sparkSession.createDataFrame(out.asJava, StructType(Seq(
+            StructField("id", idField.dataType, idField.nullable),
+            StructField("comp", idField.dataType, nullable = true))))
+        }
+      }
+  }
+
+  /** The distributed path of [[connectedComponents]] over `edges` as
+    * [[closedEdges]] builds them (unpersisted on return).
     *
     * Algorithm: min-label propagation. Every vertex starts labeled with
     * its own id; each round takes the min of its label and its
@@ -583,8 +684,7 @@ object Dedup {
     * rounds — even an already-converged input (e.g. self-loop-only
     * pairs) needs one round to move and one to confirm, so callers must
     * pass `maxIter` ≥ diameter + 1 and at least 2; maxIter = 1 throws
-    * on every input (the pre-r16 form spent an extra pre-loop job to
-    * make that case succeed — not worth one job per CC call).
+    * on every input.
     *
     * Scale: each round is ONE join + one aggregate on (edge, label)
     * rows, partitioned by vertex — the standard iterative-join CC (the
@@ -594,11 +694,8 @@ object Dedup {
     * aggregate: the naive form `least(own, min-over-neighbors)` joins
     * the label table twice per round, which doubles the logical lineage
     * every iteration — by round ~12 the plan tree is 4000× and merely
-    * RENDERING it for the SQL UI OOMs the driver. Single-reference
-    * rounds keep lineage linear in rounds. Labels persist per round and
-    * unpersist as soon as the next round materializes. Only vertices
-    * that appear in `pairs` are returned (singletons are their own
-    * trivial cluster by definition).
+    * RENDERING it for the SQL UI OOMs the driver. Labels persist per
+    * round and unpersist as soon as the next round materializes.
     *
     * Ids must be NUMERIC: convergence is detected by the label SUM,
     * whose proof needs the min-label updates to decrease it
@@ -607,36 +704,17 @@ object Dedup {
     * converge). Non-numeric ids fail loudly at the decimal cast (ANSI),
     * never silently misorder; hash string ids to longs first (the
     * span-census discipline) to cluster them. */
-  def connectedComponents(pairs: DataFrame, id1: String = "id1",
-                          id2: String = "id2", maxIter: Int = 20): DataFrame = {
-    require(maxIter > 0, "maxIter must be positive")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Both edge directions PLUS self-loops from ONE evaluation of
-    // `pairs` (explode of a four-struct array): a union of selects would
-    // run the whole upstream candidate pipeline once per branch before
-    // the persist. Self-loops make each vertex its own neighbor, so the
-    // per-round update is a single closed-neighborhood min.
-    val edges = pairs
-      .select(explode(array(
-        struct(col(id1).as("src"), col(id2).as("dst")),
-        struct(col(id2).as("src"), col(id1).as("dst")),
-        struct(col(id1).as("src"), col(id1).as("dst")),
-        struct(col(id2).as("src"), col(id2).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct().persist(lvl)
+  private[graft] def labelLoop(edges: DataFrame, maxIter: Int): DataFrame = {
+    val lvl = StorageLevel.MEMORY_AND_DISK
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id")).persist(lvl)
     // Option: an empty pair set sums to SQL NULL — equal Nones then read
     // as the (vacuously correct) fixed point instead of an NPE.
     def labelSum(df: DataFrame): Option[java.math.BigDecimal] =
-      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0))
-    // Sums are compared between CONSECUTIVE rounds (labels only
-    // decrease, so an unchanged sum across a round ⟺ fixed point);
-    // the identity labeling's pre-loop sum was one more job per CC
-    // call (guide §1.2) and only saved a round on inputs that are
-    // ALREADY converged — i.e. pair tables with no real edge, which
-    // cost one extra empty-frame round instead. Outer Option = "no
-    // round yet"; inner Option = the empty-graph NULL sum.
+      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0))
+    // Sums are compared between CONSECUTIVE rounds (no pre-loop job
+    // for the identity labeling's sum). Outer Option = "no round yet";
+    // inner Option = the empty-graph NULL sum.
     var prevSum: Option[Option[java.math.BigDecimal]] = None
     var iter = 0
     var converged = false
@@ -688,8 +766,10 @@ object Dedup {
     * themselves by definition; emitting n_docs rows to say so would
     * dwarf the answer at corpus scale).
     *
-    * Scale shape: CC over the pairs ([[connectedComponents]] — diameter
-    * rounds of node-scale joins), one LEFT join to bring the quality
+    * Scale shape: CC over the pairs ([[connectedComponents]] — one
+    * bounded collect and a driver union-find up to [[MaxLocalEdges]],
+    * whose labels arrive as a local relation; diameter rounds of
+    * node-scale joins past it), one LEFT join to bring the quality
     * column (clustered ids only — far below the corpus; a clustered id
     * missing from `docs` keeps its row with NULL quality rather than
     * silently vanishing from the keep-list), and the canonical chosen
@@ -770,9 +850,10 @@ object Dedup {
     * contraction of its pair graph (every member connects to its
     * component root), so CC over {label edges} ∪ {new pairs} has exactly
     * the components of CC over {old pairs} ∪ {new pairs}. The label
-    * edges are star graphs (diameter ≤ 2), so convergence stays at the
-    * NEW pairs' diameter — the work of a round is proportional to the
-    * labeling plus the delta, never the historical pair set.
+    * edges are star graphs (diameter ≤ 2), so on the loop path (past
+    * [[MaxLocalEdges]]) convergence stays at the NEW pairs' diameter —
+    * the work of a round is proportional to the labeling plus the
+    * delta, never the historical pair set.
     * Canonical ids stay min-ids, so an untouched component keeps its
     * label and only components the delta bridges relabel. */
   def incrementalClusters(labels: DataFrame, newPairs: DataFrame,

@@ -145,29 +145,17 @@ object Similarity {
 
   /** Deterministic pseudo-random hyperplane component for plane p, dim i:
     * a fixed hash mapped into [-0.5, 0.5). */
-  private def planeComponent(p: Int, i: Column): Column =
+  private[graft] def planeComponent(p: Int, i: Column): Column =
     (pmod(xxhash64(lit(p), i), lit(1000L)).cast("double") / 1000.0) - 0.5
 
   /** Random-hyperplane LSH bucket signature (one int, `count` bits) over
     * plane indices [from, from+count): bit j is the sign of
     * Σ_i v[i] * h(from+j, i). The offset lets multi-band callers draw
     * DISJOINT hyperplane sets per band. Native codegen'd expression
-    * ([[graft.functions.LshBucketExpr]]); [[lshBucketDeclarative]] is the
-    * higher-order twin it is spec-proven bit-identical to. */
+    * ([[graft.functions.LshBucketExpr]]), spec-proven bit-identical to
+    * the higher-order twin the specs keep (`SimilarityTwins`). */
   private def lshBucketRange(v: Column, from: Int, count: Int): Column =
     graft.functions.LshBucketExpr.lshBucket(v, from, count)
-
-  /** Declarative zip_with/aggregate formulation of [[lshBucketRange]] —
-    * kept as the parity oracle for the native expression (interpreted
-    * lambdas per dimension per plane; never used on the hot path). */
-  private[graft] def lshBucketDeclarative(v: Column, from: Int, count: Int): Column =
-    (0 until count).map { j =>
-      val proj = aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1),
-          (x, i) => x * planeComponent(from + j, i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, shiftleft(lit(1), j)).otherwise(0)
-    }.reduce((a, b) => a.bitwiseOR(b))
 
   /** Random-hyperplane LSH bucket signature (one int, `planes` bits): bit p
     * is the sign of Σ_i v[i] * h(p,i). */
@@ -314,30 +302,6 @@ object Similarity {
         graft.functions.CellTopExpr.cellTop(col("qv"), col("qn"), model, nProbe))))
     scoreAndTopK(assigned.join(probeCells, Seq("centroid_id")), k)
   }
-
-  /** Declarative greatest-of-structs twin of [[graft.functions
-    * .CellAssignExpr]] — the parity oracle for the native expression (one
-    * generated dot call + struct per cell; never on the hot path). Ties
-    * break to the smallest index via the (sim, -idx) struct max. */
-  private[graft] def bestCellDeclarative(vec: Column, norm: Column,
-      centRows: Seq[(Seq[Double], Double)]): Column =
-    -(greatest(centRows.zipWithIndex.map { case ((cvec, cn), idx) =>
-      struct((dot(vec, typedLit(cvec)) / sqrt(norm * lit(cn))).as("sim"),
-        lit(-idx).as("negid"))
-    }: _*).getField("negid"))
-
-  /** Declarative twin of [[graft.functions.CellTopExpr]]: top-nProbe cell
-    * ids ordered (sim desc, index asc) via sort-and-reverse over the
-    * per-cell score structs. Parity oracle only. */
-  private[graft] def topCellsDeclarative(vec: Column, norm: Column,
-      centRows: Seq[(Seq[Double], Double)], nProbe: Int): Column =
-    transform(
-      slice(reverse(array_sort(array(centRows.zipWithIndex.map {
-        case ((cvec, cn), idx) =>
-          struct((dot(vec, typedLit(cvec)) / sqrt(norm * lit(cn))).as("sim"),
-            lit(-idx).as("negid"))
-      }: _*))), 1, nProbe),
-      s => -s.getField("negid"))
 
   /** Spherical k-means (Lloyd's) over the embedding column: returns `k`
     * unit-norm centroid DIRECTIONS for [[ivfTopK]]'s `centroids`

@@ -267,6 +267,90 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.forall { case (a, b, _) => a < b })
   }
 
+  // ---- connected components: the driver path against the label loop ----
+
+  /** Both paths of connectedComponents on the same pairs, the driver
+    * union-find and the distributed loop, give the same schema and rows;
+    * returns the rows. */
+  private def assertSamePaths(pairs: org.apache.spark.sql.DataFrame, clue: String) = {
+    val local = Dedup.localLabels(Dedup.closedEdges(pairs), Dedup.MaxLocalEdges).get
+    val loop = Dedup.labelLoop(Dedup.closedEdges(pairs), maxIter = 20)
+    assert(local.schema == loop.schema, clue)
+    val rows = local.collect().toSet
+    try assert(rows == loop.collect().toSet, clue) finally loop.unpersist()
+    rows
+  }
+
+  test("connectedComponents: driver union-find and label loop agree, rows and schema") {
+    // Random graphs of ~200 vertices under shuffled ids: 40 blocks of
+    // 2-8 vertices with as many random pairs each (self-loops and
+    // duplicates included), so the loop converges in a few rounds.
+    (0 until 4).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val perm = rnd.shuffle((0 until 400).toVector)
+      val pairs = Iterator.iterate(0)(_ + 8).takeWhile(_ < 320).flatMap { base =>
+        val k = 2 + rnd.nextInt(7)
+        Seq.fill(k)((perm(base + rnd.nextInt(k)).toLong, perm(base + rnd.nextInt(k)).toLong))
+      }.toSeq
+      assertSamePaths(pairs.toDF("id1", "id2"), s"random seed $seed")
+    }
+    val selfLoops = assertSamePaths(Seq((3L, 3L), (7L, 7L)).toDF("id1", "id2"), "self-loops")
+    assert(selfLoops.map(r => (r.getLong(0), r.getLong(1))) == Set((3L, 3L), (7L, 7L)))
+    assert(assertSamePaths(Seq.empty[(Long, Long)].toDF("id1", "id2"), "empty").isEmpty)
+    val dupRev = assertSamePaths(
+      Seq((2L, 1L), (1L, 2L), (2L, 1L), (3L, 2L), (9L, 8L), (8L, 9L)).toDF("id1", "id2"),
+      "duplicated and reversed pairs")
+    assert(dupRev.map(r => (r.getLong(0), r.getLong(1))) ==
+      Set((1L, 1L), (2L, 1L), (3L, 1L), (8L, 8L), (9L, 8L)))
+    // A NULL id is labeled with the smallest component among its
+    // partners and merges none of them.
+    val withNull = assertSamePaths(Seq((Option(1L), Option(2L)), (Option(2L), None),
+        (Option(5L), None), (Option(6L), Option(7L)), (None, None)).toDF("id1", "id2"),
+      "null id")
+    assert(withNull.map(r => (Option(r.get(0)), r.getLong(1))) == Set(
+      (Some(1L), 1L), (Some(2L), 1L), (Some(5L), 5L), (Some(6L), 6L),
+      (Some(7L), 6L), (None, 1L)))
+    val ints = assertSamePaths(Seq((4, 2), (2, 9), (11, 10)).toDF("id1", "id2"), "int ids")
+    assert(ints.map(r => (r.getInt(0), r.getInt(1))) ==
+      Set((2, 2), (4, 2), (9, 2), (10, 10), (11, 10)))
+  }
+
+  test("connectedComponents: a 40-vertex chain is one component; the loop alone throws") {
+    // Diameter 39: the public entry needs no rounds under the bound,
+    // while the loop would need 40. (The loop is held to 10 rounds here:
+    // each round's rendered plan nests the last one's twice, so 20
+    // rounds exhaust the heap before the bound's throw is reached.)
+    val chain = (0 until 39).map(i => (i.toLong, i + 1L)).toDF("id1", "id2")
+    val got = Dedup.connectedComponents(chain).as[(Long, Long)].collect()
+    assert(got.length == 40 && got.forall(_._2 == 0L))
+    intercept[IllegalStateException](Dedup.labelLoop(Dedup.closedEdges(chain), maxIter = 10))
+  }
+
+  test("connectedComponents gate: the bound counts undirected rows; other id types fall through") {
+    // (1,2),(2,3) collect 5 rows: three self-loops and two edges.
+    val edges = Dedup.closedEdges(Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2"))
+    assert(Dedup.localLabels(edges, 5).nonEmpty)
+    assert(Dedup.localLabels(edges, 4).isEmpty)
+    assert(Dedup.localLabels(Dedup.closedEdges(
+      Seq((1.0, 2.0)).toDF("id1", "id2")), Dedup.MaxLocalEdges).isEmpty)
+  }
+
+  test("connectedComponents under the bound: at most 3 jobs, no cached block left, " +
+      "labels equal to the loop's") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (20L, 20L))
+      .toDF("id1", "id2")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var labels = Set.empty[org.apache.spark.sql.Row]
+    val jobs = JobLog.startedBy(spark) {
+      labels = Dedup.connectedComponents(pairs).collect().toSet
+    }
+    assert(jobs.size <= 3, s"jobs: $jobs")
+    assert(sc.getPersistentRDDs.keySet == before)
+    val loop = Dedup.labelLoop(Dedup.closedEdges(pairs), maxIter = 20)
+    try assert(labels == loop.collect().toSet) finally loop.unpersist()
+  }
+
   test("incrementalClusters equals a full recompute over old ∪ new pairs") {
     // Old pairs: {1,2,3} and {10,11}; singleton-free labeling.
     val oldPairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id1", "id2")

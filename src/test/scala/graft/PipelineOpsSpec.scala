@@ -397,10 +397,11 @@ class PipelineOpsSpec extends AnyFunSuite {
   test("connectedComponents throws instead of under-merging when maxIter binds") {
     // a path 1-2-3-4-5 needs several propagation rounds; maxIter=1 cannot
     // reach the fixed point and must THROW, never return a wrong answer
+    // (the label loop: under the bound the public entry needs no rounds)
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id1", "id2")
     intercept[IllegalStateException](
-      Dedup.connectedComponents(path, maxIter = 1))
-    val ok = Dedup.connectedComponents(path, maxIter = 10)
+      Dedup.labelLoop(Dedup.closedEdges(path), maxIter = 1))
+    val ok = Dedup.labelLoop(Dedup.closedEdges(path), maxIter = 10)
       .as[(Long, Long)].collect().toMap
     assert(ok.values.toSet == Set(1L))
   }

@@ -262,16 +262,16 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"vec_id", Similarity.asDouble($"embedding").as("dv"))
     val checked = v.select($"vec_id",
         graft.functions.LshBucketExpr.lshBucket($"dv", 0, 8).as("native0"),
-        Similarity.lshBucketDeclarative($"dv", 0, 8).as("decl0"),
+        SimilarityTwins.lshBucketDeclarative($"dv", 0, 8).as("decl0"),
         graft.functions.LshBucketExpr.lshBucket($"dv", 12, 4).as("native12"),
-        Similarity.lshBucketDeclarative($"dv", 12, 4).as("decl12"))
+        SimilarityTwins.lshBucketDeclarative($"dv", 12, 4).as("decl12"))
       .filter($"native0" =!= $"decl0" || $"native12" =!= $"decl12")
     assert(checked.count() == 0)
     // null-bearing vectors land in bucket 0 under both formulations
     val nulled = spark.sql("SELECT array(CAST(1.0 AS DOUBLE), CAST(NULL AS DOUBLE)) AS dv")
     val r = nulled.select(
       graft.functions.LshBucketExpr.lshBucket($"dv", 0, 8).as("n"),
-      Similarity.lshBucketDeclarative($"dv", 0, 8).as("d")).collect().head
+      SimilarityTwins.lshBucketDeclarative($"dv", 0, 8).as("d")).collect().head
     assert(r.getInt(0) == 0 && r.getInt(1) == 0)
   }
 
@@ -290,9 +290,9 @@ class SimilaritySpec extends AnyFunSuite {
     val model = CellModel(centRows)
     val mismatch = v.select(
         CellAssignExpr.cellAssign($"dv", $"n", model).as("native"),
-        Similarity.bestCellDeclarative($"dv", $"n", centRows).as("decl"),
+        SimilarityTwins.bestCellDeclarative($"dv", $"n", centRows).as("decl"),
         CellTopExpr.cellTop($"dv", $"n", model, 4).as("nativeTop"),
-        Similarity.topCellsDeclarative($"dv", $"n", centRows, 4).as("declTop"))
+        SimilarityTwins.topCellsDeclarative($"dv", $"n", centRows, 4).as("declTop"))
       .filter($"native" =!= $"decl" || $"nativeTop" =!= $"declTop")
     assert(mismatch.count() == 0)
     // The duplicate-centroid tie resolves to index 0 whenever cell 0/1 wins.
@@ -371,7 +371,7 @@ class SimilaritySpec extends AnyFunSuite {
     val v = Tables.load(spark, TestSpark.Sf0001, "embeddings").limit(20)
     val cmp = v.select(
       graft.functions.LshBucketExpr.lshBucket($"embedding", 0, 4).as("native"),
-      Similarity.lshBucketDeclarative(
+      SimilarityTwins.lshBucketDeclarative(
         Similarity.asDouble($"embedding"), 0, 4).as("twin")).collect()
     assert(cmp.nonEmpty && cmp.forall(r => r.getInt(0) == r.getInt(1)))
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.operators.{Dedup, Packing, Sampling, TextAnalysis}
 import graft.sources.Tables
+import scala.jdk.CollectionConverters._
 
 /** One CURATION round over a document corpus — the pre-training data
   * chain composed end-to-end from the engine's standalone operators,
@@ -393,12 +394,114 @@ object CurationRound {
     }
   }
 
+  /** Bounds of [[foldBatch]]'s driver near-dup path: rows per bounded
+    * collect, and pair work, Σ over kept buckets of bn·(bn−1)/2 + bn·hn
+    * (bn batch entries, hn history postings). */
+  private[graft] final case class NearDupBounds(rows: Int, pairWork: Long)
+
+  /** The bounds [[foldBatch]] runs under, sized from driver heap
+    * measured on JDK 17 with 2^19 entry and 2^19 history rows: a
+    * collected row retains ~114 B (~330 B at the collect's peak), and
+    * [[localNearDrops]] peaks at ~435 B per input row, garbage included
+    * (1.1 s on 4 cores). At 2^18 rows per collect the path so holds
+    * ~0.3 GB at worst, under a sixth of the smallest driver heap the
+    * harnesses here give (2 GB). Pair work sorts one long per unit:
+    * 32 MB at 2^22, e.g. one 2,900-entry bucket. Constants: past them
+    * the distributed path's per-job fixed cost is no longer the cost
+    * that matters. */
+  private[graft] val LocalNearDup = NearDupBounds(1 << 18, 1L << 22)
+
+  /** The near-dup step of [[foldBatch]] on the driver, from its three
+    * bounded collects: `entries` (sh, id, n_sh) — one row per batch
+    * shingle row in a kept bucket, duplicates included — `hist` (sh,
+    * hid, hn) — the distinct history postings of those shingles with
+    * the history doc's n_sh — and `quality` (id, text length) per s3
+    * row. Returns the batch ids that drop: those within minJaccard of a
+    * history doc, and the non-canonical members of the within-batch
+    * components ([[Dedup.localNonCanonical]]). None when the pair work
+    * exceeds `maxPairWork`, or when a Jaccard denominator is zero (the
+    * distributed path then decides, with the session's division rule).
+    *
+    * The counts are the distributed path's: a document is its
+    * (id, n_sh) entry, shared shingles count each occurrence of a
+    * duplicate (id, sh) row, in-batch pairs join entries of different
+    * ids (a same-id pair is a self-loop there and changes no verdict),
+    * and Jaccard is the same IEEE-double quotient of exact longs.
+    * Pairs are counted by sorting packed entry-index keys: 8 bytes per
+    * unit of pair work. */
+  private[graft] def localNearDrops(entries: Array[Row], hist: Array[Row],
+                                    quality: Array[Row], minJaccard: Double,
+                                    maxPairWork: Long): Option[Set[Long]] = {
+    def doc(r: Row) = (r.getLong(1), r.getLong(2))
+    // Sorted by (id, n_sh): of two entries with different ids, the
+    // smaller index has the smaller id.
+    val docs = entries.map(doc).distinct.sorted
+    val hDocs = hist.map(doc).distinct.sorted
+    val (at, hAt) = (docs.zipWithIndex.toMap, hDocs.zipWithIndex.toMap)
+    val buckets = entries.groupMap(_.getLong(0))(r => at(doc(r)))
+    val hBuckets = hist.groupMap(_.getLong(0))(r => hAt(doc(r)))
+    val pairWork = buckets.iterator.map { case (sh, b) =>
+      b.length.toLong * (b.length - 1) / 2 + b.length.toLong * hBuckets.get(sh).fold(0)(_.length)
+    }.sum
+    /** The index pairs (x, y) that `fill` emits, packed in a long, whose
+      * count passes the distributed path's Jaccard test between sizes
+      * `n1(x)` and `n2(y)`; None on a zero denominator. */
+    def hits(n1: Int => Long, n2: Int => Long)(
+        fill: (Long => Unit) => Unit): Option[Seq[(Int, Int)]] = {
+      val keys = new Array[Long](pairWork.toInt)
+      var k = 0
+      fill { key => keys(k) = key; k += 1 }
+      java.util.Arrays.sort(keys, 0, k)
+      val out = Seq.newBuilder[(Int, Int)]
+      var (i, zero) = (0, false)
+      while (i < k && !zero) {
+        var j = i
+        while (j < k && keys(j) == keys(i)) j += 1
+        val (x, y, shared) = ((keys(i) >>> 32).toInt, keys(i).toInt, (j - i).toLong)
+        val d = n1(x) + n2(y) - shared
+        zero = d == 0
+        if (!zero && shared.toDouble / d.toDouble >= minJaccard) out += ((x, y))
+        i = j
+      }
+      Option.when(!zero)(out.result())
+    }
+    def pack(a: Int, b: Int) = (a.toLong << 32) | b
+    for {
+      _ <- Option.when(pairWork <= maxPairWork)(())
+      inBatch <- hits(docs(_)._2, docs(_)._2) { emit =>
+        buckets.valuesIterator.foreach { b =>
+          for (i <- b.indices; j <- i + 1 until b.length if docs(b(i))._1 != docs(b(j))._1)
+            emit(pack(math.min(b(i), b(j)), math.max(b(i), b(j))))
+        }
+      }
+      vsHistory <- hits(docs(_)._2, hDocs(_)._2) { emit =>
+        buckets.foreach { case (sh, b) =>
+          hBuckets.get(sh).foreach(h => for (x <- b; y <- h) emit(pack(x, y)))
+        }
+      }
+    } yield {
+      val q = quality.toSeq.groupMap(_.getLong(0))(r => Option.when(!r.isNullAt(1))(r.getLong(1)))
+      vsHistory.map(p => docs(p._1)._1).toSet ++
+        Dedup.localNonCanonical(inBatch.map { case (x, y) => (docs(x)._1, docs(y)._1) }, q)
+    }
+  }
+
   /** Fold one ingest batch (rows: idCol, strataCol, textCol) through
     * the chain against `statePath`; appends the batch's state deltas
     * and returns its six funnel rows (stages 0–5; the mixture is a
     * round-cut decision — see [[cutRound]]). */
   def foldBatch(spark: SparkSession, statePath: String, batch: DataFrame,
-                bench: DataFrame, cfg: Config, batchId: Long): DataFrame = {
+                bench: DataFrame, cfg: Config, batchId: Long): DataFrame =
+    foldBatch(spark, statePath, batch, bench, cfg, batchId, LocalNearDup)
+
+  /** [[foldBatch]] with the driver near-dup path's bounds as an
+    * argument; `NearDupBounds(0, 0)` forces the distributed path on any
+    * batch with an exact survivor. */
+  private[graft] def foldBatch(spark: SparkSession, statePath: String,
+                               batch: DataFrame, bench: DataFrame, cfg: Config,
+                               batchId: Long, bounds: NearDupBounds): DataFrame = {
+    require(bounds.rows >= 0 && bounds.rows < Int.MaxValue && bounds.pairWork >= 0,
+      s"near-dup bounds out of range: $bounds")
     // A JobPool runs every INDEPENDENT part of this fold as a
     // concurrent job under a `fold:*` label. What overlaps, and why it
     // is safe:
@@ -406,18 +509,37 @@ object CurationRound {
     //    the guard's answer is only needed before the first state write
     //    (and for the shdf frontier, after batch-df), the census row
     //    only at funnel assembly;
-    //  - the bench probe starts as soon as s3 exists, and the
-    //    history-edge branch (histDrops) runs beside the canonical-keep
-    //    step, which stays on this thread. The three only READ (s3, the
-    //    batch's bucket build, state scoped < batchId) and share no
-    //    intermediate but checkpointed ones. The probe runs over s3,
-    //    not s4: a doc's contamination depends only on that doc and the
-    //    bench, so contam(s3) ∩ s4 = contam(s4), and s4 − contam(s3) is
-    //    exactly the chain's stage 5;
-    //  - s4 = s3 − histDrops − nonCanon and retained = s4 − contam are
-    //    taken once their inputs are ready;
+    //  - the bench probe starts as soon as s3 exists, and the near-dup
+    //    step's collects (or, past its bounds, its history-edge branch)
+    //    run beside it. They only READ (s3, the batch's bucket build,
+    //    state scoped < batchId) and share no intermediate but
+    //    checkpointed ones. The probe runs over s3, not s4: a doc's
+    //    contamination depends only on that doc and the bench, so
+    //    contam(s3) ∩ s4 = contam(s4), and s4 − contam(s3) is exactly
+    //    the chain's stage 5;
+    //  - s3 is flagged once with the near-dup drops and the bench hits;
+    //    s4 and retained are filters of that one checkpoint;
     //  - each state delta starts as soon as its input exists (see
     //    "State deltas" below).
+    //
+    //
+    // The near-dup step drops a batch doc within minJaccard of a
+    // retained history doc (the shipped copy stays) and every
+    // non-canonical member of a within-batch component. It has two
+    // paths, which read the same valve-kept buckets and history
+    // postings and give the same drops (spec-proven on state rows):
+    //  - DRIVER, under every bound of `bounds` (LocalNearDup): three
+    //    bounded collects — the kept bucket entries (sh, id, __n_sh),
+    //    the history postings of their shingles with the survivors'
+    //    __n_sh, s3's (id, quality) — of at most 2^18 rows each; then
+    //    localNearDrops counts, tests and elects in driver memory,
+    //    sorting at most 2^22 packed pair keys (~0.3 GB of driver heap
+    //    at worst, see LocalNearDup);
+    //  - DISTRIBUTED, past any bound: the bucket-array pair fan-out and
+    //    canonicalKeepList, as Spark jobs.
+    // On a second fold of a few thousand shingle rows the step runs 17
+    // jobs on the driver path against 33 distributed, and a job carries
+    // ~28 ms of fixed cost on a warm 4-core session.
     // Stage checkpoints, released when the fold ends, either way.
     val pinned = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
     def pin(df: DataFrame): DataFrame = {
@@ -509,121 +631,149 @@ object CurationRound {
         explode(col("arr")).as("raw"))
       .select(id, col("__n_sh"), xxhash64(col("raw")).as("sh"))) }
     val batchSizes = batchSh.select(id, col("__n_sh")).distinct()
-    // The batch's shingle-df census, computed ONCE (checkpointed): it
-    // probes the history semi-join, feeds the valve, and is the shdf
-    // state delta — three consumers, one aggregation.
-    val batchDf = labeled("fold:batch-df") {
-      pin(batchSh.groupBy(col("sh")).agg(count(lit(1)).as("bn"))) }
+    import graft.functions.CappedCollectList.cappedCollectList
+    // The batch's shingle census in ONE aggregation, checkpointed: per
+    // shingle its batch df `bn` (the shdf state delta and the valve's
+    // batch half) and its bucket of (id, __n_sh) entries. A bucket the
+    // valve keeps has bn ≤ dfCap entries, so cappedCollectList never
+    // truncates a kept one; it only bounds the buffers of the buckets
+    // the valve drops (the shinglePairCounts hygiene).
+    val batchAgg = labeled("fold:batch-df") {
+      pin(batchSh.groupBy(col("sh")).agg(count(lit(1)).as("bn"),
+        cappedCollectList(struct(id, col("__n_sh")), cfg.jaccardDfCap).as("bdocs"))) }
     // shdf counts ALL stage-3 survivors' shingles (not just retained
     // docs'): the full chain's df cap is computed over s3 in
     // ngramJaccardPairs, so a doc that later drops at near-dup/
     // decontamination still contributes df there — and must here too,
     // or the valve diverges from run() when the cap binds.
     val shdfW = append("shdf") {
-      batchDf.select(col("sh"), col("bn").as("n"))
+      batchAgg.select(col("sh"), col("bn").as("n"))
         .withColumn("__batch_id", lit(batchId)) }
-    import graft.functions.CappedCollectList.cappedCollectList
-    // The batch's valve-kept shingle buckets, checkpointed ONCE: both
-    // near-dup branches (history edges and the canonical loop) read
-    // them. The history census is semi-joined down to the BATCH's
-    // shingles before the replay-dedup + fold: the valve only needs df
-    // for shingles the batch actually carries, so the two aggregation
-    // exchanges run over O(batch ∩ history) rows instead of every
-    // shingle ever ingested — the difference between per-fold cost
-    // tracking the batch and tracking the corpus (at 100 TB, with shdf
-    // bucketed by `sh`, the semi join is the only history-wide scan and
-    // it prunes at the scan). The pool valve bounds every kept
-    // shingle's batch+history df ≤ dfCap, so cappedCollectList never
-    // truncates — it is buffer-bounding hygiene, exactly like
-    // shinglePairCounts' bucket build.
+    // The valve filters the batch census by the scoped history df,
+    // checkpointed: both collects (or both distributed branches) read
+    // the kept buckets. The history census is semi-joined down to the BATCH's shingles before
+    // the replay-dedup + fold: the valve only needs df for shingles the
+    // batch actually carries, so the two aggregation exchanges run over
+    // O(batch ∩ history) rows instead of every shingle ever ingested —
+    // per-fold cost tracks the batch, not the corpus (at 100 TB, with
+    // shdf bucketed by `sh`, the semi join is the only history-wide scan
+    // and it prunes at the scan).
     val bBuckets = labeled("fold:batch-df") {
-      val histDfScoped = scopedShdf(spark, statePath, batchId, admitted())
-        .join(batchDf.select(col("sh")), Seq("sh"), "left_semi")
+      val histDf = scopedShdf(spark, statePath, batchId, admitted())
+        .join(batchAgg.select(col("sh")), Seq("sh"), "left_semi")
         .dropDuplicates("__batch_id", "sh")
         .groupBy(col("sh")).agg(sum(col("n")).as("n"))
-      val keepSh = batchDf.join(histDfScoped, Seq("sh"), "left_outer")
+      pin(batchAgg.join(histDf, Seq("sh"), "left_outer")
         .filter(col("bn") + coalesce(col("n"), lit(0L)) <= cfg.jaccardDfCap)
-        .select(col("sh"))
-      pin(batchSh.join(keepSh, Seq("sh"), "left_semi")
-        .groupBy(col("sh"))
-        .agg(cappedCollectList(struct(id, col("__n_sh")), cfg.jaccardDfCap)
-          .as("bdocs"))) }
+        .select(col("sh"), col("bdocs")))
+    }
+    // The retained history docs posting a kept shingle (distinct: a
+    // replayed batch appends its postings again). The valve bounds each
+    // kept shingle's history df by dfCap too. Survivors are parquet
+    // state, read where joined.
+    val histPostings = scoped("postings", postingsSchema(cfg))
+      .select(id.as("__hid"), col("sh")).distinct()
+      .join(bBuckets.select(col("sh")), Seq("sh"), "left_semi")
+    val histSizes = scoped("survivors", survivorsSchema(cfg))
+      .dropDuplicates(cfg.idCol)
+      .select(id.as("__hid"), col("__n_sh").as("__hn"))
+    val quality = s3.select(id, length(col(cfg.textCol)).cast("long").as("__q"))
+
     def jac(shared: Column, n1: Column, n2: Column): Column =
       shared.cast("double") / (n1 + n2 - shared).cast("double")
-    // Pair fan-out through BUCKET ARRAYS + double explode, the
-    // shinglePairCounts shape (guide §2.4 — no join on the fan-out
-    // path): a common shingle under the valve (e.g. a boilerplate line
-    // every page carries, df ≲ dfCap) makes the per-shingle pair space
-    // quadratic, and generating it through a shuffled join paid one
-    // 5.8 s job per fold at sf0.1; through a bucket-local explode that
-    // streams straight into the codegen'd count aggregate the same
-    // tuples never touch join machinery. Hot buckets additionally
-    // CHUNK-SPLIT (Dedup.bucketSelfPairCounts — guide §2.5) so one
-    // boilerplate shingle's quadratic pair space parallelizes instead
-    // of serializing in its bucket's task.
-    val chunk = 256
-    def chunksOf(c: Column) = transform(
-      sequence(lit(0), ((size(c) - lit(1)) / lit(chunk)).cast("int")),
-      i => slice(c, i * chunk + 1, lit(chunk)))
-    val parts = spark.sessionState.conf.numShufflePartitions
-    // history edges: any retained doc within minJaccard vetoes (the
-    // shipped copy stays; the newcomer drops). The history postings are
-    // semi-joined to the kept shingles (the bucket keys ARE the kept
-    // shingles: every batch shingle has a bucket unless the valve
-    // dropped it). hBuckets ⋈ bBuckets is a bucket-scale join (one row
-    // per shingle); the chunk-pair rows then re-shuffle ONCE round-robin
-    // — the whole joined posting mass crosses that exchange (small
-    // buckets as one chunk-pair row, hot ones as their slice pairs), the
-    // bucketSelfPairCounts trade (measured win at sf0.1; same §2.5
-    // treatment, bipartite form). Unconditional chunking, one path (a
-    // hot/cold filter split would re-evaluate the bucket join once per
-    // branch); small buckets are one chunk-pair. Survivors are
-    // parquet-backed state with ONE consumer (the size join): no
-    // reason to materialize a copy.
-    val histDropsF = submit("fold:s4-near") {
-      val survivors = scoped("survivors", survivorsSchema(cfg))
-        .dropDuplicates(cfg.idCol)
-      val hBuckets = scoped("postings", postingsSchema(cfg))
-        .select(id.as("__hid"), col("sh")).distinct()
-        .join(bBuckets.select(col("sh")), Seq("sh"), "left_semi")
-        .groupBy(col("sh"))
-        .agg(cappedCollectList(col("__hid"), cfg.jaccardDfCap).as("hdocs"))
-      pin(bBuckets.join(hBuckets, Seq("sh"))
-        .select(chunksOf(col("bdocs")).as("__bc"), chunksOf(col("hdocs")).as("__hc"))
-        .select(explode(col("__bc")).as("__ci"), col("__hc"))
-        .select(col("__ci"), explode(col("__hc")).as("__cj"))
-        .repartition(parts)
-        .select(explode(col("__ci")).as("a"), col("__cj"))
-        .select(col("a"), explode(col("__cj")).as("__hid"))
-        .groupBy(col(s"a.${cfg.idCol}").as(cfg.idCol), col("__hid"),
-          col("a.__n_sh").as("__n_sh"))
-        .agg(count(lit(1)).as("shared"))
-        .join(survivors.select(id.as("__hid"), col("__n_sh").as("__hn")),
-          Seq("__hid"))
-        .filter(jac(col("shared"), col("__n_sh"), col("__hn"))
-          >= cfg.jaccardMinJaccard)
-        .select(id).distinct()) }
-    // within-batch edges: the standalone canonical rule on the batch's
-    // own pair graph (quality = length, ties min id)
-    val nonCanon = labeled("fold:canonical") {
-      val batchPairs = Dedup.bucketSelfPairCounts(
-          bBuckets.filter(size(col("bdocs")) > 1), "bdocs", cfg.idCol, "__n_sh",
-          chunk)
-        .groupBy(col(s"x.${cfg.idCol}").as("id1"), col(s"y.${cfg.idCol}").as("id2"),
-          col("x.__n_sh").as("n1"), col("y.__n_sh").as("n2"))
-        .agg(count(lit(1)).as("shared"))
-        .filter(jac(col("shared"), col("n1"), col("n2"))
-          >= cfg.jaccardMinJaccard)
-      Dedup.canonicalKeepList(batchPairs,
-          s3.select(id, length(col(cfg.textCol)).cast("long").as("__q")),
-          cfg.idCol, "__q")
-        .filter(!col("is_canonical"))
-        .select(col("doc_id").as(cfg.idCol)) }
-    val s4 = labeled("fold:s4-near") {
-      pin(s3.join(histDropsF.get(), Seq(cfg.idCol), "left_anti")
-        .join(nonCanon, Seq(cfg.idCol), "left_anti")) }
-    val retained = labeled("fold:s5-decontam") {
-      pin(s4.join(contamF.get(), Seq(cfg.idCol), "left_anti")) }
+    // The distributed path. Pair fan-out through BUCKET ARRAYS + double
+    // explode, the shinglePairCounts shape (guide §2.4 — no join on the
+    // fan-out path): a common shingle under the valve (e.g. a
+    // boilerplate line every page carries, df ≲ dfCap) makes the
+    // per-shingle pair space quadratic, and generating it through a
+    // shuffled join paid one 5.8 s job per fold at sf0.1; through a
+    // bucket-local explode that streams straight into the codegen'd
+    // count aggregate the same tuples never touch join machinery. Hot
+    // buckets additionally CHUNK-SPLIT (Dedup.bucketSelfPairCounts —
+    // guide §2.5) so one boilerplate shingle's quadratic pair space
+    // parallelizes instead of serializing in its bucket's task.
+    def distributedNearDrops(): DataFrame = {
+      val chunk = 256
+      def chunksOf(c: Column) = transform(
+        sequence(lit(0), ((size(c) - lit(1)) / lit(chunk)).cast("int")),
+        i => slice(c, i * chunk + 1, lit(chunk)))
+      val parts = spark.sessionState.conf.numShufflePartitions
+      // history edges: any retained doc within minJaccard vetoes.
+      // hBuckets ⋈ bBuckets is a bucket-scale join (one row per shingle);
+      // the chunk-pair rows then re-shuffle ONCE round-robin — the whole
+      // joined posting mass crosses that exchange (small buckets as one
+      // chunk-pair row, hot ones as their slice pairs), the
+      // bucketSelfPairCounts trade (measured win at sf0.1; same §2.5
+      // treatment, bipartite form). Unconditional chunking, one path (a
+      // hot/cold filter split would re-evaluate the bucket join once per
+      // branch); small buckets are one chunk-pair.
+      val histDropsF = submit("fold:s4-near") {
+        val hBuckets = histPostings.groupBy(col("sh"))
+          .agg(cappedCollectList(col("__hid"), cfg.jaccardDfCap).as("hdocs"))
+        pin(bBuckets.join(hBuckets, Seq("sh"))
+          .select(chunksOf(col("bdocs")).as("__bc"), chunksOf(col("hdocs")).as("__hc"))
+          .select(explode(col("__bc")).as("__ci"), col("__hc"))
+          .select(col("__ci"), explode(col("__hc")).as("__cj"))
+          .repartition(parts)
+          .select(explode(col("__ci")).as("a"), col("__cj"))
+          .select(col("a"), explode(col("__cj")).as("__hid"))
+          .groupBy(col(s"a.${cfg.idCol}").as(cfg.idCol), col("__hid"),
+            col("a.__n_sh").as("__n_sh"))
+          .agg(count(lit(1)).as("shared"))
+          .join(histSizes, Seq("__hid"))
+          .filter(jac(col("shared"), col("__n_sh"), col("__hn"))
+            >= cfg.jaccardMinJaccard)
+          .select(id).distinct()) }
+      // within-batch edges: the standalone canonical rule on the batch's
+      // own pair graph (quality = length, ties min id)
+      val nonCanon = labeled("fold:canonical") {
+        val batchPairs = Dedup.bucketSelfPairCounts(
+            bBuckets.filter(size(col("bdocs")) > 1), "bdocs", cfg.idCol, "__n_sh",
+            chunk)
+          .groupBy(col(s"x.${cfg.idCol}").as("id1"), col(s"y.${cfg.idCol}").as("id2"),
+            col("x.__n_sh").as("n1"), col("y.__n_sh").as("n2"))
+          .agg(count(lit(1)).as("shared"))
+          .filter(jac(col("shared"), col("n1"), col("n2"))
+            >= cfg.jaccardMinJaccard)
+        Dedup.canonicalKeepList(batchPairs, quality, cfg.idCol, "__q")
+          .filter(!col("is_canonical"))
+          .select(col("doc_id").as(cfg.idCol)) }
+      histDropsF.get().unionByName(nonCanon)
+    }
+    // The driver path's collects run concurrently, each over one
+    // partition: a collect-limit over several starts a job per round of
+    // partitions it tries.
+    def bounded(df: DataFrame): Option[Array[Row]] = {
+      val rows = df.coalesce(1).limit(bounds.rows + 1).collect()
+      Option.when(rows.length <= bounds.rows)(rows)
+    }
+    val histF = submit("fold:s4-near") { bounded(histPostings
+      .join(histSizes, Seq("__hid")).select(col("sh"), col("__hid"), col("__hn"))) }
+    val qualityF = submit("fold:canonical") { bounded(quality) }
+    val entries = labeled("fold:batch-df") { bounded(bBuckets
+      .select(col("sh"), explode(col("bdocs")).as("e"))
+      .select(col("sh"), col(s"e.${cfg.idCol}"), col("e.__n_sh"))) }
+    val (hist, qual) = (histF.get(), qualityF.get())
+    val local = for (e <- entries; h <- hist; q <- qual;
+                     drops <- localNearDrops(e, h, q, cfg.jaccardMinJaccard, bounds.pairWork))
+      yield drops
+    val nearSchema = StructType(Seq(StructField(cfg.idCol, LongType),
+      StructField("__near", BooleanType)))
+    val nearDrops = local match {
+      case Some(drops) => broadcast(spark.createDataFrame(
+        drops.toSeq.map(Row(_, true)).asJava, nearSchema))
+      case None => distributedNearDrops()
+        .distinct().select(id, lit(true).as("__near"))
+    }
+    // s3 flagged once: __near (stage 4 drops it) and __contam (a bench
+    // hit). Stage 4 keeps !__near, stage 5 keeps !__near && !__contam;
+    // the probe over s3 stands in for one over s4 (see the pool comment).
+    val flagged = labeled("fold:s4-near") {
+      pin(s3.join(nearDrops, Seq(cfg.idCol), "left_outer")
+        .join(contamF.get().withColumn("__contam", lit(true)), Seq(cfg.idCol), "left_outer")
+        .withColumn("__near", coalesce(col("__near"), lit(false)))
+        .withColumn("__contam", coalesce(col("__contam"), lit(false)))) }
+    val retained = flagged.filter(!col("__near") && !col("__contam"))
 
     // State deltas: each starts as soon as its input exists — fps once
     // gated is checkpointed, shdf once batch-df is, survivors and
@@ -654,28 +804,24 @@ object CurationRound {
         .select(id, col("sh")).distinct()
         .withColumn("__batch_id", lit(batchId)) }
     // Funnel counts for THIS batch (additive across batches by
-    // stage): ONE union-aggregate over the checkpointed stage frames —
-    // the three per-frame count jobs this replaced each paid a full
-    // driver round-trip for a one-row answer (guide §1.2) — running
-    // beside the writes.
+    // stage): ONE aggregate over the flagged s3 checkpoint gives stages
+    // 3, 4 and 5, running beside the writes.
     val statsF = submit("fold:stats") {
-      s3.select(lit(3).as("__stage"), col("__n_tokens"))
-        .unionByName(s4.select(lit(4).as("__stage"), col("__n_tokens")))
-        .unionByName(retained.select(lit(5).as("__stage"), col("__n_tokens")))
-        .groupBy(col("__stage"))
-        .agg(count(lit(1)).as("d"),
-          coalesce(sum(col("__n_tokens")), lit(0L)).as("t"))
-        .collect()
-        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap }
+      val tok = col("__n_tokens")
+      val in4 = !col("__near")
+      val in5 = in4 && !col("__contam")
+      flagged.agg(count(lit(1)), coalesce(sum(tok), lit(0L)),
+        count(when(in4, 1)), coalesce(sum(when(in4, tok)), lit(0L)),
+        count(when(in5, 1)), coalesce(sum(when(in5, tok)), lit(0L))).head() }
     // get() rethrows a task's failure (wrapped): a failed delta write
     // must fail the fold BEFORE the funnel commit below — exactly the
     // partial-append state the replay contract recovers from.
     Seq(fpsW, shdfW, survivorsW, postingsW).foreach(_.get())
-    val statByStage = statsF.get()
+    val st = statsF.get()
     val g = gF.get()
     def lng(i: Int): Long = if (g.isNullAt(i)) 0L else g.getLong(i)
     def stat(stage: Int): (Long, Long) =
-      statByStage.getOrElse(stage, (0L, 0L))
+      (st.getLong(2 * (stage - 3)), st.getLong(2 * (stage - 3) + 1))
     val (d3, t3) = stat(3)
     val (d4, t4) = stat(4)
     val (d5, t5) = stat(5)

@@ -13,8 +13,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * input and shared by every consumer of it — the reference's
   * write-once `dw_data_metrics` table that every tool queries
   * (snowflake_tool.py:23-39), applied to the near-dup pair table, the
-  * span census, the metrics table, the curation chain and the fitted
-  * unigram and k-means models.
+  * span census, the metrics table, the curation chain, the
+  * decontamination bench table and the fitted unigram and k-means
+  * models.
   *
   * KEY: (session, each input frame's canonicalized analyzed plan, the
   * (path, length, mtime) of every file those plans scan, params). Two

@@ -516,11 +516,12 @@ object Dedup {
     *
     * Scale shape: the asymmetry is the whole design. The benchmark side
     * (eval suites — thousands to ~10^5 docs) shingles, df-caps, and
-    * denormalizes its per-doc shingle count into a small table that is
-    * BROADCAST; the 100 TB corpus side then never shuffles its shingles
-    * at all — the map-side hash join + partial-aggregated count per
-    * (doc, bench) pair is the only data motion, and output is bounded by
-    * corpus-shingle-rows × benchDfCap.
+    * denormalizes its per-doc shingle count into a small table, built
+    * once per bench ([[benchTable]]), that is BROADCAST; the 100 TB
+    * corpus side then never shuffles its shingles at all — the map-side
+    * hash join + partial-aggregated count per (doc, bench) pair is the
+    * only data motion, and output is bounded by corpus-shingle-rows ×
+    * benchDfCap.
     *
     * `benchDfCap` drops shingles appearing in more than that many
     * BENCHMARK docs (boilerplate instructions like "choose the best
@@ -537,22 +538,9 @@ object Dedup {
   def contaminationPairs(corpus: DataFrame, bench: DataFrame,
                          idCol: String, textCol: String,
                          n: Int = 3, minOverlap: Double = 0.5,
-                         benchDfCap: Int = 100): DataFrame = {
-    def shingleRows(df: DataFrame, as: String) =
-      df.select(col(idCol).as(as), explode(shingles(col(textCol), n)).as("raw"))
-        .select(col(as), xxhash64(col("raw")).as("sh"))
-    // Three consumers (sizes, df-cap, the broadcast table) would each
-    // re-scan and re-shingle the bench set; persist the bench-sized
-    // (long, long) rows once. Cache contract as in the LSH family:
-    // callers sweeping many corpora should clearCache() between runs.
-    val bsh = shingleRows(bench, "bench_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bSizes = bsh.groupBy(col("bench_id")).agg(count(lit(1)).as("n_bench"))
-    val bKeep = bsh.groupBy(col("sh")).agg(count(lit(1)).as("__bdf"))
-      .filter(col("__bdf") <= benchDfCap).select(col("sh"))
-    val bTable = bsh.join(bKeep, Seq("sh")).join(bSizes, Seq("bench_id"))
-    shingleRows(corpus, "doc_id")
-      .join(broadcast(bTable), Seq("sh"))
+                         benchDfCap: Int = 100): DataFrame =
+    shingleRows(corpus, idCol, textCol, n, "doc_id")
+      .join(broadcast(benchTable(bench, idCol, textCol, n, benchDfCap)), Seq("sh"))
       .filter(col("doc_id") =!= col("bench_id"))
       // shingles are distinct per doc on BOTH sides, so the per-pair row
       // count IS |A ∩ B|; n_bench rides in the broadcast struct so no
@@ -564,6 +552,44 @@ object Dedup {
       .filter(col("overlap") >= minOverlap)
       .select(col("doc_id"), col("bench_id"), col("shared"),
         col("n_bench"), col("overlap"))
+
+  private def shingleRows(df: DataFrame, idCol: String, textCol: String,
+                          n: Int, as: String) =
+    df.select(col(idCol).as(as), explode(shingles(col(textCol), n)).as("raw"))
+      .select(col(as), xxhash64(col("raw")).as("sh"))
+
+  private val benchTables =
+    graft.SessionMemo[(String, String, Int, Int), String](graft.SessionMemo.delete)
+
+  /** The bench side of [[contaminationPairs]], (sh, bench_id, n_bench):
+    * every bench shingle row whose bench df is at most `benchDfCap`,
+    * with its document's full shingle count. Built once per (`bench`,
+    * columns, `n`, `benchDfCap`) as a [[graft.SessionMemo]] family and
+    * written to parquet under [[graft.SessionMemo.tempDir]] (the
+    * [[NearDupPipeline]] convention): a fold or chain that probes the
+    * same bench re-reads the file instead of re-shingling the bench, and
+    * no cached block outlives the call. */
+  private def benchTable(bench: DataFrame, idCol: String, textCol: String,
+                         n: Int, benchDfCap: Int): DataFrame = {
+    val s = bench.sparkSession
+    val path = benchTables(Seq(bench), (idCol, textCol, n, benchDfCap)) {
+      val path = graft.SessionMemo.tempDir(s, "graft_bench_shingles")
+      val bsh = shingleRows(bench, idCol, textCol, n, "bench_id")
+      val bSizes = bsh.groupBy(col("bench_id")).agg(count(lit(1)).as("n_bench"))
+      val bKeep = bsh.groupBy(col("sh")).agg(count(lit(1)).as("__bdf"))
+        .filter(col("__bdf") <= benchDfCap).select(col("sh"))
+      bsh.join(bKeep, Seq("sh")).join(bSizes, Seq("bench_id"))
+        .select(col("sh"), col("bench_id"), col("n_bench"))
+        .write.mode("overwrite").parquet(path)
+      path
+    }
+    // The schema the build wrote, declared (no footer read); coalesce
+    // restores n_bench's non-nullability (a count), which parquet erases.
+    s.read.schema(StructType(Seq(StructField("sh", LongType),
+        StructField("bench_id", bench.schema(idCol).dataType),
+        StructField("n_bench", LongType))))
+      .parquet(path)
+      .select(col("sh"), col("bench_id"), coalesce(col("n_bench"), lit(0L)).as("n_bench"))
   }
 
   /** Connected components over an undirected near-dup pair graph —
@@ -585,7 +611,7 @@ object Dedup {
     *  - Over the bound, or with any other id type, [[labelLoop]] runs
     *    over the persisted edges: diameter rounds of distributed
     *    min-label propagation, THROWING when `maxIter` rounds do not
-    *    converge.
+    *    converge. Its labels are a local checkpoint (see there).
     * Both paths return the same rows under the same schema, NULL ids
     * included: a NULL id is labeled with the smallest component among
     * its partners and joins none of them (an equi-join never matches
@@ -647,17 +673,11 @@ object Dedup {
         Option.when(rows.length <= maxEdges) {
           val verts = rows.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted.distinct
           def at(r: Row, i: Int) = java.util.Arrays.binarySearch(verts, r.getLong(i))
-          // A union keeps the smaller root, so a root is its set's
-          // smallest index: the min id, as `verts` is sorted.
-          val parent = Array.range(0, verts.length)
-          @scala.annotation.tailrec def find(i: Int): Int =
-            if (parent(i) == i) i else { parent(i) = parent(parent(i)); find(parent(i)) }
-          for (r <- rows if !r.isNullAt(0) && !r.isNullAt(1)) {
-            val (a, b) = (find(at(r, 0)), find(at(r, 1)))
-            parent(math.max(a, b)) = math.min(a, b)
-          }
-          val nullRoots = rows.collect { case r if !r.isNullAt(0) && r.isNullAt(1) => find(at(r, 0)) }
-          val out = verts.indices.map(i => Row(box(verts(i)), box(verts(find(i))))) ++
+          // `verts` is sorted, so each set's root index is its min id.
+          val uf = new MinUnionFind(verts.length)
+          for (r <- rows if !r.isNullAt(0) && !r.isNullAt(1)) uf.union(at(r, 0), at(r, 1))
+          val nullRoots = rows.collect { case r if !r.isNullAt(0) && r.isNullAt(1) => uf.find(at(r, 0)) }
+          val out = verts.indices.map(i => Row(box(verts(i)), box(verts(uf.find(i))))) ++
             Option.when(nullRoots.nonEmpty)(Row(null, box(verts(nullRoots.min))))
           edges.sparkSession.createDataFrame(out.asJava, StructType(Seq(
             StructField("id", idField.dataType, idField.nullable),
@@ -666,8 +686,23 @@ object Dedup {
       }
   }
 
+  /** Disjoint sets over 0 until `n` (path halving); a union keeps the
+    * smaller root, so every set's root is its smallest index. */
+  private[graft] final class MinUnionFind(n: Int) {
+    private val parent = Array.range(0, n)
+    @scala.annotation.tailrec def find(i: Int): Int =
+      if (parent(i) == i) i else { parent(i) = parent(parent(i)); find(parent(i)) }
+    def union(a: Int, b: Int): Unit = {
+      val (x, y) = (find(a), find(b))
+      parent(math.max(x, y)) = math.min(x, y)
+    }
+  }
+
   /** The distributed path of [[connectedComponents]] over `edges` as
-    * [[closedEdges]] builds them (unpersisted on return).
+    * [[closedEdges]] builds them (unpersisted on return). The labels
+    * come back as an eager localCheckpoint, whose blocks
+    * `Dataset.unpersist` does not free: a caller done with them
+    * releases them with `GraftBridge.releaseLocalCheckpoint`.
     *
     * Algorithm: min-label propagation. Every vertex starts labeled with
     * its own id; each round takes the min of its label and its
@@ -691,11 +726,14 @@ object Dedup {
     * large-star/small-star variant saves rounds on high-diameter web
     * graphs; dedup graphs aren't that). The edge set carries SELF-LOOPS
     * so a round is `min over the closed neighborhood` in a single
-    * aggregate: the naive form `least(own, min-over-neighbors)` joins
-    * the label table twice per round, which doubles the logical lineage
-    * every iteration — by round ~12 the plan tree is 4000× and merely
-    * RENDERING it for the SQL UI OOMs the driver. Labels persist per
-    * round and unpersist as soon as the next round materializes.
+    * aggregate instead of joining the label table twice. Each round's
+    * labels are an eager localCheckpoint, which cuts the lineage: a
+    * persisted round's executed plan nests the previous round's cached
+    * plan under both AQE's final and initial plans, so the rendered
+    * plan doubled per round and a 40-vertex chain at 20 rounds ran a
+    * 4 GB driver out of heap in `explainString` before the `maxIter`
+    * throw. A round's checkpoint is released once the next one has
+    * materialized.
     *
     * Ids must be NUMERIC: convergence is detected by the label SUM,
     * whose proof needs the min-label updates to decrease it
@@ -705,9 +743,9 @@ object Dedup {
     * never silently misorder; hash string ids to longs first (the
     * span-census discipline) to cluster them. */
   private[graft] def labelLoop(edges: DataFrame, maxIter: Int): DataFrame = {
-    val lvl = StorageLevel.MEMORY_AND_DISK
+    import org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint
     var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")).persist(lvl)
+      .withColumn("comp", col("id")).localCheckpoint()
     // Option: an empty pair set sums to SQL NULL — equal Nones then read
     // as the (vacuously correct) fixed point instead of an NPE.
     def labelSum(df: DataFrame): Option[java.math.BigDecimal] =
@@ -718,26 +756,30 @@ object Dedup {
     var prevSum: Option[Option[java.math.BigDecimal]] = None
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
-      // Self-loops put each vertex's own label in its neighborhood, so
-      // this min IS least(own label, neighbors' min) — `labels` is
-      // referenced exactly once per round (see scaladoc).
-      val next = edges
-        .join(labels.select(col("id").as("dst"), col("comp").as("__nc")), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(min(col("__nc")).as("comp"))
-        .persist(lvl)
-      val s = labelSum(next)
-      labels.unpersist()
-      labels = next
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
-      iter += 1
-    }
-    edges.unpersist()
-    if (!converged)
+    try {
+      while (!converged && iter < maxIter) {
+        // Self-loops put each vertex's own label in its neighborhood, so
+        // this min IS least(own label, neighbors' min) — `labels` is
+        // referenced exactly once per round (see scaladoc).
+        val next = edges
+          .join(labels.select(col("id").as("dst"), col("comp").as("__nc")), Seq("dst"))
+          .groupBy(col("src").as("id")).agg(min(col("__nc")).as("comp"))
+          .localCheckpoint()
+        releaseLocalCheckpoint(labels)
+        labels = next
+        val s = labelSum(next)
+        converged = prevSum.contains(s)
+        prevSum = Some(s)
+        iter += 1
+      }
+    } catch { case e: Throwable => releaseLocalCheckpoint(labels); throw e }
+    finally edges.unpersist()
+    if (!converged) {
+      releaseLocalCheckpoint(labels)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — " +
           "graph diameter exceeds the bound; raise maxIter")
+    }
     labels
   }
 
@@ -799,6 +841,28 @@ object Dedup {
     q.join(canon, Seq("comp"))
       .select(col("id").as("doc_id"), col("comp").as("component"),
         col("quality"), (col("id") === col("__canon")).as("is_canonical"))
+  }
+
+  /** [[canonicalKeepList]]'s verdict computed on the driver, for long
+    * ids and long quality: the ids of `pairs`' graph that are NOT their
+    * component's canonical. `quality` gives each id's quality values,
+    * one per `docs` row (None for a NULL); an id absent from it has one
+    * NULL, as the keep-list's left join gives it. The canonical is the
+    * min id among the members holding the component's max quality, or
+    * among all members when every quality is NULL. Components come from
+    * the [[MinUnionFind]] that [[localLabels]] uses. */
+  private[graft] def localNonCanonical(pairs: Iterable[(Long, Long)],
+                                       quality: Map[Long, Seq[Option[Long]]]): Set[Long] = {
+    val verts = pairs.flatMap(p => Seq(p._1, p._2)).toArray.sorted.distinct
+    def at(v: Long) = java.util.Arrays.binarySearch(verts, v)
+    val uf = new MinUnionFind(verts.length)
+    pairs.foreach(p => uf.union(at(p._1), at(p._2)))
+    verts.indices.groupBy(uf.find).valuesIterator.flatMap { members =>
+      val rows = members.map(verts).flatMap(v => quality.getOrElse(v, Seq(None)).map(v -> _))
+      val best = rows.flatMap(_._2).maxOption
+      val canon = rows.collect { case (v, q) if q == best => v }.min
+      members.map(verts).filter(_ != canon)
+    }.toSet
   }
 
   /** Bucketed EDIT-DISTANCE near-dup pairs — the character-level
@@ -1028,7 +1092,7 @@ object Dedup {
     val toks = filter(tokens(normalized(col(textCol))), t => length(t) > 0)
     // Two consumers (span starts, rebuild join) each re-run the scan +
     // regex tokenization without this; persist once with disk spill
-    // (the contaminationPairs/semDedup cache contract — sweep callers
+    // (the semDedup cache contract — sweep callers
     // clearCache() between corpora).
     val base = df
       .select(col(idCol).as("doc_id"), toks.as("__toks"))

@@ -667,9 +667,8 @@ object Similarity {
     * component, keep); `component` is the canonical id (its own id for
     * singletons), `keep` marks the component minimum. Zero/NaN-norm
     * vectors are excluded like the rest of the family. Caller cache
-    * contract as [[Dedup.contaminationPairs]]: the assigned projection
-    * is persisted for its three consumers; sweep callers should
-    * `clearCache()` between corpora. */
+    * contract: the assigned projection is persisted for its three
+    * consumers; sweep callers should `clearCache()` between corpora. */
   /** Cell count for [[semDedup]], derived from corpus size so cells hold
     * ~`targetCell` vectors as the corpus grows — the k ∝ n contract that
     * keeps per-cell pair work bounded (the [[planesFor]] analog).

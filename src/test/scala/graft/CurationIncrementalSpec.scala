@@ -287,10 +287,13 @@ class CurationIncrementalSpec extends AnyFunSuite {
     CurationRound.foldBatch(spark, statePath,
       Seq((1L, "en", mkDoc("la")), (2L, "en", mkDoc("lb")))
         .toDF("doc_id", "lang", "text"), bench, cfg, 0L)
-    // clearCache first (the bench harness's between-queries move): it
-    // releases CACHE-MANAGER entries from operators inside the fold —
-    // what it can NEVER release is a leaked localCheckpoint, which is
-    // exactly what the final assert would catch.
+    // Nothing the fold persisted outlives it: no checkpoint block and no
+    // cache-manager entry (the bench side is a file-backed memo).
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "foldBatch left persisted RDD blocks")
+    // clearCache (the bench harness's between-queries move) releases
+    // CACHE-MANAGER entries only — what it can NEVER release is a leaked
+    // localCheckpoint, which is exactly what the final assert catches.
     spark.catalog.clearCache()
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "foldBatch leaked checkpoint RDD blocks")
@@ -398,6 +401,149 @@ class CurationIncrementalSpec extends AnyFunSuite {
     assert(ids(CurationRound.readRetained(spark, statePath, cfg)) == Set(1L, 2L, 12L))
   }
 
+  test("a second fold over history, under the near-dup bounds, runs at most 46 Spark jobs") {
+    // 43 with the driver near-dup path. The fold ran 64 here when the
+    // step was always distributed, 33 of them for the bucket build,
+    // the history edges and the canonical keep.
+    val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
+    val statePath = TestSpark.tempDir("graft-cur-jobs").toString
+    CurationRound.foldBatch(spark, statePath,
+      Seq((1L, "en", mkDoc("ja")), (2L, "en", mkDoc("jb")))
+        .toDF("doc_id", "lang", "text"), bench, cfg, 0L)
+    // 11 drops on its history edge to 1; 13 is 12's shorter in-batch twin
+    val jobs = JobLog.startedBy(spark) {
+      CurationRound.foldBatch(spark, statePath,
+        Seq((11L, "en", mkDoc("ja", 5)), (12L, "en", mkDoc("jc")),
+          (13L, "en", mkDoc("jc", 5))).toDF("doc_id", "lang", "text"), bench, cfg, 1L)
+    }
+    assert(ids(CurationRound.readRetained(spark, statePath, cfg)) == Set(1L, 2L, 12L))
+    assert(jobs.size <= 46, s"${jobs.size} jobs: ${jobs.map(_.desc)}")
+  }
+
+  // ---- the near-dup step's two paths ---------------------------------
+
+  /** Every state directory's rows, sorted. */
+  private def stateRows(statePath: String): Map[String, Seq[String]] =
+    Seq("fps", "shdf", "survivors", "postings", "funnel").map { n =>
+      n -> spark.read.parquet(s"$statePath/$n").collect().map(_.toString).toSeq.sorted
+    }.toMap
+
+  /** Folds `batches` into fresh state three times: under the default
+    * bounds, with every bound at 0 (the distributed path on every batch
+    * with an exact survivor) and with only the pair-work bound at 0. All
+    * three must write the same state rows and keep the same ids, and
+    * the forced runs must start more jobs than the driver path (they
+    * really ran the distributed step). Returns the state path of the
+    * default run. */
+  private def assertPathsAgree(clue: String, batches: Seq[DataFrame],
+                               bench: DataFrame,
+                               c: CurationRound.Config = cfg): String = {
+    val bounds = Seq(CurationRound.LocalNearDup, CurationRound.NearDupBounds(0, 0),
+      CurationRound.LocalNearDup.copy(pairWork = 0))
+    val runs = bounds.map { b =>
+      val p = TestSpark.tempDir("graft-cur-paths").toString
+      val jobs = JobLog.startedBy(spark) {
+        batches.zipWithIndex.foreach { case (df, k) =>
+          CurationRound.foldBatch(spark, p, df, bench, c, k.toLong, b) }
+      }.size
+      (p, stateRows(p), ids(CurationRound.readRetained(spark, p, c)), jobs)
+    }
+    val (path, rows, kept, localJobs) = runs.head
+    runs.tail.foreach { case (_, r, k, jobs) =>
+      r.keys.foreach(n => assert(r(n) == rows(n), s"$clue: $n"))
+      assert(k == kept, clue)
+      assert(jobs > localJobs, s"$clue: $jobs jobs forced vs $localJobs on the driver path")
+    }
+    path
+  }
+
+  /** A seeded two-batch corpus (dfCap 500 in [[RandomCfg]]): 280 docs of
+    * each batch carry one boilerplate line, so its shingles' buckets
+    * hold 280 entries in batch 0 (over the 256-entry chunk, under the
+    * cap) and the valve drops them in batch 1 (280 + 280 > 500). Each
+    * batch also has shorter and same-length near-duplicates (quality
+    * ties go to the min id), exact copies, repeated rows (duplicate
+    * (id, sh) rows), NULL texts (gated out before any quality is
+    * read), and batch 1 has near-duplicates of batch 0 docs, which
+    * history vetoes. */
+  private def randomBatches(seed: Int): Seq[Seq[(Long, String, String)]] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Vector.fill(400)(Iterator.continually(rnd.nextPrintableChar())
+      .filter(_.isLower).take(3 + rnd.nextInt(6)).mkString)
+    def line() = ("the" +: "data" +: Vector.fill(8)(vocab(rnd.nextInt(vocab.size))))
+      .mkString(" ") + "."
+    val boiler = "the data boiler plate footer line every page carries here."
+    // a same-length edit: one word of one line swapped for another of its length
+    def edit(lines: Vector[String]) = {
+      val i = rnd.nextInt(lines.size)
+      lines.updated(i, lines(i).replaceFirst("data", "atad"))
+    }
+    def batch(first: Long, n: Int, history: Seq[Vector[String]]) = {
+      val docs = Vector.fill(n)(Vector.fill(6 + rnd.nextInt(3))(line()))
+        .zipWithIndex.map { case (l, i) => if (i < 280) l :+ boiler else l }
+      val variants = docs.take(12).map(_.dropRight(1)) ++ docs.slice(12, 24).map(edit) ++
+        docs.slice(24, 30) ++ history.take(10).map(_.tail) ++
+        history.slice(10, 16).map(_ :+ line()) ++ history.slice(16, 20)
+      val all = (docs ++ variants).map(_.mkString("\n"))
+      val rows = all.zipWithIndex.map { case (t, i) => (first + i, "en", t) }
+      (rows ++ rows.take(5) ++ Seq.tabulate(3)(i => (first + all.size + i, "en", null: String)),
+        docs)
+    }
+    val (b0, docs0) = batch(1L, 300, Nil)
+    val (b1, _) = batch(10001L, 300, docs0)
+    Seq(rnd.shuffle(b0), rnd.shuffle(b1))
+  }
+  private val RandomCfg = cfg.copy(jaccardDfCap = 500)
+
+  test("near-dup paths agree on the incremental corpora: driver path ≡ distributed path") {
+    def df(b: Seq[(Long, String, String)]) = b.toDF("doc_id", "lang", "text")
+    val unrelated = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
+    assertPathsAgree("chain corpus", Seq(
+      Seq((1L, mkDoc("aa")), (2L, mkDoc("bb", 3)), (4L, mkDoc("aa", 5)),
+        (5L, mkDoc("ee")), (6L, mkDoc("ff"))),
+      Seq((11L, mkDoc("aa")), (12L, mkDoc("ff", 5)), (13L, mkDoc("gg")),
+        (14L, mkDoc("gg"))),
+      Seq((21L, mkDoc("gg", 5)), (22L, mkDoc("hh"))))
+      .map(b => df(b.map { case (i, t) => (i, "en", t) })),
+      Seq((900L, mkDoc("ee", 4))).toDF("doc_id", "text"))
+    assertPathsAgree("valve corpus", Seq(
+      Seq((1L, "en", mkDoc("xx", 6)), (2L, "en", mkDoc("xx", 5))),
+      Seq((11L, "en", mkDoc("xx", 7)))).map(df), unrelated, cfg.copy(jaccardDfCap = 2))
+    val quote = "the quoted bench line data item zeta."
+    assertPathsAgree("decontamination corpus", Seq(
+      Seq((1L, "en", mkDoc("ww")), (2L, "en", mkDoc("cc"))),
+      Seq((11L, "en", mkDoc("ww", 5) + "\n" + quote), (12L, "en", mkDoc("bb") + "\n" + quote),
+        (13L, "en", mkDoc("dd")), (14L, "en", mkDoc("dd", 5) + "\n" + quote))).map(df),
+      Seq((900L, quote)).toDF("doc_id", "text"))
+  }
+
+  test("near-dup paths agree on seeded random corpora: chunked and valved buckets, duplicate rows, ties, history vetoes") {
+    // "data boiler plate": the line's first token joins the previous
+    // line's last one (tokens split on spaces only)
+    val boilerSh = spark.range(1).select(xxhash64(lit("data boiler plate"))).head().getLong(0)
+    (1 to 2).foreach { seed =>
+      val batches = randomBatches(seed)
+      // quotes two base docs with no variants, one per batch: each batch
+      // has a stage-5 drop, and no history twin is contaminated
+      val texts = batches.flatten.map(r => r._1 -> r._3).toMap
+      val bench = Seq(900L -> 100L, 901L -> 10100L)
+        .map { case (b, d) => (b, texts(d).split("\n").take(3).mkString("\n")) }
+        .toDF("doc_id", "text")
+      val p = assertPathsAgree(s"seed $seed",
+        batches.map(_.toDF("doc_id", "lang", "text")), bench, RandomCfg)
+      // the shapes the corpus is built to cover did occur
+      val boiler = spark.read.parquet(s"$p/shdf").filter(col("sh") === boilerSh)
+        .select(col("__batch_id"), col("n")).as[(Long, Long)].collect().toMap
+      assert(boiler(0L) > 256 && boiler(0L) + boiler(1L) > RandomCfg.jaccardDfCap, s"$boiler")
+      val funnel = CurationRound.incrementalFunnel(spark, p)
+        .filter(col("stage_ord") >= 3).orderBy(col("batch_id"), col("stage_ord"))
+        .select(col("n_docs")).as[Long].collect().grouped(3).toSeq
+      // exact, near (in-batch and vs history) and bench drops in both batches
+      funnel.foreach(f => assert(f(0) > f(1) && f(1) > f(2), s"seed $seed: $funnel"))
+      assert(funnel(1)(0) - funnel(1)(1) >= 16 + 24, s"seed $seed: ${funnel.map(_.toSeq)}")
+    }
+  }
+
   test("foldBatch releases its checkpoint blocks with history present: no persistent RDD outlives clearCache") {
     val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
     val statePath = TestSpark.tempDir("graft-cur-leak-hist").toString
@@ -409,6 +555,8 @@ class CurationIncrementalSpec extends AnyFunSuite {
     CurationRound.foldBatch(spark, statePath,
       Seq((11L, "en", mkDoc("ha", 5)), (12L, "en", mkDoc("hc")))
         .toDF("doc_id", "lang", "text"), bench, cfg, 1L)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "foldBatch left persisted RDD blocks")
     spark.catalog.clearCache()
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "foldBatch leaked checkpoint RDD blocks")

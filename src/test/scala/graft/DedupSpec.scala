@@ -277,7 +277,8 @@ class DedupSpec extends AnyFunSuite {
     val loop = Dedup.labelLoop(Dedup.closedEdges(pairs), maxIter = 20)
     assert(local.schema == loop.schema, clue)
     val rows = local.collect().toSet
-    try assert(rows == loop.collect().toSet, clue) finally loop.unpersist()
+    try assert(rows == loop.collect().toSet, clue)
+    finally org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(loop)
     rows
   }
 
@@ -317,13 +318,16 @@ class DedupSpec extends AnyFunSuite {
 
   test("connectedComponents: a 40-vertex chain is one component; the loop alone throws") {
     // Diameter 39: the public entry needs no rounds under the bound,
-    // while the loop would need 40. (The loop is held to 10 rounds here:
-    // each round's rendered plan nests the last one's twice, so 20
-    // rounds exhaust the heap before the bound's throw is reached.)
+    // while the loop would need 40. Each round's checkpoint cuts the
+    // lineage, so the loop reaches its throw at the default 20 rounds
+    // (a persisted round's plan nested the last one's twice, and 20
+    // rounds ran the heap out first) and leaves no block behind.
     val chain = (0 until 39).map(i => (i.toLong, i + 1L)).toDF("id1", "id2")
     val got = Dedup.connectedComponents(chain).as[(Long, Long)].collect()
     assert(got.length == 40 && got.forall(_._2 == 0L))
-    intercept[IllegalStateException](Dedup.labelLoop(Dedup.closedEdges(chain), maxIter = 10))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalStateException](Dedup.labelLoop(Dedup.closedEdges(chain), maxIter = 20))
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   test("connectedComponents gate: the bound counts undirected rows; other id types fall through") {
@@ -348,7 +352,24 @@ class DedupSpec extends AnyFunSuite {
     assert(jobs.size <= 3, s"jobs: $jobs")
     assert(sc.getPersistentRDDs.keySet == before)
     val loop = Dedup.labelLoop(Dedup.closedEdges(pairs), maxIter = 20)
-    try assert(labels == loop.collect().toSet) finally loop.unpersist()
+    try assert(labels == loop.collect().toSet)
+    finally org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(loop)
+  }
+
+  test("localNonCanonical: the driver verdict equals canonicalKeepList's, NULL and missing quality included") {
+    // Random pair graphs over 60 ids; each id has 0-2 quality rows
+    // drawn from a few lengths (ties) and NULL.
+    (0 until 6).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val pairs = Seq.fill(40)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      val docs = (0L until 60L).flatMap(i => Seq.fill(rnd.nextInt(3))(
+        (i, Option.when(rnd.nextInt(4) > 0)(100L + rnd.nextInt(3)))))
+      val want = Dedup.canonicalKeepList(pairs.toDF("id1", "id2"),
+          docs.toDF("doc_id", "q"), "doc_id", "q")
+        .filter(!col("is_canonical")).select(col("doc_id")).as[Long].collect().toSet
+      val got = Dedup.localNonCanonical(pairs, docs.groupMap(_._1)(_._2))
+      assert(got == want, s"seed $seed")
+    }
   }
 
   test("incrementalClusters equals a full recompute over old ∪ new pairs") {

@@ -401,8 +401,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id1", "id2")
     intercept[IllegalStateException](
       Dedup.labelLoop(Dedup.closedEdges(path), maxIter = 1))
-    val ok = Dedup.labelLoop(Dedup.closedEdges(path), maxIter = 10)
-      .as[(Long, Long)].collect().toMap
+    val loop = Dedup.labelLoop(Dedup.closedEdges(path), maxIter = 10)
+    val ok = loop.as[(Long, Long)].collect().toMap
+    org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(loop)
     assert(ok.values.toSet == Set(1L))
   }
 
@@ -444,6 +445,25 @@ class PipelineOpsSpec extends AnyFunSuite {
     val uncapped = Dedup.contaminationPairs(corpus2, bench2, "doc_id", "text",
       n = 3, minOverlap = 0.1, benchDfCap = 100)
     assert(uncapped.count() == 2)
+  }
+
+  test("contaminationPairs builds its bench table once per bench and persists nothing") {
+    val bench = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
+      .toDF("doc_id", "text")
+    val corpus = Seq((5L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def probe() = Dedup.contaminationPairs(corpus, bench, "doc_id", "text", n = 3)
+      .collect().map(_.toSeq).toSeq
+    val first = probe()
+    assert(first == Seq(Seq(5L, 1L, 2L, 2L, 1.0)))
+    // a second probe of the same bench reads the memo'd table: the
+    // bench text is never shingled again (no job scans its relation)
+    val jobs = JobLog.startedBy(spark)(assert(probe() == first))
+    val fresh = JobLog.startedBy(spark)(Dedup.contaminationPairs(corpus,
+      bench.unionByName(Seq((3L, "x y z w")).toDF("doc_id", "text")), "doc_id", "text", n = 3)
+      .collect())
+    assert(jobs.size < fresh.size, s"${jobs.size} jobs with the memo, ${fresh.size} building")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   // ---- weighted systematic sample ---------------------------------------

@@ -9,7 +9,9 @@ Each seed is one pair: perfbench/run.py runs once in each checkout
 runs first on a warmer or colder box. Each checkout builds into its own
 .bench_build, so alternating runs never rebuild. Prints a per-pair table
 and, per end-to-end metric, both medians, their ratio, the parent's
-interquartile range (IQR) and how many pairs the change won.
+interquartile range (IQR), how many pairs the change won, and whether
+the gain rule holds: at least 10 pairs, the change lower in at least
+nine tenths of them, and the median gain larger than the parent's IQR.
 
 --aa runs the same pairs first with the parent against a second copy of
 the parent (e.g. extracted with `git archive` into a fresh directory).
@@ -55,6 +57,21 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def gain_rule(pairs, wins, gap, iqr):
+    """The gain rule of the choosing-metrics guide, section 8, for a
+    lower-is-better metric: at least 10 pairs, the change lower in at
+    least nine tenths of them (ties count for neither), and the medians
+    apart by more than the parent's IQR in the change's favour."""
+    why = []
+    if pairs < 10:
+        why.append(f"only {pairs} pairs, 10 needed")
+    if wins * 10 < 9 * pairs:
+        why.append(f"won {wins}/{pairs}, under 9/10")
+    if gap <= iqr:
+        why.append(f"median gain {gap:.3f} not above the IQR {iqr:.3f}")
+    return "gain rule met" if not why else "gain rule not met: " + ", ".join(why)
+
+
 def compare(a_dir, b_dir, names, workload, seeds, seconds):
     """Interleaved pairs of a_dir (named names[0]) and b_dir (names[1])."""
     rows = []
@@ -91,7 +108,8 @@ def report(rows, names, workload, seconds):
         wins = sum(y < x for x, y in zip(xs, ys))
         print(f"  - {m}: median {a} {ma:.3f} {b} {mb:.3f} ratio {mb / ma:.3f}  "
               f"{a} IQR {q3 - q1:.3f}  |gap| {abs(mb - ma):.3f}  "
-              f"{b} lower in {wins}/{len(rows)} pairs")
+              f"{b} lower in {wins}/{len(rows)} pairs; "
+              f"{gain_rule(len(rows), wins, ma - mb, q3 - q1)}")
     failed = sum(r[s]["failed"] for r in rows for s in ("a", "b"))
     print(f"  - failed operations, both sides: {failed}\n")
 

@@ -401,7 +401,8 @@ object CurationRound {
 
   /** The bounds [[foldBatch]] runs under, sized from driver heap
     * measured on JDK 17 with 2^19 entry and 2^19 history rows: a
-    * collected row retains ~114 B (~330 B at the collect's peak), and
+    * collected row of three longs retains ~114 B (~330 B at the
+    * collect's peak; an entry's fourth, its quality, adds ~24 B), and
     * [[localNearDrops]] peaks at ~435 B per input row, garbage included
     * (1.1 s on 4 cores). At 2^18 rows per collect the path so holds
     * ~0.3 GB at worst, under a sixth of the smallest driver heap the
@@ -411,16 +412,23 @@ object CurationRound {
     * that matters. */
   private[graft] val LocalNearDup = NearDupBounds(1 << 18, 1L << 22)
 
-  /** The near-dup step of [[foldBatch]] on the driver, from its three
-    * bounded collects: `entries` (sh, id, n_sh) — one row per batch
-    * shingle row in a kept bucket, duplicates included — `hist` (sh,
-    * hid, hn) — the distinct history postings of those shingles with
-    * the history doc's n_sh — and `quality` (id, text length) per s3
-    * row. Returns the batch ids that drop: those within minJaccard of a
+  /** The near-dup step of [[foldBatch]] on the driver, from its two
+    * bounded collects: `entries` (sh, id, n_sh, q) — one row per batch
+    * shingle row in a kept bucket, duplicates included, with its doc's
+    * quality (text length) — and `hist` (sh, hid, hn) — the distinct
+    * history postings of those shingles with the history doc's n_sh.
+    * Returns the batch ids that drop: those within minJaccard of a
     * history doc, and the non-canonical members of the within-batch
     * components ([[Dedup.localNonCanonical]]). None when the pair work
     * exceeds `maxPairWork`, or when a Jaccard denominator is zero (the
     * distributed path then decides, with the session's division rule).
+    *
+    * An in-batch pair's ids both post a kept shingle, so `entries`
+    * carries their quality. The distributed path reads it from every
+    * s3 row instead; the two agree while an id names one text, the key
+    * the chain's state already assumes (fps, survivors and postings
+    * are keyed by it). Under an id with two texts, one of which posts
+    * no kept shingle, only the other's length counts here.
     *
     * The counts are the distributed path's: a document is its
     * (id, n_sh) entry, shared shingles count each occurrence of a
@@ -430,7 +438,7 @@ object CurationRound {
     * Pairs are counted by sorting packed entry-index keys: 8 bytes per
     * unit of pair work. */
   private[graft] def localNearDrops(entries: Array[Row], hist: Array[Row],
-                                    quality: Array[Row], minJaccard: Double,
+                                    minJaccard: Double,
                                     maxPairWork: Long): Option[Set[Long]] = {
     def doc(r: Row) = (r.getLong(1), r.getLong(2))
     // Sorted by (id, n_sh): of two entries with different ids, the
@@ -480,7 +488,8 @@ object CurationRound {
         }
       }
     } yield {
-      val q = quality.toSeq.groupMap(_.getLong(0))(r => Option.when(!r.isNullAt(1))(r.getLong(1)))
+      val q = entries.toSeq.map(r => (r.getLong(1), Option.when(!r.isNullAt(3))(r.getLong(3))))
+        .distinct.groupMap(_._1)(_._2)
       vsHistory.map(p => docs(p._1)._1).toSet ++
         Dedup.localNonCanonical(inBatch.map { case (x, y) => (docs(x)._1, docs(y)._1) }, q)
     }
@@ -528,10 +537,10 @@ object CurationRound {
     // non-canonical member of a within-batch component. It has two
     // paths, which read the same valve-kept buckets and history
     // postings and give the same drops (spec-proven on state rows):
-    //  - DRIVER, under every bound of `bounds` (LocalNearDup): three
-    //    bounded collects — the kept bucket entries (sh, id, __n_sh),
-    //    the history postings of their shingles with the survivors'
-    //    __n_sh, s3's (id, quality) — of at most 2^18 rows each; then
+    //  - DRIVER, under every bound of `bounds` (LocalNearDup): two
+    //    bounded collects — the kept bucket entries (sh, id, __n_sh,
+    //    quality) and the history postings of their shingles with the
+    //    survivors' __n_sh — of at most 2^18 rows each; then
     //    localNearDrops counts, tests and elects in driver memory,
     //    sorting at most 2^22 packed pair keys (~0.3 GB of driver heap
     //    at worst, see LocalNearDup);
@@ -625,22 +634,27 @@ object CurationRound {
     // exact-survivor shingles, the cap's domain in ngramJaccardPairs(s3)
     // — and n_sh stays the doc's FULL distinct-shingle count (the
     // jaccard denominator is valve-independent).
+    // Each row carries its doc's quality (text length) for the driver
+    // path's canonical rule.
     val batchSh = labeled("fold:shingle") { pin(s3.select(id,
+        length(col(cfg.textCol)).cast("long").as("__q"),
         Dedup.shingles(col(cfg.textCol), cfg.jaccardN).as("arr"))
-      .select(id, size(col("arr")).cast("long").as("__n_sh"),
+      .select(id, size(col("arr")).cast("long").as("__n_sh"), col("__q"),
         explode(col("arr")).as("raw"))
-      .select(id, col("__n_sh"), xxhash64(col("raw")).as("sh"))) }
+      .select(id, col("__n_sh"), col("__q"), xxhash64(col("raw")).as("sh"))) }
     val batchSizes = batchSh.select(id, col("__n_sh")).distinct()
     import graft.functions.CappedCollectList.cappedCollectList
     // The batch's shingle census in ONE aggregation, checkpointed: per
     // shingle its batch df `bn` (the shdf state delta and the valve's
-    // batch half) and its bucket of (id, __n_sh) entries. A bucket the
+    // batch half) and its bucket of (id, __n_sh, __q) entries; the
+    // distributed path reads the first two fields. A bucket the
     // valve keeps has bn ≤ dfCap entries, so cappedCollectList never
     // truncates a kept one; it only bounds the buffers of the buckets
     // the valve drops (the shinglePairCounts hygiene).
     val batchAgg = labeled("fold:batch-df") {
       pin(batchSh.groupBy(col("sh")).agg(count(lit(1)).as("bn"),
-        cappedCollectList(struct(id, col("__n_sh")), cfg.jaccardDfCap).as("bdocs"))) }
+        cappedCollectList(struct(id, col("__n_sh"), col("__q")), cfg.jaccardDfCap)
+          .as("bdocs"))) }
     // shdf counts ALL stage-3 survivors' shingles (not just retained
     // docs'): the full chain's df cap is computed over s3 in
     // ngramJaccardPairs, so a doc that later drops at near-dup/
@@ -674,10 +688,8 @@ object CurationRound {
     val histPostings = scoped("postings", postingsSchema(cfg))
       .select(id.as("__hid"), col("sh")).distinct()
       .join(bBuckets.select(col("sh")), Seq("sh"), "left_semi")
-    val histSizes = scoped("survivors", survivorsSchema(cfg))
-      .dropDuplicates(cfg.idCol)
+    def histSizes(survivors: DataFrame) = survivors.dropDuplicates(cfg.idCol)
       .select(id.as("__hid"), col("__n_sh").as("__hn"))
-    val quality = s3.select(id, length(col(cfg.textCol)).cast("long").as("__q"))
 
     def jac(shared: Column, n1: Column, n2: Column): Column =
       shared.cast("double") / (n1 + n2 - shared).cast("double")
@@ -720,13 +732,14 @@ object CurationRound {
           .groupBy(col(s"a.${cfg.idCol}").as(cfg.idCol), col("__hid"),
             col("a.__n_sh").as("__n_sh"))
           .agg(count(lit(1)).as("shared"))
-          .join(histSizes, Seq("__hid"))
+          .join(histSizes(scoped("survivors", survivorsSchema(cfg))), Seq("__hid"))
           .filter(jac(col("shared"), col("__n_sh"), col("__hn"))
             >= cfg.jaccardMinJaccard)
           .select(id).distinct()) }
       // within-batch edges: the standalone canonical rule on the batch's
       // own pair graph (quality = length, ties min id)
       val nonCanon = labeled("fold:canonical") {
+        val quality = s3.select(id, length(col(cfg.textCol)).cast("long").as("__q"))
         val batchPairs = Dedup.bucketSelfPairCounts(
             bBuckets.filter(size(col("bdocs")) > 1), "bdocs", cfg.idCol, "__n_sh",
             chunk)
@@ -740,23 +753,36 @@ object CurationRound {
           .select(col("doc_id").as(cfg.idCol)) }
       histDropsF.get().unionByName(nonCanon)
     }
-    // The driver path's collects run concurrently, each over one
-    // partition: a collect-limit over several starts a job per round of
-    // partitions it tries.
+    // The driver path's two collects, each ending in one partition: a
+    // collect-limit over several starts a job per round of partitions
+    // it tries. The entries come first, and the history collect runs
+    // only when they fit: past the bound, its postings scan would run
+    // beside the distributed path's own. The entries are a narrow read
+    // of the pinned buckets, so the whole read coalesces to one task
+    // (labeled as the within-batch pair step, which reads the same
+    // buckets on the distributed path); the history side ends in a
+    // join and an aggregate, which keep their tasks, and each task
+    // sends at most bound + 1 rows to the one partition that takes the
+    // limit.
     def bounded(df: DataFrame): Option[Array[Row]] = {
-      val rows = df.coalesce(1).limit(bounds.rows + 1).collect()
+      val rows = df.collect()
       Option.when(rows.length <= bounds.rows)(rows)
     }
-    val histF = submit("fold:s4-near") { bounded(histPostings
-      .join(histSizes, Seq("__hid")).select(col("sh"), col("__hid"), col("__hn"))) }
-    val qualityF = submit("fold:canonical") { bounded(quality) }
-    val entries = labeled("fold:batch-df") { bounded(bBuckets
-      .select(col("sh"), explode(col("bdocs")).as("e"))
-      .select(col("sh"), col(s"e.${cfg.idCol}"), col("e.__n_sh"))) }
-    val (hist, qual) = (histF.get(), qualityF.get())
-    val local = for (e <- entries; h <- hist; q <- qual;
-                     drops <- localNearDrops(e, h, q, cfg.jaccardMinJaccard, bounds.pairWork))
-      yield drops
+    val cut = bounds.rows + 1
+    val local = for {
+      e <- labeled("fold:canonical") { bounded(bBuckets
+        .select(col("sh"), explode(col("bdocs")).as("e"))
+        .select(col("sh"), col(s"e.${cfg.idCol}"), col("e.__n_sh"), col("e.__q"))
+        .coalesce(1).limit(cut)) }
+      h <- labeled("fold:s4-near") {
+        // Only the survivors posting a kept shingle: the replay dedup
+        // runs over the postings' ids, not the whole retained history.
+        val hids = histSizes(scoped("survivors", survivorsSchema(cfg))
+          .join(histPostings.select(col("__hid")), id === col("__hid"), "left_semi"))
+        bounded(histPostings.join(hids, Seq("__hid"))
+          .select(col("sh"), col("__hid"), col("__hn")).limit(cut).coalesce(1)) }
+      drops <- localNearDrops(e, h, cfg.jaccardMinJaccard, bounds.pairWork)
+    } yield drops
     val nearSchema = StructType(Seq(StructField(cfg.idCol, LongType),
       StructField("__near", BooleanType)))
     val nearDrops = local match {

@@ -583,13 +583,22 @@ object Dedup {
         .write.mode("overwrite").parquet(path)
       path
     }
-    // The schema the build wrote, declared (no footer read); coalesce
-    // restores n_bench's non-nullability (a count), which parquet erases.
+    // The schema the build wrote, declared (no footer read). A parquet
+    // read makes every column nullable; the build's non-nullable ones
+    // (the count, and the bench id when its source column is) get their
+    // nullability back, so the probe's output schema is the one a build
+    // without the file would give.
+    import org.apache.spark.sql.GraftBridge.{column, expression}
+    def notNull(c: Column) =
+      column(org.apache.spark.sql.catalyst.expressions.KnownNotNull(expression(c)))
+    val idField = bench.schema(idCol)
     s.read.schema(StructType(Seq(StructField("sh", LongType),
-        StructField("bench_id", bench.schema(idCol).dataType),
+        StructField("bench_id", idField.dataType),
         StructField("n_bench", LongType))))
       .parquet(path)
-      .select(col("sh"), col("bench_id"), coalesce(col("n_bench"), lit(0L)).as("n_bench"))
+      .select(col("sh"),
+        (if (idField.nullable) col("bench_id") else notNull(col("bench_id"))).as("bench_id"),
+        notNull(col("n_bench")).as("n_bench"))
   }
 
   /** Connected components over an undirected near-dup pair graph —
@@ -611,7 +620,7 @@ object Dedup {
     *  - Over the bound, or with any other id type, [[labelLoop]] runs
     *    over the persisted edges: diameter rounds of distributed
     *    min-label propagation, THROWING when `maxIter` rounds do not
-    *    converge. Its labels are a local checkpoint (see there).
+    *    converge. Its labels are persisted (see there).
     * Both paths return the same rows under the same schema, NULL ids
     * included: a NULL id is labeled with the smallest component among
     * its partners and joins none of them (an equi-join never matches
@@ -700,9 +709,8 @@ object Dedup {
 
   /** The distributed path of [[connectedComponents]] over `edges` as
     * [[closedEdges]] builds them (unpersisted on return). The labels
-    * come back as an eager localCheckpoint, whose blocks
-    * `Dataset.unpersist` does not free: a caller done with them
-    * releases them with `GraftBridge.releaseLocalCheckpoint`.
+    * come back persisted through the cache manager, so `unpersist()`
+    * or `spark.catalog.clearCache()` frees them.
     *
     * Algorithm: min-label propagation. Every vertex starts labeled with
     * its own id; each round takes the min of its label and its
@@ -726,14 +734,15 @@ object Dedup {
     * large-star/small-star variant saves rounds on high-diameter web
     * graphs; dedup graphs aren't that). The edge set carries SELF-LOOPS
     * so a round is `min over the closed neighborhood` in a single
-    * aggregate instead of joining the label table twice. Each round's
-    * labels are an eager localCheckpoint, which cuts the lineage: a
+    * aggregate instead of joining the label table twice. Each round
+    * reads the last one's persisted labels through a plan leaf
+    * (`GraftBridge.planLeaf`), which cuts the plan: joined directly, a
     * persisted round's executed plan nests the previous round's cached
     * plan under both AQE's final and initial plans, so the rendered
     * plan doubled per round and a 40-vertex chain at 20 rounds ran a
     * 4 GB driver out of heap in `explainString` before the `maxIter`
-    * throw. A round's checkpoint is released once the next one has
-    * materialized.
+    * throw. A round's labels are unpersisted once the next round's
+    * have materialized.
     *
     * Ids must be NUMERIC: convergence is detected by the label SUM,
     * whose proof needs the min-label updates to decrease it
@@ -743,9 +752,9 @@ object Dedup {
     * never silently misorder; hash string ids to longs first (the
     * span-census discipline) to cluster them. */
   private[graft] def labelLoop(edges: DataFrame, maxIter: Int): DataFrame = {
-    import org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint
+    val lvl = StorageLevel.MEMORY_AND_DISK
     var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")).localCheckpoint()
+      .withColumn("comp", col("id")).persist(lvl)
     // Option: an empty pair set sums to SQL NULL — equal Nones then read
     // as the (vacuously correct) fixed point instead of an NPE.
     def labelSum(df: DataFrame): Option[java.math.BigDecimal] =
@@ -760,22 +769,24 @@ object Dedup {
       while (!converged && iter < maxIter) {
         // Self-loops put each vertex's own label in its neighborhood, so
         // this min IS least(own label, neighbors' min) — `labels` is
-        // referenced exactly once per round (see scaladoc).
+        // referenced exactly once per round (see scaladoc), through a
+        // plan leaf over its cached rows.
         val next = edges
-          .join(labels.select(col("id").as("dst"), col("comp").as("__nc")), Seq("dst"))
+          .join(org.apache.spark.sql.GraftBridge.planLeaf(labels)
+            .select(col("id").as("dst"), col("comp").as("__nc")), Seq("dst"))
           .groupBy(col("src").as("id")).agg(min(col("__nc")).as("comp"))
-          .localCheckpoint()
-        releaseLocalCheckpoint(labels)
+          .persist(lvl)
+        val s = try labelSum(next) catch { case e: Throwable => next.unpersist(); throw e }
+        labels.unpersist()
         labels = next
-        val s = labelSum(next)
         converged = prevSum.contains(s)
         prevSum = Some(s)
         iter += 1
       }
-    } catch { case e: Throwable => releaseLocalCheckpoint(labels); throw e }
+    } catch { case e: Throwable => labels.unpersist(); throw e }
     finally edges.unpersist()
     if (!converged) {
-      releaseLocalCheckpoint(labels)
+      labels.unpersist()
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — " +
           "graph diameter exceeds the bound; raise maxIter")

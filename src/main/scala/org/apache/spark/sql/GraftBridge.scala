@@ -38,6 +38,20 @@ object GraftBridge {
     case _ => ()
   }
 
+  /** `ds`'s rows under a plan that is ONE LogicalRDD leaf. Reading it
+    * runs `ds`'s physical plan, through the cache manager when `ds` is
+    * persisted, but a plan built on the leaf neither nests nor
+    * re-analyzes `ds`'s. Unlike `localCheckpoint()` it persists nothing
+    * itself: who persisted `ds` frees it as usual, and a read after
+    * that recomputes through the RDD lineage. */
+  def planLeaf(ds: Dataset[_]): DataFrame = ds match {
+    case c: classic.Dataset[_] =>
+      val s = c.sparkSession
+      val fresh = classic.Dataset.ofRows(s, c.logicalPlan)
+      classic.Dataset.ofRows(s, org.apache.spark.sql.execution.LogicalRDD
+        .fromDataset(fresh.queryExecution.toRdd, fresh, isStreaming = false))
+  }
+
   /** Cancel every active job tagged `tag`; returns once the scheduler
     * has failed them, with how many there were.
     * `SparkContext.cancelJobsWithTag` only posts the request, so its

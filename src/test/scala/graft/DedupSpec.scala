@@ -277,8 +277,7 @@ class DedupSpec extends AnyFunSuite {
     val loop = Dedup.labelLoop(Dedup.closedEdges(pairs), maxIter = 20)
     assert(local.schema == loop.schema, clue)
     val rows = local.collect().toSet
-    try assert(rows == loop.collect().toSet, clue)
-    finally org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(loop)
+    try assert(rows == loop.collect().toSet, clue) finally loop.unpersist()
     rows
   }
 
@@ -318,10 +317,10 @@ class DedupSpec extends AnyFunSuite {
 
   test("connectedComponents: a 40-vertex chain is one component; the loop alone throws") {
     // Diameter 39: the public entry needs no rounds under the bound,
-    // while the loop would need 40. Each round's checkpoint cuts the
-    // lineage, so the loop reaches its throw at the default 20 rounds
-    // (a persisted round's plan nested the last one's twice, and 20
-    // rounds ran the heap out first) and leaves no block behind.
+    // while the loop would need 40. Each round reads the last through a
+    // plan leaf, so the loop reaches its throw at the default 20 rounds
+    // (a round's plan nested the last one's twice, and 20 rounds ran the
+    // heap out first) and leaves no block behind.
     val chain = (0 until 39).map(i => (i.toLong, i + 1L)).toDF("id1", "id2")
     val got = Dedup.connectedComponents(chain).as[(Long, Long)].collect()
     assert(got.length == 40 && got.forall(_._2 == 0L))
@@ -352,8 +351,23 @@ class DedupSpec extends AnyFunSuite {
     assert(jobs.size <= 3, s"jobs: $jobs")
     assert(sc.getPersistentRDDs.keySet == before)
     val loop = Dedup.labelLoop(Dedup.closedEdges(pairs), maxIter = 20)
-    try assert(labels == loop.collect().toSet)
-    finally org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(loop)
+    try assert(labels == loop.collect().toSet) finally loop.unpersist()
+  }
+
+  test("connectedComponents past the driver path: the labels are cache-manager persists that clearCache frees") {
+    // Double ids take the label loop; its rounds persist through the
+    // cache manager, so nothing outlives clearCache.
+    val pairs = Seq((1.0, 2.0), (2.0, 3.0), (10.0, 11.0)).toDF("id1", "id2")
+    val docs = Seq((1.0, 5L), (2.0, 9L), (3.0, 9L), (10.0, 1L), (11.0, 1L)).toDF("doc_id", "q")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val cc = Dedup.connectedComponents(pairs).as[(Double, Double)].collect().toMap
+    assert(cc == Map(1.0 -> 1.0, 2.0 -> 1.0, 3.0 -> 1.0, 10.0 -> 10.0, 11.0 -> 10.0))
+    val keep = Dedup.canonicalKeepList(pairs, docs, "doc_id", "q")
+      .filter(col("is_canonical")).select(col("doc_id")).as[Double].collect().toSet
+    assert(keep == Set(2.0, 10.0))
+    spark.catalog.clearCache()
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   test("localNonCanonical: the driver verdict equals canonicalKeepList's, NULL and missing quality included") {

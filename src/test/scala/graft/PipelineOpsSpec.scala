@@ -401,9 +401,8 @@ class PipelineOpsSpec extends AnyFunSuite {
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id1", "id2")
     intercept[IllegalStateException](
       Dedup.labelLoop(Dedup.closedEdges(path), maxIter = 1))
-    val loop = Dedup.labelLoop(Dedup.closedEdges(path), maxIter = 10)
-    val ok = loop.as[(Long, Long)].collect().toMap
-    org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(loop)
+    val ok = Dedup.labelLoop(Dedup.closedEdges(path), maxIter = 10)
+      .as[(Long, Long)].collect().toMap
     assert(ok.values.toSet == Set(1L))
   }
 
@@ -464,6 +463,22 @@ class PipelineOpsSpec extends AnyFunSuite {
       .collect())
     assert(jobs.size < fresh.size, s"${jobs.size} jobs with the memo, ${fresh.size} building")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("contaminationPairs keeps the bench id's nullability through its bench table") {
+    import org.apache.spark.sql.types._
+    val corpus = Seq((5L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    def schemaWith(bench: org.apache.spark.sql.DataFrame) =
+      Dedup.contaminationPairs(corpus, bench, "doc_id", "text", n = 3).schema
+    def want(benchIdNullable: Boolean) = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("bench_id", LongType, benchIdNullable),
+      StructField("shared", LongType, nullable = false),
+      StructField("n_bench", LongType, nullable = false),
+      StructField("overlap", DoubleType, nullable = true)))
+    assert(schemaWith(Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")) == want(false))
+    assert(schemaWith(Seq((Option(1L), "alpha beta gamma delta"), (None, "x y z w"))
+      .toDF("doc_id", "text")) == want(true))
   }
 
   // ---- weighted systematic sample ---------------------------------------

@@ -47,11 +47,13 @@ import scala.jdk.CollectionConverters._
   * and contamination shuffle valve-bounded shingle hashes (df-caps) —
   * text never shuffles; the mixture is a broadcast threshold filter;
   * packing is the two-phase prefix sum. Survivor ID frames (id,
-  * stratum, n_tokens — never text) persist MEMORY_AND_DISK so each
-  * stage builds on the previous without recomputing the chain; the
-  * gated text view persists once (the working set every dedup stage
-  * scans). Call [[Result.unpersist]] when done — or rely on the
-  * caller's clearCache() discipline (the Verify harness's contract).
+  * stratum, n_tokens — never text) are pinned ([[GraftBridge.pin]]: a
+  * MEMORY_AND_DISK cache-manager persist read through a one-leaf plan)
+  * so each stage builds on the previous without recomputing the chain;
+  * the gated text view is pinned once (the working set every dedup
+  * stage scans). Call [[Result.unpersist]] when done, or
+  * `spark.catalog.clearCache()`, which frees the same blocks (the
+  * Verify harness's between-queries move).
   */
 object CurationRound {
 
@@ -80,20 +82,15 @@ object CurationRound {
   final case class Result(funnel: DataFrame, curated: DataFrame,
                           packed: DataFrame, packStats: DataFrame,
                           private[graft] val pinned: Seq[DataFrame]) {
-    /** Release the stage frames this round persisted. SAFE BY
+    /** Release the stage frames this round pinned. SAFE BY
       * CONSTRUCTION: every returned frame is driver-backed (`funnel`)
       * or reads the materialized final-survivor table (`curated`,
       * `packed`, `packStats` — parquet, immune to cache drops), so all
       * four stay consumable afterwards; only the intermediate stage
-      * caches are freed. The pinned frames are localCheckpoints, whose
-      * RDD blocks Dataset.unpersist does NOT free (they live outside
-      * the cache manager) — releaseLocalCheckpoint drops the actual
-      * blocks, or they'd survive to application end (the measured
-      * ~50 GB/sweep leak behind the span-build inflation). */
-    def unpersist(): Unit = pinned.foreach { f =>
-      f.unpersist()
-      org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(f)
-    }
+      * caches are freed. `pinned` holds the persisted frames behind
+      * the stage pins, so `spark.catalog.clearCache()` frees the same
+      * blocks. */
+    def unpersist(): Unit = pinned.foreach(_.unpersist())
   }
 
   private val funnelSchema = StructType(Seq(
@@ -108,27 +105,26 @@ object CurationRound {
     * `bench` needs (idCol, textCol) — the benchmark suite
     * decontamination protects.
     *
-    * Each stage boundary is a localCheckpoint (cache + logical lineage
-    * cut), not a plain persist: each stage's analyzed plan embeds every
-    * upstream stage's tree, and with the gate signal bundles inlined
-    * the tree size compounds MULTIPLICATIVELY across six stages
-    * (measured at sf0.01: analyzer cost alone took the chain to ~35 s
-    * on a 739-row corpus; truncation returns it to data-proportional
-    * cost). Swapping the id-scale seams for LAZY persists — hoping to
-    * save their materialization jobs — took the sf0.1 build from 14 s
-    * to 20 s, because every downstream ACTION (the final-survivor
-    * write, the stats, each consumer) re-analyzes the untruncated
-    * trees; the eager checkpoints pay one small job each and keep
-    * planning O(stage). The price is recompute-on-executor-loss within
-    * the round. The FINAL survivor frame additionally lands in parquet
-    * (see the [[Result.unpersist]] contract). */
+    * Each stage boundary is a pin ([[GraftBridge.pin]]: cache plus a
+    * one-leaf plan), not a plain persist: each stage's analyzed plan
+    * embeds every upstream stage's tree, and with the gate signal
+    * bundles inlined the tree size compounds MULTIPLICATIVELY across
+    * six stages (measured at sf0.01: analyzer cost alone took the chain
+    * to ~35 s on a 739-row corpus; the leaf returns it to
+    * data-proportional cost). Plain persists, whose plans stay whole,
+    * took the sf0.1 build from 14 s to 20 s, because every downstream
+    * ACTION (the final-survivor write, the stats, each consumer)
+    * re-analyzes the untruncated trees; a pin keeps planning O(stage)
+    * and adds no job. A lost block recomputes through lineage. The
+    * FINAL survivor frame additionally lands in parquet (see the
+    * [[Result.unpersist]] contract). */
   def run(spark: SparkSession, corpus: DataFrame, bench: DataFrame,
           cfg: Config): Result = {
     var pinned = List.empty[DataFrame]
     def seam(f: DataFrame): DataFrame = {
-      val c = f.localCheckpoint()
-      pinned = c :: pinned
-      c
+      val (view, held) = GraftBridge.pin(f)
+      pinned = held :: pinned
+      view
     }
     val id = col(cfg.idCol)
     val nTok = TextAnalysis.wsTokenCount(col(cfg.textCol)).cast("long")
@@ -522,12 +518,12 @@ object CurationRound {
     //    step's collects (or, past its bounds, its history-edge branch)
     //    run beside it. They only READ (s3, the batch's bucket build,
     //    state scoped < batchId) and share no intermediate but
-    //    checkpointed ones. The probe runs over s3, not s4: a doc's
+    //    pinned ones. The probe runs over s3, not s4: a doc's
     //    contamination depends only on that doc and the bench, so
     //    contam(s3) ∩ s4 = contam(s4), and s4 − contam(s3) is exactly
     //    the chain's stage 5;
     //  - s3 is flagged once with the near-dup drops and the bench hits;
-    //    s4 and retained are filters of that one checkpoint;
+    //    s4 and retained are filters of that one pin;
     //  - each state delta starts as soon as its input exists (see
     //    "State deltas" below).
     //
@@ -549,10 +545,10 @@ object CurationRound {
     // On a second fold of a few thousand shingle rows the step runs 17
     // jobs on the driver path against 33 distributed, and a job carries
     // ~28 ms of fixed cost on a warm 4-core session.
-    // Stage checkpoints, released when the fold ends, either way.
+    // Stage pins, released when the fold ends, either way.
     val pinned = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
     def pin(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); pinned.add(c); c }
+      val (view, held) = GraftBridge.pin(df); pinned.add(held); view }
     try JobPool.run(spark, s"curation fold of batch $batchId") { jp =>
     import jp.{labeled, submit}
     val guardF = submit("fold:guard") { foldFrontier(spark, statePath) }
@@ -594,13 +590,13 @@ object CurationRound {
       coalesce(sum(when(c4p && gop, col("__n_tokens"))), lit(0L)).as("t2")).head() }
     // Gate + fingerprint ride ONE scan (guide §2.3: project/compute
     // before materializing): the fp column lands inside the gated
-    // checkpoint instead of a second corpus pass with its own
-    // checkpoint job. Stage checkpoints stay EAGER localCheckpoints
-    // throughout: they truncate each stage's logical tree, and every
-    // downstream ACTION (five state writes + the stats) re-analyzes
-    // its whole input tree — measured here at sf0.1, swapping these
-    // for lazy persists quadrupled the fold (105 s vs 24 s) on pure
-    // driver-side re-planning of the untruncated trees.
+    // pin instead of a second corpus pass with its own pin. Stages are
+    // pinned throughout: a pin's one-leaf plan truncates each stage's
+    // logical tree, and every downstream ACTION (five state writes +
+    // the stats) re-analyzes its whole input tree — measured here at
+    // sf0.1, plain persists, whose plans stay whole, quadrupled the
+    // fold (105 s vs 24 s) on pure driver-side re-planning of the
+    // untruncated trees.
     val gated = labeled("fold:gated") { pin(base.filter(c4p && gop)
       .withColumn("__fp", TextAnalysis.docFingerprint(col(cfg.textCol)))) }
 
@@ -644,7 +640,7 @@ object CurationRound {
       .select(id, col("__n_sh"), col("__q"), xxhash64(col("raw")).as("sh"))) }
     val batchSizes = batchSh.select(id, col("__n_sh")).distinct()
     import graft.functions.CappedCollectList.cappedCollectList
-    // The batch's shingle census in ONE aggregation, checkpointed: per
+    // The batch's shingle census in ONE aggregation, pinned: per
     // shingle its batch df `bn` (the shdf state delta and the valve's
     // batch half) and its bucket of (id, __n_sh, __q) entries; the
     // distributed path reads the first two fields. A bucket the
@@ -664,7 +660,7 @@ object CurationRound {
       batchAgg.select(col("sh"), col("bn").as("n"))
         .withColumn("__batch_id", lit(batchId)) }
     // The valve filters the batch census by the scoped history df,
-    // checkpointed: both collects (or both distributed branches) read
+    // pinned: both collects (or both distributed branches) read
     // the kept buckets. The history census is semi-joined down to the BATCH's shingles before
     // the replay-dedup + fold: the valve only needs df for shingles the
     // batch actually carries, so the two aggregation exchanges run over
@@ -802,7 +798,7 @@ object CurationRound {
     val retained = flagged.filter(!col("__near") && !col("__contam"))
 
     // State deltas: each starts as soon as its input exists — fps once
-    // gated is checkpointed, shdf once batch-df is, survivors and
+    // gated is pinned, shdf once batch-df is, survivors and
     // postings here — and each first waits for the append-only guard,
     // so nothing is written before the refusal point. The overlap is
     // safe because the four deltas land in four INDEPENDENT
@@ -814,7 +810,7 @@ object CurationRound {
     // it (s3's fps read, the bucket build's shdf read); whether it sees
     // the delta's files or not, its `< batchId` scope drops their rows,
     // and each file appears whole (committed by rename). Every write
-    // reads the stage checkpoints, so these are block-scan + append
+    // reads the stage pins, so these are block-scan + append
     // jobs, never chain recomputations. The funnel still commits LAST —
     // it is the fold's completion record, written only after every
     // delta has landed.
@@ -830,7 +826,7 @@ object CurationRound {
         .select(id, col("sh")).distinct()
         .withColumn("__batch_id", lit(batchId)) }
     // Funnel counts for THIS batch (additive across batches by
-    // stage): ONE aggregate over the flagged s3 checkpoint gives stages
+    // stage): ONE aggregate over the flagged s3 pin gives stages
     // 3, 4 and 5, running beside the writes.
     val statsF = submit("fold:stats") {
       val tok = col("__n_tokens")
@@ -863,12 +859,7 @@ object CurationRound {
     labeled("fold:write-funnel") {
       funnel.write.mode("append").parquet(subPath(statePath, "funnel")) }
     funnel
-    } finally {
-      // releaseLocalCheckpoint, not just unpersist: these are local
-      // checkpoints, whose blocks the plain unpersist leaves pinned for
-      // the application's life (see GraftBridge.releaseLocalCheckpoint).
-      pinned.forEach(GraftBridge.releaseLocalCheckpoint(_))
-    }
+    } finally pinned.forEach(_.unpersist())
   }
 
   /** The retained corpus pool under `statePath` (replay-deduped):
@@ -912,25 +903,28 @@ object CurationRound {
     * the per-batch fold deliberately leaves out (rebalance thresholds
     * shift as mass accrues; re-deciding them per batch would unship
     * history). Given equal pools this is bit-identical to the full
-    * chain's stage 6 (the mixture is deterministic in its input). */
+    * chain's stage 6 (the mixture is deterministic in its input).
+    *
+    * Returns (mixed, packed, stats). The mixture is pinned
+    * ([[GraftBridge.pin]]) and `mixed` is its persisted frame, which all
+    * three read: a caller done with them releases it with
+    * `mixed.unpersist()` or `spark.catalog.clearCache()`, after which
+    * they still read, by recomputing. */
   def cutRound(spark: SparkSession, statePath: String,
                cfg: Config): (DataFrame, DataFrame, DataFrame) = {
-    val pool = readRetained(spark, statePath, cfg).localCheckpoint()
-    val mixed = Sampling.mixtureRebalance(
-        pool.select(col(cfg.idCol), col(cfg.strataCol), col("n_tokens")),
-        cfg.idCol, cfg.strataCol, col("n_tokens"), cfg.mixTargets, cfg.salt)
-      .localCheckpoint()
-    // mixed is eagerly materialized, so the pool's checkpoint blocks
-    // can release NOW (plain unpersist would leave them pinned — the
-    // localCheckpoint leak, see GraftBridge.releaseLocalCheckpoint).
-    // `mixed` itself stays checkpointed: all three returned frames
-    // read it; a caller done with them releases it the same way.
-    org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(pool)
+    // The pool's leaf runs its shuffle once for both of the mixture's
+    // reads, the stratum census and the threshold filter. A cache would
+    // serve the census alone: it runs inside the mixture's pin, the
+    // filter when `mixed` is first read.
+    val pool = GraftBridge.planLeaf(readRetained(spark, statePath, cfg)
+      .select(col(cfg.idCol), col(cfg.strataCol), col("n_tokens")))
+    val (mix, mixed) = GraftBridge.pin(Sampling.mixtureRebalance(pool,
+      cfg.idCol, cfg.strataCol, col("n_tokens"), cfg.mixTargets, cfg.salt))
     val packed = Packing.sequenceOffsets(
-      mixed.select(col(cfg.idCol), col("n_tokens")),
+      mix.select(col(cfg.idCol), col("n_tokens")),
       cfg.idCol, "n_tokens", cfg.packMaxTokens)
     val stats = Packing.packStats(
-      mixed.select(col(cfg.idCol), col("n_tokens")),
+      mix.select(col(cfg.idCol), col("n_tokens")),
       cfg.idCol, "n_tokens", cfg.packMaxTokens)
     (mixed, packed, stats)
   }

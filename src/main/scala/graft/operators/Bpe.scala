@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding vocabulary statistics and training (SURVEY.md §2
@@ -90,46 +90,24 @@ object Bpe {
     * Each iteration is a vocab-scale explode + aggregate + top-1
     * TakeOrdered (driver sees ONE row per round) and a vocab-scale
     * re-projection under the fold above — corpus row count never appears
-    * after the initial word-frequency pass. The word table persists per
-    * round and its predecessor's storage is RELEASED as soon as the
-    * next round materializes, like [[Dedup.connectedComponents]]' label
-    * chain — but because the chain is localCheckpoint-truncated (see
-    * the in-loop comment), release means unpersisting the CHECKPOINT
-    * RDD: `Dataset.unpersist()` is a no-op on a checkpointed frame (the
-    * blocks belong to the internal RDD, which bypasses the cache
-    * manager), so the loop tracks each round's newly persisted RDD ids
-    * via `sc.getPersistentRDDs` and unpersists them one round later.
-    *
-    * TRADEOFF (deliberate): `localCheckpoint` trades fault tolerance
-    * for plan truncation — its blocks have no lineage, so losing an
-    * executor mid-fit fails the job where the old persist-only chain
-    * could recompute (at the cost of the optimizer OOM the truncation
-    * exists to avoid). On a long-running cluster fit, prefer RELIABLE
-    * checkpointing (`sc.setCheckpointDir` + `.checkpoint(true)`) — same
-    * truncation, recoverable blocks, one HDFS round-trip per merge —
-    * or collect the vocab-scale word table to the driver outright; at
-    * this engine's fit scale (bounded vocab, 30 rounds) the local
-    * variant's restart-on-loss is the right default. */
+    * after the initial word-frequency pass. Each round's word table is
+    * pinned ([[org.apache.spark.sql.GraftBridge.pin]]: a cache-manager
+    * persist read through a one-leaf plan), and its predecessor is
+    * released as soon as it has materialized, like
+    * [[Dedup.connectedComponents]]' label loop. The leaf truncates the
+    * plan: without it round k's logical plan nests k mergeAdjacent HOF
+    * lambdas and the optimizer's walk over that nest grows
+    * super-linearly (measured OOM near 20 rounds on a 31-word
+    * vocabulary). A lost block recomputes through lineage, and
+    * `spark.catalog.clearCache()` frees whatever a failed fit left. */
   def fit(df: DataFrame, textCol: String, numMerges: Int,
           minPairCount: Long = 2L): Seq[(String, String)] = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(minPairCount >= 1, s"minPairCount must be >= 1, got $minPairCount")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sc = df.sparkSession.sparkContext
-    var words = wordFreq(df, textCol)
-      .select(split(col("token"), "").as("syms"), col("n"))
-      .persist(lvl)
-    // RDD ids persisted by each round's localCheckpoint; round 0's
-    // words is a plain persist and cleans up via Dataset.unpersist.
-    // `liveIds` backs the CURRENT words (not yet materialized when the
-    // checkpoint is lazy); `staleIds` backed the PREVIOUS words and is
-    // releasable as soon as the current one materializes.
-    var liveIds: scala.collection.Set[Int] = Set.empty[Int]
-    var staleIds: scala.collection.Set[Int] = Set.empty[Int]
-    var prevWords: DataFrame = null
-    def releaseCheckpoints(ids: scala.collection.Set[Int]): Unit =
-      ids.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    var (words, held) = GraftBridge.pin(wordFreq(df, textCol)
+      .select(split(col("token"), "").as("syms"), col("n")))
+    // The previous round's table, released once `words` has materialized.
+    var prevHeld: DataFrame = null
     val rules = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var done = false
     // (Measured, not kept: scoping AQE off for the merge rounds halved
@@ -140,12 +118,8 @@ object Bpe {
     // per-round reduce stages at sane task counts.)
     try {
       while (rules.length < numMerges && !done) {
-        // ONE job per round: this collect materializes the previous
-        // round's LAZY checkpoint (reading its parent, still cached)
-        // and the pair aggregate on top of it. The old eager-checkpoint
-        // form paid two jobs per round — one to materialize the merge,
-        // one to count pairs (guide §1.2: fixed per-job cost dominated
-        // the vocab-scale fit).
+        // A pin adds no job: `words` materializes inside this
+        // collect's pair-count job.
         val top = words.filter(size(col("syms")) >= 2)
           .select(col("n"), explode(adjacentPairs(col("syms"))).as("p"))
           .groupBy(col("p.l").as("l"), col("p.r").as("r"))
@@ -153,47 +127,22 @@ object Bpe {
           .filter(col("cnt") >= minPairCount)
           .orderBy(col("cnt").desc, col("l"), col("r"))
           .limit(1).collect()
-        // `words` is now materialized, so the frame it was computed
-        // FROM can release: its parent's blocks were only needed to
-        // populate the current checkpoint.
-        if (prevWords ne null) { prevWords.unpersist(); prevWords = null }
-        releaseCheckpoints(staleIds)
-        staleIds = Set.empty
+        if (prevHeld ne null) { prevHeld.unpersist(); prevHeld = null }
         if (top.isEmpty) done = true
         else {
           val (l, r) = (top.head.getString(0), top.head.getString(1))
           rules += ((l, r))
-          // localCheckpoint TRUNCATES the plan: without it round k's
-          // logical plan nests k mergeAdjacent HOF lambdas and the
-          // optimizer's walk over that nest grows super-linearly —
-          // measured OOM near 20 rounds on a 31-word vocabulary. The
-          // checkpoint is LAZY — it materializes inside the next
-          // round's pair-count job instead of paying its own job — and
-          // the table is vocab-scale. Its storage is invisible to
-          // Dataset.unpersist (scaladoc), so the newly persisted RDD
-          // ids are diffed around the call and released one round
-          // later, once the NEXT checkpoint has materialized and no
-          // longer needs its parent's blocks. The id diff is safe here
-          // because fit() drives this session's only concurrent job —
-          // a parallel caller persisting inside the window would get
-          // its block evicted early (a recompute, not a wrong result).
-          val before = sc.getPersistentRDDs.keySet
-          val next = words
-            .select(mergeAdjacent(col("syms"), l, r).as("syms"), col("n"))
-            .localCheckpoint(false)
-          val fresh = sc.getPersistentRDDs.keySet -- before
-          prevWords = words // round 0's plain persist; no-op after
-          staleIds = liveIds
-          liveIds = fresh
+          val (next, nextHeld) = GraftBridge.pin(
+            words.select(mergeAdjacent(col("syms"), l, r).as("syms"), col("n")))
+          prevHeld = held
           words = next
+          held = nextHeld
         }
       }
       rules.toSeq
     } finally {
-      if (prevWords ne null) prevWords.unpersist()
-      words.unpersist()
-      releaseCheckpoints(staleIds)
-      releaseCheckpoints(liveIds)
+      if (prevHeld ne null) prevHeld.unpersist()
+      held.unpersist()
       ()
     }
   }

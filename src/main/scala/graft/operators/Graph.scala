@@ -47,12 +47,10 @@ object Graph {
     * and past ~20 nested rounds the analyzer/optimizer walk goes
     * super-linear (the Bpe.fit lesson — its scaladoc documents the OOM
     * near 20 nested merge rounds). Every `checkpointEvery` iterations
-    * the rank frame eagerly localCheckpoints — truncating the lineage
-    * at the cost of one small node-scale job — and the previous
-    * checkpoint's blocks release immediately (they are consumed by the
-    * new checkpoint's materialization; GraftBridge frees the blocks a
-    * plain unpersist would pin for the application's life). At the
-    * default 3 iterations no checkpoint fires and the plan is the same
+    * the rank frame is pinned ([[org.apache.spark.sql.GraftBridge.pin]]:
+    * its shuffle stages run there and its plan is cut to one leaf), and
+    * the previous pin releases at once (those stages consumed it). At
+    * the default 3 iterations no pin fires and the plan is the same
     * single lazy chain as before; GraphSpec pins a 25-iteration run. */
   def pageRank(pairs: DataFrame, id1: String = "id1", id2: String = "id2",
                iterations: Int = 3, damping: Double = 0.85,
@@ -90,21 +88,19 @@ object Graph {
             lit(damping) * coalesce(col("in_sum"), lit(0L)).cast("double"), 12)
             .cast(dec).as("rank"))
       // Lineage seam, never on the last round (the final materialization
-      // below truncates that one): rank values are unchanged — the
-      // checkpoint only pins the round's frame and cuts the plan.
+      // below truncates that one): rank values are unchanged — the pin
+      // only caches the round's frame and cuts the plan.
       if (i % checkpointEvery == 0 && i < iterations) {
-        val next = ranks.localCheckpoint() // eager: materializes here
-        if (ckpt != null)
-          org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(ckpt)
-        ckpt = next
+        val (next, held) = org.apache.spark.sql.GraftBridge.pin(ranks)
+        if (ckpt != null) ckpt.unpersist()
+        ckpt = held
         ranks = next
       }
     }
     val out = ranks.select(col("id"), col("rank").cast("double").as("rank"))
       .persist(lvl)
     out.count() // one materialization of the whole lazy chain
-    if (ckpt != null)
-      org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(ckpt)
+    if (ckpt != null) ckpt.unpersist()
     edges.unpersist()
     deg.unpersist()
     out

@@ -13,21 +13,16 @@ object GraftBridge {
 
   /** Release the RDD blocks behind a `localCheckpoint()`'d Dataset.
     *
-    * `Dataset.unpersist()` clears CACHE MANAGER entries only — but a
-    * local checkpoint persists its RDD directly (`rdd.localCheckpoint()`
-    * under the hood, never registered with the manager), so neither
-    * unpersist() nor `spark.catalog.clearCache()` frees those blocks;
-    * they survive until application end. Measured consequence: every
-    * curation chain/fold run leaked its checkpointed stage frames
-    * (corpus-scale TEXT blocks at sf10), and a full bench sweep
-    * accumulated ~50 GB of undroppable storage — the direct cause of
-    * the `_span_census_build` 4× in-sweep inflation (the span build is
-    * the sweep's biggest MEMORY_AND_DISK consumer and paid the
-    * eviction/spill). Bpe.fit dodged this with manual
-    * getPersistentRDDs id-diffing; this helper is the non-racy form —
-    * it walks the checkpointed Dataset's own plan (a LogicalRDD leaf)
-    * and unpersists exactly that RDD. No-op on plans without a
-    * LogicalRDD (never-checkpointed frames). */
+    * A local checkpoint persists its RDD directly, never registered
+    * with the cache manager, so neither `Dataset.unpersist()` nor
+    * `spark.catalog.clearCache()` frees its blocks; they survive until
+    * application end. This walks the Dataset's own plan and unpersists
+    * the RDD of every LogicalRDD leaf in it. No-op on plans without one.
+    * graft's own code no longer checkpoints ([[pin]] persists through
+    * the cache manager instead); the method stays for callers that
+    * still do. On [[graft.CurationRound.cutRound]]'s `mixed` it frees
+    * nothing: that frame is a cache-manager persist, which `unpersist()`
+    * or the benchmark's per-run `clearCache()` releases. */
   def releaseLocalCheckpoint(ds: Dataset[_]): Unit = ds match {
     case c: classic.Dataset[_] =>
       c.queryExecution.analyzed.foreach {
@@ -50,6 +45,28 @@ object GraftBridge {
       val fresh = classic.Dataset.ofRows(s, c.logicalPlan)
       classic.Dataset.ofRows(s, org.apache.spark.sql.execution.LogicalRDD
         .fromDataset(fresh.queryExecution.toRdd, fresh, isStreaming = false))
+  }
+
+  /** Pin `df` for the reads that follow: persist its rows through the
+    * cache manager (MEMORY_AND_DISK) and return their [[planLeaf]] view,
+    * which plans built on it read as one leaf, with the persisted
+    * frame, which releases them: `unpersist()` on it or
+    * `spark.catalog.clearCache()`. A read after the release, or of a
+    * lost block, recomputes through the RDD lineage. `df`'s shuffle
+    * stages run here (AQE runs them while planning, as it did for an
+    * eager `localCheckpoint()`); the cache is built inside the first
+    * reader's jobs, so a pin adds no job to the ones `df` needs.
+    *
+    * What is persisted is `df` cut to one leaf, not `df`'s plan, so
+    * each pin is its own cache entry: two pins of identical plans do
+    * not share one (unpersisting either leaves the other cached), and
+    * the cache manager never recaches a pin. It would otherwise recache
+    * an entry whose plan scans files under a path as soon as anything
+    * writes there, dropping its blocks (and leaking them, when the
+    * entry was being built at that moment). */
+  def pin(df: DataFrame): (DataFrame, DataFrame) = {
+    val held = planLeaf(df).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (planLeaf(held), held)
   }
 
   /** Cancel every active job tagged `tag`; returns once the scheduler

@@ -62,10 +62,13 @@ class BpeSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     Bpe.fit(df, "text", numMerges = 5) // settle lazy one-time persists
     val before = sc.getPersistentRDDs.keySet
-    Bpe.fit(df, "text", numMerges = 5)
-    // Dataset.unpersist is a no-op on localCheckpoint storage, so
-    // without the id-diff release each fit would LEAK one vocab-scale
-    // block set per merge round — growth here is the regression signal.
+    // 8 jobs; the lazy localCheckpoint rounds this loop used before
+    // its tables were pinned started 9. A pin adds no job.
+    val jobs = JobLog.startedBy(spark) { Bpe.fit(df, "text", numMerges = 5) }
+    assert(jobs.size <= 9, s"${jobs.size} jobs")
+    // A round that did not release its predecessor would LEAK one
+    // vocab-scale block set per merge round — growth here is the
+    // regression signal.
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
       s"fit leaked checkpoint RDDs: ${sc.getPersistentRDDs.keySet -- before}")
   }

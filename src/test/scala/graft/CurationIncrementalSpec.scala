@@ -96,12 +96,18 @@ class CurationIncrementalSpec extends AnyFunSuite {
     assert(b1 == Seq(4L, 4L, 4L, 2L, 1L, 1L))
 
     // the round cut over the maintained pool ≡ the full chain's stage 6
+    val cutBefore = spark.sparkContext.getPersistentRDDs.keySet
     val (mixed, packed, stats) = CurationRound.cutRound(spark, statePath, cfg)
     assert(ids(mixed) == fullSurvivors)
     assert(packed.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
       == full.packed.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq)
     assert(stats.head().toSeq == full.packStats.head().toSeq)
     full.unpersist()
+    // Everything the cut pinned is a cache-manager persist: clearCache
+    // frees it, `mixed` included.
+    spark.catalog.clearCache()
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cutBefore).isEmpty,
+      "cutRound left blocks that clearCache cannot free")
 
     // REPLAY: re-folding the last batch (a recovering caller) leaves
     // every reader's view unchanged — reads scope below the batch,
@@ -277,10 +283,10 @@ class CurationIncrementalSpec extends AnyFunSuite {
   }
 
   test("foldBatch releases its checkpoint blocks: zero persistent RDDs leak per fold") {
-    // localCheckpoint blocks live outside the cache manager; a plain
-    // Dataset.unpersist leaks them until application end (the measured
-    // sweep-scale leak behind the sf10 span-build inflation). Each fold
-    // must leave the persistent-RDD set exactly as it found it.
+    // The fold's stage pins are cache-manager persists, unpersisted
+    // when it ends (a leaked stage block was the measured sweep-scale
+    // leak behind the sf10 span-build inflation). Each fold must leave
+    // the persistent-RDD set exactly as it found it.
     val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
     val statePath = TestSpark.tempDir("graft-cur-leak").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -292,8 +298,8 @@ class CurationIncrementalSpec extends AnyFunSuite {
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "foldBatch left persisted RDD blocks")
     // clearCache (the bench harness's between-queries move) releases
-    // CACHE-MANAGER entries only — what it can NEVER release is a leaked
-    // localCheckpoint, which is exactly what the final assert catches.
+    // cache-manager entries only; the final assert catches a block
+    // pinned outside the cache manager, which it would leave behind.
     spark.catalog.clearCache()
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "foldBatch leaked checkpoint RDD blocks")
@@ -402,9 +408,11 @@ class CurationIncrementalSpec extends AnyFunSuite {
   }
 
   test("a second fold over history, under the near-dup bounds, runs at most 46 Spark jobs") {
-    // 43 with the driver near-dup path. The fold ran 64 here when the
-    // step was always distributed, 33 of them for the bucket build,
-    // the history edges and the canonical keep.
+    // 36 with the driver near-dup path and pinned stages (43 when the
+    // stages were eager local checkpoints: a pin's cache is built inside
+    // its first reader's jobs). The fold ran 64 here when the step was
+    // always distributed, 33 of them for the bucket build, the history
+    // edges and the canonical keep.
     val bench = Seq((900L, "unrelated bench words only.")).toDF("doc_id", "text")
     val statePath = TestSpark.tempDir("graft-cur-jobs").toString
     CurationRound.foldBatch(spark, statePath,

@@ -118,11 +118,10 @@ class CurationRoundSpec extends AnyFunSuite {
     // old design raised block-not-found on curated/packed here
     r.unpersist()
     spark.catalog.clearCache() // the bench harness's between-queries move
-    // ...and the release is REAL: localCheckpoint blocks live outside
-    // the cache manager (plain Dataset.unpersist leaks them until
-    // application end — the measured ~50 GB/sweep behind the sf10
-    // span-build inflation), so unpersist must leave ZERO new
-    // persistent RDDs behind.
+    // ...and the release is REAL: a stage block that outlived the round
+    // (the measured ~50 GB/sweep behind the sf10 span-build inflation)
+    // would show here, so unpersist must leave ZERO new persistent RDDs
+    // behind.
     assert((spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore).isEmpty,
       "run + unpersist leaked checkpoint RDD blocks")
     assert(r.funnel.orderBy($"stage_ord").collect().map(_.toSeq).toSeq

@@ -43,12 +43,16 @@ class GraphSpec extends AnyFunSuite {
     // prevent. Rank mass stays conserved after 25 damped rounds.
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L), (5L, 6L))
       .toDF("id1", "id2")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val seamed = Graph.pageRank(pairs, iterations = 25)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val unseamed = Graph.pageRank(pairs, iterations = 25, checkpointEvery = 1000)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(seamed == unseamed, "checkpoint seam changed rank values")
     assert(math.abs(seamed.values.sum - 1.0) < 1e-8, s"mass ${seamed.values.sum}")
+    // The seams' pins and the returned ranks are cache-manager persists.
+    spark.catalog.clearCache()
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
     intercept[IllegalArgumentException](
       Graph.pageRank(pairs, checkpointEvery = 0))
   }

@@ -1,17 +1,20 @@
 #!/usr/bin/env python3
-"""Interleaved A/B of two graft checkouts on one perfbench workload.
+"""Interleaved A/B of two graft checkouts on perfbench workloads.
 
-    python3 tools/ab.py --parent <dir> --change <dir> --workload <name> \\
+    python3 tools/ab.py --parent <dir> --change <dir> --workload <name> [<name> ...] \\
         --seeds 7101-7110 [--seconds 10] [--aa <second parent dir>]
 
 Each seed is one pair: perfbench/run.py runs once in each checkout
 (untraced), and the order alternates per pair, so neither side always
 runs first on a warmer or colder box. Each checkout builds into its own
-.bench_build, so alternating runs never rebuild. Prints a per-pair table
-and, per end-to-end metric, both medians, their ratio, the parent's
-interquartile range (IQR), how many pairs the change won, and whether
-the gain rule holds: at least 10 pairs, the change lower in at least
-nine tenths of them, and the median gain larger than the parent's IQR.
+.bench_build, so alternating runs never rebuild. Several workloads run
+one after another, each over every seed. Per workload it prints a
+per-pair table and, per end-to-end metric of the parent's
+BENCHMARK.json, both medians, their ratio, the parent's interquartile
+range (IQR), how many pairs the change won, whether the gain rule holds
+(at least 10 pairs, the change lower in at least nine tenths of them,
+and the median gain larger than the parent's IQR) and the no-regression
+verdict against that metric's bound (see `regression_verdict`).
 
 --aa runs the same pairs first with the parent against a second copy of
 the parent (e.g. extracted with `git archive` into a fresh directory).
@@ -25,7 +28,16 @@ import statistics
 import subprocess
 import sys
 
-METRICS = ("run_s", "op_p50_s", "setup_s")
+
+def end_to_end(parent):
+    """(name, bound) of every end-to-end metric the parent's
+    BENCHMARK.json declares; all must be lower-is-better."""
+    with open(os.path.join(parent, "BENCHMARK.json")) as fh:
+        metrics = json.load(fh)["end_to_end"]
+    higher = [m["name"] for m in metrics if m["better"] != "lower"]
+    if higher:
+        raise SystemExit(f"higher-is-better end-to-end metrics are not supported: {higher}")
+    return [(m["name"], m["bound"]) for m in metrics]
 
 
 def seeds_arg(text):
@@ -72,7 +84,25 @@ def gain_rule(pairs, wins, gap, iqr):
     return "gain rule met" if not why else "gain rule not met: " + ", ".join(why)
 
 
-def compare(a_dir, b_dir, names, workload, seeds, seconds):
+def regression_verdict(xs, ys, bound):
+    """The no-regression rule of the simplicity-review guide for a
+    lower-is-better metric, parent runs `xs`, change runs `ys`, with the
+    benchmark's relative `bound`: unresolved when the parent's IQR over
+    its median is wider than the bound, unless every change run is
+    lower than every parent run; else within bound when the change's
+    median exceeds the parent's by at most the bound."""
+    ma, mb = statistics.median(xs), statistics.median(ys)
+    q1, q3 = quartiles(xs)
+    if max(ys) < min(xs):
+        return "within bound: every change run beats every parent run"
+    if q3 - q1 > bound * ma:
+        return f"unresolved: the parent's relative IQR {(q3 - q1) / ma:.3f} exceeds the bound {bound:g}"
+    if mb <= ma * (1 + bound):
+        return f"within bound {bound:g}"
+    return f"WORSE than the bound {bound:g}: median ratio {mb / ma:.3f}"
+
+
+def compare(a_dir, b_dir, names, workload, seeds, seconds, metrics):
     """Interleaved pairs of a_dir (named names[0]) and b_dir (names[1])."""
     rows = []
     for i, seed in enumerate(seeds):
@@ -81,26 +111,27 @@ def compare(a_dir, b_dir, names, workload, seeds, seconds):
         for side, d in order:
             res[side] = run_once(d, workload, seed, seconds)
             print(f"[ab] {workload} seed {seed} {names[side]}: " +
-                  " ".join(f"{m}={res[side][m]:.3f}" for m in METRICS),
+                  " ".join(f"{m}={res[side][m]:.3f}" for m in metrics),
                   file=sys.stderr, flush=True)
         rows.append({"seed": seed, "first": names[order[0][0]], "a": res[0], "b": res[1]})
     return rows
 
 
-def report(rows, names, workload, seconds):
+def report(rows, names, workload, seconds, bounds):
     a, b = names
+    metrics = [m for m, _ in bounds]
     lo, hi = rows[0]["seed"], rows[-1]["seed"]
     print(f"`{workload}`, {a} and {b} interleaved, seeds {lo}–{hi}, "
           f"`--seconds {seconds:g} --trace 0`:\n")
-    head = ["seed", "first"] + [f"{m} {s}" for m in METRICS for s in (a, b)] + [f"failed {a}/{b}"]
+    head = ["seed", "first"] + [f"{m} {s}" for m in metrics for s in (a, b)] + [f"failed {a}/{b}"]
     print("| " + " | ".join(head) + " |")
     print("|" + "---|" * len(head))
     for r in rows:
         cells = [str(r["seed"]), r["first"]]
-        cells += [f"{r[s][m]:.3f}" for m in METRICS for s in ("a", "b")]
+        cells += [f"{r[s][m]:.3f}" for m in metrics for s in ("a", "b")]
         cells.append(f"{r['a']['failed']}/{r['b']['failed']}")
         print("| " + " | ".join(cells) + " |")
-    for m in METRICS:
+    for m, bound in bounds:
         xs = [r["a"][m] for r in rows]
         ys = [r["b"][m] for r in rows]
         q1, q3 = quartiles(xs)
@@ -109,7 +140,8 @@ def report(rows, names, workload, seconds):
         print(f"  - {m}: median {a} {ma:.3f} {b} {mb:.3f} ratio {mb / ma:.3f}  "
               f"{a} IQR {q3 - q1:.3f}  |gap| {abs(mb - ma):.3f}  "
               f"{b} lower in {wins}/{len(rows)} pairs; "
-              f"{gain_rule(len(rows), wins, ma - mb, q3 - q1)}")
+              f"{gain_rule(len(rows), wins, ma - mb, q3 - q1)}; "
+              f"{regression_verdict(xs, ys, bound)}")
     failed = sum(r[s]["failed"] for r in rows for s in ("a", "b"))
     print(f"  - failed operations, both sides: {failed}\n")
 
@@ -118,7 +150,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
     ap.add_argument("--change", required=True, help="checkout of the change")
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", required=True, nargs="+", action="extend")
     ap.add_argument("--seeds", required=True, type=seeds_arg)
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--aa", help="a second checkout of the parent: run A/A first")
@@ -128,13 +160,13 @@ def main():
     if missing:
         raise SystemExit(f"no perfbench/run.py in {', '.join(missing)}")
 
-    if args.aa:
-        names = ("P", "P2")
-        rows = compare(dirs[0], dirs[2], names, args.workload, args.seeds, args.seconds)
-        report(rows, names, args.workload, args.seconds)
-    names = ("P", "C")
-    rows = compare(dirs[0], dirs[1], names, args.workload, args.seeds, args.seconds)
-    report(rows, names, args.workload, args.seconds)
+    bounds = end_to_end(dirs[0])
+    metrics = [m for m, _ in bounds]
+    sides = [(("P", "P2"), dirs[2])] if args.aa else []
+    for workload in args.workload:
+        for names, other in sides + [(("P", "C"), dirs[1])]:
+            rows = compare(dirs[0], other, names, workload, args.seeds, args.seconds, metrics)
+            report(rows, names, workload, args.seconds, bounds)
 
 
 if __name__ == "__main__":
